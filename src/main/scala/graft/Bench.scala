@@ -48,7 +48,7 @@ object Bench {
     * r16; count+bytes ride along so a same-second rewrite still moves
     * the signature.
     */
-  private def dirSig(d: java.io.File): Long = {
+  private[graft] def dirSig(d: java.io.File): Long = {
     def walk(f: java.io.File): (Long, Long, Long) = {
       val kids =
         if (f.isDirectory) Option(f.listFiles()).map(_.toSeq).getOrElse(Nil)
@@ -65,13 +65,13 @@ object Bench {
   private def artifactSigs(): Map[String, Long] = {
     val tmp = new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"))
     Option(tmp.listFiles()).map(_.toSeq).getOrElse(Nil)
-      .filter(f => f.isDirectory && f.getName.startsWith("graft_") &&
+      .filter(f => f.isDirectory && f.getName.startsWith(Extras.ArtifactPrefix) &&
         // the stable DuckDB-oracle mirrors are refreshed (last-writer-
         // wins) as a side channel whenever a query's stamped artifact
         // is touched — they are correctness plumbing, not a timed
         // build, and flagging them would mark half the artifact-backed
         // queries as "built" on every sweep
-        !f.getName.startsWith("graft_oracle"))
+        f.getName != Extras.OracleIdxDir)
       .map(d => d.getName -> dirSig(d)).toMap
   }
 

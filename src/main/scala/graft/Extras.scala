@@ -54,6 +54,14 @@ object Extras {
       .digest(s.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
   }
 
+  /** Name prefix of every persisted per-corpus artifact under
+    * java.io.tmpdir, and the name of the stable-mirror root beside them
+    * — the one place artifact naming lives (Bench's build witness reads
+    * both).
+    */
+  private[graft] val ArtifactPrefix = "graft_"
+  private[graft] val OracleIdxDir = ArtifactPrefix + "oracle_idx"
+
   /** Root of the STABLE-path mirrors of the per-corpus index artifacts.
     * The DuckDB oracle SQL is static text, so it cannot chase the
     * stamped cache directories — index-backed queries mirror their
@@ -64,7 +72,7 @@ object Extras {
     * the queries just ran on (the driver runs Verify, THEN DuckDB).
     */
   private val oracleIdxRoot =
-    new java.io.File(sys.props("java.io.tmpdir"), "graft_oracle_idx").toString
+    new java.io.File(sys.props("java.io.tmpdir"), OracleIdxDir).toString
 
   /** Mirror a (small, local) artifact directory to the stable oracle
     * path `oracleIdxRoot/name`, skipping the copy when the stamp marker
@@ -89,7 +97,7 @@ object Extras {
       src: String,
       name: String,
       stampValue: String,
-      precondition: () => Unit = () => ()): String = {
+      precondition: () => Unit): String = {
     import java.nio.file.{Files, Path, Paths, StandardCopyOption}
     val dst = Paths.get(oracleIdxRoot, name)
     val marker = dst.resolve("_GRAFT_STAMP")
@@ -131,6 +139,45 @@ object Extras {
     dst.toString
   }
 
+  /** The one protocol of every persisted per-corpus artifact (the
+    * production shape: an index or heavy report is built once per
+    * corpus and read by every later query):
+    *  - it lives at `java.io.tmpdir/graft_<prefix>_<stamp>`, the stamp
+    *    folding `key` with the identity of the corpus `table` file —
+    *    `key` must carry a format version plus every parameter the
+    *    build depends on, so neither a regenerated corpus nor a changed
+    *    call site ever reuses a stale artifact;
+    *  - `build` writes it there only when one of its completion
+    *    `markers` (paths under the directory) is missing;
+    *  - `read` opens it; a refusal (a corrupt or half-written directory,
+    *    a store of another scheme) rebuilds exactly once — this is a
+    *    cache, never a reason to fail the query;
+    *  - a non-empty `mirror` refreshes the stable oracle copy
+    *    ([[mirrorStable]]) under `mirrorStamp(stamp)`, running
+    *    `precondition` over the read artifact only on a refresh.
+    * Index-directory artifacts pass `identity` and get the directory.
+    */
+  private[graft] def artifact[A](
+      c: Catalog, prefix: String, key: String, read: String => A,
+      table: String = "documents",
+      markers: Seq[String] = Seq("_SUCCESS"),
+      mirror: String = "",
+      mirrorStamp: String => String = identity,
+      precondition: A => Unit = (_: A) => ())(build: String => Unit): A = {
+    val st = stamp(c.dir, table, key)
+    val dir = new java.io.File(sys.props("java.io.tmpdir"),
+      s"$ArtifactPrefix${prefix}_$st").toString
+    if (!markers.forall(m => new java.io.File(dir, m).exists())) build(dir)
+    val a =
+      try read(dir)
+      catch {
+        case scala.util.control.NonFatal(_) => build(dir); read(dir)
+      }
+    if (mirror.nonEmpty)
+      mirrorStable(dir, mirror, mirrorStamp(st), () => precondition(a))
+    a
+  }
+
   /** Per-corpus persisted MinHash signature table (written once to the
     * JVM temp dir, keyed by the corpus content stamp; signatures are a
     * pure function of the corpus so reuse is sound). Shared by X15 +
@@ -138,67 +185,60 @@ object Extras {
     */
   private def sigTable(c: Catalog): DataFrame = {
     val cfg = graft.text.MinHashConfig()
-    // the signature-scheme version is part of the cache key, so a
-    // scheme bump can never even SEE an old-format table...
-    val sigDir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_minhash_sigs_" + stamp(c.dir, "documents",
-        s"mh:v${MinHashDedup.SignatureVersion}:${cfg.shingleSize}:${cfg.numHashes}:${cfg.bands}")).toString
-    if (!new java.io.File(sigDir, "_SUCCESS").exists())
-      MinHashDedup.writeSignatures(c.documents, sigDir)
-    // ...and if readSignatures still refuses (corrupt/partial artifact),
-    // this is a CACHE — rebuild it rather than failing the query
-    try MinHashDedup.readSignatures(c.spark, sigDir)
-    catch {
-      case _: IllegalArgumentException =>
-        MinHashDedup.writeSignatures(c.documents, sigDir)
-        MinHashDedup.readSignatures(c.spark, sigDir)
-    }
+    // the signature-scheme version is part of the key, so a scheme bump
+    // can never even SEE an old-format table; readSignatures refusing
+    // anyway (corrupt/partial artifact) rebuilds it
+    artifact(c, "minhash_sigs",
+      s"mh:v${MinHashDedup.SignatureVersion}:${cfg.shingleSize}:${cfg.numHashes}:${cfg.bands}",
+      MinHashDedup.readSignatures(c.spark, _))(
+      MinHashDedup.writeSignatures(c.documents, _))
   }
 
-  /** Per-corpus persisted banded member table (same stamp/rebuild scheme
-    * as [[sigTable]]; built FROM the cached signature table so a cold
-    * cache pays the signature pass once, not twice). Repeat dedup runs
-    * read (id, sigh, band, bucket) straight off parquet.
+  /** Per-corpus persisted banded member table (id, sigh, band, bucket)
+    * over the documents `sigs` signs under `cfg` — repeat dedup runs
+    * read it straight off parquet — mirrored as `mirror` (also its
+    * directory prefix) for its index-backed oracle. The key is `stampPrefix` (kind, scheme version
+    * and any text-cleaning contract the documents went through) plus
+    * the banding geometry, and the charK/runLevel flags when ON.
+    *
+    * The oracles read the SAME banded member rows the Spark path
+    * consumes — the bucket self-join + exact-Jaccard verify downstream
+    * is plain SQL once the index is parquet. Their static SQL
+    * enumerates buckets UNCAPPED, while the Spark paths degrade
+    * oversized buckets (> cfg.maxBucket) to linear star/chunk
+    * candidates — so the oracle is only declared for corpora without
+    * such piles; the precondition turns that assumption into a loud
+    * failure instead of a silent hash mismatch, checked once per mirror
+    * refresh (the banded table is 8-byte keys, metadata-cheap). The
+    * MIRROR stamp extends the artifact stamp with the cap and a guard
+    * version: pre-guard mirrors and cap changes must re-run the
+    * precondition, not ride a stale fresh-stamp hit.
     */
-  private def bandedTable(c: Catalog): DataFrame = {
-    val cfg = graft.text.MinHashConfig()
-    val st = stamp(c.dir, "documents",
-      s"mhb:v${MinHashDedup.SignatureVersion}:${cfg.shingleSize}:${cfg.numHashes}:${cfg.bands}")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_minhash_banded_" + st).toString
-    if (!new java.io.File(dir, "_SUCCESS").exists())
-      MinHashDedup.writeBandedIndex(sigTable(c), dir, cfg)
-    val banded =
-      try MinHashDedup.readBandedIndex(c.spark, dir, cfg)
-      catch {
-        case _: IllegalArgumentException =>
-          MinHashDedup.writeBandedIndex(sigTable(c), dir, cfg)
-          MinHashDedup.readBandedIndex(c.spark, dir, cfg)
-      }
-    // the X15/X16/X29/X38 oracles read the SAME banded member rows the
-    // Spark path consumes — the bucket self-join + exact-Jaccard verify
-    // downstream is plain SQL once the index is parquet. Their static
-    // SQL enumerates buckets UNCAPPED, while the Spark paths degrade
-    // oversized buckets (> cfg.maxBucket) to linear star/chunk
-    // candidates — so the oracle is only declared for corpora without
-    // such piles; the precondition turns that assumption into a loud
-    // failure instead of a silent hash mismatch. Checked once per
-    // corpus stamp (the banded table is 8-byte keys, metadata-cheap).
-    // the MIRROR stamp extends the artifact stamp with the cap and a
-    // guard version: pre-guard mirrors and cap changes must re-run the
-    // precondition, not ride a stale fresh-stamp hit
-    mirrorStable(dir, "minhash_banded", s"$st:cap${cfg.maxBucket}:guard1",
-      precondition = () => {
+  private def bandedIndex(c: Catalog, stampPrefix: String, mirror: String,
+      cfg: graft.text.MinHashConfig)(sigs: => DataFrame): DataFrame =
+    artifact(c, mirror,
+      s"$stampPrefix:${cfg.shingleSize}:${cfg.numHashes}:${cfg.bands}" +
+        (if (cfg.charK > 0) s":k${cfg.charK}" else "") +
+        (if (cfg.runLevel) "r1" else ""),
+      MinHashDedup.readBandedIndex(c.spark, _, cfg),
+      mirror = mirror, mirrorStamp = st => s"$st:cap${cfg.maxBucket}:guard1",
+      precondition = (banded: DataFrame) => {
         val over = banded.groupBy("band", "bucket").count()
           .filter(col("count") > cfg.maxBucket).count()
         require(over == 0,
-          s"index-backed oracle precondition violated: $over banded buckets exceed " +
-            s"maxBucket=${cfg.maxBucket}; the capped Spark dedup and the uncapped " +
-            "SQL oracle would diverge on this corpus — raise maxBucket or demote " +
-            "X15/X16/X29/X38 to rows-only for it")
-      })
-    banded
-  }
+          s"index-backed oracle precondition violated: $over buckets of the $mirror " +
+            s"index exceed maxBucket=${cfg.maxBucket}; the capped Spark dedup and its " +
+            "uncapped SQL oracle would diverge on this corpus — raise maxBucket or " +
+            "demote that oracle's queries to rows-only for it")
+      })(MinHashDedup.writeBandedIndex(sigs, _, cfg))
+
+  /** The banded index of the raw corpus, behind X15/X16/X29/X38 — built
+    * FROM the cached signature table so a cold cache pays the signature
+    * pass once, not twice.
+    */
+  private def bandedTable(c: Catalog): DataFrame =
+    bandedIndex(c, s"mhb:v${MinHashDedup.SignatureVersion}", "minhash_banded",
+      graft.text.MinHashConfig())(sigTable(c))
 
   /** Per-corpus persisted stage-0 substring-clean table — the X121 v2
     * curation basis: (doc_id, n_tokens, dup_tokens, clean_text) of the
@@ -227,46 +267,18 @@ object Extras {
       .unionByName(bench)
   }
 
-  /** Per-corpus persisted banded member table over the V2 documents
-    * (cleaned corpus ∪ benchmark) — [[bandedTable]]'s scheme keyed by
-    * its own stamp (the clean-window contract rides the key), mirrored
-    * as `minhash_banded_v2` for the X121 oracle, with the same
-    * uncapped-bucket precondition (its static SQL enumerates buckets
-    * uncapped).
+  /** The banded index over the V2 documents (cleaned corpus ∪
+    * benchmark), mirrored as `minhash_banded_v2` for the X121 oracle.
+    * The stage-0 clean contract (substring-dedup algorithm version +
+    * the w=10 window) rides the key, so a substring-dedup semantics
+    * change rebuilds this index instead of reusing one built over old
+    * cleaned text.
     */
   private def bandedV2Table(c: Catalog): DataFrame = {
     val cfg = graft.text.MinHashConfig()
-    // the subclean algorithm version rides the stamp (the stampedArtifact
-    // rule: the key carries every parameter the build depends on) — a
-    // substring-dedup semantics change must rebuild this index, never
-    // reuse one built over old cleaned text
-    val st = stamp(c.dir, "documents",
-      s"mhbv2:v${MinHashDedup.SignatureVersion}:" +
-        s"sc${graft.text.SubstringDedup.AlgorithmVersion}w10:" +
-        s"${cfg.shingleSize}:${cfg.numHashes}:${cfg.bands}")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_minhash_banded_v2_" + st).toString
-    if (!new java.io.File(dir, "_SUCCESS").exists())
-      MinHashDedup.writeBandedIndex(
-        MinHashDedup.signatures(v2Documents(c), cfg), dir, cfg)
-    val banded =
-      try MinHashDedup.readBandedIndex(c.spark, dir, cfg)
-      catch {
-        case _: IllegalArgumentException =>
-          MinHashDedup.writeBandedIndex(
-            MinHashDedup.signatures(v2Documents(c), cfg), dir, cfg)
-          MinHashDedup.readBandedIndex(c.spark, dir, cfg)
-      }
-    mirrorStable(dir, "minhash_banded_v2", s"$st:cap${cfg.maxBucket}:guard1",
-      precondition = () => {
-        val over = banded.groupBy("band", "bucket").count()
-          .filter(col("count") > cfg.maxBucket).count()
-        require(over == 0,
-          s"index-backed oracle precondition violated: $over v2 banded buckets " +
-            s"exceed maxBucket=${cfg.maxBucket}; the capped Spark dedup and the " +
-            "uncapped X121 SQL oracle would diverge on this corpus")
-      })
-    banded
+    bandedIndex(c, s"mhbv2:v${MinHashDedup.SignatureVersion}:" +
+      s"sc${graft.text.SubstringDedup.AlgorithmVersion}w10",
+      "minhash_banded_v2", cfg)(MinHashDedup.signatures(v2Documents(c), cfg))
   }
 
   /** The X93 manifest (v1 order: verdicts on raw text, channels from
@@ -297,7 +309,7 @@ object Extras {
     * two manifest builds run with (their defaults, spelled out — a
     * default change must never ride a stale manifest) plus the manual
     * manifest-assembly version (bump on any semantic change to the
-    * stage chain itself, the sigTable v-guard idiom).
+    * stage chain itself, the signature-scheme version idiom).
     */
   private[graft] def manifestParamsKey: String = {
     // EVERY fragment derives from the values the builds actually run
@@ -419,71 +431,28 @@ object Extras {
       graft.text.SubstringDedup.cleanCorpusRunLevel(rlFixture(c), 10)
     }
 
-  /** Per-corpus persisted banded member table over the run-level
-    * documents (cleaned fixture ∪ benchmark) under [[RlCorpusCfg]],
-    * mirrored as `minhash_banded_rl` for the X128 oracle with the
-    * uncapped-bucket precondition (its static SQL enumerates buckets
-    * uncapped).
+  /** The banded index over the run-level documents (cleaned fixture ∪
+    * benchmark) under [[RlCorpusCfg]], mirrored as `minhash_banded_rl`
+    * for the X128 oracle.
     */
-  private def bandedRlTable(c: Catalog): DataFrame = {
-    val cfg = RlCorpusCfg
-    def rlDocs = graft.text.SubstringDedup
-      .withCleanText(rlFixture(c), rlCleanTable(c))
-      .select("doc_id", "text")
-      .unionByName(rlBench(c).select("doc_id", "text"))
-    val st = stamp(c.dir, "documents",
-      s"mhbrl:v${MinHashDedup.SignatureVersion}:" +
-        s"sc${graft.text.SubstringDedup.AlgorithmVersion}w10:" +
-        s"${cfg.shingleSize}:${cfg.numHashes}:${cfg.bands}:k${cfg.charK}r1")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_minhash_banded_rl_" + st).toString
-    if (!new java.io.File(dir, "_SUCCESS").exists())
-      MinHashDedup.writeBandedIndex(
-        MinHashDedup.signatures(rlDocs, cfg), dir, cfg)
-    val banded =
-      try MinHashDedup.readBandedIndex(c.spark, dir, cfg)
-      catch {
-        case _: IllegalArgumentException =>
-          MinHashDedup.writeBandedIndex(
-            MinHashDedup.signatures(rlDocs, cfg), dir, cfg)
-          MinHashDedup.readBandedIndex(c.spark, dir, cfg)
-      }
-    mirrorStable(dir, "minhash_banded_rl", s"$st:cap${cfg.maxBucket}:guard1",
-      precondition = () => {
-        val over = banded.groupBy("band", "bucket").count()
-          .filter(col("count") > cfg.maxBucket).count()
-        require(over == 0,
-          s"index-backed oracle precondition violated: $over run-level banded " +
-            s"buckets exceed maxBucket=${cfg.maxBucket}; the capped Spark dedup " +
-            "and the uncapped X128 SQL oracle would diverge on this corpus")
-      })
-    banded
-  }
+  private def bandedRlTable(c: Catalog): DataFrame =
+    bandedIndex(c, s"mhbrl:v${MinHashDedup.SignatureVersion}:" +
+      s"sc${graft.text.SubstringDedup.AlgorithmVersion}w10",
+      "minhash_banded_rl", RlCorpusCfg)(MinHashDedup.signatures(
+      graft.text.SubstringDedup.withCleanText(rlFixture(c), rlCleanTable(c))
+        .select("doc_id", "text")
+        .unionByName(rlBench(c).select("doc_id", "text")), RlCorpusCfg))
 
-  /** Shared write-once/read-forever scheme for derived-report
-    * artifacts (the production shape: a heavy report is computed once
-    * per corpus and every downstream consumer reads the stored rows).
-    * `key` must carry an algorithm version plus every parameter the
-    * build depends on — a call-site change must never ride a stale
-    * artifact.
+  /** A derived report stored as one parquet table by the [[artifact]]
+    * protocol (the production shape: a heavy report is computed once
+    * per corpus and every downstream consumer reads the stored rows; a
+    * half-written dir whose _SUCCESS survived an interleaved writer
+    * rebuilds once instead of poisoning every later run).
     */
   private def stampedArtifact(c: Catalog, prefix: String, key: String)(
-      build: => DataFrame): DataFrame = {
-    val st = stamp(c.dir, "documents", key)
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_${prefix}_" + st).toString
-    if (!new java.io.File(dir, "_SUCCESS").exists())
-      build.write.mode("overwrite").parquet(dir)
-    // corrupt-cache fallback (the sigTable/bandedTable idiom): a
-    // half-written dir whose _SUCCESS survived an interleaved writer
-    // rebuilds once instead of poisoning every later run
-    try c.spark.read.parquet(dir)
-    catch {
-      case scala.util.control.NonFatal(_) =>
-        build.write.mode("overwrite").parquet(dir)
-        c.spark.read.parquet(dir)
-    }
-  }
+      build: => DataFrame): DataFrame =
+    artifact(c, prefix, key, dir => c.spark.read.parquet(dir))(
+      build.write.mode("overwrite").parquet(_))
 
   /** Per-corpus persisted cross-doc 5-gram hit lists (doc_id, ps) —
     * the exact-substring-dedup intermediate
@@ -569,18 +538,13 @@ object Extras {
     * [[sigTable]]) — X14 then measures the partition-pruned PROBE its
     * name advertises, not a rebuild.
     */
-  private def ivfIndexDir(c: Catalog): String = {
-    val st = stamp(c.dir, "embeddings", "ivf:16")
-    val idx = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_ivf_index_" + st).toString
-    if (!new java.io.File(s"$idx/vectors", "_SUCCESS").exists())
-      graft.vector.Ivf.writeIndex(c.embeddings, idx, nLists = 16)
+  private def ivfIndexDir(c: Catalog): String =
     // the X11/X14 oracles probe the SAME persisted centroids/vectors the
     // Spark path reads (and that X11's inline centroid choice matches by
     // construction — writeIndex derives them deterministically)
-    mirrorStable(idx, "ivf", st)
-    idx
-  }
+    artifact(c, "ivf_index", "ivf:16", identity, table = "embeddings",
+      markers = Seq("vectors/_SUCCESS"), mirror = "ivf")(
+      graft.vector.Ivf.writeIndex(c.embeddings, _, nLists = 16))
 
   /** Per-corpus persisted k-means centroids (8 lists, 4 Lloyd
     * iterations over the hash-sampled start — [[graft.vector.Ivf
@@ -592,21 +556,13 @@ object Extras {
     * everything downstream (assignment argmax, profile, dedup verdict)
     * is exactly reproducible SQL over them.
     */
-  private def kmeansCentroidsDir(c: Catalog): String = {
-    val st = stamp(c.dir, "embeddings", "kmeans:8:4")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_kmeans_" + st).toString
-    if (!new java.io.File(dir, "_SUCCESS").exists()) {
+  private def kmeansCentroidsDir(c: Catalog): String =
+    artifact(c, "kmeans", "kmeans:8:4", identity, table = "embeddings",
+      mirror = "kmeans") { dir =>
       val emb = c.embeddings
-      val dim = emb.select(org.apache.spark.sql.functions.size(col("embedding")))
-        .first().getInt(0)
-      graft.vector.Ivf
-        .refineCentroids(emb, graft.vector.Ivf.centroids(emb, 8), iters = 4, dim = dim)
-        .write.mode("overwrite").parquet(dir)
+      graft.vector.Ivf.refineCentroids(emb, graft.vector.Ivf.centroids(emb, 8),
+        iters = 4, dim = Ann.dimOf(emb)).write.mode("overwrite").parquet(dir)
     }
-    mirrorStable(dir, "kmeans", st)
-    dir
-  }
 
   /** Per-corpus learned BPE merge table, trained once per (corpus,
     * config) and replayed from an in-JVM cache thereafter. Sound
@@ -650,18 +606,12 @@ object Extras {
     * mirrored for the X17 oracle (same generation-vs-downstream split
     * as the MinHash/IVF/k-means/LR artifacts).
     */
-  private def winnowFpDir(c: Catalog): String = {
-    val st = stamp(c.dir, "documents", "winnow:12:4")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_winnow_" + st).toString
-    if (!new java.io.File(dir, "_SUCCESS").exists())
+  private def winnowFpDir(c: Catalog): String =
+    artifact(c, "winnow", "winnow:12:4", identity, mirror = "winnow")(
       TextAnalysis.winnowFingerprints(c.documents, k = 12, w = 4)
         .select(col("doc_id"), explode(col("fps")).as("f"))
         .distinct()
-        .write.mode("overwrite").parquet(dir)
-    mirrorStable(dir, "winnow", st)
-    dir
-  }
+        .write.mode("overwrite").parquet(_))
 
   /** The ONE ordered chunk stream behind X73/X75 and X116/X117 —
     * 64/48 chunking joined to the X47 shuffle order; `keepText`
@@ -697,42 +647,19 @@ object Extras {
     * bucket-partitioned corpus of [[graft.vector.Ann.writeIndex]] at
     * nPlanes=8/seed=42, mirrored for the X09 oracle.
     */
-  private def annIndexDir(c: Catalog): String = {
-    val st = stamp(c.dir, "embeddings", "annlsh:8:42")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_annlsh_" + st).toString
-    if (!new java.io.File(s"$dir/vectors", "_SUCCESS").exists())
-      Ann.writeIndex(c.embeddings, dir, nPlanes = 8, seed = 42L)
-    mirrorStable(dir, "annlsh", st)
-    dir
-  }
+  private def annIndexDir(c: Catalog): String =
+    artifact(c, "annlsh", "annlsh:8:42", identity, table = "embeddings",
+      markers = Seq("vectors/_SUCCESS"), mirror = "annlsh")(
+      Ann.writeIndex(c.embeddings, _, nPlanes = 8, seed = 42L))
 
   /** Per-corpus persisted simhash token-hash table — (doc_id, h), one
     * row per token INSTANCE, mirrored for the X08 oracle (same
     * generation-vs-downstream split as the other index artifacts).
     */
-  private def simhashTokDir(c: Catalog): String = {
-    val st = stamp(c.dir, "documents", "simhashtok:v1")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_simhashtok_" + st).toString
-    if (!new java.io.File(dir, "_SUCCESS").exists())
-      SimHash.tokenHashes(c.documents)
-        .write.mode("overwrite").parquet(dir)
-    mirrorStable(dir, "simhash_tok", st)
-    dir
-  }
+  private def simhashTokDir(c: Catalog): String =
+    artifact(c, "simhashtok", "simhashtok:v1", identity, mirror = "simhash_tok")(
+      SimHash.tokenHashes(c.documents).write.mode("overwrite").parquet(_))
 
-  /** Persisted decoded-media feature artifacts for X10/X25 (VERDICT r7
-    * item 3 — the X65/X08/X09 artifact split applied to media): the
-    * DECODE half (javax.imageio over the synthesized payloads, bilinear
-    * resize, luma histograms) is engine-specific GENERATION, run once
-    * per corpus and persisted; the luma histogram is stored as
-    * micro-unit BIGINTs (round(f×10⁶)) so every declared downstream
-    * aggregate is exact integer math both engines reproduce
-    * bit-for-bit. Layout: `$dir/feat` = original payload features,
-    * `$dir/resized` = features of the 16×16 thumbnails re-decoded
-    * through the same codec path.
-    */
   /** Persisted perceptual-hash table for X103 (the media-artifact
     * split): dHash64 over every original payload AND its 16×16
     * resized/re-encoded twin, one row per (doc_id, variant). The
@@ -741,11 +668,9 @@ object Extras {
     * is exact integer math both engines reproduce over these 8-byte
     * hashes.
     */
-  private def phashDir(c: Catalog): String = {
-    val st = stamp(c.dir, "documents", "phash:v1:dhash8x8+rs16")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_phash_" + st).toString
-    if (!new java.io.File(s"$dir/hashes", "_SUCCESS").exists()) {
+  private def phashDir(c: Catalog): String =
+    artifact(c, "phash", "phash:v1:dhash8x8+rs16", identity,
+      markers = Seq("hashes/_SUCCESS"), mirror = "phash") { dir =>
       val media = MediaPipeline.toMediaTable(c.documents)
       MediaPipeline.perceptualHashes(media)
         .withColumn(
@@ -758,9 +683,6 @@ object Extras {
         .select("doc_id", "variant", "kind", "phash")
         .write.mode("overwrite").parquet(s"$dir/hashes")
     }
-    mirrorStable(dir, "phash", st)
-    dir
-  }
 
   /** Per-corpus persisted product-quantization index for X104/X105
     * (m=8 subspaces × 16 centroids × 3 Lloyd iterations over the
@@ -772,21 +694,13 @@ object Extras {
     * codebook, and the declared ADC scan is reproducible double math
     * over those bytes.
     */
-  private def pqIndexDir(c: Catalog): String = {
-    val st = stamp(c.dir, "embeddings", "pq:8:16:3")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_pq_" + st).toString
-    if (!new java.io.File(s"$dir/codes", "_SUCCESS").exists()) {
+  private def pqIndexDir(c: Catalog): String =
+    artifact(c, "pq", "pq:8:16:3", identity, table = "embeddings",
+      markers = Seq("codes/_SUCCESS"), mirror = "pq") { dir =>
       val emb = c.embeddings
-      val dim = emb
-        .select(org.apache.spark.sql.functions.size(col("embedding")))
-        .first().getInt(0)
       graft.vector.Pq.writeIndex(emb, dir, m = 8, ks = 16, iters = 3,
-        dim = dim)
+        dim = Ann.dimOf(emb))
     }
-    mirrorStable(dir, "pq", st)
-    dir
-  }
 
   /** The X104/X105 query side: corpus vectors 0–2 as
     * (query_id, qvec) — the L06/X101 query-set convention.
@@ -808,15 +722,11 @@ object Extras {
     * `$dir/codebook` + `$dir/codes` (vec_id, list_id, codes), built
     * once per corpus stamp and MIRRORED for the oracles.
     */
-  private def pqrIndexDir(c: Catalog): String = {
-    val st = stamp(c.dir, "embeddings", "pqr:8:16:3:ivf16km4l2")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_pqr_" + st).toString
-    if (!new java.io.File(s"$dir/codes", "_SUCCESS").exists()) {
+  private def pqrIndexDir(c: Catalog): String =
+    artifact(c, "pqr", "pqr:8:16:3:ivf16km4l2", identity, table = "embeddings",
+      markers = Seq("codes/_SUCCESS"), mirror = "pqr") { dir =>
       val base = c.spark.read.parquet(s"${ivfIndexDir(c)}/centroids")
-      val dim = c.embeddings
-        .select(org.apache.spark.sql.functions.size(col("embedding")))
-        .first().getInt(0)
+      val dim = Ann.dimOf(c.embeddings)
       // L2-Lloyd means, NOT the spherical refinement: the residual
       // tier's metric is squared-L2 end-to-end (see Pq.residualVectors)
       val refined = graft.vector.Ivf.refineCentroidsL2(
@@ -824,9 +734,6 @@ object Extras {
       graft.vector.Pq.writeResidualIndex(c.embeddings, refined, dir,
         m = 8, ks = 16, iters = 3, dim = dim)
     }
-    mirrorStable(dir, "pqr", st)
-    dir
-  }
 
   /** The X114/X115 query side: corpus vectors 0–24 as
     * (query_id, qvec) — WIDER than the 3-query [[pqQueries]] set
@@ -845,28 +752,28 @@ object Extras {
     * `$dir/rotation` + `$dir/codebook` + `$dir/codes`, built once per
     * corpus stamp and MIRRORED for the oracles.
     */
-  private def opqIndexDir(c: Catalog): String = {
-    val st = stamp(c.dir, "embeddings", "opq:8:16:3:oi3")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_opq_" + st).toString
-    if (!new java.io.File(s"$dir/codes", "_SUCCESS").exists()) {
+  private def opqIndexDir(c: Catalog): String =
+    artifact(c, "opq", "opq:8:16:3:oi3", identity, table = "embeddings",
+      markers = Seq("codes/_SUCCESS"), mirror = "opq") { dir =>
       val emb = c.embeddings
-      val dim = emb
-        .select(org.apache.spark.sql.functions.size(col("embedding")))
-        .first().getInt(0)
       graft.vector.Opq.writeIndex(emb, dir, m = 8, ks = 16, iters = 3,
-        dim = dim, opqIters = 3)
+        dim = Ann.dimOf(emb), opqIters = 3)
     }
-    mirrorStable(dir, "opq", st)
-    dir
-  }
 
-  private def mediaFeatDir(c: Catalog): String = {
-    val st = stamp(c.dir, "documents", "mediafeat:v1:16x16")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_mediafeat_" + st).toString
-    if (!new java.io.File(s"$dir/feat", "_SUCCESS").exists() ||
-        !new java.io.File(s"$dir/resized", "_SUCCESS").exists()) {
+  /** Persisted decoded-media feature artifacts for X10/X25 (VERDICT r7
+    * item 3 — the X65/X08/X09 artifact split applied to media): the
+    * DECODE half (javax.imageio over the synthesized payloads, bilinear
+    * resize, luma histograms) is engine-specific GENERATION, run once
+    * per corpus and persisted; the luma histogram is stored as
+    * micro-unit BIGINTs (round(f×10⁶)) so every declared downstream
+    * aggregate is exact integer math both engines reproduce
+    * bit-for-bit. Layout: `$dir/feat` = original payload features,
+    * `$dir/resized` = features of the 16×16 thumbnails re-decoded
+    * through the same codec path.
+    */
+  private def mediaFeatDir(c: Catalog): String =
+    artifact(c, "mediafeat", "mediafeat:v1:16x16", identity,
+      markers = Seq("feat/_SUCCESS", "resized/_SUCCESS"), mirror = "media") { dir =>
       val media = MediaPipeline.toMediaTable(c.documents)
       def micro(d: org.apache.spark.sql.Dataset[graft.media.DecodedMedia]): DataFrame =
         d.toDF().select(col("doc_id"), col("kind"), col("n_bytes"),
@@ -878,20 +785,14 @@ object Extras {
       micro(MediaPipeline.decodeAndFeaturize(MediaPipeline.resizedMedia(media, 16, 16)))
         .write.mode("overwrite").parquet(s"$dir/resized")
     }
-    mirrorStable(dir, "media", st)
-    dir
-  }
 
   /** Persisted decoded-audio features for X26 (same artifact split):
     * javax.sound WAV decode + RMS/zero-crossing extraction persisted
     * once, RMS as micro-unit BIGINT; the declared query is the
     * relational stats downstream.
     */
-  private def audioFeatDir(c: Catalog): String = {
-    val st = stamp(c.dir, "documents", "audiofeat:v1")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_audiofeat_" + st).toString
-    if (!new java.io.File(dir, "_SUCCESS").exists())
+  private def audioFeatDir(c: Catalog): String =
+    artifact(c, "audiofeat", "audiofeat:v1", identity, mirror = "audio_feat")(
       graft.media.AudioPipeline
         .decodeAndFeaturize(graft.media.AudioPipeline.toAudioTable(c.documents))
         .toDF()
@@ -899,20 +800,15 @@ object Extras {
           col("n_samples"), col("duration_ms"),
           round(col("rms") * lit(1e6)).cast("long").as("rms_micro"),
           col("zero_crossings"))
-        .write.mode("overwrite").parquet(dir)
-    mirrorStable(dir, "audio_feat", st)
-    dir
-  }
+        .write.mode("overwrite").parquet(_))
 
   /** Persisted sampled clip frames for X27 (same artifact split): GFTV
     * demux + every-2nd-frame PNG decode persisted once over the first
     * 100 docs, frame luma as micro-unit BIGINT.
     */
-  private def clipFrameDir(c: Catalog): String = {
-    val st = stamp(c.dir, "documents", "clipframes:v1:k2:first100")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_clipframes_" + st).toString
-    if (!new java.io.File(dir, "_SUCCESS").exists())
+  private def clipFrameDir(c: Catalog): String =
+    artifact(c, "clipframes", "clipframes:v1:k2:first100", identity,
+      mirror = "clip_frames")(
       graft.media.ClipPipeline
         .sampleFrames(graft.media.ClipPipeline.toClipTable(
           c.documents.orderBy("doc_id").limit(100)), everyK = 2)
@@ -920,10 +816,7 @@ object Extras {
         .select(col("doc_id"), col("frame_idx"), col("n_frames"),
           col("width"), col("height"),
           round(col("f0").cast("double") * lit(1e6)).cast("long").as("f0_micro"))
-        .write.mode("overwrite").parquet(dir)
-    mirrorStable(dir, "clip_frames", st)
-    dir
-  }
+        .write.mode("overwrite").parquet(_))
 
   /** Persisted scoring artifacts for X65 (VERDICT r6 item 5): the
     * trained weight vector AND the featurized raw corpus, both parquet,
@@ -935,11 +828,9 @@ object Extras {
     * round, the top-20 — is fixed scalar SQL both engines run over the
     * same persisted bytes.
     */
-  private def lrScoringDir(c: Catalog): String = {
-    val st = stamp(c.dir, "documents", "logreg:512:20:lr2.0:l2=1e-6:score")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_lr_" + st).toString
-    if (!new java.io.File(s"$dir/feats", "_SUCCESS").exists()) {
+  private def lrScoringDir(c: Catalog): String =
+    artifact(c, "lr", "logreg:512:20:lr2.0:l2=1e-6:score", identity,
+      markers = Seq("feats/_SUCCESS"), mirror = "lr") { dir =>
       graft.text.QualityClassifier.saveModel(c.spark, lrModel(c), s"$dir/weights")
       graft.text.QualityClassifier
         .featurize(c.documents.filter(col("source") =!= "src0"), dim = 512)
@@ -947,9 +838,6 @@ object Extras {
         .select(col("doc_id"), col("s.f").as("f"), col("s.v").as("v"))
         .write.mode("overwrite").parquet(s"$dir/feats")
     }
-    mirrorStable(dir, "lr", st)
-    dir
-  }
 
   /** Persisted BPE-encoded corpus for X59 (VERDICT r7 item 6): the
     * iterative trainer + rank-greedy encode are the engine-specific
@@ -958,16 +846,10 @@ object Extras {
     * and the declared query — token frequencies — is plain SQL both
     * engines run over the same file.
     */
-  private def bpeEncodedDir(c: Catalog): String = {
-    val st = stamp(c.dir, "documents", "bpeenc:v1:m12")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_bpeenc_" + st).toString
-    if (!new java.io.File(dir, "_SUCCESS").exists())
+  private def bpeEncodedDir(c: Catalog): String =
+    artifact(c, "bpeenc", "bpeenc:v1:m12", identity, mirror = "bpe_encoded")(
       graft.text.Bpe.encodeDocuments(c.documents, bpeMerges(c, 12))
-        .write.mode("overwrite").parquet(dir)
-    mirrorStable(dir, "bpe_encoded", st)
-    dir
-  }
+        .write.mode("overwrite").parquet(_))
 
   /** Persisted DEFLATE lengths for X69 (same artifact split): the
     * native codegen'd deflate expression is the engine-specific half
@@ -975,18 +857,12 @@ object Extras {
     * plain integers, and the declared ratio query is one exact division
     * both engines run over the same file.
     */
-  private def deflateDir(c: Catalog): String = {
-    val st = stamp(c.dir, "documents", "deflate:v1")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_deflate_" + st).toString
-    if (!new java.io.File(dir, "_SUCCESS").exists())
+  private def deflateDir(c: Catalog): String =
+    artifact(c, "deflate", "deflate:v1", identity, mirror = "deflate")(
       c.documents.select(col("doc_id"),
         octet_length(col("text")).as("raw_bytes"),
         graft.functions.VectorFunctions.deflateLen(col("text")).as("deflate_bytes"))
-        .write.mode("overwrite").parquet(dir)
-    mirrorStable(dir, "deflate", st)
-    dir
-  }
+        .write.mode("overwrite").parquet(_))
 
   private def bpeMerges(c: Catalog, numMerges: Int): DataFrame = {
     val key = stamp(c.dir, "documents", s"bpe:$numMerges")
@@ -2264,9 +2140,7 @@ object Extras {
     "X115_opq_error" -> q(c => {
       val pq = pqIndexDir(c)
       val opq = opqIndexDir(c)
-      val dim = c.embeddings
-        .select(org.apache.spark.sql.functions.size(col("embedding")))
-        .first().getInt(0)
+      val dim = Ann.dimOf(c.embeddings)
       val errPq = graft.vector.Opq.quantizationError(c.embeddings,
         graft.vector.Opq.identityRotation(c.spark, dim),
         c.spark.read.parquet(s"$pq/codebook"), dsub = 8)

@@ -144,8 +144,10 @@ object RelationalQueries {
       // single-row-group rescue: the O(n²/brand) pair expansion runs on
       // the probe side's scan task count (ONE task over a small part
       // file — measured 0.64 s of the query's 0.79 s); spreading by the
-      // equi key gives each brand's expansion its own task. Counts are
-      // exact under partitioning; no-op at scale.
+      // equi key hash-distributes the ≤ 25 brands over session
+      // parallelism — at most 25 non-empty tasks, brands sharing a
+      // task when their hashes collide. Counts are exact under
+      // partitioning; no-op at scale.
       val p1 = Scale.spreadForCompute(c.part, col("p_brand")).as("p1")
       val p2 = c.part.as("p2")
       p1.join(p2, col("p1.p_brand") === col("p2.p_brand") && col("p1.p_size") < col("p2.p_size"))

@@ -92,11 +92,6 @@ object MinHashDedup {
       .select(col("doc_id"), array((0 until cfg.numHashes).map(k => col(s"h$k")): _*).as("sig"))
   }
 
-  /** Persist the signature table — the expensive shingle+minhash pass
-    * paid ONCE. Downstream dedup (banding, candidates) runs from the
-    * saved table via [[readSignatures]]; at 100 TB this is the index
-    * artifact every re-dedup/incremental run starts from.
-    */
   /** Hash-scheme version of the signature pipeline. Bump whenever the
     * base hash ([[graft.functions.ShingleHash]]) or the hash family
     * changes — persisted tables from a different scheme must never mix
@@ -109,65 +104,97 @@ object MinHashDedup {
     */
   val SignatureVersion = 3
 
+  /** The config stamp a persisted store carries beside its rows:
+    * `sig_v`, the two geometry columns of its kind, `cfg_chark` and
+    * `cfg_runlevel`. `show` renders a geometry in the refusal text,
+    * `grain` names what a charK mismatch changed.
+    */
+  private final case class StoreStamp(
+      geometry: MinHashConfig => Seq[(String, Int)],
+      show: Seq[Int] => String,
+      grain: String)
+
+  /** Signature tables pin the shingle size and hash count. */
+  private val SigStamp = StoreStamp(
+    c => Seq("cfg_shingle" -> c.shingleSize, "cfg_hashes" -> c.numHashes),
+    g => s" shingle=${g(0)} hashes=${g(1)}", "granularity")
+
+  /** Banded stores pin the banding geometry: band hashes are a function
+    * of it, not just of the hash scheme.
+    */
+  private val BandStamp = StoreStamp(
+    c => Seq("cfg_bands" -> c.bands, "cfg_rows" -> c.rowsPerBand),
+    g => s"/${g(0)}x${g(1)}", "shingle granularity")
+
+  /** `rows` with the `kind` config stamp of `cfg` appended. */
+  private def stamped(rows: DataFrame, kind: StoreStamp, cfg: MinHashConfig): DataFrame =
+    (Seq("sig_v" -> SignatureVersion) ++ kind.geometry(cfg) ++ Seq(
+      "cfg_chark" -> cfg.charK, "cfg_runlevel" -> (if (cfg.runLevel) 1 else 0)))
+      .foldLeft(rows) { case (df, (n, v)) => df.withColumn(n, lit(v)) }
+
+  /** The one version/config gate of every store reader: scheme version,
+    * the kind's geometry, charK AND runLevel must all match, read with
+    * ONE 1-row collect. A mismatch corrupts dedup silently — a different
+    * shingle size verifies candidates against a different n-gram
+    * definition; a different numHashes makes the banding slice
+    * positions meaningless (an out-of-range slice is empty, its hash
+    * constant, and EVERY document collides in those bands); a 16-band
+    * table reused for a 32-band run never collides where it should; a
+    * word-only (charK=0) store read under a charK>0 run signed its
+    * spaceless docs with ZERO shingles, which the one-doc provenance
+    * probe cannot see (any wordy probe doc signs identically under
+    * both) — so every mismatch fails loudly instead. An empty store is
+    * as unusable as a wrong-version one; both surface as
+    * IllegalArgumentException so the artifact cache can treat "refused"
+    * uniformly and rebuild. Stores from before the charK/runLevel
+    * columns existed can only have been built word-only, doc-level.
+    */
+  private def requireStamp(
+      df: DataFrame, kind: StoreStamp, cfg: MinHashConfig, what: String): Unit = {
+    val geo = kind.geometry(cfg)
+    require(("sig_v" +: geo.map(_._1)).forall(df.columns.contains),
+      s"$what has no version/config columns — written by an incompatible build")
+    def orZero(n: String) = if (df.columns.contains(n)) col(n) else lit(0)
+    val head = df.select((col("sig_v") +: geo.map(g => col(g._1))) ++
+      Seq(orZero("cfg_chark"), orZero("cfg_runlevel")): _*)
+      .limit(1).collect().headOption
+    require(head.nonEmpty, s"$what is empty — corrupt or partial write; rebuild it")
+    val Seq(v, g0, g1, ck, rl) = (0 until 5).map(head.get.getInt)
+    // v2→v3 changed ONLY the charK>0 spaceless dispatch (the majority-
+    // non-ASCII guard); a charK=0 store never dispatched, so its
+    // shingle universe is identical under v3 and forcing a rebuild
+    // would discard a valid 100 TB artifact for nothing (ADVICE r16)
+    val versionOk = v == SignatureVersion || (v == 2 && ck == 0)
+    require(versionOk && Seq(g0, g1) == geo.map(_._2),
+      s"$what was built as scheme v$v${kind.show(Seq(g0, g1))} charK=$ck, this run " +
+        s"expects v$SignatureVersion (or v2 with charK=0)${kind.show(geo.map(_._2))} — rebuild it")
+    require(ck == cfg.charK,
+      s"$what was built with charK=$ck, this run expects charK=${cfg.charK} — " +
+        s"spaceless docs signed a different ${kind.grain}; rebuild it")
+    require((rl == 1) == cfg.runLevel,
+      s"$what was built with runLevel=${rl == 1}, this run expects runLevel=${cfg.runLevel} — " +
+        "mixed docs signed embedded runs differently; rebuild it")
+  }
+
+  /** Persist the signature table — the expensive shingle+minhash pass
+    * paid ONCE. Downstream dedup (banding, candidates) runs from the
+    * saved table via [[readSignatures]]; at 100 TB this is the index
+    * artifact every re-dedup/incremental run starts from.
+    */
   def writeSignatures(
       documents: DataFrame,
       path: String,
       cfg: MinHashConfig = MinHashConfig()): Unit =
-    signatures(documents, cfg)
-      .withColumn("sig_v", lit(SignatureVersion))
-      .withColumn("cfg_shingle", lit(cfg.shingleSize))
-      .withColumn("cfg_hashes", lit(cfg.numHashes))
-      .withColumn("cfg_chark", lit(cfg.charK))
-      .withColumn("cfg_runlevel", lit(if (cfg.runLevel) 1 else 0))
+    stamped(signatures(documents, cfg), SigStamp, cfg)
       .write.mode("overwrite").parquet(path)
 
-  /** Reads refuse any scheme OR config mismatch: signatures built with
-    * a different shingle size verify candidates against a different
-    * n-gram definition, and a different numHashes makes the banding
-    * slice positions meaningless (an out-of-range slice is empty, its
-    * hash constant, and EVERY document collides in those bands) — both
-    * would corrupt dedup silently, so they fail loudly instead (the
-    * same contract as [[readBandedIndex]]).
-    */
+  /** Reads refuse any scheme OR config mismatch ([[requireStamp]]). */
   def readSignatures(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       cfg: MinHashConfig = MinHashConfig()): DataFrame = {
     val df = spark.read.parquet(path)
-    require(Seq("sig_v", "cfg_shingle", "cfg_hashes").forall(df.columns.contains),
-      s"signature table at $path has no version/config columns — written by an incompatible build")
-    // an empty table is as unusable as a wrong-version one; surface both
-    // as IllegalArgumentException so cache layers (Extras.sigTable) can
-    // treat "refused" uniformly and rebuild. charK rides the SAME
-    // 1-row collect (tables from before the column existed can only
-    // have been built word-only)
-    val hasCk = df.columns.contains("cfg_chark")
-    val ckCol = if (hasCk) col("cfg_chark") else lit(0)
-    // runLevel rides the same collect: tables from before the column
-    // existed can only have been built doc-level
-    val rlCol =
-      if (df.columns.contains("cfg_runlevel")) col("cfg_runlevel") else lit(0)
-    val head = df.select(col("sig_v"), col("cfg_shingle"), col("cfg_hashes"),
-      ckCol.as("ck"), rlCol.as("rl")).limit(1).collect().headOption
-    require(head.nonEmpty,
-      s"signature table at $path is empty — corrupt or partial write; rebuild it")
-    val (v, sh, nh) = (head.get.getInt(0), head.get.getInt(1), head.get.getInt(2))
-    val ck = head.get.getInt(3)
-    // v2→v3 changed ONLY the charK>0 spaceless dispatch (the majority-
-    // non-ASCII guard); a charK=0 table never dispatched, so its
-    // shingle universe is identical under v3 and forcing a rebuild
-    // would discard a valid 100 TB artifact for nothing (ADVICE r16)
-    val versionOk = v == SignatureVersion || (v == 2 && ck == 0)
-    require(versionOk && sh == cfg.shingleSize && nh == cfg.numHashes,
-      s"signature table at $path was built as scheme v$v shingle=$sh hashes=$nh charK=$ck, this run " +
-        s"expects v$SignatureVersion (or v2 with charK=0) shingle=${cfg.shingleSize} hashes=${cfg.numHashes} — rebuild it")
-    require(ck == cfg.charK,
-      s"signature table at $path was built with charK=$ck, this run expects " +
-        s"charK=${cfg.charK} — spaceless docs signed a different granularity; rebuild it")
-    val rl = head.get.getInt(4) == 1
-    require(rl == cfg.runLevel,
-      s"signature table at $path was built with runLevel=$rl, this run expects " +
-        s"runLevel=${cfg.runLevel} — mixed docs signed embedded runs differently; rebuild it")
+    requireStamp(df, SigStamp, cfg, s"signature table at $path")
     withoutDeleted(spark, path, df.select("doc_id", "sig"), "doc_id")
   }
 
@@ -249,19 +276,13 @@ object MinHashDedup {
     *
     * Band hashes are a function of the FULL banding config, not just the
     * hash scheme, so the artifact pins (sig_v, bands, rows_per_band) and
-    * [[readBandedIndex]] refuses any mismatch — a 16-band table silently
-    * reused for a 32-band run would never collide where it should.
+    * [[readBandedIndex]] refuses any mismatch ([[requireStamp]]).
     */
   def writeBandedIndex(
       sigs: DataFrame,
       path: String,
       cfg: MinHashConfig = MinHashConfig()): Unit =
-    memberTable(sigs, cfg)
-      .withColumn("sig_v", lit(SignatureVersion))
-      .withColumn("cfg_bands", lit(cfg.bands))
-      .withColumn("cfg_rows", lit(cfg.rowsPerBand))
-      .withColumn("cfg_chark", lit(cfg.charK))
-      .withColumn("cfg_runlevel", lit(if (cfg.runLevel) 1 else 0))
+    stamped(memberTable(sigs, cfg), BandStamp, cfg)
       .write.mode("overwrite").parquet(path)
 
   def readBandedIndex(
@@ -269,45 +290,8 @@ object MinHashDedup {
       path: String,
       cfg: MinHashConfig = MinHashConfig()): DataFrame = {
     val df = spark.read.parquet(path)
-    require(Seq("sig_v", "cfg_bands", "cfg_rows").forall(df.columns.contains),
-      s"banded index at $path has no version/config columns — written by an incompatible build")
-    requireBandedConfig(df, cfg, s"banded index at $path")
+    requireStamp(df, BandStamp, cfg, s"banded index at $path")
     withoutDeleted(spark, path, df.select("id", "sigh", "band", "bucket"), "id")
-  }
-
-  /** The shared version/config gate of the two banded-index readers:
-    * scheme version, banding geometry AND charK must all match — a
-    * word-only (charK=0) index read under a charK>0 run signed its
-    * spaceless docs with ZERO shingles, so their buckets never
-    * nominate the near-dup pairs the fallback exists to catch, and the
-    * one-doc provenance probe cannot see it (any wordy probe doc signs
-    * identically under both). Legacy tables (written before the
-    * column existed) can only have been built word-only.
-    */
-  private def requireBandedConfig(
-      df: DataFrame, cfg: MinHashConfig, what: String): Unit = {
-    val ckCol =
-      if (df.columns.contains("cfg_chark")) col("cfg_chark") else lit(0)
-    val rlCol =
-      if (df.columns.contains("cfg_runlevel")) col("cfg_runlevel") else lit(0)
-    val head = df.select(col("sig_v"), col("cfg_bands"), col("cfg_rows"),
-      ckCol.as("ck"), rlCol.as("rl")).limit(1).collect().headOption
-    require(head.nonEmpty, s"$what is empty — corrupt or partial write; rebuild it")
-    val (v, b, r) = (head.get.getInt(0), head.get.getInt(1), head.get.getInt(2))
-    val ck = head.get.getInt(3)
-    // same v2 grandfathering as readSignatures: the v2→v3 dispatch
-    // change is invisible to charK=0 stores (ADVICE r16)
-    val versionOk = v == SignatureVersion || (v == 2 && ck == 0)
-    require(versionOk && b == cfg.bands && r == cfg.rowsPerBand,
-      s"$what was built as scheme v$v/${b}x$r charK=$ck, this run expects " +
-        s"v$SignatureVersion (or v2 with charK=0)/${cfg.bands}x${cfg.rowsPerBand} — rebuild it")
-    require(ck == cfg.charK,
-      s"$what was built with charK=$ck, this run expects charK=${cfg.charK} — " +
-        "spaceless docs signed a different shingle granularity; rebuild it")
-    val rl = head.get.getInt(4) == 1
-    require(rl == cfg.runLevel,
-      s"$what was built with runLevel=$rl, this run expects runLevel=${cfg.runLevel} — " +
-        "mixed docs signed embedded runs differently; rebuild it")
   }
 
   // ---------------- takedowns (text-index doc tombstones) ----------------
@@ -427,13 +411,7 @@ object MinHashDedup {
           else all.join(
             spark.read.parquet(tombs: _*).select(col("doc_id").as("id")).distinct(),
             Seq("id"), "left_anti")
-        kept
-          .withColumn("sig_v", lit(SignatureVersion))
-          .withColumn("cfg_bands", lit(cfg.bands))
-          .withColumn("cfg_rows", lit(cfg.rowsPerBand))
-          .withColumn("cfg_chark", lit(cfg.charK))
-          .withColumn("cfg_runlevel", lit(if (cfg.runLevel) 1 else 0))
-          .write.mode("overwrite").parquet(next)
+        stamped(kept, BandStamp, cfg).write.mode("overwrite").parquet(next)
       },
       failpoint)
 
@@ -465,12 +443,7 @@ object MinHashDedup {
       tableName: String,
       numBuckets: Int = 32,
       cfg: MinHashConfig = MinHashConfig()): Unit =
-    memberTable(sigs, cfg)
-      .withColumn("sig_v", lit(SignatureVersion))
-      .withColumn("cfg_bands", lit(cfg.bands))
-      .withColumn("cfg_rows", lit(cfg.rowsPerBand))
-      .withColumn("cfg_chark", lit(cfg.charK))
-      .withColumn("cfg_runlevel", lit(if (cfg.runLevel) 1 else 0))
+    stamped(memberTable(sigs, cfg), BandStamp, cfg)
       .write.mode("overwrite")
       .format("parquet")
       .bucketBy(numBuckets, "band", "bucket")
@@ -482,9 +455,7 @@ object MinHashDedup {
       tableName: String,
       cfg: MinHashConfig = MinHashConfig()): DataFrame = {
     val df = spark.table(tableName)
-    require(Seq("sig_v", "cfg_bands", "cfg_rows").forall(df.columns.contains),
-      s"banded index table $tableName has no version/config columns — written by an incompatible build")
-    requireBandedConfig(df, cfg, s"banded index table $tableName")
+    requireStamp(df, BandStamp, cfg, s"banded index table $tableName")
     // serve [[deleteDocsFromTable]] tombstones exactly like the parquet
     // readers: free (one existence check) when none exist, and the
     // anti-join's build side is tombstone-sized (broadcast) so the

@@ -43,4 +43,31 @@ class ConnectedComponentsSpec extends SparkSpec {
     val want = TestGraphs.unionFind(pairs)
     assert(got == want, s"diff=${got.toSet -- want.toSet} / ${want.toSet -- got.toSet}")
   }
+
+  test("largeStar without its dedup: components unchanged on a multi-round fixture") {
+    import spark.implicits._
+    // chain (diameter > 1 forces several star rounds) + a triangle with
+    // duplicate input pairs (exercises the duplicate mass largeStar now
+    // forwards to smallStar)
+    val pairs = Seq(
+      (10L, 11L), (11L, 12L), (12L, 13L), (13L, 14L), (14L, 15L),
+      (1L, 2L), (2L, 3L), (1L, 3L), (1L, 3L), (3L, 1L)).toDF("i", "j")
+    val got = ConnectedComponents.components(pairs)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val want = (10L to 15L).map(d => (d, 10L)).toSet ++
+      (1L to 3L).map(d => (d, 1L)).toSet
+    assert(got == want)
+  }
+
+  test("fused-init duplicateClusters ≡ union-find on a diameter-5 chain plus singleton pairs") {
+    import spark.implicits._
+    // chain 10-11-...-15 (propagation needs multiple rounds after the
+    // fused first one) plus two disjoint 2-cliques
+    val pairs = (Seq((10L, 11L), (11L, 12L), (12L, 13L), (13L, 14L), (14L, 15L)) ++
+      Seq((1L, 2L), (7L, 3L))).toDF("i", "j")
+    val got = MinHashDedup.duplicateClusters(pairs)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val want = TestGraphs.unionFind(pairs.collect().map(r => (r.getLong(0), r.getLong(1))))
+    assert(got == want)
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Catalog, Scale}
-import graft.text.{Bm25, QualityClassifier}
+import graft.text.{Bm25, QualityClassifier, TextAnalysis}
 
 /** Pins for the retrieval + learned-quality surface: BM25 equals a
   * driver-side reference (same fixed-order arithmetic), the weighted
@@ -14,6 +14,7 @@ import graft.text.{Bm25, QualityClassifier}
 class RetrievalQualitySpec extends SparkSpec {
 
   lazy val cat: Catalog = Catalog(spark, sf001)
+  lazy val cat1: Catalog = Catalog(spark, sf1)
 
   private def round6(x: Double): Double =
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -466,5 +467,31 @@ class RetrievalQualitySpec extends SparkSpec {
     val docs = Seq((1L, "theorem proof"), (2L, ""), (3L, "  ")).toDF("doc_id", "text")
     val feats = QualityClassifier.featurize(docs, dim = 16)
     assert(feats.select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L))
+  }
+
+  // ---------------------------------------------- scorer internals
+
+  test("bigramLogProbUnordered ≡ bigramLogProb as a row set (order is the only difference)") {
+    val ordered = TextAnalysis.bigramLogProb(cat1.documents).collect()
+    val unordered = TextAnalysis.bigramLogProbUnordered(cat1.documents).collect()
+    assert(ordered.map(_.getLong(0)).toSeq == ordered.map(_.getLong(0)).toSeq.sorted,
+      "public form must stay doc_id-ordered")
+    assert(unordered.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet ==
+      ordered.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
+  }
+
+  test("bindOnce(v)(f) ≡ f(v) including null and empty inputs") {
+    import spark.implicits._
+    val df = Seq(Some("a b c d"), Some(""), Some("x"), None)
+      .toDF("text")
+    val direct = df.select(TextAnalysis.shingles(col("text"), 2).as("s")).collect()
+    // shingles routes through bindOnce; re-derive the unbound form inline
+    val toks = TextAnalysis.tokens(col("text"))
+    val unbound = df.select(
+      when(size(toks) >= 2,
+        transform(sequence(lit(1), size(toks) - 1),
+          i => concat_ws(" ", slice(toks, i, lit(2)))))
+        .otherwise(array().cast("array<string>")).as("s")).collect()
+    assert(direct.map(_.toSeq).toSeq == unbound.map(_.toSeq).toSeq)
   }
 }

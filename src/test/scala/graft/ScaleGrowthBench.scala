@@ -67,8 +67,8 @@ object ScaleGrowthBench {
   /** Straggler gate over every MATERIAL stage (≥ 8 tasks, ≥ 2 s total
     * task time — below that, constant per-task overhead dominates and
     * the ratio measures the scheduler, not the plan): max task within
-    * 4× of the stage median, AND the breaching task itself must be
-    * material (≥ 1 s). The bound separates plans, not noise: a genuine
+    * 4× of the stage median, unless the breaching task is immaterial:
+    * under 1 s AND under 5 % of the stage's total task time. The bound separates plans, not noise: a genuine
     * hot-key pile-up puts ~all N occurrences in one task (measured
     * 10×+ median and multi-second absolute under the old
     * window-over-key plan), while the skew-proof plans' sub-second-
@@ -80,9 +80,11 @@ object ScaleGrowthBench {
     * hot bucket's task stayed ~0.5 s of a 13 s stage — a ratio-only
     * gate then flags a 4 % task as a "straggler", which is exactly the
     * scheduler-measuring failure mode this paragraph promises to
-    * avoid. A real pile-up cannot hide under the floor: one task
-    * carrying a 10⁶-occurrence key is seconds of work at any
-    * parallelism of the rest.
+    * avoid. The share bound keeps the floor from exempting a small
+    * stage's genuine hot key (a 0.9 s task beside 40 ms peers is most
+    * of its stage), and a real pile-up cannot hide under the floor at
+    * scale: one task carrying a 10⁶-occurrence key is seconds of work
+    * at any parallelism of the rest.
     */
   private def assertNoStraggler(
       tag: String, stages: Seq[(Int, Vector[Long])]): Unit = {
@@ -95,7 +97,7 @@ object ScaleGrowthBench {
       println(f"SCALEGROWTH $tag stage=$sid%4d tasks=${ds.size}%3d " +
         f"total=${ds.sum / 1000.0}%7.1f s  median=${med / 1000.0}%6.2f s  " +
         f"max=${ds.last / 1000.0}%6.2f s  max/median=$ratio%.2f")
-      require(ratio <= 4.0 || ds.last < 1000L,
+      require(ratio <= 4.0 || (ds.last < 1000L && ds.last * 20 < ds.sum),
         s"$tag straggler in stage $sid: max ${ds.last} ms vs median $med ms " +
           s"(${ds.size} tasks)")
     }

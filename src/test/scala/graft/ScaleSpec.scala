@@ -3,9 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Catalog, Scale}
+import graft.text.TextAnalysis
 
-/** Equivalence properties for the skew/scale utilities: salting must
-  * never change results, only their distribution across tasks.
+/** Equivalence properties for the skew/scale utilities: salting and
+  * the single-row-group spread must never change results, only their
+  * distribution across tasks.
   */
 class ScaleSpec extends SparkSpec {
 
@@ -324,5 +326,51 @@ class ScaleSpec extends SparkSpec {
       case Array(a, b) => assert(a.last <= b.head)
       case _ =>
     }
+  }
+
+  // ---- spreadForCompute: the single-row-group spread ----
+
+  test("spreadForCompute raises a narrow scan chain to session parallelism, rows identical") {
+    val n = spark.sessionState.conf.numShufflePartitions
+    val base = cat.documents.select("doc_id", "text")
+    val before = base.queryExecution.toRdd.getNumPartitions
+    assert(before < n, s"fixture assumption: small scan ($before) below parallelism ($n)")
+    val spread = Scale.spreadForCompute(base, col("doc_id"))
+    assert(spread.rdd.getNumPartitions == n)
+    assert(spread.collect().map(_.toSeq).toSet == base.collect().map(_.toSeq).toSet)
+  }
+
+  test("spreadForCompute is a no-op when the plan already carries >= parallelism") {
+    val n = spark.sessionState.conf.numShufflePartitions
+    val wide = cat.documents.repartition(n + 3, col("doc_id"))
+      .localCheckpoint(false)
+    val out = Scale.spreadForCompute(wide, col("doc_id"))
+    // same Dataset instance back — no exchange appended, no shrink to n
+    assert(out eq wide)
+  }
+
+  test("spreadForCompute refuses to probe exchange-bearing plans (no compose-time execution)") {
+    // a join-bearing plan probed via toRdd would EXECUTE its stages at
+    // compose time and the caller's action would re-run them — the gate
+    // must hand such plans back untouched
+    val joined = cat.documents.join(
+      cat.documents.select(col("doc_id")), Seq("doc_id"), "left_semi")
+    val out = Scale.spreadForCompute(joined, col("doc_id"))
+    assert(out eq joined)
+    val agg = cat.documents.groupBy("source").agg(count(lit(1)).as("n"))
+    assert(Scale.spreadForCompute(agg, col("source")) eq agg)
+  }
+
+  test("per-doc float accumulation is bit-identical under the spread (scorer contract)") {
+    // the spread's determinism argument: one doc's exploded rows stay
+    // in one partition in original relative order, so an order-
+    // sensitive per-doc double aggregate reproduces exactly
+    val direct = TextAnalysis.bigramLogProb(cat.documents)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    // the scorer spreads internally; compare against a 1-partition
+    // coalesced input, which pins the pre-spread accumulation order
+    val one = TextAnalysis.bigramLogProb(cat.documents.coalesce(1))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(direct.toSeq == one.toSeq)
   }
 }
