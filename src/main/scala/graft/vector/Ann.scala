@@ -397,8 +397,18 @@ object Ann {
   // ---- persisted index ----------------------------------------------
 
   /** Persist the LSH-bucketed corpus partitioned by `bucket`, so probes
-    * become partition-pruned reads. The (nPlanes, seed) pair is part of
-    * the index identity — probe with the same values.
+    * read only their buckets' directories. The (nPlanes, seed) pair is
+    * part of the index identity — probe with the same values.
+    *
+    * The bucketed rows are hash-clustered by `bucket` into
+    * `spark.sql.shuffle.partitions` partitions before the partitioned
+    * write ([[Ivf.writeIndex]]'s discipline), so each `bucket=` dir
+    * receives exactly ONE file, from one task, and the write runs on
+    * every core. Without it each write task emits a file into every
+    * bucket it sees: one input split (the usual single-row-group
+    * embeddings file) serializes all 2^nPlanes creates on one task,
+    * and many splits give tasks × buckets fragments. The explicit
+    * partition count keeps AQE from coalescing the spread away.
     */
   def writeIndex(
       embeddings: DataFrame,
@@ -406,6 +416,8 @@ object Ann {
       nPlanes: Int = 8,
       seed: Long = 42L): Unit =
     withBucket(embeddings, hyperplanes(nPlanes, dimOf(embeddings), seed))
+      .repartition(embeddings.sparkSession.sessionState.conf.numShufflePartitions,
+        col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/vectors")
 
   /** Exact batched kNN JOIN: for EVERY query row, its `k` nearest
@@ -512,8 +524,10 @@ object Ann {
         .map(_.foldLeft(base)((b, i) => b ^ (1L << i))).toSeq)
 
   /** Top-k by cosine against a persisted LSH index: the multi-probe
-    * bucket set becomes LITERAL partition predicates, so the scan reads
-    * only ~sum C(nPlanes,0..r)/2^nPlanes of the corpus.
+    * bucket set selects its `bucket=` directories DIRECTLY
+    * ([[Ivf.probedVectorsAt]], the reader shared with the IVF layout),
+    * so the scan lists and reads only ~sum C(nPlanes,0..r)/2^nPlanes
+    * of the corpus — listing cost O(probed buckets), flat in 2^nPlanes.
     */
   def probeIndex(
       spark: org.apache.spark.sql.SparkSession,
@@ -525,8 +539,9 @@ object Ann {
       seed: Long = 42L): DataFrame = {
     val planes = hyperplanes(nPlanes, probeVec.length, seed)
     val buckets = bucketsWithin(bucketOf(probeVec, planes), nPlanes, probeRadius)
-    spark.read.parquet(s"$path/vectors")
-      .filter(col("bucket").isin(buckets: _*)) // → PartitionFilters
+    Ivf.probedVectorsAt(spark, s"$path/vectors", buckets, partCol = "bucket")
+      // → PartitionFilters over the probed dirs, which are the scan's roots
+      .filter(col("bucket").isin(buckets: _*))
       .select(col("vec_id"), round(dot(typedLit(probeVec), col("embedding")), 6).as("cos"))
       .orderBy(col("cos").desc, col("vec_id"))
       .limit(k)

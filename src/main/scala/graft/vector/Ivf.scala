@@ -329,8 +329,7 @@ object Ivf {
     val cents0 = centroids(embeddings, nLists)
     val cents =
       if (kmeansIters <= 0) cents0
-      else refineCentroids(embeddings, cents0, kmeansIters,
-        dim = embeddings.select(size(col("embedding"))).first().getInt(0))
+      else refineCentroids(embeddings, cents0, kmeansIters, dim = Ann.dimOf(embeddings))
     val indexed = assign(embeddings, cents)
     val probeEmb = embeddings.filter(col("vec_id") === probeId)
       .select(col("embedding").as("probe_emb"))
@@ -369,8 +368,7 @@ object Ivf {
     val cents0 = centroids(embeddings, nLists)
     val cents =
       if (kmeansIters <= 0) cents0
-      else refineCentroids(embeddings, cents0, kmeansIters,
-        dim = embeddings.select(size(col("embedding"))).first().getInt(0))
+      else refineCentroids(embeddings, cents0, kmeansIters, dim = Ann.dimOf(embeddings))
     cents.write.mode("overwrite").parquet(s"$path/centroids")
     val saved = embeddings.sparkSession.read.parquet(s"$path/centroids")
     // cluster by list_id before the partitioned write (the append-path
@@ -795,22 +793,27 @@ object Ivf {
       lists: Seq[Long]): DataFrame =
     probedVectorsAt(spark, s"$path/vectors", lists)
 
-  /** [[probedVectors]] against an arbitrary `list_id=`-partitioned
-    * layout root — shared by the base index and the streaming-ingest
-    * delta directories ([[probeIndexWithDeltas]]).
+  /** The slice of a `key=value`-partitioned vectors layout under
+    * `vectorsRoot` whose `partCol` is one of `values`, read by direct
+    * `partCol=<v>` paths ([[probedVectors]]'s contract: listing
+    * O(|values|), lists without data skipped). One reader serves both
+    * index layouts: the IVF `list_id=` layout (the base index here and
+    * the streaming-ingest delta directories, [[probeIndexWithDeltas]])
+    * and the sign-LSH `bucket=` layout of [[Ann.probeIndex]].
     *
     * `schemaRoot`: where to schema-infer the EMPTY fallback frame when
-    * no probed list dir holds data. Delta callers pass the BASE
+    * no probed dir holds data. Delta callers pass the BASE
     * vectors layout: a delta root deleted by a concurrent compaction
     * between listing and planning (or a committed-but-dataless delta)
     * must yield zero candidates, not a schema-inference failure
     * against the vanished root — the rows it held are served from the
     * freshly folded base.
     */
-  private def probedVectorsAt(
+  private[vector] def probedVectorsAt(
       spark: org.apache.spark.sql.SparkSession,
       vectorsRoot: String,
-      lists: Seq[Long],
+      values: Seq[Long],
+      partCol: String = "list_id",
       schemaRoot: Option[String] = None): DataFrame = {
     val base = new org.apache.hadoop.fs.Path(vectorsRoot)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -823,7 +826,7 @@ object Ivf {
           val n = s.getPath.getName
           s.isFile && s.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
         }
-      val dirs = lists.map(id => new org.apache.hadoop.fs.Path(base, s"list_id=$id"))
+      val dirs = values.map(v => new org.apache.hadoop.fs.Path(base, s"$partCol=$v"))
         .filter(hasData).map(_.toString)
       if (dirs.isEmpty) emptyFrame
       else spark.read.option("basePath", vectorsRoot).parquet(dirs: _*)

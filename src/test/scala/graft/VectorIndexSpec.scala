@@ -14,6 +14,8 @@ import graft.vector.{Ann, Ivf}
   *   - probes against a written index equal the recompute-everything
   *     paths (and degenerate to brute force at full probe width);
   *   - probe plans read only matching partitions (PartitionFilters);
+  *     ANN probes open only their `bucket=` dirs, and the ANN write
+  *     leaves one file per bucket dir;
   *   - MinHash dedup from a persisted signature table equals the direct
   *     pipeline;
   *   - DotProduct null-on-length-mismatch (the certified zip_with
@@ -75,6 +77,60 @@ class VectorIndexSpec extends SparkSpec {
       s"probe must prune bucket partitions:\n$plan")
     // multi-probe enumeration: radius-2 over 8 planes = 1 + 8 + 28 buckets
     assert(Ann.bucketsWithin(0L, 8, 2).distinct.size == 37)
+  }
+
+  /** The ANN index the direct-path tests share: written once. */
+  private lazy val annIdx: String = {
+    val path = tmp("graft_ann_direct")
+    Ann.writeIndex(cat.embeddings, path, nPlanes = 8)
+    path
+  }
+
+  test("ANN probe reads its buckets by direct bucket= paths, not the whole layout") {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val vec = probeVecOf(0)
+    val probed = Ann.bucketsWithin(Ann.bucketOf(vec, Ann.hyperplanes(8, vec.length)), 8, 2).toSet
+    val plan = Ann.probeIndex(spark, annIdx, vec, k = 5, nPlanes = 8, probeRadius = 2)
+      .queryExecution.optimizedPlan
+    val roots = plan.collect { case l: LogicalRelation => l.relation }
+      .collect { case h: HadoopFsRelation => h.location.rootPaths }.flatten
+    assert(roots.nonEmpty && roots.size <= 37, s"radius-2 probe roots: $roots")
+    val fs = roots.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    roots.foreach { r =>
+      val b = r.getName.stripPrefix("bucket=")
+      assert(r.getName.startsWith("bucket=") && probed(b.toLong) && fs.exists(r),
+        s"scan root $r is not an existing probed bucket dir")
+    }
+  }
+
+  test("ANN direct-path probe equals the whole-layout read at radius 0..3") {
+    val whole = spark.read.parquet(s"$annIdx/vectors")
+    val probes = cat.embeddings.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(5)
+      .select("embedding").collect().map(_.getSeq[Float](0).toArray)
+    def rows(df: DataFrame): Seq[(Long, Double)] =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    for (vec <- probes; r <- 0 to 3) {
+      val buckets = Ann.bucketsWithin(Ann.bucketOf(vec, Ann.hyperplanes(8, vec.length)), 8, r)
+      val reference = whole.filter(col("bucket").isin(buckets: _*))
+        .select(col("vec_id"),
+          round(VectorFunctions.dot(typedLit(vec), col("embedding")), 6).as("cos"))
+        .orderBy(col("cos").desc, col("vec_id"))
+        .limit(10)
+      val got = rows(Ann.probeIndex(spark, annIdx, vec, k = 10, nPlanes = 8, probeRadius = r))
+      assert(got.nonEmpty && got == rows(reference), s"radius $r")
+    }
+  }
+
+  test("ANN index write leaves one parquet file per bucket dir over a 24-split input") {
+    val path = tmp("graft_ann_frag")
+    Ann.writeIndex(cat.embeddings.repartition(24), path, nPlanes = 8)
+    val bucketDirs = new java.io.File(s"$path/vectors")
+      .listFiles((f: java.io.File) => f.isDirectory && f.getName.startsWith("bucket=")).toSeq
+    assert(bucketDirs.nonEmpty)
+    bucketDirs.foreach { d =>
+      val files = d.listFiles((_, n) => n.endsWith(".parquet")).length
+      assert(files == 1, s"${d.getName}: $files files")
+    }
   }
 
   test("MinHash dedup from a persisted signature table equals the direct pipeline") {
