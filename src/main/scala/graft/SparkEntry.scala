@@ -5,12 +5,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core.Engine
 import graft.sources.Tables
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Query-surface contract — see SURVEY.md §7.
   *
   * `queries` exposes every implemented operator from SURVEY.md §2; each
-  * entry registers the ten parquet tables of the given scale-factor dir
-  * as temp views and runs the Spark-dialect contract SQL (the certified
-  * E1 path, SURVEY.md §3). Additional non-SQL operators (LSH dedup,
+  * contract entry reads the ten parquet tables of the given
+  * scale-factor dir through a [[graft.ops.Catalog]] and runs its typed
+  * DataFrame form (E2, [[graft.ops.DfContract]]), hash-equivalent to the
+  * certified contract SQL. Additional non-SQL operators (LSH dedup,
   * ANN, streaming) are appended by their modules with rows-only checks.
   */
 object SparkEntry {
@@ -34,12 +35,7 @@ object SparkEntry {
     Contract.all.map { c =>
       c.id -> { (spark: SparkSession, sfDir: String) =>
         Engine.configure(spark)
-        graft.ops.DfContract.all.get(c.id) match {
-          case Some(fn) => fn(graft.ops.Catalog(spark, sfDir))
-          case None =>
-            Tables.registerAll(spark, sfDir)
-            spark.sql(c.sparkSql)
-        }
+        graft.ops.DfContract.all(c.id)(graft.ops.Catalog(spark, sfDir))
       }
     }.toMap ++ Extras.queries
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.sources.Tables
+import graft.sources.{Store, Tables}
 
 /** First-seen winner of one content fingerprint in the dedup stream. */
 final case class DedupWinner(doc_id: Long, fp: Long)
@@ -213,9 +213,9 @@ object StreamOps {
     * [[graft.text.MinHashDedup.dedupWinners]] over (corpus ∪ all new
     * docs) restricted to the new ids (StreamingSpec pins it).
     *
-    * Delta discovery lists the local delta directory (production on an
-    * object store would use `FileSystem.listStatus` — same shape, one
-    * metadata call per batch).
+    * Delta discovery lists the completed batch dirs through the Hadoop
+    * FileSystem API ([[Store.completedDirs]]), so it works unchanged on
+    * an object store — one metadata listing per batch.
     */
   def ingestDedupStream(
       newDocs: DataFrame,
@@ -453,7 +453,7 @@ object StreamOps {
     */
   private def completedBatchDirs(
       spark: SparkSession, root: String, excludeBatch: Long): Seq[String] =
-    graft.vector.Ivf.completedDirs(spark, root)
+    Store.completedDirs(spark, root)
       .filterNot(d => new org.apache.hadoop.fs.Path(d).getName == s"b$excludeBatch")
 
   /** Frozen benchmark-decontamination stage config for

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.sources.Store
+
 /** MinHash + LSH near-duplicate detection — the 100 TB dedup scale path
   * (SURVEY.md §4.3.2).
   *
@@ -195,7 +197,7 @@ object MinHashDedup {
       cfg: MinHashConfig = MinHashConfig()): DataFrame = {
     val df = spark.read.parquet(path)
     requireStamp(df, SigStamp, cfg, s"signature table at $path")
-    withoutDeleted(spark, path, df.select("doc_id", "sig"), "doc_id")
+    Store.withoutDeleted(spark, tombstoneRoot(path), df.select("doc_id", "sig"), "doc_id")
   }
 
   private def bandStructs(cfg: MinHashConfig) = (0 until cfg.bands).map { b =>
@@ -291,7 +293,8 @@ object MinHashDedup {
       cfg: MinHashConfig = MinHashConfig()): DataFrame = {
     val df = spark.read.parquet(path)
     requireStamp(df, BandStamp, cfg, s"banded index at $path")
-    withoutDeleted(spark, path, df.select("id", "sigh", "band", "bucket"), "id")
+    Store.withoutDeleted(spark, tombstoneRoot(path),
+      df.select("id", "sigh", "band", "bucket"), "id")
   }
 
   // ---------------- takedowns (text-index doc tombstones) ----------------
@@ -303,10 +306,6 @@ object MinHashDedup {
     */
   private def tombstoneRoot(path: String): String =
     path.stripSuffix("/") + ".tombstones"
-
-  private def tombstoneDirs(
-      spark: org.apache.spark.sql.SparkSession, path: String): Seq[String] =
-    graft.vector.Ivf.completedDirs(spark, tombstoneRoot(path))
 
   /** Record a doc takedown against a persisted signature table or
     * banded index at `path` — the text-side mirror of
@@ -326,10 +325,10 @@ object MinHashDedup {
     * serves those tombstones like the parquet readers do.
     */
   def deleteDocs(ids: DataFrame, path: String): Unit =
-    // stage-then-rename batch claim ([[graft.vector.Ivf.claimBatchDir]])
-    // — two concurrent takedown calls can never collide on one d<n> and
+    // stage-then-rename batch claim ([[Store.claimBatchDir]]) — two
+    // concurrent takedown calls can never collide on one d<n> and
     // silently destroy each other's batch (ADVICE r16)
-    graft.vector.Ivf.claimBatchDir(
+    Store.claimBatchDir(
       ids.select(col("doc_id").cast("long").as("doc_id")).distinct(),
       tombstoneRoot(path), "d")
 
@@ -357,21 +356,6 @@ object MinHashDedup {
   def deleteDocsFromTable(ids: DataFrame, tableName: String): Unit =
     deleteDocs(ids, tableLocation(ids.sparkSession, tableName))
 
-  /** `df` minus tombstoned doc ids of the store at `path` — applied by
-    * every reader BEFORE any downstream banding/bucketing, so a
-    * deleted doc stops nominating candidates immediately. Free when no
-    * tombstones exist.
-    */
-  private def withoutDeleted(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, df: DataFrame, idCol: String): DataFrame =
-    tombstoneDirs(spark, path) match {
-      case Nil => df
-      case dirs => df.join(
-        spark.read.parquet(dirs: _*).select(col("doc_id").as(idCol)).distinct(),
-        Seq(idCol), "left_anti")
-    }
-
   /** Fold the completed streaming banded-index deltas under
     * `deltaRoot` (the ingest streams' `index_delta/b<id>` dirs) into
     * the base index at `basePath` — the text-side analogue of
@@ -385,7 +369,7 @@ object MinHashDedup {
     * the same pass (their rows anti-joined away, the tombstone dirs
     * absorbed via the manifest) — exactly the Ivf tombstone contract.
     *
-    * Crash discipline is [[graft.vector.Ivf.compactLayout]]'s staged
+    * Crash discipline is [[Store.compactLayout]]'s staged
     * swap + `_FOLDED_DELTAS` manifest (every window re-runnable, each
     * absorbed dir deleted exactly once). Run from the maintenance
     * schedule, not concurrently with a micro-batch mid-read.
@@ -396,23 +380,10 @@ object MinHashDedup {
       deltaRoot: String,
       cfg: MinHashConfig = MinHashConfig(),
       failpoint: String = ""): Unit =
-    graft.vector.Ivf.compactLayout(spark, basePath,
-      () => graft.vector.Ivf.completedDirs(spark, deltaRoot) ++
-        tombstoneDirs(spark, basePath),
-      (dirs, next) => {
-        val (tombs, deltas) = dirs.partition(p =>
-          new org.apache.hadoop.fs.Path(p).getParent.getName ==
-            new org.apache.hadoop.fs.Path(tombstoneRoot(basePath)).getName)
-        val all = deltas
-          .map(readBandedIndex(spark, _, cfg))
-          .foldLeft(readBandedIndex(spark, basePath, cfg))(_ unionByName _)
-        val kept =
-          if (tombs.isEmpty) all
-          else all.join(
-            spark.read.parquet(tombs: _*).select(col("doc_id").as("id")).distinct(),
-            Seq("id"), "left_anti")
-        stamped(kept, BandStamp, cfg).write.mode("overwrite").parquet(next)
-      },
+    Store.compactLayout(spark, basePath, deltaRoot,
+      Some(tombstoneRoot(basePath) -> "id"),
+      readBandedIndex(spark, _, cfg),
+      stamped(_, BandStamp, cfg).write.mode("overwrite").parquet(_),
       failpoint)
 
   /** Candidate pairs straight from a persisted banded index — no
@@ -461,7 +432,7 @@ object MinHashDedup {
     // anti-join's build side is tombstone-sized (broadcast) so the
     // table's (band, bucket) clustering survives for the exchange-free
     // downstream joins
-    withoutDeleted(spark, tableLocation(spark, tableName),
+    Store.withoutDeleted(spark, tombstoneRoot(tableLocation(spark, tableName)),
       df.select("id", "sigh", "band", "bucket"), "id")
   }
 

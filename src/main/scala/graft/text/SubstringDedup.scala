@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.Store
+
 /** Exact substring-level deduplication: find every maximal token span
   * that occurs more than once across the corpus (or within one
   * document) and keep only its FIRST occurrence — the span-granular
@@ -670,7 +672,7 @@ object SubstringDedup {
     * replayed fold idempotent), and the stamps are re-written on the
     * compacted table.
     *
-    * Crash discipline is [[graft.vector.Ivf.compactLayout]]'s staged
+    * Crash discipline is [[Store.compactLayout]]'s staged
     * swap + `_FOLDED_DELTAS` manifest: any crash window is
     * re-runnable, a folded delta dir is deleted exactly once, and
     * a half-staged `basePath.next` without its manifest is ignored.
@@ -694,18 +696,12 @@ object SubstringDedup {
       minTokens: Int,
       charTokens: Boolean = false,
       failpoint: String = ""): Unit =
-    graft.vector.Ivf.compactLayout(spark, basePath,
-      () => graft.vector.Ivf.completedDirs(spark, deltaRoot),
-      (deltas, next) => {
-        deltas
-          .map(loadWindowKeys(spark, _, minTokens, charTokens))
-          .foldLeft(loadWindowKeys(spark, basePath, minTokens, charTokens))(
-            _ unionByName _)
-          .distinct()
-          .withColumn("cfg_chartok", lit(if (charTokens) 1 else 0))
-          .withColumn("cfg_wintok", lit(minTokens))
-          .write.mode("overwrite").parquet(next)
-      },
+    Store.compactLayout(spark, basePath, deltaRoot, None,
+      loadWindowKeys(spark, _, minTokens, charTokens),
+      _.distinct()
+        .withColumn("cfg_chartok", lit(if (charTokens) 1 else 0))
+        .withColumn("cfg_wintok", lit(minTokens))
+        .write.mode("overwrite").parquet(_),
       failpoint)
 
   /** Incremental duplicated spans for an ingest BATCH against an

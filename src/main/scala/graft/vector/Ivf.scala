@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions.dot
+import graft.sources.{Sinks, Store}
 
 /** IVF (inverted-file) index for cosine similarity search — the
   * cluster-pruned alternative to the sign-LSH path in [[Ann]].
@@ -371,10 +372,11 @@ object Ivf {
       else refineCentroids(embeddings, cents0, kmeansIters, dim = Ann.dimOf(embeddings))
     cents.write.mode("overwrite").parquet(s"$path/centroids")
     val saved = embeddings.sparkSession.read.parquet(s"$path/centroids")
-    // cluster by list_id before the partitioned write (the append-path
-    // discipline): without it every write task emits a file into every
-    // list dir it sees — at nLists ∝ N that is tasks × nLists fragments,
-    // and fragment count is what probes pay per file-open. Assignment
+    // Sinks.parquetCompacted clusters by list_id before the partitioned
+    // write (the append-path discipline): without it every write task
+    // emits a file into every list dir it sees — at nLists ∝ N that is
+    // tasks × nLists fragments, and fragment count is what probes pay
+    // per file-open. Assignment
     // routes through assignForBuild: exact argmax below
     // HierarchicalThreshold lists, the two-level path above it. The
     // switch input is the ACTUAL persisted centroid count, not the
@@ -383,9 +385,8 @@ object Ivf {
     // index whose real list count the exact argmax handles fine (it is
     // also what appendToIndex computes, so base and appends always use
     // the same policy).
-    assignForBuild(embeddings, saved, saved.count())
-      .repartition(col("list_id"))
-      .write.mode("overwrite").partitionBy("list_id").parquet(s"$path/vectors")
+    Sinks.parquetCompacted(assignForBuild(embeddings, saved, saved.count()),
+      s"$path/vectors", partitionBy = Seq("list_id"))
   }
 
   /** Incrementally APPEND new vectors to a persisted index — the
@@ -432,101 +433,6 @@ object Ivf {
       .write.mode("append").partitionBy("list_id").parquet(s"$path/vectors")
   }
 
-  /** COMPLETED streaming-ingest delta roots under `path/delta`
-    * (`_SUCCESS` present — the ingest discipline shared with the text
-    * side's batch-keyed dirs), sorted by name. One metadata listing.
-    */
-  private def completedDeltas(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[String] =
-    completedDirs(spark, s"$path/delta")
-
-  /** COMPLETED tombstone batch dirs under `path/tombstone` — the
-    * delete twin of [[completedDeltas]].
-    */
-  private def completedTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[String] =
-    completedDirs(spark, s"$path/tombstone")
-
-  /** COMPLETE (_SUCCESS-bearing) dirs under `root0`, via the Hadoop
-    * FileSystem API so remote stores list correctly — shared with the
-    * text-side stores (SubstringDedup/MinHashDedup maintenance).
-    */
-  private[graft] def completedDirs(
-      spark: org.apache.spark.sql.SparkSession,
-      root0: String): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(root0)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Nil
-    else fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory &&
-        // dot-dirs are in-flight stages ([[claimBatchDir]]) — invisible
-        // until their atomic rename publishes them (Hadoop's own
-        // hidden-file convention): reading one mid-rename would race,
-        // and a compaction manifest absorbing one would delete a batch
-        // that is about to be published
-        !s.getPath.getName.startsWith(".") &&
-        fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.toString).sorted
-  }
-
-  /** Race-safe claim of the next sequential batch dir under `root0`:
-    * the rows are written to a hidden stage dir first (invisible to
-    * [[completedDirs]] consumers), then atomically RENAMED to
-    * `<prefix><n>` for the smallest free n — two concurrent writers
-    * can compute the same list-max+1 but only one rename wins a slot;
-    * the loser takes the next one. The bare max+1-then-overwrite idiom
-    * this replaces let the second writer silently destroy the first
-    * batch (ADVICE r16). The explicit exists() guard matters on
-    * local filesystems, where rename INTO an existing directory moves
-    * the source inside it instead of failing.
-    */
-  private[graft] def claimBatchDir(
-      df: org.apache.spark.sql.DataFrame,
-      root0: String,
-      prefix: String): String = {
-    val spark = df.sparkSession
-    val root = new org.apache.hadoop.fs.Path(root0)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = new org.apache.hadoop.fs.Path(root,
-      s".stage-${java.util.UUID.randomUUID()}")
-    df.write.mode("overwrite").parquet(stage.toString)
-    // reclaim stage debris a crashed earlier claim left behind (a
-    // dot-dir is invisible to every reader, so the only cost is disk —
-    // but batch payloads are full parquet, not markers, and nothing
-    // else ever deletes them). One hour of age keeps any CONCURRENT
-    // writer's live stage safe.
-    val cutoff = System.currentTimeMillis() - 60L * 60 * 1000
-    fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(".stage-") &&
-        s.getPath != stage && s.getModificationTime < cutoff)
-      .foreach(s => fs.delete(s.getPath, true))
-    var n = fs.listStatus(root).toSeq
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .collect { case nm if nm.startsWith(prefix) &&
-        nm.drop(prefix.length).nonEmpty &&
-        nm.drop(prefix.length).forall(_.isDigit) =>
-        nm.drop(prefix.length).toLong }
-      .maxOption.map(_ + 1L).getOrElse(0L)
-    while (true) {
-      val dst = new org.apache.hadoop.fs.Path(root, s"$prefix$n")
-      if (!fs.exists(dst) && fs.rename(stage, dst)) {
-        // rename(src, existingDir) NESTS src inside dst and still
-        // returns true on HDFS (and via Hadoop's copy fallback on the
-        // local FS) — so a writer that lost the exists→rename window
-        // must detect the nesting and pull its payload back out to
-        // retry, or its batch lands at d<n>/.stage-<uuid> where every
-        // reader's hidden-path filter skips it forever
-        val nested = new org.apache.hadoop.fs.Path(dst, stage.getName)
-        if (!fs.exists(nested)) return dst.toString
-        fs.rename(nested, stage)
-      }
-      n += 1L
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
   /** Mark vectors DELETED — the takedown/opt-out path a real pipeline
     * needs between rebuilds: `ids` (a `vec_id` column) land as a
     * batch-keyed TOMBSTONE delta under `path/tombstone/d<k>`, fitting
@@ -550,31 +456,9 @@ object Ivf {
     * ADC serves through a rerank against this index or compact first.
     */
   def deleteFromIndex(ids: DataFrame, path: String): Unit =
-    claimBatchDir(
+    Store.claimBatchDir(
       ids.select(col("vec_id").cast("long").as("vec_id")).distinct(),
       s"$path/tombstone", "d")
-
-  /** Union of the completed tombstone batches, or None when there are
-    * none — so serve paths skip the anti-join entirely in the common
-    * tombstone-free case.
-    */
-  private def tombstoneIds(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[DataFrame] =
-    completedTombstones(spark, path) match {
-      case Nil => None
-      case dirs => Some(spark.read.parquet(dirs: _*).select("vec_id"))
-    }
-
-  /** `cand` minus tombstoned ids — applied BEFORE any top-k, so
-    * deleted vectors neither surface nor occupy result slots.
-    */
-  private def withoutTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      cand: DataFrame): DataFrame =
-    tombstoneIds(spark, path).fold(cand)(t =>
-      cand.join(t, Seq("vec_id"), "left_anti"))
 
   /** [[probeIndex]] over base vectors PLUS the completed streaming
     * deltas ([[graft.streaming.StreamOps.vectorIngestStream]]'s
@@ -607,13 +491,13 @@ object Ivf {
       .orderBy(col("cs").desc, col("centroid_id"))
       .limit(nProbe)
       .collect().map(_.getLong(0)).toSeq
-    val cand = completedDeltas(spark, path)
+    val cand = Store.completedDirs(spark, s"$path/delta")
       .map(d => probedVectorsAt(spark, d, lists,
           schemaRoot = Some(s"$path/vectors"))
         .select(col("vec_id"), col("embedding")))
       .foldLeft(probedVectors(spark, path, lists)
         .select(col("vec_id"), col("embedding")))(_ unionByName _)
-    withoutTombstones(spark, path, cand)
+    Store.withoutDeleted(spark, s"$path/tombstone", cand, "vec_id")
       .select(col("vec_id"), round(dot(probe, col("embedding")), 6).as("cos"))
       .orderBy(col("cos").desc, col("vec_id"))
       .limit(k)
@@ -624,7 +508,8 @@ object Ivf {
     * already carry their list_id), restoring the O(nProbe) base-only
     * probe after a stretch of streaming ingest.
     *
-    * Crash discipline: the folded layout is fully staged in
+    * Crash discipline ([[Store.compactLayout]]): the folded layout is
+    * fully staged in
     * `vectors.next` (with a `_FOLDED_DELTAS` manifest naming exactly
     * the delta dirs it absorbed) before any rename touches `vectors`,
     * and every crash window is re-runnable — a retry of compactIndex
@@ -655,116 +540,12 @@ object Ivf {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       failpoint: String = ""): Unit =
-    compactLayout(spark, s"$path/vectors",
-      // tombstone batches ride the SAME absorbed-dirs list as vector
-      // deltas: the staged layout's manifest names them, so every
-      // crash-recovery pass deletes them exactly once with the deltas —
-      // a tombstone folded into the layout but left on disk would
-      // re-filter already-removed ids (harmless), but one DELETED
-      // without being folded would resurrect the rows; the manifest
-      // ordering (stage fully, then clean) forbids the latter
-      () => completedDeltas(spark, path) ++ completedTombstones(spark, path),
-      (dirs, next) => {
-        // classify by the PARENT DIR NAME, not a substring of the full
-        // path: an index rooted under a directory that happens to be
-        // named "tombstone" would otherwise classify its vector deltas
-        // as tombstone batches and anti-join their rows away forever
-        val (tombs, deltas) = dirs.partition(p =>
-          new org.apache.hadoop.fs.Path(p).getParent.getName == "tombstone")
-        val all = deltas
-          .map(d => spark.read.parquet(d)
-            .select(col("vec_id"), col("embedding"), col("list_id").cast("long").as("list_id")))
-          .foldLeft(spark.read.parquet(s"$path/vectors")
-            .select(col("vec_id"), col("embedding"), col("list_id").cast("long").as("list_id")))(
-            _ unionByName _)
-        val kept =
-          if (tombs.isEmpty) all
-          else all.join(spark.read.parquet(tombs: _*).select("vec_id"),
-            Seq("vec_id"), "left_anti")
-        kept.repartition(col("list_id"))
-          .write.mode("overwrite").partitionBy("list_id")
-          .parquet(next)
-      },
+    Store.compactLayout(spark, s"$path/vectors", s"$path/delta",
+      Some(s"$path/tombstone" -> "vec_id"),
+      spark.read.parquet(_)
+        .select(col("vec_id"), col("embedding"), col("list_id").cast("long").as("list_id")),
+      Sinks.parquetCompacted(_, _, partitionBy = Seq("list_id")),
       failpoint)
-
-  /** The staged-swap + `_FOLDED_DELTAS` manifest compaction state
-    * machine, shared by [[compactIndex]] (the `vectors` layout) and
-    * [[Pq.compactCodes]] (the `codes` layout): list the completed
-    * deltas, `stage(deltas, nextPath)` the folded layout, write the
-    * manifest INSIDE it, then swap `base → base.old → base` and clean
-    * up — with the two recovery passes (base lost mid-swap; swapped
-    * but died before cleanup) at the top so any crash window is
-    * re-runnable. Every rename is CHECKED: Hadoop FileSystem.rename
-    * reports most failures by returning false, and silently proceeding
-    * past a failed swap-in to the delta deletions would lose the
-    * folded rows forever — a false rename now aborts loudly with the
-    * layout still recoverable by a retry.
-    *
-    * `failpoint` crash-injects after the named step (the spec suites
-    * exercise every window on both layouts). Also reused by the TEXT
-    * side ([[graft.text.SubstringDedup.compactWindowKeys]],
-    * [[graft.text.MinHashDedup.compactBandedIndex]]) — one state
-    * machine, every store.
-    */
-  private[graft] def compactLayout(
-      spark: org.apache.spark.sql.SparkSession,
-      base: String,
-      listDeltas: () => Seq[String],
-      stage: (Seq[String], String) => Unit,
-      failpoint: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def hp(p: String) = new org.apache.hadoop.fs.Path(p)
-    def del(p: String): Unit = if (fs.exists(hp(p))) fs.delete(hp(p), true)
-    def mv(src: String, dst: String): Unit =
-      if (!fs.rename(hp(src), hp(dst)))
-        throw new IllegalStateException(
-          s"rename $src -> $dst failed — compaction aborted before any delta deletion; retry recovers")
-    def crash(point: String): Unit =
-      if (failpoint == point)
-        throw new IllegalStateException(s"injected crash at $point")
-    val next = s"$base.next"
-    val old = s"$base.old"
-    // recovery 1: a previous compaction died BETWEEN the two swap
-    // renames — no base dir. Complete the swap-in from the fully
-    // staged (manifest'd) next, or roll back to old.
-    if (!fs.exists(hp(base))) {
-      if (fs.exists(hp(s"$next/_FOLDED_DELTAS"))) mv(next, base)
-      else if (fs.exists(hp(old))) mv(old, base)
-      else
-        throw new IllegalStateException(
-          s"$base missing and neither $next (manifest'd) nor $old exists — not a recoverable compaction crash")
-    }
-    // recovery 2: swapped but died before cleanup — the manifest inside
-    // the live base names the already-folded delta dirs: delete them
-    // (folding them twice would duplicate rows) plus the stale swap dirs
-    val manifest = hp(s"$base/_FOLDED_DELTAS")
-    if (fs.exists(manifest)) {
-      val in = fs.open(manifest)
-      val folded = scala.io.Source.fromInputStream(in).getLines().toSeq
-      in.close()
-      folded.foreach(del)
-      del(old)
-      del(next)
-      fs.delete(manifest, false)
-    }
-    val deltas = listDeltas()
-    if (deltas.nonEmpty) {
-      stage(deltas, next)
-      val out = fs.create(hp(s"$next/_FOLDED_DELTAS"), true)
-      out.write((deltas.mkString("\n") + "\n").getBytes("UTF-8"))
-      out.close()
-      crash("after-stage")
-      del(old)
-      mv(base, old)
-      crash("after-swap-out")
-      mv(next, base)
-      crash("after-swap-in")
-      del(old)
-      deltas.foreach(del)
-      fs.delete(manifest, false)
-    }
-  }
 
   /** The probed slice of a persisted index's vectors table, read by
     * DIRECT list-directory paths instead of a filter over the whole
@@ -854,7 +635,7 @@ object Ivf {
       .orderBy(col("cs").desc, col("centroid_id"))
       .limit(nProbe)
       .collect().map(_.getLong(0)).toSeq
-    withoutTombstones(spark, path, probedVectors(spark, path, lists))
+    Store.withoutDeleted(spark, s"$path/tombstone", probedVectors(spark, path, lists), "vec_id")
       .select(col("vec_id"), round(dot(probe, col("embedding")), 6).as("cos"))
       .orderBy(col("cos").desc, col("vec_id"))
       .limit(k)
@@ -897,7 +678,8 @@ object Ivf {
     // in nLists — see probedVectors)
     val probed = qLists.select("list_id").distinct()
       .collect().map(_.getLong(0)).toSeq
-    val cand = withoutTombstones(spark, path, probedVectors(spark, path, probed))
+    val cand = Store.withoutDeleted(spark, s"$path/tombstone",
+      probedVectors(spark, path, probed), "vec_id")
     val kw = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
     cand
       .join(broadcast(qLists), Seq("list_id"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions.dot
+import graft.sources.Store
 
 /** Product quantization (PQ) for embedding search — the memory-side
   * complement of the IVF list pruning in [[Ivf]]: each `dim`-float
@@ -973,17 +974,6 @@ object Pq {
   // codes file via [[compactCodes]], same crash discipline as
   // [[Ivf.compactIndex]].
 
-  /** Completed (atomically committed) codes-delta dirs, sorted. */
-  private def completedCodesDeltas(
-      spark: org.apache.spark.sql.SparkSession, path: String): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(s"$path/codes_delta")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).filter(s =>
-        fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.toString).sorted
-  }
-
   /** The PQ artifact's codes — base plus every completed streaming
     * delta. Same schema as `$path/codes` (the residual artifact's rows
     * carry list_id); listing cost O(1 + nDeltas), which is why a
@@ -991,13 +981,13 @@ object Pq {
     */
   def codesWithDeltas(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    completedCodesDeltas(spark, path)
+    Store.completedDirs(spark, s"$path/codes_delta")
       .map(spark.read.parquet(_))
       .foldLeft(spark.read.parquet(s"$path/codes"))(_ unionByName _)
 
   /** Fold completed codes deltas into the base codes file — pure row
     * movement (codes are already encoded). Runs on the SAME
-    * [[Ivf.compactLayout]] state machine as [[Ivf.compactIndex]]
+    * [[Store.compactLayout]] state machine as [[Ivf.compactIndex]]
     * (staged `codes.next` + `_FOLDED_DELTAS` manifest, checked
     * renames, both recovery passes), so the crash discipline cannot
     * drift between the two layouts. `failpoint` is test-only crash
@@ -1007,13 +997,8 @@ object Pq {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       failpoint: String = ""): Unit =
-    Ivf.compactLayout(spark, s"$path/codes",
-      () => completedCodesDeltas(spark, path),
-      (deltas, next) =>
-        deltas.map(spark.read.parquet(_))
-          .foldLeft(spark.read.parquet(s"$path/codes"))(_ unionByName _)
-          .write.mode("overwrite").parquet(next),
-      failpoint)
+    Store.compactLayout(spark, s"$path/codes", s"$path/codes_delta", None,
+      spark.read.parquet(_), _.write.mode("overwrite").parquet(_), failpoint)
 
   /** The residual-encoding GO/NO-GO diagnostic: how much of the
     * corpus's squared mass the coarse quantizer explains. One row —

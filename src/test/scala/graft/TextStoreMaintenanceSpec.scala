@@ -299,14 +299,14 @@ class TextStoreMaintenanceSpec extends SparkSpec {
   test("claimBatchDir: sequential naming survives pre-claimed slots; no stage dirs leak; dot-dirs invisible to discovery") {
     import spark.implicits._
     val root = tmp("graft_claim") + "/t"
-    val d0 = graft.vector.Ivf.claimBatchDir(Seq(1L).toDF("doc_id"), root, "d")
+    val d0 = graft.sources.Store.claimBatchDir(Seq(1L).toDF("doc_id"), root, "d")
     assert(d0.endsWith("/d0"), d0)
     // a slot claimed out-of-band (the concurrent-writer shape: d1
     // already exists when this writer computes its max+1) is never
     // overwritten — the claim slides to the next free index
     spark.createDataFrame(Seq(Tuple1(99L))).toDF("doc_id")
       .write.parquet(s"$root/d1")
-    val d2 = graft.vector.Ivf.claimBatchDir(Seq(2L).toDF("doc_id"), root, "d")
+    val d2 = graft.sources.Store.claimBatchDir(Seq(2L).toDF("doc_id"), root, "d")
     assert(d2.endsWith("/d2"), d2)
     assert(spark.read.parquet(s"$root/d1").first().getLong(0) == 99L,
       "the pre-claimed batch must be intact")
@@ -316,7 +316,7 @@ class TextStoreMaintenanceSpec extends SparkSpec {
     val probe = new java.io.File(s"$root/.stage-probe")
     probe.mkdirs()
     java.nio.file.Files.createFile(probe.toPath.resolve("_SUCCESS"))
-    val seen = graft.vector.Ivf.completedDirs(spark, root)
+    val seen = graft.sources.Store.completedDirs(spark, root)
       .map(p => new java.io.File(p).getName)
     assert(!seen.exists(_.startsWith(".")),
       s"completedDirs must skip in-flight stage dirs: $seen")

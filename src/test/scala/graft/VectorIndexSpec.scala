@@ -15,7 +15,8 @@ import graft.vector.{Ann, Ivf}
   *     paths (and degenerate to brute force at full probe width);
   *   - probe plans read only matching partitions (PartitionFilters);
   *     ANN probes open only their `bucket=` dirs, and the ANN write
-  *     leaves one file per bucket dir;
+  *     leaves one file per bucket dir (the IVF write, append and
+  *     compaction keep the same one-file-per-dir guard);
   *   - MinHash dedup from a persisted signature table equals the direct
   *     pipeline;
   *   - DotProduct null-on-length-mismatch (the certified zip_with
@@ -121,16 +122,42 @@ class VectorIndexSpec extends SparkSpec {
     }
   }
 
+  /** Parquet data files per `<partCol>=` dir of the layout at `root`. */
+  private def filesPerDir(root: String, partCol: String): Map[String, Int] =
+    new java.io.File(root)
+      .listFiles((f: java.io.File) => f.isDirectory && f.getName.startsWith(s"$partCol="))
+      .map(d => d.getName -> d.listFiles((_, n) => n.endsWith(".parquet")).length).toMap
+
   test("ANN index write leaves one parquet file per bucket dir over a 24-split input") {
     val path = tmp("graft_ann_frag")
     Ann.writeIndex(cat.embeddings.repartition(24), path, nPlanes = 8)
-    val bucketDirs = new java.io.File(s"$path/vectors")
-      .listFiles((f: java.io.File) => f.isDirectory && f.getName.startsWith("bucket=")).toSeq
-    assert(bucketDirs.nonEmpty)
-    bucketDirs.foreach { d =>
-      val files = d.listFiles((_, n) => n.endsWith(".parquet")).length
-      assert(files == 1, s"${d.getName}: $files files")
-    }
+    val files = filesPerDir(s"$path/vectors", "bucket")
+    assert(files.nonEmpty)
+    files.foreach { case (d, n) => assert(n == 1, s"$d: $n files") }
+  }
+
+  test("IVF write and compaction leave one parquet file per list dir, append adds one per touched dir, over a 24-split input") {
+    val path = tmp("graft_ivf_frag")
+    Ivf.writeIndex(cat.embeddings.repartition(24), path, nLists = 16)
+    val built = filesPerDir(s"$path/vectors", "list_id")
+    assert(built.nonEmpty && built.values.forall(_ == 1), s"writeIndex: $built")
+    // the corpus again under fresh ids: every list it lands in gains one file
+    val maxId = cat.embeddings.agg(max("vec_id")).first().getLong(0)
+    val batch = cat.embeddings
+      .select((col("vec_id") + maxId + 1).as("vec_id"), col("embedding"))
+      .repartition(24)
+    Ivf.appendToIndex(batch, path)
+    val touched = Ivf.assign(batch, spark.read.parquet(s"$path/centroids"))
+      .select("list_id").distinct().collect().map(r => s"list_id=${r.get(0)}").toSet
+    val expected = (built.keySet ++ touched)
+      .map(d => d -> (built.getOrElse(d, 0) + (if (touched(d)) 1 else 0))).toMap
+    assert(filesPerDir(s"$path/vectors", "list_id") === expected)
+    // a takedown gives compaction something to fold
+    Ivf.deleteFromIndex(batch.select("vec_id").limit(3), path)
+    Ivf.compactIndex(spark, path)
+    val compacted = filesPerDir(s"$path/vectors", "list_id")
+    assert(compacted.keySet === expected.keySet && compacted.values.forall(_ == 1),
+      s"compactIndex: $compacted")
   }
 
   test("MinHash dedup from a persisted signature table equals the direct pipeline") {
