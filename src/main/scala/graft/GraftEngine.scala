@@ -74,18 +74,6 @@ final class GraftEngine private (val spark: SparkSession, val dir: String) {
     graft.text.MinHashDedup.dedupWinners(tables.documents,
       sigs = Some(graft.text.MinHashDedup.readSignatures(spark, path)))
 
-  /** Persist the banded member table from a signature table — repeat
-    * dedup runs then skip the banding pass too.
-    */
-  def buildBandedIndex(sigPath: String, bandedPath: String): Unit =
-    graft.text.MinHashDedup.writeBandedIndex(
-      graft.text.MinHashDedup.readSignatures(spark, sigPath), bandedPath)
-
-  /** Near-dup dedup winners straight from a persisted banded index. */
-  def dedupFromBandedIndex(path: String): DataFrame =
-    graft.text.MinHashDedup.dedupWinnersFromBanded(tables.documents,
-      graft.text.MinHashDedup.readBandedIndex(spark, path))
-
   /** Persist the banded member table as a BUCKETED catalog table —
     * repeat dedup runs plan candidate generation with zero shuffle
     * exchanges (the table is bucketed+sorted on the join key).
@@ -320,37 +308,6 @@ final class GraftEngine private (val spark: SparkSession, val dir: String) {
   def chunkDocuments(maxTokens: Int, stride: Int): DataFrame =
     graft.text.TextAnalysis.chunkDocuments(tables.documents, maxTokens, stride)
 
-  /** Learn a deterministic BPE merge table from the corpus (one corpus
-    * scan; iteration is vocab-sized — [[graft.text.Bpe.learnMerges]]).
-    */
-  def learnBpeMerges(numMerges: Int, minPairCount: Long = 2L): DataFrame =
-    graft.text.Bpe.learnMerges(tables.documents, numMerges, minPairCount)
-
-  /** Corpus token statistics under a learned merge table. */
-  def bpeEncodeStats(merges: DataFrame): DataFrame =
-    graft.text.Bpe.encodeStats(tables.documents, merges)
-
-  /** One-pass corpus encode under a learned merge table:
-    * (doc_id, pos, token) rows ([[graft.text.Bpe.encodeDocuments]]).
-    */
-  def bpeEncode(merges: DataFrame): DataFrame =
-    graft.text.Bpe.encodeDocuments(tables.documents, merges)
-
-  /** End-to-end training-set build (quality gate → exact dedup → near
-    * dedup → decontamination → mixture → deterministic order) with
-    * per-stage row accounting; [[graft.pipeline.TrainingSet.writeChunks]]
-    * materializes the result as training-order chunk files.
-    */
-  def buildTrainingSet(
-      benchmark: Option[DataFrame] = None,
-      cfg: graft.pipeline.TrainingSetConfig = graft.pipeline.TrainingSetConfig(),
-      qualityModel: Option[(graft.text.QualityClassifier.Model, Double)] = None,
-      spanRemovalN: Option[Int] = None,
-      importanceSample: Option[(DataFrame, Int)] = None)
-      : graft.pipeline.TrainingSetResult =
-    graft.pipeline.TrainingSet.build(tables.documents, benchmark, cfg,
-      qualityModel, spanRemovalN, importanceSample)
-
   /** Ordered conversion funnel / hour-over-hour cohort retention over
     * the events table.
     */
@@ -371,18 +328,6 @@ final class GraftEngine private (val spark: SparkSession, val dir: String) {
   def quantizeEmbeddings(): DataFrame =
     graft.vector.Quantize.quantize(tables.embeddings)
 
-  /** k-means centroids over the embedding corpus (hash-sampled start +
-    * Lloyd refinement). Persist the result and pass THAT table to the
-    * methods below — the persisted file is the clustering's identity.
-    */
-  def trainKmeans(nClusters: Int, iters: Int): DataFrame = {
-    val emb = tables.embeddings
-    val dim = emb.select(org.apache.spark.sql.functions.size(
-      org.apache.spark.sql.functions.col("embedding"))).first().getInt(0)
-    graft.vector.Ivf.refineCentroids(
-      emb, graft.vector.Ivf.centroids(emb, nClusters), iters, dim)
-  }
-
   /** Per-cluster membership + coherence profile for a trained
     * clustering (see [[graft.vector.SemDedup.clusterProfile]]).
     */
@@ -395,23 +340,11 @@ final class GraftEngine private (val spark: SparkSession, val dir: String) {
   def semanticDedup(cents: DataFrame, threshold: Double): DataFrame =
     graft.vector.SemDedup.semanticDedup(tables.embeddings, cents, threshold)
 
-  /** Embedding-space outlier audit: vectors below `minCos` to their
-    * assigned centroid (see [[graft.vector.SemDedup.outliers]]).
-    */
-  def semanticOutliers(cents: DataFrame, minCos: Double): DataFrame =
-    graft.vector.SemDedup.outliers(tables.embeddings, cents, minCos)
-
   /** Dedup audit report over a duplicate-cluster table (see
     * [[graft.text.MinHashDedup.dedupReport]]).
     */
   def dedupReport(clusters: DataFrame): DataFrame =
     graft.text.MinHashDedup.dedupReport(tables.documents, clusters)
-
-  /** Tokenizer fertility by language over an encoded corpus (see
-    * [[graft.text.Bpe.fertilityByLang]]).
-    */
-  def tokenizerFertility(encoded: DataFrame): DataFrame =
-    graft.text.Bpe.fertilityByLang(encoded, tables.documents)
 
   /** DSIR importance weights of every corpus document against a target
     * seed corpus (see [[graft.text.Dsir.importanceWeights]]).
@@ -424,13 +357,6 @@ final class GraftEngine private (val spark: SparkSession, val dir: String) {
     */
   def compressionStats(): DataFrame =
     graft.text.TextAnalysis.compressionStats(tables.documents)
-
-  /** Per-doc cross-document duplicated n-gram coverage — the exact
-    * substring dedup signal (see
-    * [[graft.text.TextAnalysis.crossDocDupCoverage]]).
-    */
-  def dupNgramCoverage(n: Int = 5): DataFrame =
-    graft.text.TextAnalysis.crossDocDupCoverage(tables.documents, n)
 
   /** Rewrite corpus docs with cross-doc-shared n-gram spans removed —
     * the exact-substring dedup transform (see
@@ -467,33 +393,6 @@ final class GraftEngine private (val spark: SparkSession, val dir: String) {
   def bigramLogProb(): DataFrame =
     graft.text.TextAnalysis.bigramLogProb(tables.documents)
 
-  /** Held-out bigram-LM fluency: train on `trainDocs`, score the
-    * corpus — leakage-free, unlike the self-trained [[bigramLogProb]]
-    * (see [[graft.text.TextAnalysis.bigramLogProbFrom]]).
-    */
-  def heldoutLogProb(trainDocs: DataFrame): DataFrame =
-    graft.text.TextAnalysis.bigramLogProbFrom(trainDocs, tables.documents)
-
-  /** [[heldoutLogProb]] under interpolated absolute-discount
-    * (Kneser–Ney-style) smoothing — the production perplexity-filter
-    * smoothing family (see
-    * [[graft.text.TextAnalysis.bigramLogProbDiscounted]]).
-    */
-  def heldoutLogProbDiscounted(
-      trainDocs: DataFrame, discount: Double = 0.75): DataFrame =
-    graft.text.TextAnalysis.bigramLogProbDiscounted(
-      trainDocs, tables.documents, discount)
-
-  /** Hybrid BM25 + cosine retrieval fused by reciprocal rank (see
-    * [[graft.text.HybridRetrieval.rrfTopK]]); `queries` =
-    * (query_id, terms, qvec).
-    */
-  def hybridRetrieve(
-      embeddings: DataFrame, queries: DataFrame, k: Int,
-      kC: Int = 20, kRrf: Int = 60): DataFrame =
-    graft.text.HybridRetrieval.rrfTopK(
-      tables.documents, embeddings, queries, k, kC, kRrf)
-
   /** Source-affinity LM matrix: every source's docs scored under every
     * source's bigram LM (see
     * [[graft.text.TextAnalysis.sourceLmMatrix]]).
@@ -527,49 +426,12 @@ final class GraftEngine private (val spark: SparkSession, val dir: String) {
       k: Int = 1): DataFrame =
     graft.vector.Ann.semanticLeakage(tables.embeddings, evalFrac, threshold, k)
 
-  /** BM25 top-k retrieval over the corpus for a literal term query
-    * (see [[graft.text.Bm25.topK]]).
-    */
-  def bm25TopK(terms: Seq[String], k: Int): DataFrame =
-    graft.text.Bm25.topK(tables.documents, terms, k)
-
-  /** Batched BM25 for a (query_id, terms) query table — the
-    * inverted-index join form (see [[graft.text.Bm25.knnJoin]]).
-    */
-  def bm25Join(queries: DataFrame, k: Int): DataFrame =
-    graft.text.Bm25.knnJoin(tables.documents, queries, k)
-
   /** Fixed-size weighted sample without replacement, weights from any
     * per-doc column expression (see [[graft.ops.Scale.weightedSample]]).
     */
   def weightedSample(weight: org.apache.spark.sql.Column, k: Int,
       seed: Long = 42L): DataFrame =
     graft.ops.Scale.weightedSample(tables.documents, "doc_id", weight, k, seed)
-
-  /** Train the hashed-BoW logistic quality classifier: corpus docs
-    * matching `targetFilter` are the positive seed, the rest the raw
-    * negatives (see [[graft.text.QualityClassifier.train]]).
-    */
-  def trainQualityClassifier(targetFilter: org.apache.spark.sql.Column,
-      dim: Int = 512, iters: Int = 20): graft.text.QualityClassifier.Model =
-    graft.text.QualityClassifier.train(
-      tables.documents.filter(targetFilter),
-      tables.documents.filter(!targetFilter), dim, iters)
-
-  /** Score every corpus document with a trained quality model (see
-    * [[graft.text.QualityClassifier.score]]).
-    */
-  def scoreQuality(model: graft.text.QualityClassifier.Model): DataFrame =
-    graft.text.QualityClassifier.score(tables.documents, model)
-
-  /** Persist / reload a trained quality model (see
-    * [[graft.text.QualityClassifier.saveModel]]) — the persisted file
-    * is the model's identity, like the IVF/banded index artifacts.
-    */
-  def saveQualityModel(model: graft.text.QualityClassifier.Model, path: String): Unit =
-    graft.text.QualityClassifier.saveModel(spark, model, path)
-  def loadQualityModel(path: String): graft.text.QualityClassifier.Model =
-    graft.text.QualityClassifier.loadModel(spark, path)
 
   /** Decode + featurize media payloads (PNG/JPEG), audio (WAV) and
     * frame containers synthesized from the documents table — the
@@ -579,12 +441,6 @@ final class GraftEngine private (val spark: SparkSession, val dir: String) {
     graft.media.MediaPipeline.mediaFeatures(spark, tables.documents)
   def audioFeatures(): DataFrame =
     graft.media.AudioPipeline.audioFeatures(tables.documents)
-  /** Ingest a directory of raw media files (binaryFile source) into the
-    * (doc_id, media, meta) shape the decode pipeline consumes.
-    */
-  def ingestMediaDir(dir: String, glob: String = "*"): DataFrame =
-    graft.media.MediaPipeline.ingestBinaryDir(spark, dir, glob)
-
   def clipFrameFeatures(everyK: Int = 2): DataFrame =
     graft.media.ClipPipeline.frameFeatures(tables.documents, everyK)
 
@@ -594,59 +450,6 @@ final class GraftEngine private (val spark: SparkSession, val dir: String) {
   def perceptualHashes(): DataFrame =
     graft.media.MediaPipeline.perceptualHashes(
       graft.media.MediaPipeline.toMediaTable(tables.documents))
-
-  /** Visual near-dup pairs by banded Hamming over a perceptual-hash
-    * table (see [[graft.media.MediaPipeline.phashNearDupPairs]]).
-    */
-  def imageNearDups(
-      hashes: DataFrame, maxHamming: Int = 7): DataFrame =
-    graft.media.MediaPipeline.phashNearDupPairs(hashes, maxHamming)
-
-  /** Build + persist a product-quantization index over the embeddings
-    * (see [[graft.vector.Pq.writeIndex]]) — codebook + m-byte codes,
-    * the compressed ANN tier.
-    */
-  def buildPqIndex(
-      path: String, m: Int = 8, ks: Int = 16, iters: Int = 3): Unit = {
-    val dim = tables.embeddings
-      .select(org.apache.spark.sql.functions.size(
-        org.apache.spark.sql.functions.col("embedding")))
-      .first().getInt(0)
-    graft.vector.Pq.writeIndex(tables.embeddings, path, m, ks, iters, dim)
-  }
-
-  /** ADC top-k over a persisted PQ index (see
-    * [[graft.vector.Pq.adcTopK]]); `queries` = (query_id, qvec).
-    */
-  def pqSearch(indexPath: String, queries: DataFrame, k: Int,
-      dsub: Int = 8): DataFrame =
-    graft.vector.Pq.adcTopK(
-      spark.read.parquet(s"$indexPath/codes"),
-      spark.read.parquet(s"$indexPath/codebook"),
-      queries, k, dsub)
-
-  /** IVF+PQ search — the production pairing: coarse-probe the nProbe
-    * nearest lists of `ivfIndexPath`'s centroids, ADC-rank only codes
-    * in probed lists (see [[graft.vector.Pq.ivfAdcTopK]]).
-    */
-  def ivfPqSearch(pqIndexPath: String, ivfIndexPath: String,
-      queries: DataFrame, k: Int, nProbe: Int = 4,
-      dsub: Int = 8): DataFrame =
-    graft.vector.Pq.ivfAdcTopK(
-      tables.embeddings,
-      spark.read.parquet(s"$pqIndexPath/codes"),
-      spark.read.parquet(s"$pqIndexPath/codebook"),
-      spark.read.parquet(s"$ivfIndexPath/centroids"),
-      queries, k, nProbe, dsub)
-
-  /** Per-query recall@k of a PQ search against the exact-L2 ground
-    * truth (see [[graft.vector.Pq.recallAtK]]).
-    */
-  def pqRecall(indexPath: String, queries: DataFrame, k: Int,
-      dsub: Int = 8): DataFrame =
-    graft.vector.Pq.recallAtK(
-      pqSearch(indexPath, queries, k, dsub),
-      graft.vector.Pq.exactL2TopK(tables.embeddings, queries, k))
 
   /** Build + persist the RESIDUAL PQ artifact (IVFADC proper, see
     * [[graft.vector.Pq.writeResidualIndex]]): the coarse quantizer is
@@ -671,7 +474,7 @@ final class GraftEngine private (val spark: SparkSession, val dir: String) {
 
   /** IVFADC search over a residual PQ artifact (see
     * [[graft.vector.Pq.ivfAdcResidualTopK]]); recall audit = feed the
-    * result to [[graft.vector.Pq.recallAtK]] like [[pqRecall]].
+    * result to [[graft.vector.Pq.recallAtK]].
     */
   def ivfAdcSearch(indexPath: String, queries: DataFrame, k: Int,
       nProbe: Int = 4, dsub: Int = 8): DataFrame =
@@ -718,8 +521,8 @@ final class GraftEngine private (val spark: SparkSession, val dir: String) {
 
   /** Build + persist the OPQ artifact (learned-rotation PQ, Ge et al.
     * CVPR 2013 — see [[graft.vector.Opq.writeIndex]]): rotation +
-    * codebook + codes at the same m·ks budget as [[pqSearch]]'s plain
-    * artifact.
+    * codebook + codes at the same m·ks budget as the plain PQ artifact
+    * ([[graft.vector.Pq.writeIndex]]).
     */
   def buildOpqIndex(path: String, m: Int = 8, ks: Int = 16,
       iters: Int = 3, opqIters: Int = 3): Unit = {

@@ -43,5 +43,5 @@ object SparkEntry {
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     */
   def oracleSql: Map[String, String] =
-    Contract.all.map(c => c.id -> c.duckSql).toMap ++ Extras.oracleSql
+    Contract.all.map(c => c.id -> c.duckSql).toMap ++ Oracle.oracleSql
 }

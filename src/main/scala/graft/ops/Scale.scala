@@ -712,20 +712,4 @@ object Scale {
       .sortWithinPartitions("__z")
       .drop("__z")
   }
-
-  /** N-dimensional [[zorderCluster]] over ⌊62/N⌋ bits per key
-    * ([[graft.functions.ZOrderValueN]]): the layout for tables filtered
-    * on three or more dimensions. Same write-side-only caveat as the
-    * 2-ary form.
-    */
-  def zorderClusterN(
-      df: DataFrame,
-      keys: Seq[String],
-      numPartitions: Int): DataFrame = {
-    val z = graft.functions.ZOrderValueN(keys.map(k => col(k).cast("long")): _*)
-    df.withColumn("__z", z)
-      .repartitionByRange(numPartitions, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-  }
 }

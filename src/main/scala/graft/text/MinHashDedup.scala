@@ -290,11 +290,21 @@ object MinHashDedup {
   def readBandedIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
-      cfg: MinHashConfig = MinHashConfig()): DataFrame = {
+      cfg: MinHashConfig = MinHashConfig()): DataFrame =
+    Store.withoutDeleted(spark, tombstoneRoot(path), readBandedRows(spark, path, cfg), "id")
+
+  /** The stamp-gated member rows of one banded dir, tombstones NOT
+    * applied: [[compactBandedIndex]] reads the base and each delta
+    * through this and anti-joins the base's tombstones once, over the
+    * folded union.
+    */
+  private def readBandedRows(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      cfg: MinHashConfig): DataFrame = {
     val df = spark.read.parquet(path)
     requireStamp(df, BandStamp, cfg, s"banded index at $path")
-    Store.withoutDeleted(spark, tombstoneRoot(path),
-      df.select("id", "sigh", "band", "bucket"), "id")
+    df.select("id", "sigh", "band", "bucket")
   }
 
   // ---------------- takedowns (text-index doc tombstones) ----------------
@@ -362,7 +372,7 @@ object MinHashDedup {
     * [[graft.vector.Ivf.compactIndex]]: a long-lived ingest stream
     * otherwise accumulates one tiny parquet dir per micro-batch and
     * every later batch re-reads all of them. Every table is
-    * version/config-validated on the way in (readBandedIndex), member
+    * version/config-validated on the way in (readBandedRows), member
     * rows are pure ROW MOVEMENT (batch-keyed overwrite upstream means
     * no row exists twice), and the config stamps are re-written on the
     * compacted table. Any pending [[deleteDocs]] tombstones fold in
@@ -382,7 +392,7 @@ object MinHashDedup {
       failpoint: String = ""): Unit =
     Store.compactLayout(spark, basePath, deltaRoot,
       Some(tombstoneRoot(basePath) -> "id"),
-      readBandedIndex(spark, _, cfg),
+      readBandedRows(spark, _, cfg),
       stamped(_, BandStamp, cfg).write.mode("overwrite").parquet(_),
       failpoint)
 

@@ -891,17 +891,4 @@ object SubstringDedup {
       windowKeys(vdocs, minTokens, charTokens = true),
       windowKeys(spliced.select("doc_id", "text"), minTokens))
   }
-
-  /** Incremental [[cleanCorpusRunLevel]] for an ingest batch against
-    * a corpus known only by its two-family [[windowKeysRunLevel]]
-    * store: (doc_id, n_tokens, dup_tokens, run_dup_chars,
-    * clean_text). Requires append-only doc ids (see
-    * [[incrementalRunLevelBatch]] for the equivalence contract).
-    */
-  def incrementalCleanCorpusRunLevel(
-      newDocs: DataFrame,
-      charKeys: DataFrame,
-      wordKeys: DataFrame,
-      minTokens: Int): DataFrame =
-    incrementalRunLevelBatch(newDocs, charKeys, wordKeys, minTokens)._1
 }

@@ -1016,11 +1016,6 @@ object TextAnalysis {
     */
   def fingerprint(text: Column): Column = md5(text)
 
-  /** 64-bit xxHash fingerprint — cheaper than MD5 when 64 bits of
-    * collision resistance suffice (candidate bucketing, not identity).
-    */
-  def fingerprint64(text: Column): Column = xxhash64(text)
-
   /** Exact-dedup winners via fingerprint grouping: MIN(doc_id) kept per
     * duplicated fingerprint (hash-groupBy dedup; same contract as L02
     * but scale-safe because the groupBy key is 32 bytes).
