@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, KeyValueGroupedDataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.sources.{Store, Tables}
 
@@ -37,10 +37,7 @@ object StreamOps {
     * size.
     */
   def eventsStream(spark: SparkSession, path: String, maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream
-      .schema(Tables.schemas("events"))
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(path)
+    fileStream(spark, "events", path, maxFilesPerTrigger)
 
   /** Mark `ts` as event time unless an upstream operator already did —
     * a multi-stateful pipeline (e.g. [[dedupEventsWithinWatermark]] →
@@ -82,10 +79,28 @@ object StreamOps {
     * for the streaming dedup path.
     */
   def documentsStream(spark: SparkSession, path: String, maxFilesPerTrigger: Int = 1): DataFrame =
+    fileStream(spark, "documents", path, maxFilesPerTrigger)
+
+  /** Parquet file-source stream read with the pinned schema of `table`. */
+  private def fileStream(
+      spark: SparkSession, table: String, path: String, maxFilesPerTrigger: Int): DataFrame =
     spark.readStream
-      .schema(Tables.schemas("documents"))
+      .schema(Tables.schemas(table))
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(path)
+
+  /** (doc_id, fp) rows keyed by fp = xxhash64(text) — the keyed input of
+    * both exact-dedup streams ([[streamingExactDedup]],
+    * [[streamingDedupWithTtl]]).
+    */
+  private def byFingerprint(documents: DataFrame): KeyValueGroupedDataset[Long, (Long, Long)] = {
+    val spark = documents.sparkSession
+    import spark.implicits._
+    documents
+      .select(col("doc_id"), xxhash64(col("text")).as("fp"))
+      .as[(Long, Long)]
+      .groupByKey(_._2)
+  }
 
   /** Streaming exact dedup with custom state: emit one winner per
     * content fingerprint (xxhash64 of the text), the first occurrence
@@ -104,10 +119,7 @@ object StreamOps {
   def streamingExactDedup(documents: DataFrame): Dataset[DedupWinner] = {
     val spark = documents.sparkSession
     import spark.implicits._
-    documents
-      .select(col("doc_id"), xxhash64(col("text")).as("fp"))
-      .as[(Long, Long)]
-      .groupByKey(_._2)
+    byFingerprint(documents)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (fp: Long, rows: Iterator[(Long, Long)], state: GroupState[Boolean]) =>
           if (state.exists) Iterator.empty
@@ -171,10 +183,7 @@ object StreamOps {
   def streamingDedupWithTtl(documents: DataFrame, ttlMs: Long): Dataset[DedupWinner] = {
     val spark = documents.sparkSession
     import spark.implicits._
-    documents
-      .select(col("doc_id"), xxhash64(col("text")).as("fp"))
-      .as[(Long, Long)]
-      .groupByKey(_._2)
+    byFingerprint(documents)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout)(
         (fp: Long, rows: Iterator[(Long, Long)], state: GroupState[Boolean]) => {
           if (state.hasTimedOut) {
@@ -192,6 +201,41 @@ object StreamOps {
           }
         })
   }
+
+  /** The micro-batch sink protocol of every foreachBatch stream here:
+    * append output mode, progress checkpointed at `checkpoint`, and an
+    * EMPTY micro-batch skipped before `body` runs — an idle trigger
+    * writes nothing (no `b<id>` dir) and no body probes emptiness
+    * again. Bodies stay idempotent under replay by writing only
+    * batch-keyed dirs ([[writeBatch]]) and by reading prior state only
+    * from COMPLETE earlier batches ([[completedBatchDirs]]).
+    */
+  private def sinkBatches(stream: DataFrame, checkpoint: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        if (!batch.isEmpty) body(batch, batchId)
+      }
+      .start()
+
+  /** [[sinkBatches]] for a stage whose whole per-batch output is the
+    * frame `stage` builds from the micro-batch, landed at
+    * `path/b<batchId>` by [[writeBatch]].
+    */
+  private def sinkBatchKeyed(stream: DataFrame, path: String, checkpoint: String)(
+      stage: (DataFrame, Long) => DataFrame): StreamingQuery =
+    sinkBatches(stream, checkpoint)((batch, batchId) =>
+      writeBatch(stage(batch, batchId), path, batchId))
+
+  /** Batch-keyed overwrite, NOT a bare append: a micro-batch replayed
+    * after a crash-between-commit-and-checkpoint rewrites its own
+    * `root/b<batchId>` directory instead of double-appending the same
+    * rows (readers scan `root` with recursiveFileLookup).
+    */
+  private def writeBatch(df: DataFrame, root: String, batchId: Long): Unit =
+    df.write.mode("overwrite").parquet(s"$root/b$batchId")
 
   /** Streaming near-dup INGEST against a persisted banded LSH index —
     * the 100 TB steady-state composed end to end: each micro-batch of
@@ -225,15 +269,11 @@ object StreamOps {
       checkpoint: String,
       cfg: graft.text.MinHashConfig = graft.pipeline.TrainingSet.CurationDefaults.CorpusDedup)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    newDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processIngestBatch(batch, batchId, corpusDocs, corpusIndexPath,
-          outDir, cfg, gate = identity, exactDedup = false)
-        ()
-      }
-      .start()
+    sinkBatches(newDocs, checkpoint) { (batch, batchId) =>
+      processIngestBatch(batch, batchId, corpusDocs, corpusIndexPath,
+        outDir, cfg, gate = identity, exactDedup = false)
+      ()
+    }
 
   /** Streaming SUBSTRING-level dedup ingest — the span-granular twin of
     * [[ingestDedupStream]]: each micro-batch of new documents has every
@@ -280,32 +320,17 @@ object StreamOps {
     // deltas this stream wrote are validated once, then trusted
     val validatedDeltas =
       java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    newDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        if (!batch.isEmpty) {
-          val b = batch.toDF().localCheckpoint(true)
-          // COMPLETE earlier deltas only, never this batch's own
-          // (replay must not self-collide)
-          val deltas = completedBatchDirs(spark, s"$outDir/key_delta", batchId)
-          val keys = foldWindowKeys(spark, corpusKeysPath, deltas,
-            minTokens, charTokens = false, validatedDeltas)
-          // the cleaned batch has exactly one consumer (this write) —
-          // a checkpoint would add a full batch-sized pass for nothing
-          graft.text.SubstringDedup
-            .incrementalCleanCorpus(b, keys, minTokens)
-            .write.mode("overwrite").parquet(s"$outDir/accepted/b$batchId")
-          // a batch of all-short docs has no windows: write nothing,
-          // mirroring ingestDedupStream's all-rejected contract
-          writeKeyDeltas(Seq(
-            graft.text.SubstringDedup.windowKeys(b, minTokens) ->
-              s"$outDir/key_delta/b$batchId"))
-        }
-        ()
-      }
-      .start()
+    sinkBatches(newDocs, checkpoint) { (batch, batchId) =>
+      val (cleaned, deltas) = singleFamilyStage0(batch.sparkSession,
+        corpusKeysPath, outDir, batchId, batch.localCheckpoint(true),
+        minTokens, charTokens = false, validatedDeltas)
+      // the cleaned batch has exactly one consumer (this write) —
+      // a checkpoint would add a full batch-sized pass for nothing
+      writeBatch(cleaned, s"$outDir/accepted", batchId)
+      // a batch of all-short docs has no windows: write nothing,
+      // mirroring ingestDedupStream's all-rejected contract
+      writeKeyDeltas(deltas)
+    }
   }
 
   /** Streaming RUN-LEVEL substring-dedup ingest — the mixed-script
@@ -346,23 +371,43 @@ object StreamOps {
       java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val validatedWord =
       java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    newDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        if (!batch.isEmpty) {
-          val b = batch.toDF().localCheckpoint(true)
-          val (cleaned, deltas) = runLevelStage0(spark, corpusKeysRoot,
-            outDir, batchId, b, minTokens, validatedChar, validatedWord)
-          // single consumer — write directly (every expensive upstream
-          // stage is already checkpointed inside the incremental batch)
-          cleaned.write.mode("overwrite").parquet(s"$outDir/accepted/b$batchId")
-          writeKeyDeltas(deltas)
-        }
-        ()
-      }
-      .start()
+    sinkBatches(newDocs, checkpoint) { (batch, batchId) =>
+      val (cleaned, deltas) = runLevelStage0(batch.sparkSession,
+        corpusKeysRoot, outDir, batchId, batch.localCheckpoint(true),
+        minTokens, validatedChar, validatedWord)
+      // single consumer — write directly (every expensive upstream
+      // stage is already checkpointed inside the incremental batch)
+      writeBatch(cleaned, s"$outDir/accepted", batchId)
+      writeKeyDeltas(deltas)
+    }
+  }
+
+  /** The shared per-batch stage 0 of [[ingestSubstringDedupStream]] and
+    * [[curationIngestStreamV2]]'s one-key-family branch — the
+    * single-granularity twin of [[runLevelStage0]]: fold the corpus
+    * keys at `keysPath` with the COMPLETE earlier `key_delta` batches
+    * (never this batch's own — replay must not self-collide), cut the
+    * batch's duplicated spans, and return the cleaned batch plus the
+    * batch's ORIGINAL window keys as the `key_delta/b<id>` write for
+    * [[writeKeyDeltas]] to land LAST. `charTokens` picks the token
+    * unit, and must match the one the key table was built under.
+    */
+  private def singleFamilyStage0(
+      spark: SparkSession,
+      keysPath: String,
+      outDir: String,
+      batchId: Long,
+      src: DataFrame,
+      minTokens: Int,
+      charTokens: Boolean,
+      validated: java.util.Set[String])
+      : (DataFrame, Seq[(DataFrame, String)]) = {
+    val keys = foldWindowKeys(spark, keysPath,
+      completedBatchDirs(spark, s"$outDir/key_delta", batchId),
+      minTokens, charTokens, validated)
+    (graft.text.SubstringDedup.incrementalCleanCorpus(src, keys, minTokens, charTokens),
+      Seq(graft.text.SubstringDedup.windowKeys(src, minTokens, charTokens) ->
+        s"$outDir/key_delta/b$batchId"))
   }
 
   /** The shared per-batch RUN-LEVEL stage 0 of
@@ -472,6 +517,36 @@ object StreamOps {
       dedup: graft.text.MinHashConfig =
         graft.text.MinHashConfig(threshold = 0.5))
 
+  /** Benchmark- and reference-side artifacts a stream freezes ONCE at
+    * construction — re-shingling the static benchmark (or
+    * re-tokenizing the reference) inside every micro-batch would pay
+    * its scan thousands of times over a long-lived ingest: the
+    * benchmark's n-gram shingle set, its verify texts, its banded keys,
+    * its embeddings as the cosine channel's centroid frame (when
+    * given), and the drift reference's tokens (when given).
+    */
+  private final case class FrozenArtifacts(
+      shingleSet: DataFrame,
+      benchDocs: DataFrame,
+      banded: DataFrame,
+      cents: Option[DataFrame],
+      refToks: Option[DataFrame])
+
+  private def freezeArtifacts(
+      benchmark: DataFrame,
+      benchBanded: DataFrame,
+      n: Int,
+      benchEmbeddings: Option[DataFrame] = None,
+      reference: Option[DataFrame] = None): FrozenArtifacts =
+    FrozenArtifacts(
+      graft.text.TextAnalysis.benchmarkShingleSet(benchmark, n).localCheckpoint(true),
+      benchmark.localCheckpoint(true),
+      benchBanded.localCheckpoint(true),
+      benchEmbeddings.map(
+        _.select(col("vec_id").as("centroid_id"), col("embedding").as("centroid"))
+          .localCheckpoint(true)),
+      reference.map(graft.text.TextAnalysis.referenceTokens(_).localCheckpoint(true)))
+
   /** The streaming twin of [[graft.pipeline.TrainingSet.build]] stages
     * 1 → 3, composed into ONE ingest stream: each micro-batch passes the
     * Gopher-style rule gate (1), the optional trained-classifier gate
@@ -512,15 +587,8 @@ object StreamOps {
       perplexityGate: Option[(graft.text.PerplexityGate.Model, Long)] = None,
       benchmarkGate: Option[BenchmarkGate] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    // freeze the benchmark-side artifacts ONCE at stream construction —
-    // re-shingling the static benchmark inside every micro-batch would
-    // pay its scan thousands of times over a long-lived ingest
-    val frozenBench = benchmarkGate.map { bg =>
-      (graft.text.TextAnalysis.benchmarkShingleSet(bg.benchmark, bg.n)
-          .localCheckpoint(true),
-        bg.benchmark.localCheckpoint(true),
-        bg.benchBanded.localCheckpoint(true))
-    }
+    val frozenBench = benchmarkGate.map(bg =>
+      freezeArtifacts(bg.benchmark, bg.benchBanded, bg.n))
     def gate(batch: DataFrame): DataFrame = {
       val ruleKept = graft.text.TextAnalysis
         .filterVerdicts(batch, minWords, maxWords, maxDupWordFrac, maxTopWordFrac)
@@ -545,26 +613,22 @@ object StreamOps {
       // at ingest time (stateless: both channels are per-doc vs the
       // construction-time-frozen benchmark artifacts)
       benchmarkGate.fold(perpled) { bg =>
-        val (shingleSet, benchDocs, banded) = frozenBench.get
+        val frozen = frozenBench.get
         val ng = graft.text.TextAnalysis
-          .contaminationScoresAgainst(perpled, shingleSet, bg.n)
+          .contaminationScoresAgainst(perpled, frozen.shingleSet, bg.n)
           .filter(col("overlap_frac") >= bg.ngramThreshold)
           .select("doc_id")
         val nd = graft.text.MinHashDedup
-          .crossNearDupsAgainstBanded(perpled, benchDocs, banded, bg.dedup)
+          .crossNearDupsAgainstBanded(perpled, frozen.benchDocs, frozen.banded, bg.dedup)
           .select(col("i").as("doc_id")).distinct()
         perpled.join(ng.unionByName(nd).distinct(), Seq("doc_id"), "left_anti")
       }
     }
-    newDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processIngestBatch(batch, batchId, corpusDocs, corpusIndexPath,
-          outDir, cfg, gate, exactDedup = true)
-        ()
-      }
-      .start()
+    sinkBatches(newDocs, checkpoint) { (batch, batchId) =>
+      processIngestBatch(batch, batchId, corpusDocs, corpusIndexPath,
+        outDir, cfg, gate, exactDedup = true)
+      ()
+    }
   }
 
   /** [[ingestDedupStream]] with Spark's NATIVE
@@ -620,15 +684,11 @@ object StreamOps {
       .withWatermark("ts", delay)
       .dropDuplicatesWithinWatermark("__fp")
       .drop("__fp")
-    exactDeduped.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processIngestBatch(batch.drop("ts"), batchId, corpusDocs,
-          corpusIndexPath, outDir, cfg, gate = identity, exactDedup = true)
-        ()
-      }
-      .start()
+    sinkBatches(exactDeduped, checkpoint) { (batch, batchId) =>
+      processIngestBatch(batch.drop("ts"), batchId, corpusDocs,
+        corpusIndexPath, outDir, cfg, gate = identity, exactDedup = true)
+      ()
+    }
   }
 
   /** Shared micro-batch body of [[ingestDedupStream]] /
@@ -636,12 +696,13 @@ object StreamOps {
     * (per-doc, stateless), optionally exact-dedup the gated batch
     * against every prior text and itself, near-dup the survivors
     * against base index + COMPLETE deltas, and write accepted docs +
-    * the index delta batch-keyed. Returns the batch's ACCEPTED rows
-    * (materialized; empty frame when the batch or its gated remainder
-    * is empty) so composing callers can record per-doc verdicts.
+    * the index delta batch-keyed. `batch` is a NON-EMPTY micro-batch
+    * (the [[sinkBatches]] contract). Returns the batch's ACCEPTED rows
+    * (materialized; empty frame when its gated remainder is empty) so
+    * composing callers can record per-doc verdicts.
     */
   private def processIngestBatch(
-      batch: Dataset[org.apache.spark.sql.Row],
+      batch: DataFrame,
       batchId: Long,
       corpusDocs: DataFrame,
       corpusIndexPath: String,
@@ -657,68 +718,65 @@ object StreamOps {
     // complete write as "prior corpus" — its docs would collide with
     // themselves at Jaccard 1.0 and the whole batch would silently
     // self-reject
-    if (batch.isEmpty) batch.toDF().limit(0)
+    val spark = batch.sparkSession
+    val b0 = gate(batch.localCheckpoint(true))
+    if (b0.isEmpty) b0.limit(0)
     else {
-      val spark = batch.sparkSession
-      val b0 = gate(batch.localCheckpoint(true))
-      if (b0.isEmpty) b0.limit(0)
-      else {
-        val b1 = b0.localCheckpoint(true)
-        // corpus side: base index + every COMPLETE earlier batch's delta
-        val banded = completedBatchDirs(spark, deltaRoot, batchId).foldLeft(
-          graft.text.MinHashDedup.readBandedIndex(spark, corpusIndexPath, cfg)) {
-          (acc, d) => acc.unionByName(
-            graft.text.MinHashDedup.readBandedIndex(spark, d, cfg))
-        }
-        // texts of earlier COMPLETE acceptances, for exact verification
-        // of the (few) candidate pairs
-        val acceptedPrior = completedBatchDirs(spark, acceptedRoot, batchId)
-        val priorAccepted =
-          if (acceptedPrior.isEmpty) b1.limit(0)
-          else acceptedPrior.map(spark.read.parquet(_))
-            .reduce(_ unionByName _)
-            .select(b1.columns.map(col(_)).toSeq: _*)
-        val existing = corpusDocs.select(b1.columns.map(col(_)).toSeq: _*)
-          .unionByName(priorAccepted)
-        // stage 2: one 8-byte-key aggregation — min doc_id wins within
-        // the batch; any fingerprint already in (corpus ∪ prior
-        // accepted) rejects its batch copies outright (existing ids are
-        // all smaller under the append-only contract)
-        val b = if (!exactDedup) b1 else {
-          val withinWinners = b1
-            .select(col("doc_id"), xxhash64(col("text")).as("__fp"))
-            .groupBy("__fp").agg(org.apache.spark.sql.functions.min("doc_id").as("doc_id"))
-          val existingFp = existing
-            .select(xxhash64(col("text")).as("__fp")).distinct()
-          b1.join(
-            withinWinners.join(existingFp, Seq("__fp"), "left_anti").select("doc_id"),
-            Seq("doc_id"), "left_semi")
-        }
-        val winners = graft.text.MinHashDedup
-          .incrementalDedupWinnersFromBanded(b, existing, banded, cfg)
-        val accepted = b.join(winners, Seq("doc_id"), "left_semi")
-          .localCheckpoint(true)
-        // batch-keyed overwrite → replaying this batch is a no-op; an
-        // all-rejected batch writes nothing (readBandedIndex refuses
-        // empty tables by design)
-        if (!accepted.isEmpty) {
-          accepted.write.mode("overwrite").parquet(s"$acceptedRoot/b$batchId")
-          // a non-empty accepted batch can still have ZERO signatures —
-          // every accepted text below shingleSize tokens (the normal
-          // case in the v2 driver, where a fully span-cut doc arrives
-          // empty): a row-less banded delta would poison every LATER
-          // batch's readBandedIndex (which refuses empty tables), so
-          // skip the delta exactly like the all-rejected case. Those
-          // docs still dedup downstream through the accepted table's
-          // exact channel / text verify.
-          val sigs = graft.text.MinHashDedup.signatures(accepted, cfg)
-            .localCheckpoint(true)
-          if (!sigs.isEmpty)
-            graft.text.MinHashDedup.writeBandedIndex(
-              sigs, s"$deltaRoot/b$batchId", cfg)
-        }
-        accepted
+      val b1 = b0.localCheckpoint(true)
+      // corpus side: base index + every COMPLETE earlier batch's delta
+      val banded = completedBatchDirs(spark, deltaRoot, batchId).foldLeft(
+        graft.text.MinHashDedup.readBandedIndex(spark, corpusIndexPath, cfg)) {
+        (acc, d) => acc.unionByName(
+          graft.text.MinHashDedup.readBandedIndex(spark, d, cfg))
       }
+      // texts of earlier COMPLETE acceptances, for exact verification
+      // of the (few) candidate pairs
+      val acceptedPrior = completedBatchDirs(spark, acceptedRoot, batchId)
+      val priorAccepted =
+        if (acceptedPrior.isEmpty) b1.limit(0)
+        else acceptedPrior.map(spark.read.parquet(_))
+          .reduce(_ unionByName _)
+          .select(b1.columns.map(col(_)).toSeq: _*)
+      val existing = corpusDocs.select(b1.columns.map(col(_)).toSeq: _*)
+        .unionByName(priorAccepted)
+      // stage 2: one 8-byte-key aggregation — min doc_id wins within
+      // the batch; any fingerprint already in (corpus ∪ prior
+      // accepted) rejects its batch copies outright (existing ids are
+      // all smaller under the append-only contract)
+      val b = if (!exactDedup) b1 else {
+        val withinWinners = b1
+          .select(col("doc_id"), xxhash64(col("text")).as("__fp"))
+          .groupBy("__fp").agg(org.apache.spark.sql.functions.min("doc_id").as("doc_id"))
+        val existingFp = existing
+          .select(xxhash64(col("text")).as("__fp")).distinct()
+        b1.join(
+          withinWinners.join(existingFp, Seq("__fp"), "left_anti").select("doc_id"),
+          Seq("doc_id"), "left_semi")
+      }
+      val winners = graft.text.MinHashDedup
+        .incrementalDedupWinnersFromBanded(b, existing, banded, cfg)
+      val accepted = b.join(winners, Seq("doc_id"), "left_semi")
+        .localCheckpoint(true)
+      // batch-keyed overwrite → replaying this batch is a no-op; an
+      // all-rejected batch writes nothing (readBandedIndex refuses
+      // empty tables by design)
+      if (!accepted.isEmpty) {
+        writeBatch(accepted, acceptedRoot, batchId)
+        // a non-empty accepted batch can still have ZERO signatures —
+        // every accepted text below shingleSize tokens (the normal
+        // case in the v2 driver, where a fully span-cut doc arrives
+        // empty): a row-less banded delta would poison every LATER
+        // batch's readBandedIndex (which refuses empty tables), so
+        // skip the delta exactly like the all-rejected case. Those
+        // docs still dedup downstream through the accepted table's
+        // exact channel / text verify.
+        val sigs = graft.text.MinHashDedup.signatures(accepted, cfg)
+          .localCheckpoint(true)
+        if (!sigs.isEmpty)
+          graft.text.MinHashDedup.writeBandedIndex(
+            sigs, s"$deltaRoot/b$batchId", cfg)
+      }
+      accepted
     }
   }
 
@@ -742,21 +800,9 @@ object StreamOps {
       maxWords: Long = 100000L,
       maxDupWordFrac: Double = 0.9,
       maxTopWordFrac: Double = 0.3): org.apache.spark.sql.streaming.StreamingQuery =
-    documents.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.text.TextAnalysis
-            .filterVerdicts(batch, minWords, maxWords, maxDupWordFrac, maxTopWordFrac)
-            // batch-keyed overwrite, NOT a bare append: a micro-batch
-            // replayed after a crash-between-commit-and-checkpoint
-            // rewrites its own directory instead of double-appending
-            // the same verdict rows (readers scan the root with
-            // recursiveFileLookup)
-            .write.mode("overwrite").parquet(s"$path/b$batchId")
-      }
-      .start()
+    sinkBatchKeyed(documents, path, checkpoint)((batch, _) =>
+      graft.text.TextAnalysis
+        .filterVerdicts(batch, minWords, maxWords, maxDupWordFrac, maxTopWordFrac))
 
   /** Streaming twin of the LEARNED quality gate: score every arriving
     * document with a TRAINED hashed-BoW logistic model (the
@@ -775,15 +821,8 @@ object StreamOps {
       model: graft.text.QualityClassifier.Model,
       path: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    documents.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.text.QualityClassifier.score(batch, model)
-            .write.mode("overwrite").parquet(s"$path/b$batchId")
-      }
-      .start()
+    sinkBatchKeyed(documents, path, checkpoint)((batch, _) =>
+      graft.text.QualityClassifier.score(batch, model))
 
   /** Streaming twin of the CCNet perplexity filter (batch X81): score
     * and bucket every arriving document against a FROZEN bigram-LM
@@ -803,16 +842,8 @@ object StreamOps {
       model: graft.text.PerplexityGate.Model,
       path: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    documents.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.text.PerplexityGate.assign(batch, model)
-            .write.mode("overwrite").parquet(s"$path/b$batchId")
-      }
-      .start()
-
+    sinkBatchKeyed(documents, path, checkpoint)((batch, _) =>
+      graft.text.PerplexityGate.assign(batch, model))
 
   /** Streaming twin of the token-budget cut (batch X80,
     * [[graft.pipeline.TrainingSet.budgetCut]]): MONOTONE ADMISSION —
@@ -841,29 +872,22 @@ object StreamOps {
       checkpoint: String,
       seed: Long = 42L): org.apache.spark.sql.streaming.StreamingQuery = {
     require(budgetTokens >= 1, s"budgetTokens=$budgetTokens must be positive")
-    documents.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val priorDirs = completedBatchDirs(spark, path, batchId)
-          val prior =
-            if (priorDirs.isEmpty) 0L
-            else spark.read.parquet(priorDirs: _*)
-              .agg(coalesce(sum("n_tokens"), lit(0L))).head().getLong(0)
-          val toks = batch.select(col("doc_id"),
-            size(graft.text.TextAnalysis.tokens(col("text"))).cast("long").as("n_tokens"))
-          val ordered = graft.ops.Scale.shuffleOrder(toks, "doc_id", seed)
-            .localCheckpoint(false)
-          graft.ops.ScalableWindows
-            .withGlobalRunningSum(ordered, Seq("shuffle_pos"), "n_tokens", "cum_tokens")
-            .filter(lit(prior) + col("cum_tokens") - col("n_tokens") < budgetTokens)
-            .select("doc_id", "n_tokens")
-            .write.mode("overwrite").parquet(s"$path/b$batchId")
-        }
-      }
-      .start()
+    sinkBatchKeyed(documents, path, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val priorDirs = completedBatchDirs(spark, path, batchId)
+      val prior =
+        if (priorDirs.isEmpty) 0L
+        else spark.read.parquet(priorDirs: _*)
+          .agg(coalesce(sum("n_tokens"), lit(0L))).head().getLong(0)
+      val toks = batch.select(col("doc_id"),
+        size(graft.text.TextAnalysis.tokens(col("text"))).cast("long").as("n_tokens"))
+      val ordered = graft.ops.Scale.shuffleOrder(toks, "doc_id", seed)
+        .localCheckpoint(false)
+      graft.ops.ScalableWindows
+        .withGlobalRunningSum(ordered, Seq("shuffle_pos"), "n_tokens", "cum_tokens")
+        .filter(lit(prior) + col("cum_tokens") - col("n_tokens") < budgetTokens)
+        .select("doc_id", "n_tokens")
+    }
   }
 
   /** Streaming twin of the vocabulary-novelty curve (batch X86,
@@ -887,27 +911,19 @@ object StreamOps {
   def vocabNoveltyStream(
       documents: DataFrame,
       path: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    documents.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val words = batch
-            .select(explode(graft.text.TextAnalysis.tokens(col("text"))).as("w"))
-            .distinct()
-          val priorDirs = completedBatchDirs(spark, path, batchId)
-          val fresh =
-            if (priorDirs.isEmpty) words
-            else words.join(
-              spark.read.parquet(priorDirs: _*).select("w"), Seq("w"), "left_anti")
-          fresh.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").parquet(s"$path/b$batchId")
-        }
-      }
-      .start()
-  }
+      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
+    sinkBatchKeyed(documents, path, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val words = batch
+        .select(explode(graft.text.TextAnalysis.tokens(col("text"))).as("w"))
+        .distinct()
+      val priorDirs = completedBatchDirs(spark, path, batchId)
+      val fresh =
+        if (priorDirs.isEmpty) words
+        else words.join(
+          spark.read.parquet(priorDirs: _*).select("w"), Seq("w"), "left_anti")
+      fresh.withColumn("batch_id", lit(batchId))
+    }
 
   /** Streaming twin of the unified decontamination report (batch X90,
     * [[graft.pipeline.TrainingSet.decontaminationReport]]): gate every
@@ -942,49 +958,10 @@ object StreamOps {
       dedup: graft.text.MinHashConfig =
         graft.text.MinHashConfig(threshold = 0.5),
       cosThreshold: Double = 0.35): org.apache.spark.sql.streaming.StreamingQuery = {
-    // freeze every benchmark-side artifact once — the stage's whole
-    // point is that these never change between micro-batches
-    val shingleSet = graft.text.TextAnalysis
-      .benchmarkShingleSet(benchmark, n).localCheckpoint(true)
-    val benchDocs = benchmark.localCheckpoint(true)
-    val banded = benchBanded.localCheckpoint(true)
-    val cents = benchEmbeddings
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid"))
-      .localCheckpoint(true)
-    documents.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val ngram = graft.text.TextAnalysis
-            .contaminationScoresAgainst(batch.toDF(), shingleSet, n)
-            .select(col("doc_id"), col("overlap_frac"))
-          val nd = graft.text.MinHashDedup
-            .crossNearDupsAgainstBanded(batch.toDF(), benchDocs, banded, dedup)
-            .select(col("i").as("doc_id")).distinct()
-            .withColumn("__nd", lit(true))
-          val sem =
-            if (!batch.columns.contains("embedding")) None
-            else Some(graft.vector.SemDedup.assignWithScore(
-                batch.select(col("doc_id").as("vec_id"), col("embedding")),
-                cents)
-              .select(col("vec_id").as("doc_id"),
-                round(col("ccos"), 6).as("semantic_cos")))
-          val joined = batch.select("doc_id")
-            .join(ngram, Seq("doc_id"), "left")
-            .join(nd, Seq("doc_id"), "left")
-          val withSem = sem.fold(
-            joined.withColumn("semantic_cos", lit(null).cast("double")))(
-            s => joined.join(s, Seq("doc_id"), "left"))
-          // the five-column assembly + verdict expression is the batch
-          // report's own helper — the streaming gate cannot drift from
-          // the batch X90 semantics by construction
-          graft.pipeline.TrainingSet
-            .assembleDecontaminationVerdict(withSem, ngramThreshold, cosThreshold)
-            .write.mode("overwrite").parquet(s"$path/b$batchId")
-        }
-      }
-      .start()
+    val frozen = freezeArtifacts(benchmark, benchBanded, n, Some(benchEmbeddings))
+    sinkBatchKeyed(documents, path, checkpoint)((batch, _) =>
+      streamDeconChannels(batch, frozen, n, ngramThreshold, dedup,
+        cosThreshold, maxSpanTokens = None))
   }
 
   /** Streaming twin of the max-overlap-span report (batch X96,
@@ -1007,17 +984,8 @@ object StreamOps {
     // freeze the benchmark shingle set once — never re-shingled per batch
     val shingleSet = graft.text.TextAnalysis
       .benchmarkShingleSet(benchmark, n).localCheckpoint(true)
-    documents.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.text.TextAnalysis
-            .maxBenchmarkOverlapSpanAgainst(batch.toDF(), shingleSet, n)
-            .write.mode("overwrite").parquet(s"$path/b$batchId")
-        }
-      }
-      .start()
+    sinkBatchKeyed(documents, path, checkpoint)((batch, _) =>
+      graft.text.TextAnalysis.maxBenchmarkOverlapSpanAgainst(batch, shingleSet, n))
   }
 
   /** Streaming distribution-drift monitor (batch twin:
@@ -1038,19 +1006,80 @@ object StreamOps {
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
     val refToks = graft.text.TextAnalysis
       .referenceTokens(reference).localCheckpoint(true)
-    documents.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.text.TextAnalysis
-            .unigramDriftAgainst(batch.toDF(), refToks)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").parquet(s"$path/b$batchId")
-        }
-      }
-      .start()
+    sinkBatchKeyed(documents, path, checkpoint)(driftReport(_, refToks, _))
   }
+
+  /** One micro-batch's drift report against the frozen reference tokens,
+    * tagged with its batch id — the [[driftMonitorStream]] sink row and
+    * the curation drivers' `drift/b<id>` side channel.
+    */
+  private def driftReport(batch: DataFrame, refToks: DataFrame, batchId: Long): DataFrame =
+    graft.text.TextAnalysis
+      .unigramDriftAgainst(batch, refToks)
+      .withColumn("batch_id", lit(batchId))
+
+  /** Decontamination channel assembly shared by
+    * [[decontaminationGateStream]] and stage 1 of the two streaming
+    * curation drivers — the X90 channels against the
+    * construction-time FROZEN benchmark artifacts, plus the X96 span
+    * channel when `maxSpanTokens` is set, assembled by the batch
+    * report's own verdict helper so the semantics cannot drift (one
+    * definition, three streams). The verdict column is `verdict`.
+    */
+  private def streamDeconChannels(
+      bdf: DataFrame,
+      frozen: FrozenArtifacts,
+      n: Int,
+      ngramThreshold: Double,
+      deconDedup: graft.text.MinHashConfig,
+      cosThreshold: Double,
+      maxSpanTokens: Option[Int]): DataFrame = {
+    val ngram = graft.text.TextAnalysis
+      .contaminationScoresAgainst(bdf, frozen.shingleSet, n)
+      .select(col("doc_id"), col("overlap_frac"))
+    val nd = graft.text.MinHashDedup
+      .crossNearDupsAgainstBanded(bdf, frozen.benchDocs, frozen.banded, deconDedup)
+      .select(col("i").as("doc_id")).distinct()
+      .withColumn("__nd", lit(true))
+    val sem = frozen.cents.filter(_ => bdf.columns.contains("embedding")).map(cc =>
+      graft.vector.SemDedup.assignWithScore(
+          bdf.select(col("doc_id").as("vec_id"), col("embedding")), cc)
+        .select(col("vec_id").as("doc_id"),
+          round(col("ccos"), 6).as("semantic_cos")))
+    val joined0 = bdf.select("doc_id")
+      .join(ngram, Seq("doc_id"), "left")
+      .join(nd, Seq("doc_id"), "left")
+    val joined1 = sem.fold(
+      joined0.withColumn("semantic_cos", lit(null).cast("double")))(
+      s => joined0.join(s, Seq("doc_id"), "left"))
+    val joined = maxSpanTokens.fold(joined1)(_ => joined1.join(
+      graft.text.TextAnalysis
+        .maxBenchmarkOverlapSpanAgainst(bdf, frozen.shingleSet, n)
+        .select(col("doc_id"), col("max_span_tokens").as("span_tokens")),
+      Seq("doc_id"), "left"))
+    graft.pipeline.TrainingSet
+      .assembleDecontaminationVerdict(
+        joined, ngramThreshold, cosThreshold, maxSpanTokens)
+  }
+
+  /** The per-doc manifest projection shared by both streaming curation
+    * drivers: `base` (channel columns incl. decon_verdict, plus any
+    * leading accounting columns) gains the three-valued dedup verdict
+    * (null = never reached the stage) and the final keep — the batch
+    * manifest's exact column contract.
+    */
+  private def manifestWithVerdicts(
+      base: DataFrame, accepted: DataFrame): DataFrame =
+    base
+      .join(accepted.select(col("doc_id"), lit(true).as("__acc")),
+        Seq("doc_id"), "left")
+      .select(base.columns.map(col).toSeq :+
+        when(col("decon_verdict") =!= "keep", lit(null).cast("string"))
+          .when(coalesce(col("__acc"), lit(false)), "keep")
+          .otherwise("drop").as("dedup_verdict") :+
+        (col("decon_verdict") === "keep" &&
+          coalesce(col("__acc"), lit(false))).as("keep"): _*)
+      .orderBy("doc_id")
 
   /** The composed streaming CURATION driver — the ingest-time twin of
     * [[graft.pipeline.TrainingSet.curateCorpus]], chaining the four
@@ -1089,72 +1118,6 @@ object StreamOps {
     * no streaming twin here — a release run applies them over the
     * accepted table, not per micro-batch.
     */
-  /** Stage-1 decontamination channel assembly shared by the two
-    * streaming curation drivers — the X90 channels against the
-    * construction-time FROZEN benchmark artifacts, assembled by the
-    * batch report's own verdict helper so the semantics cannot drift
-    * (one definition, two drivers).
-    */
-  private def streamDeconChannels(
-      bdf: DataFrame,
-      shingleSet: DataFrame,
-      benchDocs: DataFrame,
-      banded: DataFrame,
-      cents: Option[DataFrame],
-      n: Int,
-      ngramThreshold: Double,
-      deconDedup: graft.text.MinHashConfig,
-      cosThreshold: Double,
-      maxSpanTokens: Option[Int]): DataFrame = {
-    val ngram = graft.text.TextAnalysis
-      .contaminationScoresAgainst(bdf, shingleSet, n)
-      .select(col("doc_id"), col("overlap_frac"))
-    val nd = graft.text.MinHashDedup
-      .crossNearDupsAgainstBanded(bdf, benchDocs, banded, deconDedup)
-      .select(col("i").as("doc_id")).distinct()
-      .withColumn("__nd", lit(true))
-    val sem = cents.filter(_ => bdf.columns.contains("embedding")).map(cc =>
-      graft.vector.SemDedup.assignWithScore(
-          bdf.select(col("doc_id").as("vec_id"), col("embedding")), cc)
-        .select(col("vec_id").as("doc_id"),
-          round(col("ccos"), 6).as("semantic_cos")))
-    val joined0 = bdf.select("doc_id")
-      .join(ngram, Seq("doc_id"), "left")
-      .join(nd, Seq("doc_id"), "left")
-    val joined1 = sem.fold(
-      joined0.withColumn("semantic_cos", lit(null).cast("double")))(
-      s => joined0.join(s, Seq("doc_id"), "left"))
-    val joined = maxSpanTokens.fold(joined1)(_ => joined1.join(
-      graft.text.TextAnalysis
-        .maxBenchmarkOverlapSpanAgainst(bdf, shingleSet, n)
-        .select(col("doc_id"), col("max_span_tokens").as("span_tokens")),
-      Seq("doc_id"), "left"))
-    graft.pipeline.TrainingSet
-      .assembleDecontaminationVerdict(
-        joined, ngramThreshold, cosThreshold, maxSpanTokens)
-      .withColumnRenamed("verdict", "decon_verdict")
-      .localCheckpoint(true)
-  }
-
-  /** The per-doc manifest projection shared by both streaming curation
-    * drivers: `base` (channel columns incl. decon_verdict, plus any
-    * leading accounting columns) gains the three-valued dedup verdict
-    * (null = never reached the stage) and the final keep — the batch
-    * manifest's exact column contract.
-    */
-  private def manifestWithVerdicts(
-      base: DataFrame, accepted: DataFrame): DataFrame =
-    base
-      .join(accepted.select(col("doc_id"), lit(true).as("__acc")),
-        Seq("doc_id"), "left")
-      .select(base.columns.map(col).toSeq :+
-        when(col("decon_verdict") =!= "keep", lit(null).cast("string"))
-          .when(coalesce(col("__acc"), lit(false)), "keep")
-          .otherwise("drop").as("dedup_verdict") :+
-        (col("decon_verdict") === "keep" &&
-          coalesce(col("__acc"), lit(false))).as("keep"): _*)
-      .orderBy("doc_id")
-
   def curationIngestStream(
       newDocs: DataFrame,
       corpusDocs: DataFrame,
@@ -1173,50 +1136,31 @@ object StreamOps {
       maxSpanTokens: Option[Int] = None,
       cfg: graft.text.MinHashConfig = graft.pipeline.TrainingSet.CurationDefaults.CorpusDedup)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    // freeze every benchmark/reference-side artifact once at stream
-    // construction — never re-shingled / re-tokenized per micro-batch
-    val shingleSet = graft.text.TextAnalysis
-      .benchmarkShingleSet(benchmark, n).localCheckpoint(true)
-    val benchDocs = benchmark.localCheckpoint(true)
-    val banded = benchBanded.localCheckpoint(true)
-    val cents = benchEmbeddings.map(
-      _.select(col("vec_id").as("centroid_id"), col("embedding").as("centroid"))
-        .localCheckpoint(true))
-    val refToks = reference.map(
-      graft.text.TextAnalysis.referenceTokens(_).localCheckpoint(true))
-    newDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val bdf = batch.toDF().localCheckpoint(true)
-          // drift monitor over the WHOLE arriving batch (pre-gate: the
-          // alarm watches what the source sends, not what survives)
-          refToks.foreach { rt =>
-            graft.text.TextAnalysis.unigramDriftAgainst(bdf, rt)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite").parquet(s"$outDir/drift/b$batchId")
-          }
-          // stage 1 — decon channels vs the frozen benchmark artifacts
-          val decon = streamDeconChannels(bdf, shingleSet, benchDocs,
-            banded, cents, n, ngramThreshold, deconDedup, cosThreshold,
-            maxSpanTokens)
-          // stage 2 — incremental near-dup ingest of the decon
-          // survivors (exact min-id + banded candidates + verify, with
-          // the batch-keyed accepted/delta writes)
-          val keepIds = decon.filter(col("decon_verdict") === "keep").select("doc_id")
-          val accepted = processIngestBatch(batch, batchId, corpusDocs,
-            corpusIndexPath, outDir, cfg,
-            gate = b => b.join(keepIds, Seq("doc_id"), "left_semi"),
-            exactDedup = true)
-          // per-doc manifest: channel columns + three-valued stage
-          // verdicts (null dedup verdict = never reached the stage),
-          // the batch manifest's exact column contract
-          manifestWithVerdicts(decon, accepted)
-            .write.mode("overwrite").parquet(s"$outDir/manifest/b$batchId")
-        }
-      }
-      .start()
+    val frozen = freezeArtifacts(benchmark, benchBanded, n, benchEmbeddings, reference)
+    sinkBatches(newDocs, checkpoint) { (batch, batchId) =>
+      val bdf = batch.localCheckpoint(true)
+      // drift monitor over the WHOLE arriving batch (pre-gate: the
+      // alarm watches what the source sends, not what survives)
+      frozen.refToks.foreach(rt =>
+        writeBatch(driftReport(bdf, rt, batchId), s"$outDir/drift", batchId))
+      // stage 1 — decon channels vs the frozen benchmark artifacts
+      val decon = streamDeconChannels(bdf, frozen, n, ngramThreshold,
+        deconDedup, cosThreshold, maxSpanTokens)
+        .withColumnRenamed("verdict", "decon_verdict")
+        .localCheckpoint(true)
+      // stage 2 — incremental near-dup ingest of the decon
+      // survivors (exact min-id + banded candidates + verify, with
+      // the batch-keyed accepted/delta writes)
+      val keepIds = decon.filter(col("decon_verdict") === "keep").select("doc_id")
+      val accepted = processIngestBatch(bdf, batchId, corpusDocs,
+        corpusIndexPath, outDir, cfg,
+        gate = b => b.join(keepIds, Seq("doc_id"), "left_semi"),
+        exactDedup = true)
+      // per-doc manifest: channel columns + three-valued stage
+      // verdicts (null dedup verdict = never reached the stage),
+      // the batch manifest's exact column contract
+      writeBatch(manifestWithVerdicts(decon, accepted), s"$outDir/manifest", batchId)
+    }
   }
 
   /** [[curationIngestStream]] with incremental exact substring dedup as
@@ -1329,106 +1273,83 @@ object StreamOps {
     val benchSrc =
       if (normalizeFirst) graft.text.TextAnalysis.withNormalizedText(benchmark)
       else benchmark
-    val shingleSet = graft.text.TextAnalysis
-      .benchmarkShingleSet(benchSrc, n).localCheckpoint(true)
-    val benchDocs = benchSrc.localCheckpoint(true)
-    val banded = benchBanded.localCheckpoint(true)
-    val cents = benchEmbeddings.map(
-      _.select(col("vec_id").as("centroid_id"), col("embedding").as("centroid"))
-        .localCheckpoint(true))
-    val refToks = reference.map(
-      graft.text.TextAnalysis.referenceTokens(_).localCheckpoint(true))
+    val frozen = freezeArtifacts(benchSrc, benchBanded, n, benchEmbeddings, reference)
     // key deltas this stream wrote are validated once, then trusted
     // (two sets under runLevel — one per key family)
     val validatedDeltas =
       java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val validatedWordDeltas =
       java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    newDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val raw = batch.toDF().localCheckpoint(true)
-          // drift monitor watches what the SOURCE sends — pre-cut, like
-          // v1's pre-gate placement
-          refToks.foreach { rt =>
-            graft.text.TextAnalysis.unigramDriftAgainst(raw, rt)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite").parquet(s"$outDir/drift/b$batchId")
-          }
-          // stage −1 (opt-in) — CCNet normalization of the arriving
-          // batch, a stateless per-row map; everything from the span
-          // cut down (window keys, decon fingerprints, near-dup
-          // signatures, the shipped accepted text) sees the canonical
-          // form, mirroring the batch driver's normalizeFirst stage
-          val src =
-            if (normalizeFirst)
-              graft.text.TextAnalysis.withNormalizedText(raw).localCheckpoint(true)
-            else raw
-          // stage 0 — incremental span cut vs corpus keys ∪ COMPLETE
-          // earlier key deltas (never this batch's own — replay must
-          // not self-collide). Per-table granularity pin + strip
-          // (fail-loud on a word-built store under charTokens and vice
-          // versa); deltas validated once per stream, base every
-          // batch. Under runLevel BOTH families fold and the batch's
-          // deltas split per family (written LAST, below).
-          val (cleaned0, keyDeltaWrites) =
-            if (runLevel)
-              runLevelStage0(spark, windowKeysPath, outDir, batchId, src,
-                windowTokens, validatedDeltas, validatedWordDeltas)
-            else {
-              val keyDeltas = completedBatchDirs(spark, s"$outDir/key_delta", batchId)
-              val keys = foldWindowKeys(spark, windowKeysPath, keyDeltas,
-                windowTokens, charTokens, validatedDeltas)
-              (graft.text.SubstringDedup
-                .incrementalCleanCorpus(src, keys, windowTokens, charTokens),
-                Seq(graft.text.SubstringDedup
-                  .windowKeys(src, windowTokens, charTokens) ->
-                  s"$outDir/key_delta/b$batchId"))
-            }
-          val cleaned = cleaned0.localCheckpoint(true)
-          val bdf = graft.text.SubstringDedup.withCleanText(src, cleaned)
-            .localCheckpoint(true)
-          // stages 1–2 over the CLEANED text — v1's exact chain (one
-          // shared definition, so the two drivers cannot drift)
-          val decon = streamDeconChannels(bdf, shingleSet, benchDocs,
-            banded, cents, n, ngramThreshold, deconDedup, cosThreshold,
-            maxSpanTokens)
-          val keepIds = decon.filter(col("decon_verdict") === "keep").select("doc_id")
-          // exact-fingerprint pre-shrink OFF, deliberately: stage 0
-          // already removed every exact duplicate run ≥ windowTokens,
-          // so the only texts the exact stage could additionally
-          // reject are sub-window exact twins — above all the
-          // fully-cut EMPTY docs, which the batch v2 rule keeps (no
-          // shingles → no near-dup pair; a release's packing tail
-          // drops 0-token docs naturally). Rejecting them here would
-          // break stream ≡ batch; identical ≥-shingle texts are still
-          // caught as Jaccard-1.0 pairs by the banded stage.
-          val accepted = processIngestBatch(bdf, batchId, corpusDocs,
-            corpusIndexPath, outDir, cfg,
-            gate = b => b.join(keepIds, Seq("doc_id"), "left_semi"),
-            exactDedup = false)
-          // manifest = stage-0 accounting + v1's column contract (the
-          // shared presence-keyed projection, so run_dup_chars rides
-          // along under runLevel exactly as in the batch manifest)
-          manifestWithVerdicts(
-            cleaned.select(
-              graft.text.SubstringDedup.stage0AccountingCols(cleaned): _*)
-              .join(decon, Seq("doc_id")),
-            accepted)
-            .write.mode("overwrite").parquet(s"$outDir/manifest/b$batchId")
-          // key deltas LAST (the ingestSubstringDedupStream contract):
-          // keys of the PRE-CUT batch (normalized under normalizeFirst,
-          // matching the persisted key table's text form; the runLevel
-          // word family carries the SPLICED-text keys the batch word
-          // stage windows); a family with no windows writes nothing
-          writeKeyDeltas(keyDeltaWrites)
-        }
-        ()
-      }
-      .start()
+    sinkBatches(newDocs, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val raw = batch.localCheckpoint(true)
+      // drift monitor watches what the SOURCE sends — pre-cut, like
+      // v1's pre-gate placement
+      frozen.refToks.foreach(rt =>
+        writeBatch(driftReport(raw, rt, batchId), s"$outDir/drift", batchId))
+      // stage −1 (opt-in) — CCNet normalization of the arriving
+      // batch, a stateless per-row map; everything from the span
+      // cut down (window keys, decon fingerprints, near-dup
+      // signatures, the shipped accepted text) sees the canonical
+      // form, mirroring the batch driver's normalizeFirst stage
+      val src =
+        if (normalizeFirst)
+          graft.text.TextAnalysis.withNormalizedText(raw).localCheckpoint(true)
+        else raw
+      // stage 0 — incremental span cut vs corpus keys ∪ COMPLETE
+      // earlier key deltas (never this batch's own — replay must
+      // not self-collide). Per-table granularity pin + strip
+      // (fail-loud on a word-built store under charTokens and vice
+      // versa); deltas validated once per stream, base every
+      // batch. Under runLevel BOTH families fold and the batch's
+      // deltas split per family (written LAST, below).
+      val (cleaned0, keyDeltaWrites) =
+        if (runLevel)
+          runLevelStage0(spark, windowKeysPath, outDir, batchId, src,
+            windowTokens, validatedDeltas, validatedWordDeltas)
+        else
+          singleFamilyStage0(spark, windowKeysPath, outDir, batchId, src,
+            windowTokens, charTokens, validatedDeltas)
+      val cleaned = cleaned0.localCheckpoint(true)
+      val bdf = graft.text.SubstringDedup.withCleanText(src, cleaned)
+        .localCheckpoint(true)
+      // stages 1–2 over the CLEANED text — v1's exact chain (one
+      // shared definition, so the two drivers cannot drift)
+      val decon = streamDeconChannels(bdf, frozen, n, ngramThreshold,
+        deconDedup, cosThreshold, maxSpanTokens)
+        .withColumnRenamed("verdict", "decon_verdict")
+        .localCheckpoint(true)
+      val keepIds = decon.filter(col("decon_verdict") === "keep").select("doc_id")
+      // exact-fingerprint pre-shrink OFF, deliberately: stage 0
+      // already removed every exact duplicate run ≥ windowTokens,
+      // so the only texts the exact stage could additionally
+      // reject are sub-window exact twins — above all the
+      // fully-cut EMPTY docs, which the batch v2 rule keeps (no
+      // shingles → no near-dup pair; a release's packing tail
+      // drops 0-token docs naturally). Rejecting them here would
+      // break stream ≡ batch; identical ≥-shingle texts are still
+      // caught as Jaccard-1.0 pairs by the banded stage.
+      val accepted = processIngestBatch(bdf, batchId, corpusDocs,
+        corpusIndexPath, outDir, cfg,
+        gate = b => b.join(keepIds, Seq("doc_id"), "left_semi"),
+        exactDedup = false)
+      // manifest = stage-0 accounting + v1's column contract (the
+      // shared presence-keyed projection, so run_dup_chars rides
+      // along under runLevel exactly as in the batch manifest)
+      writeBatch(
+        manifestWithVerdicts(
+          cleaned.select(
+            graft.text.SubstringDedup.stage0AccountingCols(cleaned): _*)
+            .join(decon, Seq("doc_id")),
+          accepted),
+        s"$outDir/manifest", batchId)
+      // key deltas LAST (the ingestSubstringDedupStream contract):
+      // keys of the PRE-CUT batch (normalized under normalizeFirst,
+      // matching the persisted key table's text form; the runLevel
+      // word family carries the SPLICED-text keys the batch word
+      // stage windows); a family with no windows writes nothing
+      writeKeyDeltas(keyDeltaWrites)
+    }
   }
 
   /** Streaming VECTOR-index ingest — incremental maintenance of a
@@ -1481,27 +1402,20 @@ object StreamOps {
         else None
       (p, codebook, dsub, cents)
     }
-    newVectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val cents = spark.read.parquet(s"$indexPath/centroids")
-          graft.vector.Ivf.assign(batch.toDF(), cents)
-            .repartition(col("list_id"))
-            .write.mode("overwrite").partitionBy("list_id")
-            .parquet(s"$indexPath/delta/b$batchId")
-          pqChannel.foreach { case (p, codebook, dsub, pqrCents) =>
-            val toEncode = pqrCents
-              .map(graft.vector.Pq.residualVectors(batch.toDF(), _))
-              .getOrElse(batch.toDF())
-            graft.vector.Pq.encode(toEncode, codebook, dsub)
-              .write.mode("overwrite").parquet(s"$p/codes_delta/b$batchId")
-          }
-        }
+    sinkBatches(newVectors, checkpoint) { (batch, batchId) =>
+      val cents = batch.sparkSession.read.parquet(s"$indexPath/centroids")
+      graft.vector.Ivf.assign(batch, cents)
+        .repartition(col("list_id"))
+        .write.mode("overwrite").partitionBy("list_id")
+        .parquet(s"$indexPath/delta/b$batchId")
+      pqChannel.foreach { case (p, codebook, dsub, pqrCents) =>
+        val toEncode = pqrCents
+          .map(graft.vector.Pq.residualVectors(batch, _))
+          .getOrElse(batch)
+        writeBatch(graft.vector.Pq.encode(toEncode, codebook, dsub),
+          s"$p/codes_delta", batchId)
       }
-      .start()
+    }
   }
 
   /** The (batch_id, new_types, cum_vocab) curve over a

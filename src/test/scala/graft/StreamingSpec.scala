@@ -2285,4 +2285,42 @@ class StreamingSpec extends SparkSpec {
     val union = spark.read.option("recursiveFileLookup", "true").parquet(outDir).count()
     assert(union == seen.size.toLong, s"sink union $union != vocab ${seen.size}")
   }
+
+  test("batch-keyed sinks skip an empty trigger: no b<id> dir, later batches equal the run without it") {
+    val docs = Tables.load(spark, sf001, "documents")
+    val halves = Seq(docs.filter(col("doc_id") < 250), docs.filter(col("doc_id") >= 250))
+    // 3/4 of the corpus tokens: the second batch is admitted only in
+    // part, so it must read the first batch's committed total
+    val budget = docs
+      .agg(sum(size(graft.text.TextAnalysis.tokens(col("text"))).cast("long")))
+      .head().getLong(0) * 3 / 4
+    val sinks: Seq[(String, (DataFrame, String, String) => StreamingQuery)] = Seq(
+      "score" -> ((s, out, ck) => StreamOps.scoreDocumentsStream(s, out, ck)),
+      "budget" -> ((s, out, ck) => StreamOps.budgetAdmissionStream(s, budget, out, ck)))
+    // one file per trigger through every sink; per sink, the rows of
+    // each b<id> dir
+    def run(files: Seq[DataFrame]): Seq[Map[String, Set[Row]]] = {
+      val src = Files.createTempDirectory("graft-empty-trigger-src")
+      val root = Files.createTempDirectory("graft-empty-trigger-out")
+      val queries = sinks.map { case (name, start) =>
+        start(StreamOps.documentsStream(spark, src.toString), s"$root/$name", s"$root/ckpt-$name")
+      }
+      try files.zipWithIndex.foreach { case (f, i) =>
+        writeChunk(f, src, s"chunk$i")
+        queries.foreach(_.processAllAvailable())
+      } finally queries.foreach(_.stop())
+      sinks.map { case (name, _) =>
+        new java.io.File(s"$root/$name").listFiles().filter(_.isDirectory).map(d =>
+          d.getName -> spark.read.parquet(d.toString).collect().toSet).toMap
+      }
+    }
+    val plain = run(halves)
+    val withEmpty = run(Seq(halves(0), docs.limit(0), halves(1)))
+    sinks.map(_._1).zip(plain.zip(withEmpty)).foreach { case (name, (p, e)) =>
+      assert(p.keySet == Set("b0", "b1") && e.keySet == Set("b0", "b2"),
+        s"$name dirs: ${p.keySet} without the empty trigger, ${e.keySet} with it")
+      assert(p("b1").nonEmpty && e("b0") == p("b0") && e("b2") == p("b1"),
+        s"$name: batches after the empty trigger differ from the run without it")
+    }
+  }
 }

@@ -4,11 +4,15 @@
 Usage:
     python3 tools/dupblocks.py [PATH[:FIRST-LAST] ...]   # default: src/main
     python3 tools/dupblocks.py --total src/main          # total only
+    python3 tools/dupblocks.py --show src/main           # and where
 
 PATH is a .scala file or a directory (its .scala files, sorted by
 path); FIRST-LAST limits a file to that 1-based inclusive line range.
 Prints one `<count>\t<input>` line per input and a final
-`<count>\tTOTAL` line.
+`<count>\tTOTAL` line. `--show` first prints every repeated window:
+a `<copies>\t<first location>\t<copy locations>` header (locations
+are `path:line` of the window's first line, at most SHOW_LOCATIONS
+copies listed) and the window's four lines, each indented by a tab.
 
 A line counts when it is a second-or-later copy of a repeated block.
 The rules:
@@ -26,10 +30,11 @@ import os
 import sys
 
 WINDOW = 4
+SHOW_LOCATIONS = 5
 
 
 def inputs(args):
-    """(label, lines) per input, in argument order."""
+    """(label, file, first line number, lines) per input, in argument order."""
     for arg in args:
         path, first, last = arg, 1, None
         if ":" in arg and not os.path.exists(arg):
@@ -45,14 +50,14 @@ def inputs(args):
             with open(f, encoding="utf-8") as fh:
                 lines = fh.read().split("\n")
             label = f if (first, last) == (1, None) else f"{f}:{first}-{last}"
-            yield label, lines[first - 1:last]
+            yield label, f, first, lines[first - 1:last]
 
 
 def count(all_inputs):
     """Per-input counts of copied lines, windows shared across inputs."""
     seen = set()
     out = []
-    for label, lines in all_inputs:
+    for label, _, _, lines in all_inputs:
         copied = set()
         for i in range(len(lines) - WINDOW + 1):
             block = tuple(lines[i:i + WINDOW])
@@ -66,10 +71,37 @@ def count(all_inputs):
     return out
 
 
+def locations(all_inputs):
+    """Every window's `path:line` locations, windows in first-seen order."""
+    where = {}
+    for _, path, first, lines in all_inputs:
+        for i in range(len(lines) - WINDOW + 1):
+            block = tuple(lines[i:i + WINDOW])
+            if any(not line.strip() for line in block):
+                continue
+            where.setdefault(block, []).append(f"{path}:{first + i}")
+    return where
+
+
+def show(all_inputs):
+    for block, locs in locations(all_inputs).items():
+        if len(locs) < 2:
+            continue
+        copies = locs[1:]
+        listed = ", ".join(copies[:SHOW_LOCATIONS])
+        more = f", ... {len(copies) - SHOW_LOCATIONS} more" if len(copies) > SHOW_LOCATIONS else ""
+        print(f"{len(copies)}\t{locs[0]}\t{listed}{more}")
+        for line in block:
+            print(f"\t{line}")
+
+
 def main(argv):
     total_only = "--total" in argv
-    args = [a for a in argv if a != "--total"] or ["src/main"]
-    rows = count(inputs(args))
+    args = [a for a in argv if a not in ("--total", "--show")] or ["src/main"]
+    all_inputs = list(inputs(args))
+    if "--show" in argv:
+        show(all_inputs)
+    rows = count(all_inputs)
     if not total_only:
         for label, n in rows:
             print(f"{n}\t{label}")
