@@ -17,6 +17,17 @@ import org.apache.spark.sql.SparkSession
   *    splitting are the designed scale path (SURVEY.md §4.2); we rely on
   *    them instead of hand-scheduling.
   *
+  * It also sets `spark.hadoop.fs.file.impl` to [[graft.sources.LocalFs]].
+  * Without libhadoop, Hadoop's local filesystem forks a `chmod` after
+  * every file and `.crc` create and every mkdir, even when the mode is
+  * already right; `LocalFs` skips exactly those no-op calls, so an
+  * index build's cost is its bytes, not its file count. Modes, `.crc`
+  * sidecars and every other call stay Hadoop's. Sessions built
+  * elsewhere and only passed to [[configure]] keep the default `file:`
+  * filesystem. It is a session conf, not a runtime one, because Hadoop
+  * caches one `file:` filesystem per JVM from the first configuration
+  * that asks for it.
+  *
   * Shuffle partitioning: sized for the harness (local[N] with N cores →
   * N shuffle partitions). On a real cluster this is config, not code —
   * AQE coalesces the excess either way.
@@ -42,6 +53,7 @@ object Engine {
       // canonicalization (no java.sql.* default-TZ ambiguity).
       .config("spark.sql.datetime.java8API.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.LocalFs].getName)
     extra.foreach { case (k, v) => b.config(k, v) }
     configure(b.getOrCreate())
   }

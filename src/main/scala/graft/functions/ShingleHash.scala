@@ -1,25 +1,31 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native word-shingle hashing: the DISTINCT 64-bit polynomial hashes
-  * of every `n`-token shingle of a whitespace-tokenized document, in
-  * one compiled pass — no intermediate shingle strings.
+/** Native MinHash signing: the `numHashes` minima of the linear hash
+  * family `a_k·h + b_k` (mod 2^64) over the DISTINCT 64-bit polynomial
+  * hashes `h` of every `n`-token shingle of a whitespace-tokenized
+  * document, in one compiled pass — no intermediate shingle strings and
+  * no per-shingle rows. `null` for a document with no shingles (fewer
+  * than `n` tokens, empty text), so it signs nothing.
   *
-  * This is the MinHash base-hash (`h0`) producer: signatures only ever
-  * hash the shingle text, so emitting the hash directly (a) skips the
-  * interpreted higher-order-function shingle construction (~4 µs per
-  * lambda eval — the WinnowHash lesson) and (b) shrinks the signature
-  * shuffle key from a ~25-byte string to 8 bytes. The hash covers the
-  * exact token characters with a separator sentinel between tokens, so
-  * shingles equal iff their token sequences are equal (modulo 64-bit
-  * collisions, which MinHash tolerates by construction). Exact-Jaccard
-  * verification keeps using real string shingles.
+  * Signing emits the signature directly instead of exploding one row
+  * per shingle and folding 64 MIN columns per document: the base hashes
+  * and the `numHashes` minima stay in one array loop per document
+  * (a) without the interpreted higher-order-function shingle
+  * construction (~4 µs per lambda eval — the WinnowHash lesson) and
+  * (b) with one fixed-size row per document on any later shuffle. The
+  * base hash covers the exact token characters with a separator
+  * sentinel between tokens, so shingles equal iff their token sequences
+  * are equal (modulo 64-bit collisions, which MinHash tolerates by
+  * construction). Exact-Jaccard verification keeps using real string
+  * shingles. [[SignatureMin]] folds the signatures of rows that share a
+  * doc id.
   *
   * `charK > 0` enables the SPACELESS-SCRIPT fallback: a document the
   * doc-level dispatch classifies as spaceless (majority non-ASCII code
@@ -48,12 +54,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * collide only by 64-bit chance (tolerated like any collision).
   */
 case class ShingleHash(
-    child: Expression, n: Int, charK: Int = 0, runLevel: Boolean = false)
+    child: Expression, n: Int, charK: Int, runLevel: Boolean, numHashes: Int)
     extends UnaryExpression {
 
   require(n >= 1, "shingle size must be >= 1")
   require(charK >= 0, "charK must be >= 0 (0 = word shingles only)")
   require(!runLevel || charK > 0, "runLevel requires charK > 0")
+  require(numHashes >= 1 && numHashes <= ShingleHash.MaxHashes,
+    s"numHashes must be in 1..${ShingleHash.MaxHashes}")
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
@@ -62,15 +70,18 @@ case class ShingleHash(
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override protected def nullSafeEval(input: Any): Any =
-    ShingleHash.hashDoc(input.asInstanceOf[UTF8String], n, charK, runLevel)
+  override def nullable: Boolean = true
 
-  // a static call with the (n, charK, runLevel) literals baked into the
-  // generated code — participates in whole-stage codegen like
-  // CodePointUnits, keeping the MinHash stage-0 signing stage fused
+  override protected def nullSafeEval(input: Any): Any =
+    ShingleHash.signDoc(input.asInstanceOf[UTF8String], n, charK, runLevel, numHashes)
+
+  // a static call with the config literals baked into the generated
+  // code — participates in whole-stage codegen like CodePointUnits,
+  // keeping the MinHash signing stage fused
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ShingleHash.hashDoc($c, $n, $charK, $runLevel)")
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = graft.functions.ShingleHash.signDoc($c, $n, $charK, $runLevel, $numHashes);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
 
   override def prettyName: String = "shingle_hash"
 
@@ -87,12 +98,55 @@ object ShingleHash {
 
   private val P = 1099511628211L
 
-  /** The whole per-document hash pipeline (dispatch + hashing +
-    * dedup), static so generated code can call it (interpreted eval
-    * shares it).
+  /** Size of the hash family: the largest supported `numHashes`. */
+  val MaxHashes = 256
+
+  /** Odd multipliers `famA(k)` and offsets `famB(k)` of the linear hash
+    * family h_k(x) = famA(k)·x + famB(k) (mod 2^64): one polynomial hash per shingle,
+    * `numHashes` cheap long transforms. Fixed seed ⇒ stable signatures
+    * across runs; changing it is a [[graft.text.MinHashDedup.SignatureVersion]]
+    * bump.
     */
-  def hashDoc(input: UTF8String, n: Int, charK: Int, runLevel: Boolean): GenericArrayData = {
-    val s = input.toString
+  private val (famA, famB) = {
+    val rng = new scala.util.Random(0x5eed5eedL)
+    Array.fill(MaxHashes)((rng.nextLong() | 1L, rng.nextLong())).unzip
+  }
+
+  /** The signature of one document (see [[ShingleHash]]), static so
+    * generated code can call it (interpreted eval shares it).
+    */
+  def signDoc(
+      input: UTF8String, n: Int, charK: Int, runLevel: Boolean, numHashes: Int): ArrayData = {
+    // MIN over the raw hashes equals MIN over the distinct ones, so the
+    // dedup sort of hashDoc is skipped here
+    val hs = rawHashes(input.toString, n, charK, runLevel)
+    if (hs.isEmpty) return null
+    val sig = new Array[Long](numHashes)
+    java.util.Arrays.fill(sig, Long.MaxValue)
+    var i = 0
+    while (i < hs.length) {
+      val h = hs(i)
+      var k = 0
+      while (k < numHashes) {
+        val v = h * famA(k) + famB(k)
+        if (v < sig(k)) sig(k) = v
+        k += 1
+      }
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(sig)
+  }
+
+  /** The DISTINCT base hashes of one document, sorted — the shingle
+    * universe [[signDoc]] minimizes over.
+    */
+  def hashDoc(s: String, n: Int, charK: Int, runLevel: Boolean): Array[Long] =
+    dedupSorted(rawHashes(s, n, charK, runLevel))
+
+  /** The per-document dispatch: base hashes of the word shingles, the
+    * char grams or both, un-deduped.
+    */
+  private def rawHashes(s: String, n: Int, charK: Int, runLevel: Boolean): Array[Long] = {
     // whitespace tokens, empties dropped (same rule as TextAnalysis.tokens)
     val toks = s.split(' ').filter(_.nonEmpty)
     if (charK > 0) {
@@ -114,7 +168,7 @@ object ShingleHash {
       if (nonAscii.toLong * 2 >= cp &&
           (toks.length < n ||
             cp.toLong >= graft.text.TextAnalysis.SpacelessAvgTokenLen.toLong * toks.length))
-        return dedupSorted(charGramHashes(s, cp, charK))
+        return charGramHashes(s, cp, charK)
       if (runLevel) {
         // mixed doc under run-level: word shingles of the remainder
         // (long non-ASCII runs replaced by a space — the exact Column
@@ -141,12 +195,12 @@ object ShingleHash {
             System.arraycopy(a, 0, out, o, a.length)
             o += a.length
           }
-          return dedupSorted(out)
+          return out
         }
         // no runs: plain word path below
       }
     }
-    dedupSorted(wordShingleHashes(toks, n))
+    wordShingleHashes(toks, n)
   }
 
   /** Polynomial hashes of every `n`-token shingle (raw, un-deduped):
@@ -206,11 +260,9 @@ object ShingleHash {
     raw
   }
 
-  /** Dedup by primitive sort (output order is irrelevant downstream —
-    * only MIN aggregates consume these), avoiding per-shingle boxing.
-    */
-  private def dedupSorted(raw: Array[Long]): GenericArrayData = {
-    if (raw.isEmpty) return new GenericArrayData(Array.empty[Long])
+  /** Dedup by primitive sort, avoiding per-shingle boxing. */
+  private def dedupSorted(raw: Array[Long]): Array[Long] = {
+    if (raw.isEmpty) return raw
     java.util.Arrays.sort(raw)
     var w = 0
     var i = 0
@@ -218,7 +270,7 @@ object ShingleHash {
       if (w == 0 || raw(i) != raw(w - 1)) { raw(w) = raw(i); w += 1 }
       i += 1
     }
-    new GenericArrayData(java.util.Arrays.copyOf(raw, w))
+    java.util.Arrays.copyOf(raw, w)
   }
 
 }

@@ -270,8 +270,8 @@ object StreamOps {
       cfg: graft.text.MinHashConfig = graft.pipeline.TrainingSet.CurationDefaults.CorpusDedup)
       : org.apache.spark.sql.streaming.StreamingQuery =
     sinkBatches(newDocs, checkpoint) { (batch, batchId) =>
-      processIngestBatch(batch, batchId, corpusDocs, corpusIndexPath,
-        outDir, cfg, gate = identity, exactDedup = false)
+      processIngestBatch(batch.localCheckpoint(true), batchId, corpusDocs,
+        corpusIndexPath, outDir, cfg, gate = identity, exactDedup = false)
       ()
     }
 
@@ -625,8 +625,8 @@ object StreamOps {
       }
     }
     sinkBatches(newDocs, checkpoint) { (batch, batchId) =>
-      processIngestBatch(batch, batchId, corpusDocs, corpusIndexPath,
-        outDir, cfg, gate, exactDedup = true)
+      processIngestBatch(batch.localCheckpoint(true), batchId, corpusDocs,
+        corpusIndexPath, outDir, cfg, gate, exactDedup = true)
       ()
     }
   }
@@ -685,7 +685,7 @@ object StreamOps {
       .dropDuplicatesWithinWatermark("__fp")
       .drop("__fp")
     sinkBatches(exactDeduped, checkpoint) { (batch, batchId) =>
-      processIngestBatch(batch.drop("ts"), batchId, corpusDocs,
+      processIngestBatch(batch.drop("ts").localCheckpoint(true), batchId, corpusDocs,
         corpusIndexPath, outDir, cfg, gate = identity, exactDedup = true)
       ()
     }
@@ -697,7 +697,9 @@ object StreamOps {
     * against every prior text and itself, near-dup the survivors
     * against base index + COMPLETE deltas, and write accepted docs +
     * the index delta batch-keyed. `batch` is a NON-EMPTY micro-batch
-    * (the [[sinkBatches]] contract). Returns the batch's ACCEPTED rows
+    * (the [[sinkBatches]] contract) that the caller has already
+    * materialized (checkpointed), so `gate` and the stages below read
+    * it without re-running the source. Returns the batch's ACCEPTED rows
     * (materialized; empty frame when its gated remainder is empty) so
     * composing callers can record per-doc verdicts.
     */
@@ -719,7 +721,7 @@ object StreamOps {
     // themselves at Jaccard 1.0 and the whole batch would silently
     // self-reject
     val spark = batch.sparkSession
-    val b0 = gate(batch.localCheckpoint(true))
+    val b0 = gate(batch)
     if (b0.isEmpty) b0.limit(0)
     else {
       val b1 = b0.localCheckpoint(true)

@@ -11,9 +11,11 @@ import graft.sources.Store
   * Pipeline (all shuffles are on small derived keys, never documents):
   *   1. shingle every document (word n-grams, map-side);
   *   2. `numHashes` minhash signature values per document — hash h_k of
-  *      a shingle is xxhash64(shingle, k), signature_k = MIN over the
-  *      document's shingles (one groupBy(doc_id) with map-side partial
-  *      MIN: the classic MapReduce combiner shape);
+  *      a shingle is a_k·h + b_k over its 64-bit base hash h,
+  *      signature_k = MIN over the document's shingles, all computed by
+  *      one native kernel per document (no per-shingle rows); one
+  *      groupBy(doc_id) whose buffer is the whole signature array folds
+  *      rows that share a doc_id;
   *   3. band the signature (`bands` × `rowsPerBand`), hash each band,
   *      and bucket-join documents sharing any (band, bandHash) —
   *      candidate pairs only ever meet inside a bucket;
@@ -54,44 +56,30 @@ object MinHashDedup {
             col("text"), cfg.shingleSize, cfg.charK, cfg.runLevel))).as("s"))
       .distinct()
 
-  /** Per-k odd multipliers/offsets for the linear hash family
-    * h_k(x) = a_k·xxhash64(x) + b_k (mod 2^64): one string hash per
-    * shingle, 64 cheap long transforms, instead of 64 string hashes.
-    * Fixed seed ⇒ stable signatures across runs.
-    */
-  private lazy val hashFamily: Array[(Long, Long)] = {
-    val rng = new scala.util.Random(0x5eed5eedL)
-    Array.fill(256)((rng.nextLong() | 1L, rng.nextLong()))
-  }
-
-  /** (doc_id, sig: array<bigint>[numHashes]) — one row per document.
+  /** (doc_id, sig: array<bigint>[numHashes]) — one row per doc_id
+    * with at least one shingle.
     *
-    * The shingle base hashes come from the native [[graft.functions.ShingleHash]]
-    * expression (distinct 64-bit hashes straight from the text — no
-    * intermediate shingle strings, 8-byte shuffle keys), and the 64
-    * minhash functions derive from each base hash via [[graft.functions.LinearHash]].
-    * Partial aggregation makes this a map-side combine followed by one
-    * doc_id shuffle of fixed-size signature rows.
+    * Each row is signed by the native [[graft.functions.ShingleHash]]
+    * kernel: base hashes straight from the text, then the `numHashes`
+    * minima of the linear hash family over them, in one loop — no
+    * shingle strings and no per-shingle rows. Rows with no shingles
+    * sign `null` and are dropped. One [[graft.functions.SignatureMin]]
+    * fold per doc_id (a map-side partial, then one doc_id shuffle of
+    * fixed-size arrays) makes a doc_id that repeats across rows sign
+    * the union of their shingles.
     */
   def signatures(documents: DataFrame, cfg: MinHashConfig = MinHashConfig()): DataFrame = {
-    require(cfg.numHashes <= hashFamily.length)
-    // single-row-group rescue: the shingle hashing + 64-way min partial
-    // aggregation is the dominant dedup cost and runs on the scan's
-    // task count; min aggregates are exact under partitioning, so the
-    // signatures are bit-identical. No-op at scale.
-    val sh = graft.ops.Scale.spreadForCompute(documents, col("doc_id"))
-      .select(col("doc_id"),
-      explode(org.apache.spark.sql.GraftColumnBridge.column(
-        graft.functions.ShingleHash(
-          org.apache.spark.sql.GraftColumnBridge.expression(col("text")),
-          cfg.shingleSize, cfg.charK, cfg.runLevel))).as("h0"))
-    val mins = (0 until cfg.numHashes).map { k =>
-      val (a, b) = hashFamily(k)
-      min(graft.functions.LinearHash(col("h0"), a, b)).as(s"h$k")
-    }
-    sh.groupBy("doc_id")
-      .agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"), array((0 until cfg.numHashes).map(k => col(s"h$k")): _*).as("sig"))
+    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+    // single-row-group rescue: signing is the dominant dedup cost and
+    // runs on the scan's task count; MIN is exact under partitioning,
+    // so the signatures are bit-identical. No-op at scale.
+    graft.ops.Scale.spreadForCompute(documents, col("doc_id"))
+      .select(col("doc_id"), column(graft.functions.ShingleHash(expression(col("text")),
+        cfg.shingleSize, cfg.charK, cfg.runLevel, cfg.numHashes)).as("sig"))
+      .where(col("sig").isNotNull)
+      .groupBy("doc_id")
+      .agg(column(graft.functions.SignatureMin(expression(col("sig")), cfg.numHashes)
+        .toAggregateExpression()).as("sig"))
   }
 
   /** Hash-scheme version of the signature pipeline. Bump whenever the
@@ -541,7 +529,7 @@ object MinHashDedup {
     * true near-duplicates (≥ cfg.threshold).
     *
     * The signature pass never touches shingle STRINGS (ShingleHash
-    * emits base hashes directly), so the exact verification builds
+    * signs from base hashes directly), so the exact verification builds
     * string shingles only for documents that appear in a candidate pair
     * (left-semi against the candidate ids) — the corpus text is never
     * re-shingled in full, whether candidates come from the raw corpus

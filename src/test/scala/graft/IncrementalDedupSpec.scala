@@ -58,6 +58,15 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(inc == batch)
   }
 
+  /** Distinct base-hash count per doc from the native dispatch
+    * ([[graft.functions.ShingleHash.hashDoc]], the universe the
+    * signing kernel minimizes over).
+    */
+  private def nativeUniverse(
+      docs: org.apache.spark.sql.DataFrame, n: Int, charK: Int, runLevel: Boolean): Map[Long, Int] =
+    docs.select("doc_id", "text").collect().map(r => r.getLong(0) ->
+      graft.functions.ShingleHash.hashDoc(r.getString(1), n, charK, runLevel).length).toMap
+
   test("ShingleHash shingle universe matches TextAnalysis.shingles on every document") {
     import spark.implicits._
     // the signature pass (ShingleHash, JVM tokenizer) and the exact
@@ -68,11 +77,7 @@ class IncrementalDedupSpec extends SparkSpec {
       (9001L, "a  b   c d"), (9002L, "  leading and trailing  "),
       (9003L, ""), (9004L, "one two"), (9005L, "x y z")).toDF("doc_id", "text")
     val docs = cat.documents.select("doc_id", "text").unionByName(adversarial)
-    val viaNative = docs.select(col("doc_id"),
-      size(org.apache.spark.sql.GraftColumnBridge.column(
-        graft.functions.ShingleHash(
-          org.apache.spark.sql.GraftColumnBridge.expression(col("text")), 3))).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val viaNative = nativeUniverse(docs, 3, 0, runLevel = false)
     val viaSpark = docs.select(col("doc_id"),
       size(array_distinct(graft.text.TextAnalysis.shingles(col("text"), 3))).as("n"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -169,11 +174,7 @@ class IncrementalDedupSpec extends SparkSpec {
       // wordy but LONG tokens (avg ≥ 16): dispatches to char grams
       (8L, Seq.fill(6)((0x4e00 to 0x4e20).map(_.toChar).mkString).mkString(" ")))
       .toDF("doc_id", "text")
-    val viaNative = docs.select(col("doc_id"),
-      size(org.apache.spark.sql.GraftColumnBridge.column(
-        graft.functions.ShingleHash(
-          org.apache.spark.sql.GraftColumnBridge.expression(col("text")), 3, 5))).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val viaNative = nativeUniverse(docs, 3, 5, runLevel = false)
     val viaSpark = docs.select(col("doc_id"),
       size(array_distinct(
         graft.text.TextAnalysis.shinglesAuto(col("text"), 3, 5))).as("n"))
@@ -238,12 +239,7 @@ class IncrementalDedupSpec extends SparkSpec {
       (5L, s"$wrap ${thai(5, 15)}"),                         // run BELOW 16 cp → word only
       (6L, s"$wrap $astral${astral}b ${thai(6, 17)}"),       // astral short run + long run
       (7L, ""), (8L, "one two")).toDF("doc_id", "text")
-    val viaNative = docs.select(col("doc_id"),
-      size(org.apache.spark.sql.GraftColumnBridge.column(
-        graft.functions.ShingleHash(
-          org.apache.spark.sql.GraftColumnBridge.expression(col("text")),
-          3, 5, runLevel = true))).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val viaNative = nativeUniverse(docs, 3, 5, runLevel = true)
     val viaSpark = docs.select(col("doc_id"),
       size(array_distinct(
         graft.text.TextAnalysis.shinglesAuto(col("text"), 3, 5, runLevel = true))).as("n"))
@@ -264,10 +260,11 @@ class IncrementalDedupSpec extends SparkSpec {
 
   test("ShingleHash codegen path equals interpreted eval on every dispatch shape") {
     import spark.implicits._
-    // hashDoc is a static call from generated code (the CodePointUnits
+    // signDoc is a static call from generated code (the CodePointUnits
     // idiom) — CODEGEN_ONLY exercises doGenCode, NO_CODEGEN the
-    // interpreted nullSafeEval; the hash multisets must be identical
+    // interpreted nullSafeEval; the signatures must be identical
     // across word, doc-level char, run-level and degenerate shapes
+    // (a doc with no shingles signs null on both paths)
     val wrap = (1 to 14).map(i => s"wrapper$i").mkString(" ")
     val docs = Seq(
       (1L, "plain ascii words only here today"),
@@ -281,8 +278,8 @@ class IncrementalDedupSpec extends SparkSpec {
           org.apache.spark.sql.GraftColumnBridge.column(
             graft.functions.ShingleHash(
               org.apache.spark.sql.GraftColumnBridge.expression(col("text")),
-              3, 5, runLevel = true)).as("h"))
-        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+              3, 5, runLevel = true, numHashes = 64)).as("h"))
+        .collect().map(r => r.getLong(0) -> Option(r.getSeq[Long](1)).getOrElse(Seq.empty)).toMap
       finally spark.conf.set("spark.sql.codegen.factoryMode", before)
     }
     val gen = universes("CODEGEN_ONLY")

@@ -269,7 +269,16 @@ class TextStoreMaintenanceSpec extends SparkSpec {
     import spark.implicits._
     val cfg = MinHashConfig()
     val tbl = "graft_takedown_tbl"
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    // the tombstone sibling outlives DROP TABLE by design, so the test
+    // clears it itself: a leftover would carry earlier runs' takedowns
+    // into this run's fresh table
+    val tombstones = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"), s"$tbl.tombstones")
+    def clear(): Unit = {
+      spark.sql(s"DROP TABLE IF EXISTS $tbl")
+      tombstones.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(tombstones, true)
+    }
+    clear()
     try {
       MinHashDedup.writeBandedIndexTable(
         MinHashDedup.signatures(docs, cfg), tbl, numBuckets = 4, cfg = cfg)
@@ -293,7 +302,7 @@ class TextStoreMaintenanceSpec extends SparkSpec {
       assert(afterDelete === viaRebuild,
         "table-path query-after-delete must equal rebuild-without-deleted")
       assert(!afterDelete.exists(p => p._1 == gone || p._2 == gone))
-    } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    } finally clear()
   }
 
   test("claimBatchDir: sequential naming survives pre-claimed slots; no stage dirs leak; dot-dirs invisible to discovery") {
