@@ -7,6 +7,7 @@ import graft.core.Engine
 import graft.functions.ZOrderValue
 import graft.media.MediaPipeline
 import graft.ops.{Catalog, Profile, Scale}
+import graft.pipeline.{CurationPlan, DeconConfig, SpanCut}
 import graft.text.{MinHashDedup, SimHash, TextAnalysis}
 import graft.vector.Ann
 
@@ -244,16 +245,19 @@ object Extras {
 
   /** Per-corpus persisted stage-0 substring-clean table — the X121 v2
     * curation basis: (doc_id, n_tokens, dup_tokens, clean_text) of the
-    * NON-benchmark slice under the X118/X119 window contract (w=10).
-    * The v2 banded index is built over exactly this text, so both ride
-    * one stamped artifact and can never drift apart.
+    * NON-benchmark slice under [[X121Cut]]'s window (w=10, the
+    * X118/X119 window contract). The v2 banded index is built over
+    * exactly this text, so both ride one stamped artifact and can never
+    * drift apart.
     */
-  private def cleanCorpusTable(c: Catalog): DataFrame =
+  private def cleanCorpusTable(c: Catalog): DataFrame = {
+    val w = X121Cut.windowTokens
     stampedArtifact(c, "subclean",
-      s"subclean:v${graft.text.SubstringDedup.AlgorithmVersion}:w10") {
+      s"subclean:v${graft.text.SubstringDedup.AlgorithmVersion}:w$w") {
       graft.text.SubstringDedup.cleanCorpus(
-        c.documents.filter(col("source") =!= "src0"), 10)
+        c.documents.filter(col("source") =!= "src0"), w)
     }
+  }
 
   /** The v2 curation document view: every non-benchmark row's text
     * replaced by its stage-0 span-cleaned text; the benchmark slice
@@ -279,12 +283,22 @@ object Extras {
   private def bandedV2Table(c: Catalog): DataFrame = {
     val cfg = graft.text.MinHashConfig()
     bandedIndex(c, s"mhbv2:v${MinHashDedup.SignatureVersion}:" +
-      s"sc${graft.text.SubstringDedup.AlgorithmVersion}w10",
+      s"sc${graft.text.SubstringDedup.AlgorithmVersion}" +
+      s"w${X121Cut.windowTokens}",
       "minhash_banded_v2", cfg)(MinHashDedup.signatures(v2Documents(c), cfg))
   }
 
-  /** The X93 manifest (v1 order: verdicts on raw text, channels from
-    * the persisted artifacts) — shared by X93 and X122.
+  /** The two curation releases the stored manifests hold: X93 (v1
+    * order, verdicts on raw text) and X121 (v2 order, the span cut
+    * first). Every parameter is the plan default; a default change
+    * re-keys both stores through [[CurationPlan.stampKey]].
+    */
+  private[graft] val X93Plan = CurationPlan()
+  private val X121Cut = SpanCut()
+  private[graft] val X121Plan = CurationPlan(spanCut = Some(X121Cut))
+
+  /** The X93 manifest (channels from the persisted artifacts) — shared
+    * by X93 and X122.
     */
   private def x93Manifest(c: Catalog): DataFrame =
     graft.pipeline.TrainingSet.curationManifest(
@@ -292,63 +306,36 @@ object Extras {
       c.documents.filter(col("source") === "src0"),
       bandedTable(c),
       c.embeddings,
+      X93Plan,
       nearDupPairs = Some(crossNearDupsTable(c)),
       ngramScores = Some(contaminationTable(c)),
       corpusPairs = Some(vpairsTable(c)))
 
-  /** The X121 manifest (v2 order: substring span cut first, every
-    * stage over the cleaned text, channels from scratch) — shared by
-    * X121 and X122.
+  /** The X121 manifest (every stage over the cleaned text, channels
+    * from scratch) — shared by X121 and X122.
     */
   private def x121Manifest(c: Catalog): DataFrame =
-    graft.pipeline.TrainingSet.curationManifestV2(
+    graft.pipeline.TrainingSet.curationManifest(
       c.documents.filter(col("source") =!= "src0"),
       c.documents.filter(col("source") === "src0"),
       bandedV2Table(c),
-      c.embeddings)
+      c.embeddings,
+      X121Plan)
 
-  /** Stamp-key fragment carrying every curationManifest parameter the
-    * two manifest builds run with (their defaults, spelled out — a
-    * default change must never ride a stale manifest) plus the manual
-    * manifest-assembly version (bump on any semantic change to the
-    * stage chain itself, the signature-scheme version idiom).
+  /** The stage-chain fragment both stored manifests' stamp keys end
+    * with ([[CurationPlan.paramsKey]]; the two plans differ only in the
+    * span cut, which the v2 prefix carries).
     */
-  private[graft] def manifestParamsKey: String = {
-    // EVERY fragment derives from the values the builds actually run
-    // with — the MinHash ones from the config objects they pass, the
-    // scalar ones from TrainingSet.CurationDefaults (the builders'
-    // actual default arguments) — so a default change anywhere re-keys
-    // the store automatically instead of riding a stale literal
-    def cfg(c: graft.text.MinHashConfig): String =
-      s"t${c.threshold}s${c.shingleSize}b${c.bands}h${c.numHashes}c${c.maxBucket}" +
-        // rendered only when ON so pre-existing stores keep their keys
-        (if (c.charK > 0) s"k${c.charK}" else "") +
-        (if (c.runLevel) "r1" else "")
-    val D = graft.pipeline.TrainingSet.CurationDefaults
-    def bit(b: Boolean): String = if (b) "1" else "0"
-    s"mv1:n${D.N}:ng${D.NgramThreshold}:cos${D.CosThreshold}" +
-      s":dedup${cfg(D.CorpusDedup)}" +
-      s":decon${cfg(D.DeconDedup)}" +
-      s":ppl${D.PplBuckets}:mix${D.MixtureStrata}${D.MixtureAlpha}" +
-      s":seed${D.Seed}:minid${bit(D.MinIdDedupWinners)}" +
-      s":span${D.MaxSpanTokens.map(_.toString).getOrElse("-")}" +
-      s":qm${if (D.QualityModel.isEmpty) "-" else "set"}" +
-      s":norm${bit(D.NormalizeFirst)}" +
-      // rendered only when ON so pre-existing stores keep their keys
-      (if (D.CharTokens) ":sct1" else "") +
-      (if (D.RunLevel) ":srl1" else "")
-  }
+  private[graft] def manifestParamsKey: String = X93Plan.paramsKey
 
   /** [[x93Manifest]] from the write-once stamped store — the persisted
     * release manifest an order-impact audit reads. Keyed on every
     * version + parameter the manifest content depends on (the channel
     * artifacts it reads are themselves stamped, so their semantic
-    * versions ride [[manifestParamsKey]]'s assembly version).
+    * versions ride the plan's manifest-assembly version).
     */
   private def x93ManifestStored(c: Catalog): DataFrame =
-    stampedArtifact(c, "manifest_v1",
-      s"manifest_v1:1:sig${MinHashDedup.SignatureVersion}:$manifestParamsKey")(
-      x93Manifest(c))
+    stampedArtifact(c, "manifest_v1", X93Plan.stampKey)(x93Manifest(c))
 
   /** [[x121Manifest]] from the write-once stamped store (the span cut
     * and the from-scratch channels are paid once per corpus; X121
@@ -356,12 +343,7 @@ object Extras {
     * state, this certifies the audit-over-stored-manifests state).
     */
   private def x121ManifestStored(c: Catalog): DataFrame =
-    stampedArtifact(c, "manifest_v2",
-      s"manifest_v2:1:sub${graft.text.SubstringDedup.AlgorithmVersion}" +
-        s":sig${MinHashDedup.SignatureVersion}" +
-        s":w${graft.pipeline.TrainingSet.CurationDefaults.WindowTokens}" +
-        s":$manifestParamsKey")(
-      x121Manifest(c))
+    stampedArtifact(c, "manifest_v2", X121Plan.stampKey)(x121Manifest(c))
 
   // ---- run-level curation fixture (X128): the X127 4-class corpus +
   // lang strata + a quote-embedding benchmark, the artifacts the
@@ -375,6 +357,12 @@ object Extras {
     graft.text.MinHashConfig(charK = 5, runLevel = true)
   private[graft] val RlDeconCfg =
     graft.text.MinHashConfig(threshold = 0.5, charK = 5, runLevel = true)
+
+  /** The X128 run-level release: the X121 plan with the run-level span
+    * cut and both MinHash tiers signing embedded runs.
+    */
+  private val X128Plan = CurationPlan(DeconConfig(dedup = RlDeconCfg),
+    corpusDedup = RlCorpusCfg, spanCut = Some(SpanCut(runLevel = true)))
 
   /** The X127 fixture corpus with the mixture strata riding along:
     * originals (wordy), variants A/B embedding the same 95-cp Thai
@@ -2093,10 +2081,8 @@ object Extras {
     // regexp run splitting) in both verify tiers — the full DuckDB
     // restatement of the composed release.
     "X128_runlevel_curation" -> q(c =>
-      graft.pipeline.TrainingSet.curationManifestV2(
-        rlFixture(c), rlBench(c), bandedRlTable(c), c.embeddings,
-        deconDedup = RlDeconCfg, corpusDedup = RlCorpusCfg,
-        runLevel = true)),
+      graft.pipeline.TrainingSet.curationManifest(
+        rlFixture(c), rlBench(c), bandedRlTable(c), c.embeddings, X128Plan)),
     // OPQ vs plain PQ at EQUAL m·ks budget (Ge et al. 2013 — a learned
     // orthogonal rotation before the subspace split; graft.vector.Opq):
     // recall@5 per (variant, query) over 25 queries against the

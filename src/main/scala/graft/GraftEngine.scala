@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core.Engine
 import graft.functions.VectorFunctions
 import graft.ops.Catalog
+import graft.pipeline.{CurationPlan, CurationResult}
 import graft.sources.Tables
 
 /** The user-facing facade — what a user of the reference engine would
@@ -176,83 +177,43 @@ final class GraftEngine private (val spark: SparkSession, val dir: String) {
       tables.documents, benchmark, banded, tables.embeddings)
 
   /** Per-document manifest of the composed batch curation pipeline
-    * (decontaminate → near-dup star → perplexity gate → mixture; see
-    * [[graft.pipeline.TrainingSet.curationManifest]]).
+    * (decontaminate → near-dup star → perplexity gate → mixture, with
+    * the optional span cut as stage 0; see
+    * [[graft.pipeline.TrainingSet.curationManifest]]). Under a span cut
+    * `banded` must be built over (cleaned corpus ∪ benchmark); set
+    * `hashWindowKeys` at scale so the stage-0 shuffle carries 8-byte
+    * hashes instead of window text.
     */
   def curationManifest(corpus: DataFrame, benchmark: DataFrame,
-      banded: DataFrame): DataFrame =
+      banded: DataFrame, plan: CurationPlan = CurationPlan()): DataFrame =
     graft.pipeline.TrainingSet.curationManifest(
-      corpus, benchmark, banded, tables.embeddings)
+      corpus, benchmark, banded, tables.embeddings, plan)
 
   /** The one-call batch curation driver: materialized manifest + audit
-    * counts + survivors in training order, ready for
-    * [[graft.pipeline.TrainingSet.writeChunks]] (see
-    * [[graft.pipeline.TrainingSet.curateCorpus]]).
+    * counts + survivors in training order (the span-cleaned text under
+    * a span cut), ready for [[graft.pipeline.TrainingSet.writeChunks]]
+    * (see [[graft.pipeline.TrainingSet.curateCorpus]]).
     */
   def curateCorpus(corpus: DataFrame, benchmark: DataFrame,
-      banded: DataFrame): graft.pipeline.CurationResult =
+      banded: DataFrame, plan: CurationPlan = CurationPlan()): CurationResult =
     graft.pipeline.TrainingSet.curateCorpus(
-      corpus, benchmark, banded, tables.embeddings)
-
-  /** [[curationManifest]] with exact substring-level dedup as STAGE 0:
-    * duplicated token spans are cut from the corpus text first and
-    * every later stage runs over the span-cleaned text. `banded` must
-    * be built over (cleaned corpus ∪ benchmark) — see
-    * [[graft.pipeline.TrainingSet.curationManifestV2]]. Set
-    * `hashWindowKeys = true` at scale so the stage-0 shuffle carries
-    * 8-byte hashes instead of window text.
-    */
-  def curationManifestV2(corpus: DataFrame, benchmark: DataFrame,
-      banded: DataFrame, windowTokens: Int = 10,
-      hashWindowKeys: Boolean = false): DataFrame =
-    graft.pipeline.TrainingSet.curationManifestV2(
-      corpus, benchmark, banded, tables.embeddings, windowTokens,
-      hashWindowKeys)
-
-  /** The one-call v2 curation driver — [[curateCorpus]] with substring
-    * dedup in front; survivors ship the span-cleaned text (see
-    * [[graft.pipeline.TrainingSet.curateCorpusV2]]).
-    */
-  def curateCorpusV2(corpus: DataFrame, benchmark: DataFrame,
-      banded: DataFrame, windowTokens: Int = 10,
-      hashWindowKeys: Boolean = false): graft.pipeline.CurationResult =
-    graft.pipeline.TrainingSet.curateCorpusV2(
-      corpus, benchmark, banded, tables.embeddings, windowTokens,
-      hashWindowKeys)
+      corpus, benchmark, banded, tables.embeddings, plan)
 
   /** Corpus in, training batches out — the full release pipeline in
-    * one call: [[curateCorpus]] (decontaminate → near-dup star →
-    * perplexity gate → mixture), then the bin-partitioned model-batch
-    * writer ([[graft.pipeline.TrainingSet.writeBinnedChunks]]) over
-    * the survivors in deterministic training order. Writes the per-doc
-    * manifest alongside the batches (`outDir/manifest`) — the "why is
-    * doc X in the training set" record ships with the data. Returns
-    * the curation result (manifest + audit).
+    * one call: [[curateCorpus]] under `plan`, then the bin-partitioned
+    * model-batch writer ([[graft.pipeline.TrainingSet.writeBinnedChunks]])
+    * over the survivors in deterministic training order. Writes the
+    * per-doc manifest alongside the batches (`outDir/manifest`, with
+    * the stage-0 token accounting under a span cut) — the "why is doc
+    * X in the training set" record ships with the data. Returns the
+    * curation result (manifest + audit).
     */
   def curateAndWrite(corpus: DataFrame, benchmark: DataFrame,
       banded: DataFrame, outDir: String,
+      plan: CurationPlan = CurationPlan(),
       maxTokens: Int = 2048, stride: Int = 2048,
-      binTokens: Long = 1 << 20): graft.pipeline.CurationResult = {
-    val cur = curateCorpus(corpus, benchmark, banded)
-    graft.pipeline.TrainingSet.writeBinnedChunks(
-      cur.result, s"$outDir/batches", maxTokens, stride, binTokens)
-    cur.manifest.write.mode("overwrite").parquet(s"$outDir/manifest")
-    cur
-  }
-
-  /** [[curateAndWrite]] with substring dedup in front — the complete
-    * v2 release run in one call: span cut → verdict stages →
-    * bin-partitioned model batches over the survivors' CLEANED text,
-    * manifest (incl. the stage-0 token accounting) written alongside.
-    * `banded` must be built over (cleaned corpus ∪ benchmark).
-    */
-  def curateAndWriteV2(corpus: DataFrame, benchmark: DataFrame,
-      banded: DataFrame, outDir: String,
-      windowTokens: Int = 10, hashWindowKeys: Boolean = false,
-      maxTokens: Int = 2048, stride: Int = 2048,
-      binTokens: Long = 1 << 20): graft.pipeline.CurationResult = {
-    val cur = curateCorpusV2(corpus, benchmark, banded, windowTokens,
-      hashWindowKeys)
+      binTokens: Long = 1 << 20): CurationResult = {
+    val cur = curateCorpus(corpus, benchmark, banded, plan)
     graft.pipeline.TrainingSet.writeBinnedChunks(
       cur.result, s"$outDir/batches", maxTokens, stride, binTokens)
     cur.manifest.write.mode("overwrite").parquet(s"$outDir/manifest")

@@ -51,33 +51,6 @@ final case class CurationResult(manifest: DataFrame, result: TrainingSetResult)
   */
 object TrainingSet {
 
-  /** The curation manifest builders' shared default parameters —
-    * public so stamp keys over PERSISTED manifests (graft.Extras)
-    * derive from the SAME values the builders actually default to:
-    * changing a default here re-keys every stored manifest
-    * automatically. A frozen literal key would let a default change
-    * silently ride stale persisted artifacts — the exact failure the
-    * stamped-store scheme exists to prevent.
-    */
-  object CurationDefaults {
-    val N: Int = 5
-    val NgramThreshold: Double = 0.2
-    val DeconDedup: MinHashConfig = MinHashConfig(threshold = 0.5)
-    val CorpusDedup: MinHashConfig = MinHashConfig()
-    val CosThreshold: Double = 0.35
-    val PplBuckets: Int = 3
-    val MixtureStrata: String = "lang"
-    val MixtureAlpha: Double = 0.5
-    val Seed: Long = 42L
-    val MinIdDedupWinners: Boolean = false
-    val MaxSpanTokens: Option[Int] = None
-    val QualityModel: Option[(graft.text.QualityClassifier.Model, Double)] = None
-    val NormalizeFirst: Boolean = false
-    val WindowTokens: Int = 10
-    val CharTokens: Boolean = false
-    val RunLevel: Boolean = false
-  }
-
   /** Run stages 1–6 (plus the opt-in 1b/2b/5b below); `audit` holds
     * surviving-doc counts per stage (the id sets are
     * localCheckpoint'ed, so the counts are metadata reads, not
@@ -289,11 +262,9 @@ object TrainingSet {
       binTokens: Long = 1 << 20): DataFrame = {
     require(binTokens >= maxTokens,
       s"binTokens=$binTokens must be at least maxTokens=$maxTokens")
-    val chunks = TextAnalysis
-      .chunkDocuments(result.docs.select("doc_id", "text"), maxTokens, stride)
-      .join(result.docs.select("doc_id", "shuffle_pos"), Seq("doc_id"))
     graft.ops.ScalableWindows
-      .withGlobalRunningSum(chunks, Seq("shuffle_pos", "chunk_idx"), "n_tokens", "__run")
+      .withGlobalRunningSum(trainingChunks(result, maxTokens, stride),
+        Seq("shuffle_pos", "chunk_idx"), "n_tokens", "__run")
       .withColumn("bin", floor((col("__run") - col("n_tokens")) / binTokens).cast("long"))
       .drop("__run")
   }
@@ -432,21 +403,12 @@ object TrainingSet {
       packTokens: Long = 1 << 20,
       targetFileBytes: Long = 128L << 20): Unit = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val raw = TextAnalysis
-      .chunkDocuments(result.docs.select("doc_id", "text"), maxTokens, stride)
-      .join(result.docs.select("doc_id", "shuffle_pos"), Seq("doc_id"))
-      // LAZY checkpoint: the prefix-sum machinery drives its input
-      // through three jobs — without it the explode-heavy chunker
-      // re-runs per job
-      .localCheckpoint(false)
+    // LAZY checkpoint: the prefix-sum machinery drives its input
+    // through three jobs — without it the explode-heavy chunker re-runs
+    // per job
+    val raw = trainingChunks(result, maxTokens, stride).localCheckpoint(false)
     val pieces = packExactChunks(raw, packTokens).localCheckpoint(true)
-    val stats = pieces
-      .agg(count(lit(1)).as("rows"),
-        coalesce(sum(length(col("piece"))), lit(0L)).as("bytes"))
-      .first()
-    val est = stats.getLong(1) + stats.getLong(0) * 64L
-    val nFiles = ((est + targetFileBytes - 1) / targetFileBytes)
-      .max(1L).min(1L << 20).toInt
+    val nFiles = fileCount(pieces, "piece", targetFileBytes)
     Scale.clusterBy(pieces, nFiles, col("pack_id"), col("pack_off"))
       .write.mode("overwrite").parquet(s"$outDir/pieces")
     packManifest(pieces, packTokens)
@@ -708,27 +670,40 @@ object TrainingSet {
       targetFileBytes: Long = 128L << 20,
       packTokens: Option[Long] = None): Unit = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val raw = TextAnalysis
-      .chunkDocuments(result.docs.select("doc_id", "text"), maxTokens, stride)
-      .join(result.docs.select("doc_id", "shuffle_pos"), Seq("doc_id"))
+    val raw = trainingChunks(result, maxTokens, stride)
     // opt-in token-budget packing: pack ids are monotone in the
     // training order, so the range-cluster below keeps every pack's
     // chunks contiguous within (and across) part files — the written
     // stream is directly consumable as packed training sequences
     val chunks = packTokens.fold(raw)(packChunks(raw, _)).localCheckpoint(true)
-    // EXACT content size from one aggregate over the materialized
-    // chunks — Catalyst's estimate for a join is the PRODUCT of its
-    // children's sizes, which would peg nFiles at the cap and write a
-    // million near-empty files regardless of the byte target
-    val stats = chunks
-      .agg(count(lit(1)).as("rows"),
-        coalesce(sum(length(col("chunk"))), lit(0L)).as("bytes"))
-      .first()
-    val est = stats.getLong(1) + stats.getLong(0) * 64L // per-row id/pos overhead
-    val nFiles = ((est + targetFileBytes - 1) / targetFileBytes)
-      .max(1L).min(1L << 20).toInt
+    val nFiles = fileCount(chunks, "chunk", targetFileBytes)
     Scale.clusterBy(chunks, nFiles, col("shuffle_pos"), col("chunk_idx"))
       .write.mode("overwrite").parquet(outDir)
+  }
+
+  /** The surviving docs of `result` as sliding-window chunks
+    * ([[TextAnalysis.chunkDocuments]]), each carrying its doc's
+    * training-order `shuffle_pos`.
+    */
+  private def trainingChunks(result: TrainingSetResult, maxTokens: Int, stride: Int): DataFrame =
+    TextAnalysis
+      .chunkDocuments(result.docs.select("doc_id", "text"), maxTokens, stride)
+      .join(result.docs.select("doc_id", "shuffle_pos"), Seq("doc_id"))
+
+  /** How many ~`targetFileBytes` files to write `rows` into, from the
+    * EXACT content size of its `textCol` (plus 64 bytes per row for the
+    * id/position columns): one aggregate over the materialized rows.
+    * Catalyst's estimate for a join is the PRODUCT of its children's
+    * sizes, which would peg the count at the cap and write a million
+    * near-empty files regardless of the byte target.
+    */
+  private def fileCount(rows: DataFrame, textCol: String, targetFileBytes: Long): Int = {
+    val stats = rows
+      .agg(count(lit(1)).as("rows"),
+        coalesce(sum(length(col(textCol))), lit(0L)).as("bytes"))
+      .first()
+    val est = stats.getLong(1) + stats.getLong(0) * 64L
+    ((est + targetFileBytes - 1) / targetFileBytes).max(1L).min(1L << 20).toInt
   }
 
   /** Unified per-document eval-contamination verdict combining the
@@ -764,13 +739,9 @@ object TrainingSet {
       benchmark: DataFrame,
       banded: DataFrame,
       embeddings: DataFrame,
-      n: Int = 5,
-      ngramThreshold: Double = 0.2,
-      dedup: MinHashConfig = MinHashConfig(threshold = 0.5),
-      cosThreshold: Double = 0.35,
+      decon: DeconConfig = DeconConfig(),
       nearDupPairs: Option[DataFrame] = None,
       ngramScores: Option[DataFrame] = None,
-      maxSpanTokens: Option[Int] = None,
       // a composing caller (curationManifest) that has ALREADY paid the
       // banded-coverage pass for this (corpus, banded, shingleSize)
       // sets this so the same full-corpus guard scan is not re-run —
@@ -779,6 +750,7 @@ object TrainingSet {
       assumeBandedCoversCorpus: Boolean = false): DataFrame = {
     // channel 1 likewise accepts a persisted contaminationScores table
     // (the X30 report) — one corpus shingle pass feeds both audits
+    val n = decon.n
     val ngram = ngramScores
       .getOrElse(TextAnalysis.contaminationScores(corpus, benchmark, n))
       .select(col("doc_id"), col("overlap_frac"))
@@ -797,12 +769,12 @@ object TrainingSet {
     val nd = nearDupPairs
       .getOrElse {
         if (!assumeBandedCoversCorpus)
-          requireBandedCoversCorpus(corpus, banded, dedup.shingleSize,
+          requireBandedCoversCorpus(corpus, banded, decon.dedup.shingleSize,
             "decontaminationReport",
             "For a benchmark-only index, pass nearDupPairs = " +
               "Some(MinHashDedup.crossNearDupsAgainstBanded(corpus, benchmark, " +
-              "benchBanded, dedup)) (the sign-in-place probe) instead.")
-        MinHashDedup.crossNearDupsFromBanded(corpus, benchmark, banded, dedup)
+              "benchBanded, decon.dedup)) (the sign-in-place probe) instead.")
+        MinHashDedup.crossNearDupsFromBanded(corpus, benchmark, banded, decon.dedup)
       }
       .select(col("i").as("doc_id")).distinct()
       .withColumn("__nd", lit(true))
@@ -820,13 +792,11 @@ object TrainingSet {
       .join(ngram, Seq("doc_id"), "left")
       .join(nd, Seq("doc_id"), "left")
       .join(sem, Seq("doc_id"), "left")
-    val withSpan = maxSpanTokens.fold(joined)(_ => joined.join(
+    val withSpan = decon.maxSpanTokens.fold(joined)(_ => joined.join(
       TextAnalysis.maxBenchmarkOverlapSpan(corpus, benchmark, n)
         .select(col("doc_id"), col("max_span_tokens").as("span_tokens")),
       Seq("doc_id"), "left"))
-    assembleDecontaminationVerdict(
-      withSpan, ngramThreshold, cosThreshold, maxSpanTokens)
-      .orderBy("doc_id")
+    assembleDecontaminationVerdict(withSpan, decon).orderBy("doc_id")
   }
 
   /** Materialize a built training set as MODEL-READY batch files: the
@@ -859,27 +829,25 @@ object TrainingSet {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     val chunks = binnedChunks(result, maxTokens, stride, binTokens)
       .localCheckpoint(true)
-    // exact content size from one aggregate over the materialized
-    // chunks (the writeChunks sizing discipline — Catalyst's join
-    // estimate would peg nFiles at the cap)
-    val stats = chunks
-      .agg(count(lit(1)).as("rows"),
-        coalesce(sum(length(col("chunk"))), lit(0L)).as("bytes"))
-      .first()
-    val est = stats.getLong(1) + stats.getLong(0) * 64L
-    val nFiles = ((est + targetFileBytes - 1) / targetFileBytes)
-      .max(1L).min(1L << 20).toInt
+    val nFiles = fileCount(chunks, "chunk", targetFileBytes)
     Scale.clusterBy(chunks, nFiles, col("shuffle_pos"), col("chunk_idx"))
       .write.mode("overwrite").partitionBy("bin").parquet(outDir)
   }
 
   /** Per-document manifest of the COMPOSED batch curation pipeline —
     * the one table a real corpus-release run reads to answer "why is
-    * doc X in (or out of) the training set". The stages chain in the
-    * canonical release order, each computed over the SURVIVORS of the
-    * previous one (quotas and buckets bind on what actually remains,
-    * exactly like [[build]]):
+    * doc X in (or out of) the training set". `plan` names the stages
+    * and their configs. The stages chain in the canonical release
+    * order, each computed over the SURVIVORS of the previous one
+    * (quotas and buckets bind on what actually remains, exactly like
+    * [[build]]):
     *
+    *   0. (opt, `plan.spanCut`) span cut — exact substring-level dedup
+    *      ([[graft.text.SubstringDedup]], Lee et al. ACL 2022) CUTS
+    *      duplicated token spans from the corpus text first, and every
+    *      later stage runs over the span-cleaned text (substring dedup
+    *      drops tokens, never documents, so it must precede the per-doc
+    *      verdicts or their scores describe text that won't ship);
     *   1. decontaminate — the unified three-channel X90 verdict
     *      against the benchmark ([[decontaminationReport]], accepting
     *      the same persisted artifacts so the release gate never pays
@@ -906,190 +874,193 @@ object TrainingSet {
     * survival with nulls as false, since only full survivors reach
     * the mixture). Fully deterministic, every stage is an
     * oracle-checked operator, so the whole manifest is
-    * oracle-checkable (X93).
+    * oracle-checkable (X93; X121 and X128 with a span cut).
     *
-    * Scale shape: each stage is its operator's own audited shape (X90
-    * channels, banded candidates + exact verify, LM score + two-pass
-    * global rank, metadata-sized mixture cutoffs); the composition
-    * adds only doc_id-keyed semi/left joins, and survivor id sets ride
-    * lazy checkpoints so no stage re-runs an earlier stage's heavy
-    * chain.
+    * With a span cut the manifest gains stage-0 accounting columns
+    * after doc_id: `n_tokens` (pre-clean) and `sub_dup_tokens` (tokens
+    * the cut removed), plus `run_dup_chars` under `runLevel`. A doc the
+    * cut empties stays in the manifest as a 0-token doc (no shingles →
+    * no channel fires; the LM gate cannot score it → ppl drop), so
+    * there is one row per input corpus doc, always. Contracts the
+    * caller owns under a span cut:
+    *  - `banded` must be built over the CLEANED corpus ∪ the benchmark
+    *    (normalized first under `normalizeFirst`), under the same
+    *    MinHash configs — a one-doc provenance probe fails loud on an
+    *    index over other text;
+    *  - embeddings are an input artifact, unchanged by the cut;
+    *  - `charTokens`/`runLevel` want `charK`/`runLevel`-enabled
+    *    `decon.dedup`/`corpusDedup` so the MinHash tiers see the same
+    *    scripts the cut does.
+    *
+    * Persisted artifacts replace channel computations: `nearDupPairs`
+    * (the X46 cross near-dup pairs), `ngramScores` (the X30 report) and
+    * `corpusPairs` (the full-corpus verified pair table, restricted to
+    * survivors — spec-pinned equal to re-verifying).
+    *
+    * Scale shape: each stage is its operator's own audited shape (the
+    * stage-0 shuffle keyed by the window fingerprint, X90 channels,
+    * banded candidates + exact verify, LM score + two-pass global rank,
+    * metadata-sized mixture cutoffs); the composition adds only
+    * doc_id-keyed semi/left joins, and survivor id sets ride lazy
+    * checkpoints so no stage re-runs an earlier stage's heavy chain.
     */
   def curationManifest(
       corpus: DataFrame,
       benchmark: DataFrame,
       banded: DataFrame,
       embeddings: DataFrame,
-      n: Int = CurationDefaults.N,
-      ngramThreshold: Double = CurationDefaults.NgramThreshold,
-      deconDedup: MinHashConfig = CurationDefaults.DeconDedup,
-      cosThreshold: Double = CurationDefaults.CosThreshold,
-      corpusDedup: MinHashConfig = CurationDefaults.CorpusDedup,
-      pplBuckets: Int = CurationDefaults.PplBuckets,
-      mixtureStrata: String = CurationDefaults.MixtureStrata,
-      mixtureAlpha: Double = CurationDefaults.MixtureAlpha,
-      seed: Long = CurationDefaults.Seed,
-      qualityModel: Option[(graft.text.QualityClassifier.Model, Double)] = CurationDefaults.QualityModel,
+      plan: CurationPlan = CurationPlan(),
       nearDupPairs: Option[DataFrame] = None,
       ngramScores: Option[DataFrame] = None,
-      corpusPairs: Option[DataFrame] = None,
-      // channel 4 (opt-in): the X96 span rule rides the decon stage —
-      // span_tokens slots into the manifest when set (same contract as
-      // decontaminationReport's own param)
-      maxSpanTokens: Option[Int] = None,
-      // stage-2 winner rule: default is the production quality-aware
-      // starring (X78); `true` switches to the pairwise min-id rule
-      // (dedupWinners' contract — a doc loses iff it is the larger
-      // side of some verified pair), which is what the INCREMENTAL
-      // streaming ingest realizes under append-only ids — the batch
-      // twin the streaming curation driver is pinned against
-      minIdDedupWinners: Boolean = false): DataFrame = {
-    require(pplBuckets >= 2, s"pplBuckets=$pplBuckets needs a droppable tail")
-
-    // ONE banded-coverage guard pass for the whole composition: the
-    // decon channel and the near-dup stage each guard the same
-    // (corpus, banded) pair against the silent-empty hazard, and when
-    // their configs agree on shingleSize (the production defaults do)
-    // the two full-corpus scans are byte-identical — pay the pass once
-    // per distinct shingleSize instead of once per stage
-    val coverageSizes =
-      (if (nearDupPairs.isEmpty) Seq(deconDedup.shingleSize) else Nil) ++
-        (if (corpusPairs.isEmpty) Seq(corpusDedup.shingleSize) else Nil)
-    coverageSizes.distinct.foreach { s =>
-      requireBandedCoversCorpus(corpus, banded, s, "curationManifest",
-        "Pass nearDupPairs = Some(<the persisted cross near-dup pair " +
-          "table>) / corpusPairs = Some(<the persisted full-corpus " +
-          "verified pair table>) when the banded index does not cover " +
-          "the corpus.")
-    }
-    // stage 1 — release-gate decontamination over EVERY corpus doc.
-    // Lazy checkpoint: the three channels feed both the survivor
-    // filter and the final assembly.
-    val decon = decontaminationReport(corpus, benchmark, banded, embeddings,
-        n, ngramThreshold, deconDedup, cosThreshold, nearDupPairs, ngramScores,
-        maxSpanTokens, assumeBandedCoversCorpus = true)
-      .withColumnRenamed("verdict", "decon_verdict")
-      .localCheckpoint(false)
-    val s1 = corpus.join(
-      decon.filter(col("decon_verdict") === "keep").select("doc_id"),
-      Seq("doc_id"), "left_semi")
-
-    // stage 1b — optional frozen learned quality gate (X65 model)
-    val qualityScores = qualityModel.map { case (m, _) =>
-      graft.text.QualityClassifier.score(s1, m)
-        .select(col("doc_id"), col("p_target").as("quality_p"))
+      corpusPairs: Option[DataFrame] = None): DataFrame = plan.spanCut match {
+    case Some(cut) =>
+      val (cor, bench, cleaned) = spanCutStage(corpus, benchmark, cut)
+      manifestV2FromCleaned(cleaned, cor, bench, banded, embeddings, plan,
+        nearDupPairs, ngramScores, corpusPairs)
+    case None =>
+      // ONE banded-coverage guard pass for the whole composition: the
+      // decon channel and the near-dup stage each guard the same
+      // (corpus, banded) pair against the silent-empty hazard, and when
+      // their configs agree on shingleSize (the production defaults do)
+      // the two full-corpus scans are byte-identical — pay the pass once
+      // per distinct shingleSize instead of once per stage
+      val coverageSizes =
+        (if (nearDupPairs.isEmpty) Seq(plan.decon.dedup.shingleSize) else Nil) ++
+          (if (corpusPairs.isEmpty) Seq(plan.corpusDedup.shingleSize) else Nil)
+      coverageSizes.distinct.foreach { s =>
+        requireBandedCoversCorpus(corpus, banded, s, "curationManifest",
+          "Pass nearDupPairs = Some(<the persisted cross near-dup pair " +
+            "table>) / corpusPairs = Some(<the persisted full-corpus " +
+            "verified pair table>) when the banded index does not cover " +
+            "the corpus.")
+      }
+      // stage 1 — release-gate decontamination over EVERY corpus doc.
+      // Lazy checkpoint: the three channels feed both the survivor
+      // filter and the final assembly.
+      val decon = decontaminationReport(corpus, benchmark, banded, embeddings,
+          plan.decon, nearDupPairs, ngramScores, assumeBandedCoversCorpus = true)
+        .withColumnRenamed("verdict", "decon_verdict")
         .localCheckpoint(false)
-    }
-    val s2 = qualityModel match {
-      case Some((_, thr)) => s1.join(
-        qualityScores.get.filter(col("quality_p") >= thr).select("doc_id"),
+      val s1 = corpus.join(
+        decon.filter(col("decon_verdict") === "keep").select("doc_id"),
         Seq("doc_id"), "left_semi")
-      case None => s1
-    }
 
-    // stage 2 — near-dup starring among the survivors: verified pairs
-    // off the persisted banded index (pairs touching a dropped doc
-    // vanish in verification — only survivor texts are shingled), X16
-    // clusters, X78 most-informative winner per cluster.
-    // `corpusPairs` accepts the FULL-corpus verified pair table (the
-    // dedup run's persisted artifact) instead: restricting it to
-    // survivor pairs is EXACTLY the from-scratch computation, because
-    // banded candidates restricted to survivor ids are the survivor
-    // candidates and a pair's Jaccard depends only on its two texts —
-    // so the release gate reads the stored rows instead of re-paying
-    // the verify chain (spec-pinned equal).
-    val pairs = corpusPairs match {
-      case Some(p) =>
-        val ids = s2.select("doc_id")
-        p.join(ids.select(col("doc_id").as("i")), Seq("i"), "left_semi")
-          .join(ids.select(col("doc_id").as("j")), Seq("j"), "left_semi")
-      case None =>
-        // same silent-empty hazard as the decon channel: a benchmark-
-        // only index yields zero corpus pairs and every near-dup copy
-        // would ship with dedup_verdict = 'keep'. Guarded by the ONE
-        // up-front coverage pass above.
-        MinHashDedup.verifiedPairsFromBanded(s2, banded, corpusDedup)
-    }
-    val dedupVerdict = (if (minIdDedupWinners) {
-      // pairwise min-id rule: a doc loses iff it is the j of some
-      // verified pair (dedupWinners/winnersFrom semantics — the rule
-      // the incremental streaming ingest realizes)
-      s2.select("doc_id")
-        .join(pairs.select(col("j").as("doc_id"), lit(true).as("__lose"))
-          .distinct(), Seq("doc_id"), "left")
-        .select(col("doc_id"), col("__lose").isNull.as("dedup_keep"))
-    } else {
-      val clusters = MinHashDedup.duplicateClusters(pairs)
+      // stage 1b — optional frozen learned quality gate (X65 model)
+      val qualityScores = plan.qualityModel.map { case (m, _) =>
+        graft.text.QualityClassifier.score(s1, m)
+          .select(col("doc_id"), col("p_target").as("quality_p"))
+          .localCheckpoint(false)
+      }
+      val s2 = plan.qualityModel match {
+        case Some((_, thr)) => s1.join(
+          qualityScores.get.filter(col("quality_p") >= thr).select("doc_id"),
+          Seq("doc_id"), "left_semi")
+        case None => s1
+      }
+
+      // stage 2 — near-dup starring among the survivors: verified pairs
+      // off the persisted banded index (pairs touching a dropped doc
+      // vanish in verification — only survivor texts are shingled), X16
+      // clusters, X78 most-informative winner per cluster.
+      // `corpusPairs` accepts the FULL-corpus verified pair table (the
+      // dedup run's persisted artifact) instead: restricting it to
+      // survivor pairs is EXACTLY the from-scratch computation, because
+      // banded candidates restricted to survivor ids are the survivor
+      // candidates and a pair's Jaccard depends only on its two texts —
+      // so the release gate reads the stored rows instead of re-paying
+      // the verify chain (spec-pinned equal).
+      val pairs = corpusPairs match {
+        case Some(p) =>
+          val ids = s2.select("doc_id")
+          p.join(ids.select(col("doc_id").as("i")), Seq("i"), "left_semi")
+            .join(ids.select(col("doc_id").as("j")), Seq("j"), "left_semi")
+        case None =>
+          // same silent-empty hazard as the decon channel: a benchmark-
+          // only index yields zero corpus pairs and every near-dup copy
+          // would ship with dedup_verdict = 'keep'. Guarded by the ONE
+          // up-front coverage pass above.
+          MinHashDedup.verifiedPairsFromBanded(s2, banded, plan.corpusDedup)
+      }
+      val dedupVerdict = (if (plan.minIdDedupWinners) {
+        // pairwise min-id rule: a doc loses iff it is the j of some
+        // verified pair (dedupWinners/winnersFrom semantics — the rule
+        // the incremental streaming ingest realizes)
+        s2.select("doc_id")
+          .join(pairs.select(col("j").as("doc_id"), lit(true).as("__lose"))
+            .distinct(), Seq("doc_id"), "left")
+          .select(col("doc_id"), col("__lose").isNull.as("dedup_keep"))
+      } else {
+        val clusters = MinHashDedup.duplicateClusters(pairs)
+          .localCheckpoint(false)
+        val winners = MinHashDedup.qualityAwareWinners(s2, clusters)
+        s2.select("doc_id")
+          .join(clusters.select(col("doc_id"), lit(true).as("__cl")), Seq("doc_id"), "left")
+          .join(winners.select(col("keep_id").as("doc_id"), lit(true).as("__win")),
+            Seq("doc_id"), "left")
+          .select(col("doc_id"),
+            coalesce(col("__win"), col("__cl").isNull).as("dedup_keep"))
+      }).localCheckpoint(false)
+      val s3 = s2.join(dedupVerdict.filter(col("dedup_keep")).select("doc_id"),
+        Seq("doc_id"), "left_semi")
+
+      // stage 3 — CCNet perplexity gate over the deduped survivors: the
+      // bucket boundaries are computed on exactly what remains
+      val ppl = TextAnalysis.perplexityBuckets(s3, plan.pplBuckets)
+        .select(col("doc_id"), col("bucket").as("ppl_bucket"))
+      val pplVerdict = s3.select("doc_id")
+        .join(ppl, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("ppl_bucket"),
+          coalesce(col("ppl_bucket") < (plan.pplBuckets - 1), lit(false)).as("ppl_keep"))
         .localCheckpoint(false)
-      val winners = MinHashDedup.qualityAwareWinners(s2, clusters)
-      s2.select("doc_id")
-        .join(clusters.select(col("doc_id"), lit(true).as("__cl")), Seq("doc_id"), "left")
-        .join(winners.select(col("keep_id").as("doc_id"), lit(true).as("__win")),
-          Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("__win"), col("__cl").isNull).as("dedup_keep"))
-    }).localCheckpoint(false)
-    val s3 = s2.join(dedupVerdict.filter(col("dedup_keep")).select("doc_id"),
-      Seq("doc_id"), "left_semi")
+      val s4 = s3.join(pplVerdict.filter(col("ppl_keep")).select("doc_id"),
+        Seq("doc_id"), "left_semi")
 
-    // stage 3 — CCNet perplexity gate over the deduped survivors: the
-    // bucket boundaries are computed on exactly what remains
-    val ppl = TextAnalysis.perplexityBuckets(s3, pplBuckets)
-      .select(col("doc_id"), col("bucket").as("ppl_bucket"))
-    val pplVerdict = s3.select("doc_id")
-      .join(ppl, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("ppl_bucket"),
-        coalesce(col("ppl_bucket") < (pplBuckets - 1), lit(false)).as("ppl_keep"))
-      .localCheckpoint(false)
-    val s4 = s3.join(pplVerdict.filter(col("ppl_keep")).select("doc_id"),
-      Seq("doc_id"), "left_semi")
+      // stage 4 — temperature-flattened mixture of everything standing
+      // (an earlier stage may legitimately drop EVERYTHING — a fully
+      // contaminated slice; temperatureResample of nothing is nothing,
+      // so the manifest then reports keep = false everywhere)
+      // lazy checkpoint of the 2-column mixture input: the temperature
+      // resample pays two driver-side count collects plus the final
+      // filter scan, and the final assembly reads the verdict once more —
+      // without this the whole s4 survivor chain re-derives per action
+      val s4m = s4.select(col("doc_id"), col(plan.mixtureStrata))
+        .localCheckpoint(false)
+      val mixtureVerdict = s4m.select("doc_id")
+        .join(Scale.temperatureResample(s4m, "doc_id", plan.mixtureStrata,
+            plan.mixtureAlpha, plan.seed)
+          .select(col("doc_id"), lit(true).as("__mx")), Seq("doc_id"), "left")
+        .select(col("doc_id"), coalesce(col("__mx"), lit(false)).as("mixture_keep"))
 
-    // stage 4 — temperature-flattened mixture of everything standing
-    // (an earlier stage may legitimately drop EVERYTHING — a fully
-    // contaminated slice; temperatureResample of nothing is nothing,
-    // so the manifest then reports keep = false everywhere)
-    // lazy checkpoint of the 2-column mixture input: the temperature
-    // resample pays two driver-side count collects plus the final
-    // filter scan, and the final assembly reads the verdict once more —
-    // without this the whole s4 survivor chain re-derives per action
-    val s4m = s4.select(col("doc_id"), col(mixtureStrata))
-      .localCheckpoint(false)
-    val mixtureVerdict = s4m.select("doc_id")
-      .join(Scale.temperatureResample(s4m, "doc_id", mixtureStrata,
-          mixtureAlpha, seed)
-        .select(col("doc_id"), lit(true).as("__mx")), Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("__mx"), lit(false)).as("mixture_keep"))
-
-    // assembly — left joins on doc_id; a null stage verdict means the
-    // doc never reached that stage. Stage verdicts are three-valued
-    // STRINGS ('keep' / 'drop' / null), not nullable booleans: null
-    // booleans render as None vs NaN across engines/dataframe bridges
-    // (a representation hazard, not a value difference), while null
-    // strings are null everywhere. keep = mixture survival with
-    // null→false: only a doc that survived every earlier stage has a
-    // mixture verdict at all.
-    def verdictOf(b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      when(b === true, "keep").when(b === false, "drop")
-    val withQuality = qualityScores.fold(decon)(qs => decon.join(qs, Seq("doc_id"), "left"))
-    // explicit positional schema, matching the X93 oracle column for
-    // column (quality_p slots after decon_verdict when a model ran)
-    val cols =
-      Seq(col("doc_id"), col("ngram_frac"), col("near_dup"),
-        col("semantic_cos")) ++
-      maxSpanTokens.map(_ => col("span_tokens")).toSeq ++
-      Seq(col("decon_verdict")) ++
-      (if (qualityScores.isDefined) Seq(col("quality_p")) else Nil) ++
-      Seq(verdictOf(col("dedup_keep")).as("dedup_verdict"),
-        col("ppl_bucket"),
-        verdictOf(col("ppl_keep")).as("ppl_verdict"),
-        verdictOf(col("mixture_keep")).as("mixture_verdict"),
-        coalesce(col("mixture_keep"), lit(false)).as("keep"))
-    withQuality
-      .join(dedupVerdict, Seq("doc_id"), "left")
-      .join(pplVerdict, Seq("doc_id"), "left")
-      .join(mixtureVerdict, Seq("doc_id"), "left")
-      .select(cols: _*)
-      .orderBy("doc_id")
+      // assembly — left joins on doc_id; a null stage verdict means the
+      // doc never reached that stage. Stage verdicts are three-valued
+      // STRINGS ('keep' / 'drop' / null), not nullable booleans: null
+      // booleans render as None vs NaN across engines/dataframe bridges
+      // (a representation hazard, not a value difference), while null
+      // strings are null everywhere. keep = mixture survival with
+      // null→false: only a doc that survived every earlier stage has a
+      // mixture verdict at all.
+      def verdictOf(b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+        when(b === true, "keep").when(b === false, "drop")
+      val withQuality = qualityScores.fold(decon)(qs => decon.join(qs, Seq("doc_id"), "left"))
+      // explicit positional schema, matching the X93 oracle column for
+      // column (quality_p slots after decon_verdict when a model ran)
+      val cols =
+        Seq(col("doc_id"), col("ngram_frac"), col("near_dup"),
+          col("semantic_cos")) ++
+        plan.decon.maxSpanTokens.map(_ => col("span_tokens")).toSeq ++
+        Seq(col("decon_verdict")) ++
+        (if (qualityScores.isDefined) Seq(col("quality_p")) else Nil) ++
+        Seq(verdictOf(col("dedup_keep")).as("dedup_verdict"),
+          col("ppl_bucket"),
+          verdictOf(col("ppl_keep")).as("ppl_verdict"),
+          verdictOf(col("mixture_keep")).as("mixture_verdict"),
+          coalesce(col("mixture_keep"), lit(false)).as("keep"))
+      withQuality
+        .join(dedupVerdict, Seq("doc_id"), "left")
+        .join(pplVerdict, Seq("doc_id"), "left")
+        .join(mixtureVerdict, Seq("doc_id"), "left")
+        .select(cols: _*)
+        .orderBy("doc_id")
   }
 
   /** The composed batch curation DRIVER — [[curationManifest]] plus
@@ -1101,234 +1072,140 @@ object TrainingSet {
     * the deterministic X47 training order, returned as a
     * [[TrainingSetResult]] so [[writeChunks]] / [[binnedChunks]] /
     * [[packChunks]] compose unchanged — curate → order → chunk → pack
-    * → write in one call chain.
+    * → write in one call chain. Under a span cut the survivors carry
+    * the CLEANED text: that is the text the release ships, so it is
+    * the text the chunk/pack/write tail must see.
     */
   def curateCorpus(
       corpus: DataFrame,
       benchmark: DataFrame,
       banded: DataFrame,
       embeddings: DataFrame,
-      n: Int = CurationDefaults.N,
-      ngramThreshold: Double = CurationDefaults.NgramThreshold,
-      deconDedup: MinHashConfig = CurationDefaults.DeconDedup,
-      cosThreshold: Double = CurationDefaults.CosThreshold,
-      corpusDedup: MinHashConfig = CurationDefaults.CorpusDedup,
-      pplBuckets: Int = CurationDefaults.PplBuckets,
-      mixtureStrata: String = CurationDefaults.MixtureStrata,
-      mixtureAlpha: Double = CurationDefaults.MixtureAlpha,
-      seed: Long = CurationDefaults.Seed,
-      qualityModel: Option[(graft.text.QualityClassifier.Model, Double)] = CurationDefaults.QualityModel,
+      plan: CurationPlan = CurationPlan(),
       nearDupPairs: Option[DataFrame] = None,
       ngramScores: Option[DataFrame] = None,
-      corpusPairs: Option[DataFrame] = None,
-      maxSpanTokens: Option[Int] = CurationDefaults.MaxSpanTokens,
-      minIdDedupWinners: Boolean = CurationDefaults.MinIdDedupWinners): CurationResult = {
-    val manifest = curationManifest(corpus, benchmark, banded, embeddings,
-      n, ngramThreshold, deconDedup, cosThreshold, corpusDedup, pplBuckets,
-      mixtureStrata, mixtureAlpha, seed, qualityModel, nearDupPairs, ngramScores,
-      corpusPairs, maxSpanTokens, minIdDedupWinners)
-      .localCheckpoint(true)
+      corpusPairs: Option[DataFrame] = None): CurationResult = {
+    // stages −1/0 run once: the manifest and the shipped survivor text
+    // read the same lazily checkpointed cut
+    val cut = plan.spanCut.map(spanCutStage(corpus, benchmark, _))
+    val manifest = cut.fold(curationManifest(corpus, benchmark, banded,
+        embeddings, plan, nearDupPairs, ngramScores, corpusPairs)) {
+      case (cor, bench, cleaned) => manifestV2FromCleaned(cleaned, cor, bench,
+        banded, embeddings, plan, nearDupPairs, ngramScores, corpusPairs)
+    }.localCheckpoint(true)
     // the audit is one pass over the (already materialized) manifest:
-    // conditional counts, not stage re-runs
-    // docs with a non-null dedup verdict are exactly the docs that
-    // reached stage 2 — i.e. the model gate's survivors when a model
-    // ran (the [[build]] audit's 1b row; without it the model's drops
-    // would read as near-dup losers)
-    val a = manifest.agg(
-      count(lit(1)).as("input"),
-      count(when(col("decon_verdict") === "keep", 1)).as("decon"),
-      count(col("dedup_verdict")).as("reached_dedup"),
-      count(when(col("dedup_verdict") === "keep", 1)).as("dedup"),
-      count(when(col("ppl_verdict") === "keep", 1)).as("ppl"),
-      count(when(col("keep"), 1)).as("kept")).first()
+    // conditional counts, not stage re-runs. Docs with a non-null
+    // dedup verdict are exactly the docs that reached stage 2 — i.e.
+    // the model gate's survivors when a model ran (the [[build]]
+    // audit's 1b row; without it the model's drops would read as
+    // near-dup losers). The run-level char-tier count (0c) overlaps 0b
+    // by design on doc-level spaceless docs, whose one cut is counted
+    // in their own units: it answers "how much did the run tier
+    // remove", not "how much extra".
+    def total(c: String) = coalesce(sum(c), lit(0L))
+    val counted = Seq("0_input" -> count(lit(1))) ++
+      plan.spanCut.toSeq.flatMap(cut => Seq(
+        "0a_input_tokens" -> total("n_tokens"),
+        "0b_substring_cut_tokens" -> total("sub_dup_tokens")) ++
+        (if (cut.runLevel) Seq("0c_runlevel_cut_chars" -> total("run_dup_chars"))
+         else Nil)) ++
+      Seq("1_decontaminated" -> count(when(col("decon_verdict") === "keep", 1))) ++
+      plan.qualityModel.map(_ => "1b_model_quality" -> count(col("dedup_verdict"))) ++
+      Seq(
+        "2_near_dedup" -> count(when(col("dedup_verdict") === "keep", 1)),
+        "3_perplexity_gate" -> count(when(col("ppl_verdict") === "keep", 1)),
+        "4_mixture" -> count(when(col("keep"), 1)))
+    val a = manifest.agg(counted.head._2, counted.tail.map(_._2): _*).first()
     // index capped-bucket exposure (VERDICT r10 item 3): the X84
     // report's recall-degradation columns, mirrored into the release
     // audit so the manifest summary carries them too — one 8-byte-key
     // aggregate over the banded index, zero when pair generation was
     // fully exhaustive
-    val cap = corpusDedup.maxBucket
+    val cap = plan.corpusDedup.maxBucket
     val bs = banded.groupBy("band", "bucket").agg(count(lit(1)).as("__n"))
       .agg(
         coalesce(sum(when(col("__n") > cap, col("__n"))), lit(0L)),
         coalesce(sum(col("__n")), lit(0L)))
       .first()
-    val audit = Seq(
-      "0_input" -> a.getLong(0), "1_decontaminated" -> a.getLong(1)) ++
-      (if (qualityModel.isDefined) Seq("1b_model_quality" -> a.getLong(2)) else Nil) ++
+    val audit = counted.map(_._1).zipWithIndex.map { case (k, i) => k -> a.getLong(i) } ++
       Seq(
-        "2_near_dedup" -> a.getLong(3),
-        "3_perplexity_gate" -> a.getLong(4),
-        "4_mixture" -> a.getLong(5),
         "idx_capped_member_rows" -> bs.getLong(0),
         "idx_member_rows" -> bs.getLong(1))
-    val survivors = corpus.join(
+    val shipped = cut.fold(corpus) { case (cor, _, cleaned) =>
+      graft.text.SubstringDedup.withCleanText(cor, cleaned) }
+    val survivors = shipped.join(
       manifest.filter(col("keep")).select("doc_id"), Seq("doc_id"), "left_semi")
     CurationResult(manifest,
-      TrainingSetResult(Scale.shuffleOrder(survivors, "doc_id", seed), audit))
+      TrainingSetResult(Scale.shuffleOrder(survivors, "doc_id", plan.seed), audit))
   }
 
-  /** [[curationManifest]] with exact substring-level dedup
-    * ([[graft.text.SubstringDedup]] — Lee et al. ACL 2022's span-granular
-    * posture) as STAGE 0: duplicated token spans are CUT from the corpus
-    * text FIRST, and every later stage — all three decontamination
-    * channels, the near-dup starring, the LM perplexity gate, the
-    * mixture — runs over the span-cleaned text. This is the order a real
-    * release runs (RefinedWeb/Chinchilla-style): substring dedup is a
-    * TRANSFORM (it drops tokens, never documents), so it must precede
-    * the per-doc verdict stages or their scores are computed on text
-    * that won't ship.
-    *
-    * Consequences the caller owns:
-    *  - `banded` must be built over the CLEANED corpus ∪ the benchmark —
-    *    signatures of pre-clean text would nominate candidates for spans
-    *    that no longer exist (and miss ones the cut created);
-    *  - embeddings are an input artifact, unchanged by the cut (the
-    *    semantic channel still scores the original embedding — re-embed
-    *    upstream if the cut is expected to move vectors materially).
-    *
-    * Output = the v1 manifest schema with two stage-0 accounting columns
-    * prepended after doc_id: `n_tokens` (pre-clean) and `sub_dup_tokens`
-    * (tokens the cut removed; 0 for untouched docs). A doc whose text
-    * the cut empties stays in the manifest and flows through the stages
-    * as a 0-token doc (no shingles → no channels fire; the LM gate
-    * cannot score it → ppl drop), so count conservation holds: one row
-    * per input corpus doc, always.
-    *
-    * Scale shape: stage 0 is the substring operator's own audited shape
-    * (one shuffle keyed by the window fingerprint — set
-    * `hashWindowKeys = true` at scale so the shuffle carries 8-byte
-    * hashes, never window text), then exactly [[curationManifest]].
-    *
-    * `charTokens` makes stage 0 spaceless-script aware
-    * ([[graft.text.SubstringDedup.cleanCorpus]]'s char-unit dispatch:
-    * CJK-style docs window and cut at code-point granularity; wordy
-    * docs are byte-identical to the default). Pair it with a
-    * `charK`-enabled deconDedup/corpusDedup so the MinHash tiers see
-    * the same scripts — and note stage-0 accounting counts each doc's
-    * OWN units (chars for spaceless docs).
-    *
-    * `runLevel` SUBSUMES `charTokens` (mutually exclusive flags) and
-    * closes the mixed-script release gap: stage 0 becomes
-    * [[graft.text.SubstringDedup.cleanCorpusRunLevel]] — embedded
-    * ≥16-cp non-ASCII runs dedup at code-point granularity ACROSS the
-    * homogeneous/mixed boundary, then word spans cut over the spliced
-    * text — and the manifest gains a `run_dup_chars` accounting column
-    * (code points the char tier cut; for doc-level spaceless docs it
-    * equals sub_dup_tokens). Pair it with `runLevel`-enabled
-    * deconDedup/corpusDedup (`MinHashConfig.runLevel`) so the near-dup
-    * channels sign embedded runs the same way — without that, a
-    * quote-embedding duplicate that survives stage 0 (its run is the
-    * canonical copy) still escapes the near-dup stage. The banded
-    * index must be built over the RUN-LEVEL cleaned text under the
-    * same configs (the one-doc provenance probe enforces it).
+  /** Stages −1 and 0 of a span cut: the corpus and benchmark as the
+    * later stages read them, and the lazily checkpointed stage-0 table
+    * ([[graft.text.SubstringDedup.cleanCorpus]]'s output) over that
+    * corpus. Optional stage −1 is CCNet text normalization (NFC,
+    * case/digit/punctuation folds) of corpus AND benchmark, so every
+    * downstream fingerprint (substring windows, MinHash shingles, decon
+    * n-grams) sees one canonical form and composition-/case-only
+    * near-dups stop escaping the tiers; normalizing the corpus but not
+    * the benchmark would silently blind decontamination — both or
+    * neither. The accounting and the shipped text are then NORMALIZED.
     */
-  def curationManifestV2(
-      corpus: DataFrame,
-      benchmark: DataFrame,
-      banded: DataFrame,
-      embeddings: DataFrame,
-      windowTokens: Int = CurationDefaults.WindowTokens,
-      hashWindowKeys: Boolean = false,
-      n: Int = CurationDefaults.N,
-      ngramThreshold: Double = CurationDefaults.NgramThreshold,
-      deconDedup: MinHashConfig = CurationDefaults.DeconDedup,
-      cosThreshold: Double = CurationDefaults.CosThreshold,
-      corpusDedup: MinHashConfig = CurationDefaults.CorpusDedup,
-      pplBuckets: Int = CurationDefaults.PplBuckets,
-      mixtureStrata: String = CurationDefaults.MixtureStrata,
-      mixtureAlpha: Double = CurationDefaults.MixtureAlpha,
-      seed: Long = CurationDefaults.Seed,
-      qualityModel: Option[(graft.text.QualityClassifier.Model, Double)] = CurationDefaults.QualityModel,
-      nearDupPairs: Option[DataFrame] = None,
-      ngramScores: Option[DataFrame] = None,
-      corpusPairs: Option[DataFrame] = None,
-      maxSpanTokens: Option[Int] = CurationDefaults.MaxSpanTokens,
-      minIdDedupWinners: Boolean = CurationDefaults.MinIdDedupWinners,
-      normalizeFirst: Boolean = CurationDefaults.NormalizeFirst,
-      charTokens: Boolean = CurationDefaults.CharTokens,
-      runLevel: Boolean = CurationDefaults.RunLevel): DataFrame = {
-    require(!(runLevel && charTokens),
-      "runLevel subsumes charTokens (homogeneous docs keep the char-unit " +
-        "path; mixed docs add the run tier) — set exactly one")
-    // optional stage −1 — CCNet text normalization (NFC, case/digit/
-    // punctuation folds) of corpus AND benchmark, so every downstream
-    // fingerprint (substring windows, MinHash shingles, decon n-grams)
-    // sees one canonical form and composition-/case-only near-dups
-    // stop escaping the tiers. Normalizing the corpus but not the
-    // benchmark would silently blind decontamination — both or neither.
-    // Under normalizeFirst the manifest's accounting and the shipped
-    // clean_text are in NORMALIZED form, and the caller's banded index
-    // must be built over the normalized+cleaned text (the same v2
-    // contract as hashWindowKeys — one text pipeline end to end).
+  private def spanCutStage(corpus: DataFrame, benchmark: DataFrame,
+      cut: SpanCut): (DataFrame, DataFrame, DataFrame) = {
     val (cor, bench) =
-      if (normalizeFirst)
-        (graft.text.TextAnalysis.withNormalizedText(corpus),
-          graft.text.TextAnalysis.withNormalizedText(benchmark))
+      if (cut.normalizeFirst)
+        (TextAnalysis.withNormalizedText(corpus),
+          TextAnalysis.withNormalizedText(benchmark))
       else (corpus, benchmark)
-    // stage 0 — cut duplicated spans; lazy checkpoint because the clean
-    // text feeds every downstream stage AND the accounting columns
+    // lazy checkpoint: the clean text feeds every downstream stage AND
+    // the accounting columns
     val cleaned =
-      if (runLevel)
+      if (cut.runLevel)
         graft.text.SubstringDedup
-          .cleanCorpusRunLevel(cor, windowTokens, hashWindowKeys)
+          .cleanCorpusRunLevel(cor, cut.windowTokens, cut.hashWindowKeys)
       else graft.text.SubstringDedup
-        .cleanCorpus(cor, windowTokens, hashWindowKeys, charTokens)
-    manifestV2FromCleaned(
-      cleaned.localCheckpoint(false),
-      cor, bench, banded, embeddings, n, ngramThreshold, deconDedup,
-      cosThreshold, corpusDedup, pplBuckets, mixtureStrata, mixtureAlpha,
-      seed, qualityModel, nearDupPairs, ngramScores, corpusPairs,
-      maxSpanTokens, minIdDedupWinners)
+        .cleanCorpus(cor, cut.windowTokens, cut.hashWindowKeys, cut.charTokens)
+    (cor, bench, cleaned.localCheckpoint(false))
   }
 
-  /** [[curationManifestV2]] over an already-materialized stage-0 table
+  /** The span-cut manifest over an already-materialized stage-0 table
     * ([[graft.text.SubstringDedup.cleanCorpus]]'s output for exactly
-    * `corpus`) — shared with [[curateCorpusV2]] so the driver pays the
-    * substring chain once for the manifest AND the survivor texts, and
-    * public for any caller that already holds the cleaned table (e.g.
-    * because it also built the v2 banded index from it).
+    * `corpus`): the stage-0 accounting columns joined to the verdict
+    * stages over the cleaned text, under `plan`'s stage 1–4 configs
+    * (`plan.spanCut` is not read — `cleaned` already is the cut). For
+    * a caller that already holds the cleaned table, e.g. because it
+    * also built the span-cut banded index from it.
     */
-  def manifestV2FromCleaned(
+  private[graft] def manifestV2FromCleaned(
       cleaned: DataFrame,
       corpus: DataFrame,
       benchmark: DataFrame,
       banded: DataFrame,
       embeddings: DataFrame,
-      n: Int = CurationDefaults.N,
-      ngramThreshold: Double = CurationDefaults.NgramThreshold,
-      deconDedup: MinHashConfig = CurationDefaults.DeconDedup,
-      cosThreshold: Double = CurationDefaults.CosThreshold,
-      corpusDedup: MinHashConfig = CurationDefaults.CorpusDedup,
-      pplBuckets: Int = CurationDefaults.PplBuckets,
-      mixtureStrata: String = CurationDefaults.MixtureStrata,
-      mixtureAlpha: Double = CurationDefaults.MixtureAlpha,
-      seed: Long = CurationDefaults.Seed,
-      qualityModel: Option[(graft.text.QualityClassifier.Model, Double)] = CurationDefaults.QualityModel,
+      plan: CurationPlan = CurationPlan(),
       nearDupPairs: Option[DataFrame] = None,
       ngramScores: Option[DataFrame] = None,
       corpusPairs: Option[DataFrame] = None,
-      maxSpanTokens: Option[Int] = CurationDefaults.MaxSpanTokens,
-      minIdDedupWinners: Boolean = CurationDefaults.MinIdDedupWinners,
       verifyBandedText: Boolean = true): DataFrame = {
     // the provenance spot check runs for every config the index is
     // ACTUALLY consumed under: the dedup stage reads it with
     // corpusDedup unless corpusPairs short-circuits that stage, and
-    // the decon near-dup channel reads it with deconDedup unless
+    // the decon near-dup channel reads it with the decon config unless
     // nearDupPairs does — a stale index must fail loud on whichever
     // path still touches it. Configs agreeing on every member-row
     // parameter (shingleSize, numHashes, bands) are checked once.
     if (verifyBandedText) {
       val consumedUnder =
-        (if (corpusPairs.isEmpty) Seq(corpusDedup) else Nil) ++
-          (if (nearDupPairs.isEmpty) Seq(deconDedup) else Nil)
+        (if (corpusPairs.isEmpty) Seq(plan.corpusDedup) else Nil) ++
+          (if (nearDupPairs.isEmpty) Seq(plan.decon.dedup) else Nil)
       consumedUnder
         .groupBy(c => (c.shingleSize, c.numHashes, c.bands, c.charK, c.runLevel))
         .values.map(_.head)
         .foreach(requireBandedOverCleanedText(cleaned, banded, _))
     }
-    // lazy checkpoint: every downstream consumer of the v2 corpus (the
-    // decon channels, each stage chain's semi-join re-derivation, the
-    // perplexity scorer's three scans, the final assembly) would
+    // lazy checkpoint: every downstream consumer of the cleaned corpus
+    // (the decon channels, each stage chain's semi-join re-derivation,
+    // the perplexity scorer's three scans, the final assembly) would
     // otherwise re-pay the corpus ⨝ cleaned text-swap join per scan —
     // the same corpus-sized-text class the `cleaned` table above
     // already checkpoints
@@ -1342,128 +1219,11 @@ object TrainingSet {
       .select(graft.text.SubstringDedup.stage0AccountingCols(cleaned): _*)
       .join(
         curationManifest(corpusClean, benchmark, banded, embeddings,
-          n, ngramThreshold, deconDedup, cosThreshold, corpusDedup,
-          pplBuckets, mixtureStrata, mixtureAlpha, seed, qualityModel,
-          nearDupPairs, ngramScores, corpusPairs, maxSpanTokens,
-          minIdDedupWinners),
+          plan.copy(spanCut = None), nearDupPairs, ngramScores, corpusPairs),
         Seq("doc_id"))
       .orderBy("doc_id")
   }
 
-  /** The composed batch curation DRIVER with substring dedup in front —
-    * [[curationManifestV2]] plus what [[curateCorpus]] does with the v1
-    * manifest: one eager materialization, the per-stage audit from ONE
-    * aggregate (prefixed with the stage-0 token accounting), survivors
-    * in the deterministic training order. The survivors carry the
-    * CLEANED text — that is the text the release ships, so it is the
-    * text the chunk/pack/write tail must see.
-    */
-  def curateCorpusV2(
-      corpus: DataFrame,
-      benchmark: DataFrame,
-      banded: DataFrame,
-      embeddings: DataFrame,
-      windowTokens: Int = CurationDefaults.WindowTokens,
-      hashWindowKeys: Boolean = false,
-      n: Int = CurationDefaults.N,
-      ngramThreshold: Double = CurationDefaults.NgramThreshold,
-      deconDedup: MinHashConfig = CurationDefaults.DeconDedup,
-      cosThreshold: Double = CurationDefaults.CosThreshold,
-      corpusDedup: MinHashConfig = CurationDefaults.CorpusDedup,
-      pplBuckets: Int = CurationDefaults.PplBuckets,
-      mixtureStrata: String = CurationDefaults.MixtureStrata,
-      mixtureAlpha: Double = CurationDefaults.MixtureAlpha,
-      seed: Long = CurationDefaults.Seed,
-      qualityModel: Option[(graft.text.QualityClassifier.Model, Double)] = CurationDefaults.QualityModel,
-      nearDupPairs: Option[DataFrame] = None,
-      ngramScores: Option[DataFrame] = None,
-      corpusPairs: Option[DataFrame] = None,
-      maxSpanTokens: Option[Int] = CurationDefaults.MaxSpanTokens,
-      minIdDedupWinners: Boolean = CurationDefaults.MinIdDedupWinners,
-      charTokens: Boolean = CurationDefaults.CharTokens,
-      runLevel: Boolean = CurationDefaults.RunLevel): CurationResult = {
-    require(!(runLevel && charTokens),
-      "runLevel subsumes charTokens — set exactly one")
-    val cleaned = (if (runLevel)
-      graft.text.SubstringDedup
-        .cleanCorpusRunLevel(corpus, windowTokens, hashWindowKeys)
-    else graft.text.SubstringDedup
-      .cleanCorpus(corpus, windowTokens, hashWindowKeys, charTokens))
-      .localCheckpoint(false)
-    val manifest = manifestV2FromCleaned(cleaned, corpus, benchmark, banded,
-      embeddings, n, ngramThreshold, deconDedup, cosThreshold, corpusDedup,
-      pplBuckets, mixtureStrata, mixtureAlpha, seed, qualityModel,
-      nearDupPairs, ngramScores, corpusPairs, maxSpanTokens,
-      minIdDedupWinners)
-      .localCheckpoint(true)
-    val aggCols = Seq(
-      count(lit(1)).as("input"),
-      coalesce(sum("n_tokens"), lit(0L)).as("in_tokens"),
-      coalesce(sum("sub_dup_tokens"), lit(0L)).as("cut_tokens")) ++
-      (if (runLevel)
-        Seq(coalesce(sum("run_dup_chars"), lit(0L)).as("run_chars")) else Nil) ++
-      Seq(
-        count(when(col("decon_verdict") === "keep", 1)).as("decon"),
-        count(col("dedup_verdict")).as("reached_dedup"),
-        count(when(col("dedup_verdict") === "keep", 1)).as("dedup"),
-        count(when(col("ppl_verdict") === "keep", 1)).as("ppl"),
-        count(when(col("keep"), 1)).as("kept"))
-    val a = manifest.agg(aggCols.head, aggCols.tail: _*).first()
-    // the v1 audit's index capped-bucket exposure rides the v2 audit
-    // unchanged — the v2 banded index (built over the cleaned text) has
-    // the same recall-degradation contract
-    val cap = corpusDedup.maxBucket
-    val bs = banded.groupBy("band", "bucket").agg(count(lit(1)).as("__n"))
-      .agg(
-        coalesce(sum(when(col("__n") > cap, col("__n"))), lit(0L)),
-        coalesce(sum(col("__n")), lit(0L)))
-      .first()
-    val audit = Seq(
-      "0_input" -> a.getAs[Long]("input"),
-      "0a_input_tokens" -> a.getAs[Long]("in_tokens"),
-      "0b_substring_cut_tokens" -> a.getAs[Long]("cut_tokens")) ++
-      // run-level char-tier token accounting: code points the char
-      // stage cut from embedded runs / spaceless docs. For doc-level
-      // spaceless docs run_dup_chars EQUALS their dup_tokens (one cut,
-      // counted in the doc's own units), so 0b and 0c overlap there by
-      // design — 0c answers "how much did the run tier remove", not
-      // "how much extra"
-      (if (runLevel)
-        Seq("0c_runlevel_cut_chars" -> a.getAs[Long]("run_chars")) else Nil) ++
-      Seq("1_decontaminated" -> a.getAs[Long]("decon")) ++
-      (if (qualityModel.isDefined)
-        Seq("1b_model_quality" -> a.getAs[Long]("reached_dedup")) else Nil) ++
-      Seq(
-        "2_near_dedup" -> a.getAs[Long]("dedup"),
-        "3_perplexity_gate" -> a.getAs[Long]("ppl"),
-        "4_mixture" -> a.getAs[Long]("kept"),
-        "idx_capped_member_rows" -> bs.getLong(0),
-        "idx_member_rows" -> bs.getLong(1))
-    // survivors ship the CLEANED text (the text the release ships is
-    // the text the chunk/pack/write tail must see), off the one
-    // checkpointed stage-0 table
-    val keptIds = manifest.filter(col("keep")).select("doc_id")
-    val survivors = graft.text.SubstringDedup.withCleanText(corpus, cleaned)
-      .join(keptIds, Seq("doc_id"), "left_semi")
-    CurationResult(manifest,
-      TrainingSetResult(Scale.shuffleOrder(survivors, "doc_id", seed), audit))
-  }
-
-  /** Fail-loud coverage check shared by every consumer that semi-joins
-    * a banded index against corpus ids: a benchmark-only index (the
-    * streaming gate's artifact shape) — or a STALE index built from a
-    * partial corpus snapshot — silently empties the corpus side for
-    * the uncovered docs, which then all read as pair-free (near_dup =
-    * false / dedup keep) with no error. This is a real COVERAGE check:
-    * every shingle-bearing corpus doc (≥ shingleSize tokens — exactly
-    * the docs the signing pass gives banded rows to) must appear in
-    * the index. Cost: one token-length pass over the corpus plus an
-    * anti-join against the index's 8-byte id column — a small constant
-    * factor on top of the full shingle-verify chain this guard sits in
-    * front of, and the anti-join's isEmpty action terminates on the
-    * first uncovered doc. `remedy` tells the caller the artifact-param
-    * escape hatch for their entry point.
-    */
   /** The v2 banded contract ([[manifestV2FromCleaned]]: the index was
     * built over THIS run's CLEANED corpus text) enforced at runtime by
     * a one-doc spot check: an index built over raw pre-clean text
@@ -1540,6 +1300,21 @@ object TrainingSet {
         "guaranteed.")
   }
 
+  /** Fail-loud coverage check shared by every consumer that semi-joins
+    * a banded index against corpus ids: a benchmark-only index (the
+    * streaming gate's artifact shape) — or a STALE index built from a
+    * partial corpus snapshot — silently empties the corpus side for
+    * the uncovered docs, which then all read as pair-free (near_dup =
+    * false / dedup keep) with no error. This is a real COVERAGE check:
+    * every shingle-bearing corpus doc (≥ shingleSize tokens — exactly
+    * the docs the signing pass gives banded rows to) must appear in
+    * the index. Cost: one token-length pass over the corpus plus an
+    * anti-join against the index's 8-byte id column — a small constant
+    * factor on top of the full shingle-verify chain this guard sits in
+    * front of, and the anti-join's isEmpty action terminates on the
+    * first uncovered doc. `remedy` tells the caller the artifact-param
+    * escape hatch for their entry point.
+    */
   private def requireBandedCoversCorpus(
       corpus: DataFrame,
       banded: DataFrame,
@@ -1574,24 +1349,22 @@ object TrainingSet {
     */
   private[graft] def assembleDecontaminationVerdict(
       joined: DataFrame,
-      ngramThreshold: Double,
-      cosThreshold: Double,
-      spanThreshold: Option[Int] = None): DataFrame = {
+      decon: DeconConfig): DataFrame = {
     // channel 4 (opt-in): longest verbatim benchmark run — GPT-3's
     // span rule. A false literal when disabled, so the three-channel
     // three-valued-OR semantics (and the X90 oracle) are untouched.
-    val spanFires = spanThreshold
+    val spanFires = decon.maxSpanTokens
       .map(t => coalesce(col("span_tokens"), lit(0L)) >= t)
       .getOrElse(lit(false))
     val cols = Seq(col("doc_id"),
       coalesce(col("overlap_frac"), lit(0.0)).as("ngram_frac"),
       coalesce(col("__nd"), lit(false)).as("near_dup"),
       col("semantic_cos")) ++
-      spanThreshold.map(_ =>
+      decon.maxSpanTokens.map(_ =>
         coalesce(col("span_tokens"), lit(0L)).as("span_tokens")).toSeq :+
-      when(coalesce(col("overlap_frac"), lit(0.0)) >= ngramThreshold ||
+      when(coalesce(col("overlap_frac"), lit(0.0)) >= decon.ngramThreshold ||
           coalesce(col("__nd"), lit(false)) ||
-          col("semantic_cos") >= cosThreshold || spanFires, "drop")
+          col("semantic_cos") >= decon.cosThreshold || spanFires, "drop")
         .otherwise("keep").as("verdict")
     joined.select(cols: _*)
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, KeyValueGroupedDataset,
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
+import graft.pipeline.{CurationPlan, DeconConfig, SpanCut}
 import graft.sources.{Store, Tables}
 
 /** First-seen winner of one content fingerprint in the dedup stream. */
@@ -267,7 +268,7 @@ object StreamOps {
       corpusIndexPath: String,
       outDir: String,
       checkpoint: String,
-      cfg: graft.text.MinHashConfig = graft.pipeline.TrainingSet.CurationDefaults.CorpusDedup)
+      cfg: graft.text.MinHashConfig = CurationPlan().corpusDedup)
       : org.apache.spark.sql.streaming.StreamingQuery =
     sinkBatches(newDocs, checkpoint) { (batch, batchId) =>
       processIngestBatch(batch.localCheckpoint(true), batchId, corpusDocs,
@@ -512,10 +513,9 @@ object StreamOps {
   final case class BenchmarkGate(
       benchmark: DataFrame,
       benchBanded: DataFrame,
-      n: Int = 5,
-      ngramThreshold: Double = 0.2,
-      dedup: graft.text.MinHashConfig =
-        graft.text.MinHashConfig(threshold = 0.5))
+      n: Int = DeconConfig().n,
+      ngramThreshold: Double = DeconConfig().ngramThreshold,
+      dedup: graft.text.MinHashConfig = DeconConfig().dedup)
 
   /** Benchmark- and reference-side artifacts a stream freezes ONCE at
     * construction — re-shingling the static benchmark (or
@@ -578,7 +578,7 @@ object StreamOps {
       corpusIndexPath: String,
       outDir: String,
       checkpoint: String,
-      cfg: graft.text.MinHashConfig = graft.pipeline.TrainingSet.CurationDefaults.CorpusDedup,
+      cfg: graft.text.MinHashConfig = CurationPlan().corpusDedup,
       minWords: Long = 10L,
       maxWords: Long = 100000L,
       maxDupWordFrac: Double = 0.9,
@@ -677,7 +677,7 @@ object StreamOps {
       outDir: String,
       checkpoint: String,
       delay: String = "1 hour",
-      cfg: graft.text.MinHashConfig = graft.pipeline.TrainingSet.CurationDefaults.CorpusDedup)
+      cfg: graft.text.MinHashConfig = CurationPlan().corpusDedup)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val exactDeduped = newDocs
       .withColumn("__fp", xxhash64(col("text")))
@@ -955,15 +955,10 @@ object StreamOps {
       benchEmbeddings: DataFrame,
       path: String,
       checkpoint: String,
-      n: Int = 5,
-      ngramThreshold: Double = 0.2,
-      dedup: graft.text.MinHashConfig =
-        graft.text.MinHashConfig(threshold = 0.5),
-      cosThreshold: Double = 0.35): org.apache.spark.sql.streaming.StreamingQuery = {
-    val frozen = freezeArtifacts(benchmark, benchBanded, n, Some(benchEmbeddings))
+      decon: DeconConfig = DeconConfig()): org.apache.spark.sql.streaming.StreamingQuery = {
+    val frozen = freezeArtifacts(benchmark, benchBanded, decon.n, Some(benchEmbeddings))
     sinkBatchKeyed(documents, path, checkpoint)((batch, _) =>
-      streamDeconChannels(batch, frozen, n, ngramThreshold, dedup,
-        cosThreshold, maxSpanTokens = None))
+      streamDeconChannels(batch, frozen, decon))
   }
 
   /** Streaming twin of the max-overlap-span report (batch X96,
@@ -1031,16 +1026,13 @@ object StreamOps {
   private def streamDeconChannels(
       bdf: DataFrame,
       frozen: FrozenArtifacts,
-      n: Int,
-      ngramThreshold: Double,
-      deconDedup: graft.text.MinHashConfig,
-      cosThreshold: Double,
-      maxSpanTokens: Option[Int]): DataFrame = {
+      decon: DeconConfig): DataFrame = {
+    val n = decon.n
     val ngram = graft.text.TextAnalysis
       .contaminationScoresAgainst(bdf, frozen.shingleSet, n)
       .select(col("doc_id"), col("overlap_frac"))
     val nd = graft.text.MinHashDedup
-      .crossNearDupsAgainstBanded(bdf, frozen.benchDocs, frozen.banded, deconDedup)
+      .crossNearDupsAgainstBanded(bdf, frozen.benchDocs, frozen.banded, decon.dedup)
       .select(col("i").as("doc_id")).distinct()
       .withColumn("__nd", lit(true))
     val sem = frozen.cents.filter(_ => bdf.columns.contains("embedding")).map(cc =>
@@ -1054,14 +1046,12 @@ object StreamOps {
     val joined1 = sem.fold(
       joined0.withColumn("semantic_cos", lit(null).cast("double")))(
       s => joined0.join(s, Seq("doc_id"), "left"))
-    val joined = maxSpanTokens.fold(joined1)(_ => joined1.join(
+    val joined = decon.maxSpanTokens.fold(joined1)(_ => joined1.join(
       graft.text.TextAnalysis
         .maxBenchmarkOverlapSpanAgainst(bdf, frozen.shingleSet, n)
         .select(col("doc_id"), col("max_span_tokens").as("span_tokens")),
       Seq("doc_id"), "left"))
-    graft.pipeline.TrainingSet
-      .assembleDecontaminationVerdict(
-        joined, ngramThreshold, cosThreshold, maxSpanTokens)
+    graft.pipeline.TrainingSet.assembleDecontaminationVerdict(joined, decon)
   }
 
   /** The per-doc manifest projection shared by both streaming curation
@@ -1093,7 +1083,7 @@ object StreamOps {
     *      FROZEN benchmark artifacts (verbatim n-gram fraction, MinHash
     *      near-dup via the persisted benchmark banded keys, embedding
     *      cosine when the stream carries vectors, and — when
-    *      `maxSpanTokens` is set — the X96 longest-verbatim-span
+    *      `decon.maxSpanTokens` is set — the X96 longest-verbatim-span
     *      channel), assembled by the batch report's own verdict helper
     *      so the semantics cannot drift;
     *   2. incremental near-dup dedup of the decon survivors against
@@ -1112,9 +1102,10 @@ object StreamOps {
     * contract, a corpus whose seed already passed the same decon gate,
     * and an event-time replay, the manifest's channel columns and
     * decon/dedup verdicts equal the batch
-    * [[graft.pipeline.TrainingSet.curationManifest]] with
-    * `minIdDedupWinners = true` (the pairwise rule incremental ingest
-    * realizes) restricted to the new ids. The batch manifest's
+    * [[graft.pipeline.TrainingSet.curationManifest]] under a
+    * [[graft.pipeline.CurationPlan]] with the same `decon` and
+    * `corpusDedup = cfg`, and `minIdDedupWinners = true` (the pairwise
+    * rule incremental ingest realizes), restricted to the new ids. The batch manifest's
     * perplexity/mixture stages are corpus-GLOBAL (bucket boundaries
     * and quota cutoffs over everything standing) and deliberately have
     * no streaming twin here — a release run applies them over the
@@ -1130,15 +1121,10 @@ object StreamOps {
       checkpoint: String,
       benchEmbeddings: Option[DataFrame] = None,
       reference: Option[DataFrame] = None,
-      n: Int = 5,
-      ngramThreshold: Double = 0.2,
-      deconDedup: graft.text.MinHashConfig =
-        graft.pipeline.TrainingSet.CurationDefaults.DeconDedup,
-      cosThreshold: Double = 0.35,
-      maxSpanTokens: Option[Int] = None,
-      cfg: graft.text.MinHashConfig = graft.pipeline.TrainingSet.CurationDefaults.CorpusDedup)
+      decon: DeconConfig = DeconConfig(),
+      cfg: graft.text.MinHashConfig = CurationPlan().corpusDedup)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val frozen = freezeArtifacts(benchmark, benchBanded, n, benchEmbeddings, reference)
+    val frozen = freezeArtifacts(benchmark, benchBanded, decon.n, benchEmbeddings, reference)
     sinkBatches(newDocs, checkpoint) { (batch, batchId) =>
       val bdf = batch.localCheckpoint(true)
       // drift monitor over the WHOLE arriving batch (pre-gate: the
@@ -1146,14 +1132,13 @@ object StreamOps {
       frozen.refToks.foreach(rt =>
         writeBatch(driftReport(bdf, rt, batchId), s"$outDir/drift", batchId))
       // stage 1 — decon channels vs the frozen benchmark artifacts
-      val decon = streamDeconChannels(bdf, frozen, n, ngramThreshold,
-        deconDedup, cosThreshold, maxSpanTokens)
+      val verdicts = streamDeconChannels(bdf, frozen, decon)
         .withColumnRenamed("verdict", "decon_verdict")
         .localCheckpoint(true)
       // stage 2 — incremental near-dup ingest of the decon
       // survivors (exact min-id + banded candidates + verify, with
       // the batch-keyed accepted/delta writes)
-      val keepIds = decon.filter(col("decon_verdict") === "keep").select("doc_id")
+      val keepIds = verdicts.filter(col("decon_verdict") === "keep").select("doc_id")
       val accepted = processIngestBatch(bdf, batchId, corpusDocs,
         corpusIndexPath, outDir, cfg,
         gate = b => b.join(keepIds, Seq("doc_id"), "left_semi"),
@@ -1161,13 +1146,14 @@ object StreamOps {
       // per-doc manifest: channel columns + three-valued stage
       // verdicts (null dedup verdict = never reached the stage),
       // the batch manifest's exact column contract
-      writeBatch(manifestWithVerdicts(decon, accepted), s"$outDir/manifest", batchId)
+      writeBatch(manifestWithVerdicts(verdicts, accepted), s"$outDir/manifest", batchId)
     }
   }
 
   /** [[curationIngestStream]] with incremental exact substring dedup as
     * STAGE 0 — the streaming twin of
-    * [[graft.pipeline.TrainingSet.curationManifestV2]]: every arriving
+    * [[graft.pipeline.TrainingSet.curationManifest]] under a plan with
+    * `spanCut = Some(spanCut)`: every arriving
     * doc first has its duplicated token spans CUT (spans whose window
     * keys exist in the corpus — known by its persisted
     * [[graft.text.SubstringDedup.windowKeys]] table at `windowKeysPath`
@@ -1188,10 +1174,12 @@ object StreamOps {
     * span cut leaves untouched (no internal duplicated windows — the
     * state a corpus built by THIS pipeline is in), StreamingSpec pins
     * the manifest's stage-0 + channel + verdict columns equal to the
-    * batch [[graft.pipeline.TrainingSet.curationManifestV2]] with
+    * batch span-cut [[graft.pipeline.TrainingSet.curationManifest]] with
     * `minIdDedupWinners = true` restricted to the new ids.
+    * `spanCut.hashWindowKeys` is not read: the incremental cut always
+    * keys windows by their 8-byte hashes, like the persisted key store.
     *
-    * `normalizeFirst` is the streaming twin of the batch flag: each
+    * `spanCut.normalizeFirst` is the streaming twin of the batch flag: each
     * arriving doc is CCNet-normalized
     * ([[graft.text.TextAnalysis.normalizeText]] — NFC, case/digit/
     * punctuation folds) BEFORE the span cut, so every fingerprint
@@ -1211,13 +1199,13 @@ object StreamOps {
     * steady-state growth stay within one canonical form. StreamingSpec
     * pins stream ≡ batch for `normalizeFirst = true` separately.
     *
-    * `charTokens` is the batch flag's streaming twin for stage 0
+    * `spanCut.charTokens` is the batch flag's streaming twin for stage 0
     * (spaceless-script char-unit windows/cuts); the persisted window
     * keys at `windowKeysPath` and every key delta must be built under
     * the SAME flag — mixed-granularity keys never match and the span
     * cut silently degrades to word-blind behavior on spaceless docs.
     *
-    * `runLevel` (subsumes charTokens, mutually exclusive) is the
+    * `spanCut.runLevel` (subsumes charTokens, mutually exclusive) is the
     * batch runLevel flag's streaming twin — the full mixed-script
     * release online: stage 0 becomes the incremental TWO-STAGE
     * run-level cut ([[graft.text.SubstringDedup
@@ -1228,7 +1216,7 @@ object StreamOps {
     * `key_delta_char/b<id>` (ORIGINAL virtual run windows) and
     * `key_delta_word/b<id>` (SPLICED-text windows), and the manifest
     * gains the `run_dup_chars` stage-0 accounting column. Pair it
-    * with runLevel-enabled `deconDedup`/`cfg` and indexes built over
+    * with runLevel-enabled `decon.dedup`/`cfg` and indexes built over
     * the run-level cleaned corpus — one text pipeline AND one signing
     * dispatch end to end. Maintenance:
     * [[graft.text.SubstringDedup.compactWindowKeysRunLevel]](
@@ -1254,28 +1242,18 @@ object StreamOps {
       checkpoint: String,
       benchEmbeddings: Option[DataFrame] = None,
       reference: Option[DataFrame] = None,
-      windowTokens: Int = 10,
-      n: Int = 5,
-      ngramThreshold: Double = 0.2,
-      deconDedup: graft.text.MinHashConfig =
-        graft.pipeline.TrainingSet.CurationDefaults.DeconDedup,
-      cosThreshold: Double = 0.35,
-      maxSpanTokens: Option[Int] = None,
-      cfg: graft.text.MinHashConfig = graft.pipeline.TrainingSet.CurationDefaults.CorpusDedup,
-      normalizeFirst: Boolean = false,
-      charTokens: Boolean = graft.pipeline.TrainingSet.CurationDefaults.CharTokens,
-      runLevel: Boolean = graft.pipeline.TrainingSet.CurationDefaults.RunLevel)
+      decon: DeconConfig = DeconConfig(),
+      cfg: graft.text.MinHashConfig = CurationPlan().corpusDedup,
+      spanCut: SpanCut = SpanCut())
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(!(runLevel && charTokens),
-      "runLevel subsumes charTokens — set exactly one (the batch twin's rule)")
     // under normalizeFirst the frozen benchmark artifacts must see the
     // same canonical form the arriving docs are folded into —
     // normalizing the corpus but not the benchmark would silently
     // blind decontamination (the batch driver's exact rule)
     val benchSrc =
-      if (normalizeFirst) graft.text.TextAnalysis.withNormalizedText(benchmark)
+      if (spanCut.normalizeFirst) graft.text.TextAnalysis.withNormalizedText(benchmark)
       else benchmark
-    val frozen = freezeArtifacts(benchSrc, benchBanded, n, benchEmbeddings, reference)
+    val frozen = freezeArtifacts(benchSrc, benchBanded, decon.n, benchEmbeddings, reference)
     // key deltas this stream wrote are validated once, then trusted
     // (two sets under runLevel — one per key family)
     val validatedDeltas =
@@ -1295,7 +1273,7 @@ object StreamOps {
       // signatures, the shipped accepted text) sees the canonical
       // form, mirroring the batch driver's normalizeFirst stage
       val src =
-        if (normalizeFirst)
+        if (spanCut.normalizeFirst)
           graft.text.TextAnalysis.withNormalizedText(raw).localCheckpoint(true)
         else raw
       // stage 0 — incremental span cut vs corpus keys ∪ COMPLETE
@@ -1306,22 +1284,21 @@ object StreamOps {
       // batch. Under runLevel BOTH families fold and the batch's
       // deltas split per family (written LAST, below).
       val (cleaned0, keyDeltaWrites) =
-        if (runLevel)
+        if (spanCut.runLevel)
           runLevelStage0(spark, windowKeysPath, outDir, batchId, src,
-            windowTokens, validatedDeltas, validatedWordDeltas)
+            spanCut.windowTokens, validatedDeltas, validatedWordDeltas)
         else
           singleFamilyStage0(spark, windowKeysPath, outDir, batchId, src,
-            windowTokens, charTokens, validatedDeltas)
+            spanCut.windowTokens, spanCut.charTokens, validatedDeltas)
       val cleaned = cleaned0.localCheckpoint(true)
       val bdf = graft.text.SubstringDedup.withCleanText(src, cleaned)
         .localCheckpoint(true)
       // stages 1–2 over the CLEANED text — v1's exact chain (one
       // shared definition, so the two drivers cannot drift)
-      val decon = streamDeconChannels(bdf, frozen, n, ngramThreshold,
-        deconDedup, cosThreshold, maxSpanTokens)
+      val verdicts = streamDeconChannels(bdf, frozen, decon)
         .withColumnRenamed("verdict", "decon_verdict")
         .localCheckpoint(true)
-      val keepIds = decon.filter(col("decon_verdict") === "keep").select("doc_id")
+      val keepIds = verdicts.filter(col("decon_verdict") === "keep").select("doc_id")
       // exact-fingerprint pre-shrink OFF, deliberately: stage 0
       // already removed every exact duplicate run ≥ windowTokens,
       // so the only texts the exact stage could additionally
@@ -1342,7 +1319,7 @@ object StreamOps {
         manifestWithVerdicts(
           cleaned.select(
             graft.text.SubstringDedup.stage0AccountingCols(cleaned): _*)
-            .join(decon, Seq("doc_id")),
+            .join(verdicts, Seq("doc_id")),
           accepted),
         s"$outDir/manifest", batchId)
       // key deltas LAST (the ingestSubstringDedupStream contract):

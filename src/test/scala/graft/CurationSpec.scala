@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Catalog, Scale}
-import graft.pipeline.TrainingSet
+import graft.pipeline.{CurationPlan, DeconConfig, SpanCut, TrainingSet}
 import graft.text.{MinHashConfig, MinHashDedup, TextAnalysis}
 
 /** The composed batch curation driver (X93):
@@ -120,7 +120,7 @@ class CurationSpec extends SparkSpec {
     // survivors regardless of the tiny model's calibration
     val thr = scored.values.toSeq.sorted.apply(scored.size / 2)
     val manifest = TrainingSet.curationManifest(
-      corpus, bench, banded, cat.embeddings, qualityModel = Some((model, thr)))
+      corpus, bench, banded, cat.embeddings, CurationPlan(qualityModel = Some((model, thr))))
       .localCheckpoint(true)
     assert(manifest.columns.contains("quality_p"))
     val rows = manifest.collect()
@@ -186,7 +186,8 @@ class CurationSpec extends SparkSpec {
     val eng = GraftEngine(spark, sf001)
     val bandedV2 = bandedOverCleaned(corpus, bench)
     val out = Files.createTempDirectory("graft-curate-write-v2").toString
-    val cur = eng.curateAndWriteV2(corpus, bench, bandedV2, out,
+    val cur = eng.curateAndWrite(corpus, bench, bandedV2, out,
+      CurationPlan(spanCut = Some(SpanCut())),
       maxTokens = 64, stride = 64, binTokens = 500L)
     val shipped = spark.read.parquet(s"$out/manifest")
     assert(shipped.columns.take(3).toSeq ==
@@ -268,7 +269,8 @@ class CurationSpec extends SparkSpec {
 
   test("curationManifestV2 equals stage-0 accounting + the v1 manifest over the pre-cleaned corpus, column by column") {
     val bandedV2 = bandedOverCleaned(corpus, bench)
-    val v2 = TrainingSet.curationManifestV2(corpus, bench, bandedV2, cat.embeddings)
+    val v2 = TrainingSet.curationManifest(corpus, bench, bandedV2, cat.embeddings,
+      CurationPlan(spanCut = Some(SpanCut())))
       .localCheckpoint(true)
 
     // hand-compose: clean first, then the v1 manifest over cleaned text
@@ -332,7 +334,8 @@ class CurationSpec extends SparkSpec {
 
     // v2: stage 0 cuts S from doc 2 (doc 1 keeps the canonical copy)
     val bandedV2 = bandedOverCleaned(corpusV, benchV)
-    val v2 = TrainingSet.curationManifestV2(corpusV, benchV, bandedV2, emptyEmb)
+    val v2 = TrainingSet.curationManifest(corpusV, benchV, bandedV2, emptyEmb,
+      CurationPlan(spanCut = Some(SpanCut())))
       .localCheckpoint(true)
     val rows = v2.select("doc_id", "n_tokens", "sub_dup_tokens", "decon_verdict")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
@@ -350,7 +353,8 @@ class CurationSpec extends SparkSpec {
 
   test("curateCorpusV2: stage-0 token audit, survivors ship the cleaned text in training order") {
     val bandedV2 = bandedOverCleaned(corpus, bench)
-    val cur = TrainingSet.curateCorpusV2(corpus, bench, bandedV2, cat.embeddings)
+    val cur = TrainingSet.curateCorpus(corpus, bench, bandedV2, cat.embeddings,
+      CurationPlan(spanCut = Some(SpanCut())))
     val m = cur.manifest.localCheckpoint(true)
     val audit = cur.result.audit.toMap
     assert(audit("0_input") == m.count())
@@ -420,15 +424,15 @@ class CurationSpec extends SparkSpec {
       MinHashDedup.signatures(corpusV.unionByName(benchV), cfg), dir, cfg)
     val rawBanded = MinHashDedup.readBandedIndex(spark, dir, cfg)
     val e = intercept[IllegalArgumentException] {
-      TrainingSet.curationManifestV2(corpusV, benchV, rawBanded, emptyEmb)
-        .collect()
+      TrainingSet.curationManifest(corpusV, benchV, rawBanded, emptyEmb,
+        CurationPlan(spanCut = Some(SpanCut()))).collect()
     }
     assert(e.getMessage.contains("v2 banded contract violated"),
       s"wrong failure: ${e.getMessage}")
     // the same corpus with a properly-built index passes
     val good = bandedOverCleaned(corpusV, benchV)
-    assert(TrainingSet.curationManifestV2(corpusV, benchV, good, emptyEmb)
-      .count() == 3L)
+    assert(TrainingSet.curationManifest(corpusV, benchV, good, emptyEmb,
+      CurationPlan(spanCut = Some(SpanCut()))).count() == 3L)
   }
 
   test("normalizeFirst catches normalization-only near-dups the raw pipeline misses") {
@@ -453,7 +457,8 @@ class CurationSpec extends SparkSpec {
 
     // raw order: nothing fires — both variants ship
     val rawBanded = bandedOverCleaned(corpusV, benchV)
-    val mRaw = TrainingSet.curationManifestV2(corpusV, benchV, rawBanded, emptyEmb)
+    val mRaw = TrainingSet.curationManifest(corpusV, benchV, rawBanded, emptyEmb,
+        CurationPlan(spanCut = Some(SpanCut())))
       .select("doc_id", "sub_dup_tokens", "keep").collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
     assert(mRaw(10L)._1 == 0L && mRaw(11L)._1 == 0L,
@@ -464,8 +469,8 @@ class CurationSpec extends SparkSpec {
     val normBanded = bandedOverCleaned(
       TextAnalysis.withNormalizedText(corpusV),
       TextAnalysis.withNormalizedText(benchV))
-    val mNorm = TrainingSet.curationManifestV2(
-        corpusV, benchV, normBanded, emptyEmb, normalizeFirst = true)
+    val mNorm = TrainingSet.curationManifest(corpusV, benchV, normBanded, emptyEmb,
+        CurationPlan(spanCut = Some(SpanCut(normalizeFirst = true))))
       .select("doc_id", "n_tokens", "sub_dup_tokens", "keep").collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getBoolean(3)))).toMap
     assert(mNorm(10L)._2 == 0L && mNorm(10L)._3,
@@ -482,12 +487,13 @@ class CurationSpec extends SparkSpec {
     // arriving batch equals pre-normalizing the whole corpus.
     // StreamingSpec pins stream ≡ batch for normalizeFirst = true
     // directly on top of this identity.
-    val viaPre = TrainingSet.curationManifestV2(
+    val viaPre = TrainingSet.curationManifest(
         TextAnalysis.withNormalizedText(corpusV),
-        TextAnalysis.withNormalizedText(benchV), normBanded, emptyEmb)
+        TextAnalysis.withNormalizedText(benchV), normBanded, emptyEmb,
+        CurationPlan(spanCut = Some(SpanCut())))
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    val viaFlag = TrainingSet.curationManifestV2(
-        corpusV, benchV, normBanded, emptyEmb, normalizeFirst = true)
+    val viaFlag = TrainingSet.curationManifest(corpusV, benchV, normBanded, emptyEmb,
+        CurationPlan(spanCut = Some(SpanCut(normalizeFirst = true))))
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
     assert(viaFlag == viaPre,
       "normalizeFirst must equal the pipeline over withNormalizedText inputs")
@@ -509,17 +515,18 @@ class CurationSpec extends SparkSpec {
       12L -> filler("c", 25), 13L -> filler("d", 25)))
     val benchV = plantedDocs(Seq(100L -> filler("z", 25)))
     // word order: stage 0 cannot see inside the one-token docs
-    val mWord = TrainingSet.curationManifestV2(
-        corpusV, benchV, bandedOverCleaned(corpusV, benchV), emptyEmb)
+    val mWord = TrainingSet.curationManifest(
+        corpusV, benchV, bandedOverCleaned(corpusV, benchV), emptyEmb,
+        CurationPlan(spanCut = Some(SpanCut())))
       .select("doc_id", "sub_dup_tokens").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(mWord(11L) == 0L, s"word-windowed stage 0 must be blind: $mWord")
     // char order: the banded contract follows the text pipeline (index
     // over the char-cut cleaned text); exactly the 40 shared chars cut
-    val mChar = TrainingSet.curationManifestV2(
+    val mChar = TrainingSet.curationManifest(
         corpusV, benchV,
         bandedOverCleaned(corpusV, benchV, charTokens = true), emptyEmb,
-        charTokens = true)
+        CurationPlan(spanCut = Some(SpanCut(charTokens = true))))
       .select("doc_id", "n_tokens", "sub_dup_tokens", "decon_verdict").collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
     assert(mChar(11L)._1 == 80L && mChar(11L)._2 == 40L,
@@ -570,13 +577,13 @@ class CurationSpec extends SparkSpec {
 
     // doc-level charTokens baseline: stage 0 blind to 11's embedded run,
     // decon blind to the benchmark's (word-signed vs char-signed)
-    val mCt = TrainingSet.curationManifestV2(
+    val mCt = TrainingSet.curationManifest(
         corpusV, benchV,
         bandedOverCleaned(corpusV, benchV, charTokens = true,
           cfg = MinHashConfig(charK = 5)), emptyEmb,
-        deconDedup = MinHashConfig(threshold = 0.5, charK = 5),
-        corpusDedup = MinHashConfig(charK = 5),
-        charTokens = true)
+        CurationPlan(DeconConfig(dedup = MinHashConfig(threshold = 0.5, charK = 5)),
+          corpusDedup = MinHashConfig(charK = 5),
+          spanCut = Some(SpanCut(charTokens = true))))
       .select("doc_id", "sub_dup_tokens", "near_dup").collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
     assert(mCt(11L)._1 == 0L, s"doc-level stage 0 must be blind to the embedded run: $mCt")
@@ -585,9 +592,10 @@ class CurationSpec extends SparkSpec {
     // run-level release: stage 0 cuts 11's run (10 is the char-tier
     // canonical), and the decon channel catches 10 against the
     // quote-embedding benchmark via run char-grams
-    val cur = TrainingSet.curateCorpusV2(
+    val cur = TrainingSet.curateCorpus(
       corpusV, benchV, bandedOverCleanedRl(corpusV, benchV, rlCfg), emptyEmb,
-      deconDedup = rlDecon, corpusDedup = rlCfg, runLevel = true)
+      CurationPlan(DeconConfig(dedup = rlDecon), corpusDedup = rlCfg,
+        spanCut = Some(SpanCut(runLevel = true))))
     val m = cur.manifest.localCheckpoint(true)
     val rows = m.select("doc_id", "n_tokens", "sub_dup_tokens",
         "run_dup_chars", "near_dup", "decon_verdict").collect()
@@ -614,9 +622,9 @@ class CurationSpec extends SparkSpec {
 
     // the flags are mutually exclusive — runLevel subsumes charTokens
     val e = intercept[IllegalArgumentException] {
-      TrainingSet.curationManifestV2(corpusV, benchV,
+      TrainingSet.curationManifest(corpusV, benchV,
         bandedOverCleanedRl(corpusV, benchV, rlCfg), emptyEmb,
-        charTokens = true, runLevel = true)
+        CurationPlan(spanCut = Some(SpanCut(charTokens = true, runLevel = true))))
     }
     assert(e.getMessage.contains("subsumes"), e.getMessage)
   }
@@ -636,8 +644,8 @@ class CurationSpec extends SparkSpec {
     // candidates for text that no longer exists post-fold
     val rawBanded = bandedOverCleaned(corpusV, benchV)
     val e1 = intercept[IllegalArgumentException] {
-      TrainingSet.curationManifestV2(
-        corpusV, benchV, rawBanded, emptyEmb, normalizeFirst = true).collect()
+      TrainingSet.curationManifest(corpusV, benchV, rawBanded, emptyEmb,
+        CurationPlan(spanCut = Some(SpanCut(normalizeFirst = true)))).collect()
     }
     assert(e1.getMessage.contains("v2 banded contract violated"),
       s"wrong failure: ${e1.getMessage}")
@@ -647,16 +655,15 @@ class CurationSpec extends SparkSpec {
       TextAnalysis.withNormalizedText(corpusV),
       TextAnalysis.withNormalizedText(benchV))
     val e2 = intercept[IllegalArgumentException] {
-      TrainingSet.curationManifestV2(corpusV, benchV, normBanded, emptyEmb)
-        .collect()
+      TrainingSet.curationManifest(corpusV, benchV, normBanded, emptyEmb,
+        CurationPlan(spanCut = Some(SpanCut()))).collect()
     }
     assert(e2.getMessage.contains("v2 banded contract violated"),
       s"wrong failure: ${e2.getMessage}")
     // each index passes under ITS OWN text pipeline
-    assert(TrainingSet.curationManifestV2(corpusV, benchV, rawBanded, emptyEmb)
-      .count() == 3L)
-    assert(TrainingSet.curationManifestV2(
-      corpusV, benchV, normBanded, emptyEmb, normalizeFirst = true)
-      .count() == 3L)
+    assert(TrainingSet.curationManifest(corpusV, benchV, rawBanded, emptyEmb,
+      CurationPlan(spanCut = Some(SpanCut()))).count() == 3L)
+    assert(TrainingSet.curationManifest(corpusV, benchV, normBanded, emptyEmb,
+      CurationPlan(spanCut = Some(SpanCut(normalizeFirst = true)))).count() == 3L)
   }
 }

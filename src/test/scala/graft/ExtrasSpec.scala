@@ -1452,7 +1452,7 @@ class ExtrasSpec extends SparkSpec {
   }
 
   test("manifest stamp key derives from the builders' actual defaults, unchanged from the recorded value") {
-    // the key is rebuilt from TrainingSet.CurationDefaults + the
+    // the key is rebuilt from the CurationPlan defaults + the
     // MinHashConfig objects each run — this pin records the CURRENT
     // rendering so an accidental format change (which would silently
     // orphan every persisted manifest and force rebuilds) fails loud,
@@ -1467,5 +1467,16 @@ class ExtrasSpec extends SparkSpec {
       s"mv1:n5:ng0.2:cos0.35:dedup${cfg(c)}:decon${cfg(d)}" +
         ":ppl3:mixlang0.5:seed42:minid0:span-:qm-:norm0",
       s"stamp key changed — persisted manifests re-key and rebuild once: ${Extras.manifestParamsKey}")
+    // the full stored-manifest stamp keys, literal as recorded before
+    // the plan value rendered them: versions, the span-cut window and
+    // every stage parameter (a changed plan default fails here)
+    assert(Extras.X93Plan.stampKey ==
+      "manifest_v1:1:sig3:mv1:n5:ng0.2:cos0.35:dedupt0.8s3b16h64c4096" +
+        ":decont0.5s3b16h64c4096:ppl3:mixlang0.5:seed42:minid0:span-:qm-:norm0",
+      s"manifest_v1 stamp changed: ${Extras.X93Plan.stampKey}")
+    assert(Extras.X121Plan.stampKey ==
+      "manifest_v2:1:sub1:sig3:w10:mv1:n5:ng0.2:cos0.35:dedupt0.8s3b16h64c4096" +
+        ":decont0.5s3b16h64c4096:ppl3:mixlang0.5:seed42:minid0:span-:qm-:norm0",
+      s"manifest_v2 stamp changed: ${Extras.X121Plan.stampKey}")
   }
 }

@@ -83,7 +83,8 @@ class GraftEngineSpec extends SparkSpec {
     graft.text.MinHashDedup.writeBandedIndex(
       graft.text.MinHashDedup.signatures(cleanedDocs, v2cfg), v2dir, v2cfg)
     val v2banded = graft.text.MinHashDedup.readBandedIndex(spark, v2dir, v2cfg)
-    val v2 = engine.curationManifestV2(corpusV2, bench, v2banded)
+    val v2 = engine.curationManifest(corpusV2, bench, v2banded,
+      graft.pipeline.CurationPlan(spanCut = Some(graft.pipeline.SpanCut())))
     assert(v2.count() == corpusV2.count())
     assert(v2.filter(col("sub_dup_tokens") > col("n_tokens")).isEmpty)
     assert(v2.columns.take(3).toSeq == Seq("doc_id", "n_tokens", "sub_dup_tokens"))

@@ -375,7 +375,7 @@ object ScaleGrowthBench {
           // and silently empty the near-dup channel
           val benchBanded = MinHashDedup.readBandedIndex(spark, bdir, cfg)
           val rep = graft.pipeline.TrainingSet.decontaminationReport(
-            cor, bench, benchBanded, emb, dedup = cfg,
+            cor, bench, benchBanded, emb, graft.pipeline.DeconConfig(dedup = cfg),
             nearDupPairs = Some(MinHashDedup
               .crossNearDupsAgainstBanded(cor, bench, benchBanded, cfg)))
             .localCheckpoint(true)
@@ -486,7 +486,7 @@ object ScaleGrowthBench {
         },
         false),
       // X121n — the v2 chain with CCNet normalization as stage −1
-      // (the curationManifestV2 normalizeFirst pipeline, decomposed
+      // (the span-cut curationManifest normalizeFirst pipeline, decomposed
       // exactly like X121 so the index build is paid once). Replica
       // tags are remapped to LETTERS first: the digit fold would
       // otherwise collapse "r00"/"r05"... into one tag, the replicas

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.pipeline.{CurationPlan, DeconConfig, SpanCut}
 import graft.sources.Tables
 import graft.streaming.StreamOps
 
@@ -29,6 +30,23 @@ class StreamingSpec extends SparkSpec {
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val part = Files.list(tmp).filter(_.toString.endsWith(".parquet")).findFirst().get()
     Files.copy(part, dstDir.resolve(s"$name.parquet"))
+  }
+
+  /** Seeded `n`-doc corpus (the documents schema) whose vocabulary
+    * grows with doc_id: doc i holds the word `w<i>`, which no earlier
+    * doc has, plus eleven words drawn from w0..w<i>. So every later
+    * slice adds words and also repeats words seen before — the case the
+    * vocab-novelty sinks' cross-batch seen-set must handle. The
+    * `documents` fixtures cannot show it: all 31 of their words occur
+    * in doc_id < 10.
+    */
+  private def growingVocabDocs(n: Int, seed: Long = 7L): DataFrame = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(seed)
+    (0 until n).map { i =>
+      val text = (s"w$i" +: Seq.fill(11)(s"w${rnd.nextInt(i + 1)}")).mkString(" ")
+      (i.toLong, text, "en", "src1", text.length.toLong)
+    }.toDF("doc_id", "text", "lang", "source", "n_chars")
   }
 
   /** Event-time-ordered n-ths of the events table. */
@@ -1287,7 +1305,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming vocab novelty: replayed corpus reproduces the batch X86 curve at matching cuts") {
-    val docs = Tables.load(spark, sf001, "documents")
+    val docs = growingVocabDocs(100)
     val n = docs.count().toInt
     val b = 5
     assert(n % b == 0, s"fixture premise: $b must divide the $n-doc corpus")
@@ -1314,6 +1332,8 @@ class StreamingSpec extends SparkSpec {
     val got = StreamOps.noveltySummary(spark, outDir)
       .zipWithIndex.map { case ((_, nt, cum), i) => (i.toLong, nt, cum) }
     assert(got == want, s"stream curve $got != batch curve $want")
+    // non-vacuous: every later batch adds words the seen-set must keep
+    assert(got.drop(1).forall(_._2 > 0), s"later batches must add words: $got")
     // the persisted union IS the corpus vocabulary (novel-words sink
     // doubles as the seen-set state — pin it directly)
     val vocabGot = spark.read.option("recursiveFileLookup", "true").parquet(outDir)
@@ -1348,7 +1368,7 @@ class StreamingSpec extends SparkSpec {
       graft.text.MinHashDedup.signatures(docs, cfg), adir, cfg)
     val want = graft.pipeline.TrainingSet.decontaminationReport(
         corpus, bench, graft.text.MinHashDedup.readBandedIndex(spark, adir, cfg),
-        emb, dedup = cfg)
+        emb, DeconConfig(dedup = cfg))
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getBoolean(2),
         if (r.isNullAt(3)) None else Some(r.getDouble(3)), r.getString(4))).toSeq
     // replay the corpus (embedding column attached) in three slices
@@ -1364,7 +1384,7 @@ class StreamingSpec extends SparkSpec {
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(srcDir.toString)
     val query = StreamOps.decontaminationGateStream(
-      stream, bench, benchBanded, benchEmb, outDir, ckpt, dedup = cfg)
+      stream, bench, benchBanded, benchEmb, outDir, ckpt, DeconConfig(dedup = cfg))
     try {
       slices.zipWithIndex.foreach { case (s, i) =>
         writeChunk(enriched.filter(col("doc_id").isInCollection(s.toSet)), srcDir, s"chunk$i")
@@ -1405,10 +1425,10 @@ class StreamingSpec extends SparkSpec {
     val seed0 = nonBench.filter(col("doc_id") < 200)
     val emptyEmb = emb.limit(0)
     val seedKeepIds = graft.pipeline.TrainingSet.decontaminationReport(
-        seed0, bench, benchBanded, emptyEmb, dedup = gcfg,
+        seed0, bench, benchBanded, emptyEmb,
+        DeconConfig(dedup = gcfg, maxSpanTokens = Some(spanT)),
         nearDupPairs = Some(graft.text.MinHashDedup
-          .crossNearDupsAgainstBanded(seed0, bench, benchBanded, gcfg)),
-        maxSpanTokens = Some(spanT))
+          .crossNearDupsAgainstBanded(seed0, bench, benchBanded, gcfg)))
       .filter(col("verdict") === "keep").select("doc_id")
     val corpus = seed0.join(seedKeepIds, Seq("doc_id"), "left_semi")
       .localCheckpoint(true)
@@ -1435,8 +1455,8 @@ class StreamingSpec extends SparkSpec {
     val query = StreamOps.curationIngestStream(
       StreamOps.documentsStream(spark, srcDir.toString), corpus, idxDir,
       bench, benchBanded, outDir, ckpt,
-      reference = Some(corpus), deconDedup = gcfg,
-      maxSpanTokens = Some(spanT))
+      reference = Some(corpus),
+      decon = DeconConfig(dedup = gcfg, maxSpanTokens = Some(spanT)))
     try {
       slices.zipWithIndex.foreach { case (s, i) =>
         writeChunk(natural.filter(col("doc_id").isInCollection(s.toSet)), srcDir, s"chunk$i")
@@ -1455,10 +1475,11 @@ class StreamingSpec extends SparkSpec {
     val want = graft.pipeline.TrainingSet.curationManifest(
         corpusAll, bench, graft.text.MinHashDedup.readBandedIndex(
           spark, adir, graft.text.MinHashConfig()),
-        emptyEmb, deconDedup = gcfg,
+        emptyEmb,
+        CurationPlan(DeconConfig(dedup = gcfg, maxSpanTokens = Some(spanT)),
+          minIdDedupWinners = true),
         nearDupPairs = Some(graft.text.MinHashDedup
-          .crossNearDupsAgainstBanded(corpusAll, bench, benchBanded, gcfg)),
-        maxSpanTokens = Some(spanT), minIdDedupWinners = true)
+          .crossNearDupsAgainstBanded(corpusAll, bench, benchBanded, gcfg)))
       .filter(col("doc_id") >= 200)
       .select("doc_id", "ngram_frac", "near_dup", "semantic_cos",
         "span_tokens", "decon_verdict", "dedup_verdict")
@@ -1527,10 +1548,10 @@ class StreamingSpec extends SparkSpec {
     // other docs only removes window occurrences.
     val seed0 = nonBench.filter(col("doc_id") < 200)
     val seedKeepIds = graft.pipeline.TrainingSet.decontaminationReport(
-        seed0, bench, benchBanded, emptyEmb, dedup = gcfg,
+        seed0, bench, benchBanded, emptyEmb,
+        DeconConfig(dedup = gcfg, maxSpanTokens = Some(spanT)),
         nearDupPairs = Some(graft.text.MinHashDedup
-          .crossNearDupsAgainstBanded(seed0, bench, benchBanded, gcfg)),
-        maxSpanTokens = Some(spanT))
+          .crossNearDupsAgainstBanded(seed0, bench, benchBanded, gcfg)))
       .filter(col("verdict") === "keep").select("doc_id")
     val seed1 = seed0.join(seedKeepIds, Seq("doc_id"), "left_semi")
     val corpus = seed1.join(
@@ -1577,8 +1598,8 @@ class StreamingSpec extends SparkSpec {
     val query = StreamOps.curationIngestStreamV2(
       StreamOps.documentsStream(spark, srcDir.toString), corpus, idxDir,
       keysDir, bench, benchBanded, outDir, ckpt,
-      reference = Some(corpus), deconDedup = gcfg,
-      maxSpanTokens = Some(spanT))
+      reference = Some(corpus),
+      decon = DeconConfig(dedup = gcfg, maxSpanTokens = Some(spanT)))
     try {
       slices.zipWithIndex.foreach { case (s, i) =>
         writeChunk(natural.filter(col("doc_id").isInCollection(s.toSet)), srcDir, s"chunk$i")
@@ -1589,7 +1610,7 @@ class StreamingSpec extends SparkSpec {
       writeChunk(tail2, srcDir, "chunk4")
       query.processAllAvailable()
     } finally query.stop()
-    // batch twin: curationManifestV2 over (clean seed ∪ all new) with
+    // batch twin: span-cut curationManifest over (clean seed ∪ all new) with
     // the pairwise min-id rule, decon near-dup channel from the same
     // frozen benchmark index over the UNION-cleaned text, stage-2
     // banded index over that same cleaned text
@@ -1600,13 +1621,14 @@ class StreamingSpec extends SparkSpec {
     val adir = Files.createTempDirectory("graft-cur2-abanded").toString
     graft.text.MinHashDedup.writeBandedIndex(
       graft.text.MinHashDedup.signatures(unionClean), adir)
-    val want = graft.pipeline.TrainingSet.curationManifestV2(
+    val want = graft.pipeline.TrainingSet.curationManifest(
         corpusAll, bench, graft.text.MinHashDedup.readBandedIndex(
           spark, adir, graft.text.MinHashConfig()),
-        emptyEmb, deconDedup = gcfg,
+        emptyEmb,
+        CurationPlan(DeconConfig(dedup = gcfg, maxSpanTokens = Some(spanT)),
+          minIdDedupWinners = true, spanCut = Some(SpanCut())),
         nearDupPairs = Some(graft.text.MinHashDedup
-          .crossNearDupsAgainstBanded(unionClean, bench, benchBanded, gcfg)),
-        maxSpanTokens = Some(spanT), minIdDedupWinners = true)
+          .crossNearDupsAgainstBanded(unionClean, bench, benchBanded, gcfg)))
       .filter(col("doc_id") >= 200)
       .select("doc_id", "n_tokens", "sub_dup_tokens", "ngram_frac",
         "near_dup", "semantic_cos", "span_tokens", "decon_verdict",
@@ -1702,14 +1724,15 @@ class StreamingSpec extends SparkSpec {
     val query = StreamOps.curationIngestStreamV2(
       StreamOps.documentsStream(spark, srcDir.toString), corpus, idxDir,
       keysRoot, bench, benchBanded, outDir, ckpt,
-      deconDedup = gcfgRl, cfg = cfgRl, runLevel = true)
+      decon = DeconConfig(dedup = gcfgRl), cfg = cfgRl,
+      spanCut = SpanCut(runLevel = true))
     try {
       writeChunk(batch0, srcDir, "chunk0")
       query.processAllAvailable()
       writeChunk(batch1, srcDir, "chunk1")
       query.processAllAvailable()
     } finally query.stop()
-    // batch twin: runLevel curationManifestV2 over (seed ∪ all new),
+    // batch twin: runLevel span-cut curationManifest over (seed ∪ all new),
     // pairwise min-id rule, decon channel off the same frozen
     // benchmark index over the UNION-cleaned text
     val corpusAll = corpus.unionByName(newAll).localCheckpoint(true)
@@ -1726,12 +1749,13 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getDouble(4), r.getBoolean(5), r.getString(6),
         Option(r.getString(7)))).toSeq.sortBy(_._1)
-    val want = rowsOf(graft.pipeline.TrainingSet.curationManifestV2(
+    val want = rowsOf(graft.pipeline.TrainingSet.curationManifest(
         corpusAll, bench, graft.text.MinHashDedup.readBandedIndex(spark, adir, cfgRl),
-        emptyEmb, deconDedup = gcfgRl, corpusDedup = cfgRl,
+        emptyEmb,
+        CurationPlan(DeconConfig(dedup = gcfgRl), corpusDedup = cfgRl,
+          minIdDedupWinners = true, spanCut = Some(SpanCut(runLevel = true))),
         nearDupPairs = Some(graft.text.MinHashDedup
-          .crossNearDupsAgainstBanded(unionClean, bench, benchBanded, gcfgRl)),
-        minIdDedupWinners = true, runLevel = true)
+          .crossNearDupsAgainstBanded(unionClean, bench, benchBanded, gcfgRl)))
       .filter(col("doc_id") >= 9000L))
     val got = rowsOf(spark.read.option("recursiveFileLookup", "true")
       .parquet(s"$outDir/manifest"))
@@ -1783,7 +1807,7 @@ class StreamingSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft-cur2e-ckpt").toString
     val query = StreamOps.curationIngestStreamV2(
       StreamOps.documentsStream(spark, srcDir.toString), corpus, idxDir,
-      keysDir, bench, benchBanded, outDir, ckpt, deconDedup = gcfg)
+      keysDir, bench, benchBanded, outDir, ckpt, decon = DeconConfig(dedup = gcfg))
     try {
       // batch 0: ONLY an exact clone of the corpus doc — fully cut to
       // empty text, accepted (no shingles → no near-dup loss), with
@@ -1843,10 +1867,10 @@ class StreamingSpec extends SparkSpec {
       .withNormalizedText(nonBench.filter(col("doc_id") < 200))
       .localCheckpoint(true)
     val seedKeepIds = graft.pipeline.TrainingSet.decontaminationReport(
-        seed0, benchN, benchBanded, emptyEmb, dedup = gcfg,
+        seed0, benchN, benchBanded, emptyEmb,
+        DeconConfig(dedup = gcfg, maxSpanTokens = Some(spanT)),
         nearDupPairs = Some(graft.text.MinHashDedup
-          .crossNearDupsAgainstBanded(seed0, benchN, benchBanded, gcfg)),
-        maxSpanTokens = Some(spanT))
+          .crossNearDupsAgainstBanded(seed0, benchN, benchBanded, gcfg)))
       .filter(col("verdict") === "keep").select("doc_id")
     val seed1 = seed0.join(seedKeepIds, Seq("doc_id"), "left_semi")
     val corpus = seed1.join(
@@ -1888,8 +1912,9 @@ class StreamingSpec extends SparkSpec {
     val query = StreamOps.curationIngestStreamV2(
       StreamOps.documentsStream(spark, srcDir.toString), corpus, idxDir,
       keysDir, bench, benchBanded, outDir, ckpt,
-      reference = Some(corpus), deconDedup = gcfg,
-      maxSpanTokens = Some(spanT), normalizeFirst = true)
+      reference = Some(corpus),
+      decon = DeconConfig(dedup = gcfg, maxSpanTokens = Some(spanT)),
+      spanCut = SpanCut(normalizeFirst = true))
     try {
       slices.zipWithIndex.foreach { case (s, i) =>
         writeChunk(natural.filter(col("doc_id").isInCollection(s.toSet)), srcDir, s"chunk$i")
@@ -1900,7 +1925,7 @@ class StreamingSpec extends SparkSpec {
       writeChunk(tail2, srcDir, "chunk3")
       query.processAllAvailable()
     } finally query.stop()
-    // batch twin: curationManifestV2(normalizeFirst = true) over
+    // batch twin: span-cut curationManifest (normalizeFirst) over
     // (normalized clean seed ∪ RAW arrivals) — normalization is
     // idempotent, so the pre-normalized seed re-folds to itself
     val corpusAll = corpus.unionByName(newAll).localCheckpoint(true)
@@ -1912,14 +1937,15 @@ class StreamingSpec extends SparkSpec {
     val adir = Files.createTempDirectory("graft-cur2n-abanded").toString
     graft.text.MinHashDedup.writeBandedIndex(
       graft.text.MinHashDedup.signatures(unionClean), adir)
-    val want = graft.pipeline.TrainingSet.curationManifestV2(
+    val want = graft.pipeline.TrainingSet.curationManifest(
         corpusAll, bench, graft.text.MinHashDedup.readBandedIndex(
           spark, adir, graft.text.MinHashConfig()),
-        emptyEmb, deconDedup = gcfg,
+        emptyEmb,
+        CurationPlan(DeconConfig(dedup = gcfg, maxSpanTokens = Some(spanT)),
+          minIdDedupWinners = true,
+          spanCut = Some(SpanCut(normalizeFirst = true))),
         nearDupPairs = Some(graft.text.MinHashDedup
-          .crossNearDupsAgainstBanded(unionClean, benchN, benchBanded, gcfg)),
-        maxSpanTokens = Some(spanT), minIdDedupWinners = true,
-        normalizeFirst = true)
+          .crossNearDupsAgainstBanded(unionClean, benchN, benchBanded, gcfg)))
       .filter(col("doc_id") >= 200)
       .select("doc_id", "n_tokens", "sub_dup_tokens", "ngram_frac",
         "near_dup", "semantic_cos", "span_tokens", "decon_verdict",
@@ -1998,7 +2024,7 @@ class StreamingSpec extends SparkSpec {
     val query = StreamOps.curationIngestStreamV2(
       StreamOps.documentsStream(spark, srcDir.toString), corpus, idxDir,
       keysDir, bench, benchBanded, outDir, ckpt,
-      deconDedup = gcfg, charTokens = true)
+      decon = DeconConfig(dedup = gcfg), spanCut = SpanCut(charTokens = true))
     try {
       writeChunk(tail0, srcDir, "chunk0")
       query.processAllAvailable()
@@ -2022,13 +2048,14 @@ class StreamingSpec extends SparkSpec {
         r.getDouble(3), r.getBoolean(4),
         if (r.isNullAt(5)) None else Some(r.getDouble(5)),
         r.getString(6), Option(r.getString(7)))).toSeq
-    val want = rows(graft.pipeline.TrainingSet.curationManifestV2(
+    val want = rows(graft.pipeline.TrainingSet.curationManifest(
         corpusAll, bench, graft.text.MinHashDedup.readBandedIndex(
           spark, adir, graft.text.MinHashConfig()),
-        Tables.load(spark, sf001, "embeddings").limit(0), deconDedup = gcfg,
+        Tables.load(spark, sf001, "embeddings").limit(0),
+        CurationPlan(DeconConfig(dedup = gcfg), minIdDedupWinners = true,
+          spanCut = Some(SpanCut(charTokens = true))),
         nearDupPairs = Some(graft.text.MinHashDedup
-          .crossNearDupsAgainstBanded(unionClean, bench, benchBanded, gcfg)),
-        minIdDedupWinners = true, charTokens = true)
+          .crossNearDupsAgainstBanded(unionClean, bench, benchBanded, gcfg)))
       .filter(col("doc_id") >= 9000L).orderBy("doc_id"))
     val got = rows(spark.read.option("recursiveFileLookup", "true")
       .parquet(s"$outDir/manifest").orderBy("doc_id"))
@@ -2251,7 +2278,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("vocab novelty crash recovery: restart from checkpoint equals the uninterrupted curve") {
-    val docs = Tables.load(spark, sf001, "documents")
+    val docs = growingVocabDocs(100)
     val ids = docs.select("doc_id").orderBy("doc_id").collect().map(_.getLong(0))
     val slices = ids.grouped((ids.length + 2) / 3).toSeq
     val srcDir = Files.createTempDirectory("graft-novelty-crash-src")
@@ -2282,6 +2309,8 @@ class StreamingSpec extends SparkSpec {
     }
     val got = StreamOps.noveltySummary(spark, outDir).map(_._2)
     assert(got == want, s"crash-recovered curve $got != batch-cut curve $want")
+    // non-vacuous: the slices after the restart add words
+    assert(got.drop(1).forall(_ > 0), s"later slices must add words: $got")
     val union = spark.read.option("recursiveFileLookup", "true").parquet(outDir).count()
     assert(union == seen.size.toLong, s"sink union $union != vocab ${seen.size}")
   }
@@ -2294,12 +2323,20 @@ class StreamingSpec extends SparkSpec {
     val budget = docs
       .agg(sum(size(graft.text.TextAnalysis.tokens(col("text"))).cast("long")))
       .head().getLong(0) * 3 / 4
-    val sinks: Seq[(String, (DataFrame, String, String) => StreamingQuery)] = Seq(
+    type Sinks = Seq[(String, (DataFrame, String, String) => StreamingQuery)]
+    val sinks: Sinks = Seq(
       "score" -> ((s, out, ck) => StreamOps.scoreDocumentsStream(s, out, ck)),
       "budget" -> ((s, out, ck) => StreamOps.budgetAdmissionStream(s, budget, out, ck)))
+    // the novelty sink needs a second half that adds words, so it runs
+    // over its own seeded corpus
+    val novelty: Sinks = Seq(
+      "novelty" -> ((s, out, ck) => StreamOps.vocabNoveltyStream(s, out, ck)))
+    val grown = growingVocabDocs(100)
+    val grownHalves = Seq(grown.filter(col("doc_id") < 50), grown.filter(col("doc_id") >= 50))
     // one file per trigger through every sink; per sink, the rows of
-    // each b<id> dir
-    def run(files: Seq[DataFrame]): Seq[Map[String, Set[Row]]] = {
+    // each b<id> dir (without the batch id the novelty rows carry,
+    // which is the trigger's own id)
+    def run(sinks: Sinks, files: Seq[DataFrame]): Seq[Map[String, Set[Row]]] = {
       val src = Files.createTempDirectory("graft-empty-trigger-src")
       val root = Files.createTempDirectory("graft-empty-trigger-out")
       val queries = sinks.map { case (name, start) =>
@@ -2311,16 +2348,20 @@ class StreamingSpec extends SparkSpec {
       } finally queries.foreach(_.stop())
       sinks.map { case (name, _) =>
         new java.io.File(s"$root/$name").listFiles().filter(_.isDirectory).map(d =>
-          d.getName -> spark.read.parquet(d.toString).collect().toSet).toMap
+          d.getName -> spark.read.parquet(d.toString).drop("batch_id").collect().toSet).toMap
       }
     }
-    val plain = run(halves)
-    val withEmpty = run(Seq(halves(0), docs.limit(0), halves(1)))
-    sinks.map(_._1).zip(plain.zip(withEmpty)).foreach { case (name, (p, e)) =>
-      assert(p.keySet == Set("b0", "b1") && e.keySet == Set("b0", "b2"),
-        s"$name dirs: ${p.keySet} without the empty trigger, ${e.keySet} with it")
-      assert(p("b1").nonEmpty && e("b0") == p("b0") && e("b2") == p("b1"),
-        s"$name: batches after the empty trigger differ from the run without it")
+    def check(sinks: Sinks, halves: Seq[DataFrame]): Unit = {
+      val plain = run(sinks, halves)
+      val withEmpty = run(sinks, Seq(halves(0), halves(0).limit(0), halves(1)))
+      sinks.map(_._1).zip(plain.zip(withEmpty)).foreach { case (name, (p, e)) =>
+        assert(p.keySet == Set("b0", "b1") && e.keySet == Set("b0", "b2"),
+          s"$name dirs: ${p.keySet} without the empty trigger, ${e.keySet} with it")
+        assert(p("b1").nonEmpty && e("b0") == p("b0") && e("b2") == p("b1"),
+          s"$name: batches after the empty trigger differ from the run without it")
+      }
     }
+    check(sinks, halves)
+    check(novelty, grownHalves)
   }
 }
