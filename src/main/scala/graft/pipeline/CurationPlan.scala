@@ -8,7 +8,9 @@ import graft.text.{MinHashConfig, MinHashDedup, QualityClassifier, SubstringDedu
   * embedding cosine (drop at ≥ `cosThreshold`) and, when
   * `maxSpanTokens` is set, the X96 longest-verbatim-span rule. Shared
   * by the batch report, the batch manifests and the streaming gates,
-  * so one value configures every decon channel everywhere.
+  * so one value configures every decon channel everywhere (the
+  * stand-alone gate stream has no span channel and refuses
+  * `maxSpanTokens`).
   */
 final case class DeconConfig(
     n: Int = 5,
@@ -22,7 +24,8 @@ final case class DeconConfig(
   * spans from the corpus text before any verdict stage runs.
   *
   *  - `hashWindowKeys` makes the stage-0 shuffle carry 8-byte hashes
-  *    instead of window text (set it at scale; output unchanged);
+  *    instead of window text (set it at scale; output unchanged). The
+  *    streaming cut always hashes and refuses the flag;
   *  - `normalizeFirst` adds stage −1, CCNet normalization of corpus
   *    AND benchmark, so every fingerprint sees one canonical form;
   *  - `charTokens` windows and cuts spaceless-script docs at

@@ -1185,8 +1185,7 @@ object TrainingSet {
       plan: CurationPlan = CurationPlan(),
       nearDupPairs: Option[DataFrame] = None,
       ngramScores: Option[DataFrame] = None,
-      corpusPairs: Option[DataFrame] = None,
-      verifyBandedText: Boolean = true): DataFrame = {
+      corpusPairs: Option[DataFrame] = None): DataFrame = {
     // the provenance spot check runs for every config the index is
     // ACTUALLY consumed under: the dedup stage reads it with
     // corpusDedup unless corpusPairs short-circuits that stage, and
@@ -1194,15 +1193,13 @@ object TrainingSet {
     // nearDupPairs does — a stale index must fail loud on whichever
     // path still touches it. Configs agreeing on every member-row
     // parameter (shingleSize, numHashes, bands) are checked once.
-    if (verifyBandedText) {
-      val consumedUnder =
-        (if (corpusPairs.isEmpty) Seq(plan.corpusDedup) else Nil) ++
-          (if (nearDupPairs.isEmpty) Seq(plan.decon.dedup) else Nil)
-      consumedUnder
-        .groupBy(c => (c.shingleSize, c.numHashes, c.bands, c.charK, c.runLevel))
-        .values.map(_.head)
-        .foreach(requireBandedOverCleanedText(cleaned, banded, _))
-    }
+    val consumedUnder =
+      (if (corpusPairs.isEmpty) Seq(plan.corpusDedup) else Nil) ++
+        (if (nearDupPairs.isEmpty) Seq(plan.decon.dedup) else Nil)
+    consumedUnder
+      .groupBy(c => (c.shingleSize, c.numHashes, c.bands, c.charK, c.runLevel))
+      .values.map(_.head)
+      .foreach(requireBandedOverCleanedText(cleaned, banded, _))
     // lazy checkpoint: every downstream consumer of the cleaned corpus
     // (the decon channels, each stage chain's semi-join re-derivation,
     // the perplexity scorer's three scans, the final assembly) would
@@ -1295,9 +1292,7 @@ object TrainingSet {
         s"${graft.text.SubstringDedup.AlgorithmVersion}). The index was built " +
         "over a different text version (likely the raw pre-clean corpus) or a " +
         "different MinHash config — near-dup candidates would come from stale " +
-        "signatures. Rebuild the banded index over cleanCorpus output, or pass " +
-        "verifyBandedText = false only if the index provenance is externally " +
-        "guaranteed.")
+        "signatures. Rebuild the banded index over cleanCorpus output.")
   }
 
   /** Fail-loud coverage check shared by every consumer that semi-joins

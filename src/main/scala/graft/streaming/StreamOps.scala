@@ -947,6 +947,8 @@ object StreamOps {
     * A replayed corpus reproduces the batch X90 report EXACTLY
     * (StreamingSpec pins it) — channel semantics are per-document vs
     * the frozen benchmark, so batch boundaries cannot change verdicts.
+    * The gate has no span channel: `decon.maxSpanTokens` must be unset
+    * ([[curationIngestStream]] carries the span rule).
     */
   def decontaminationGateStream(
       documents: DataFrame,
@@ -956,6 +958,8 @@ object StreamOps {
       path: String,
       checkpoint: String,
       decon: DeconConfig = DeconConfig()): org.apache.spark.sql.streaming.StreamingQuery = {
+    require(decon.maxSpanTokens.isEmpty,
+      "decontaminationGateStream has no span channel — leave decon.maxSpanTokens unset")
     val frozen = freezeArtifacts(benchmark, benchBanded, decon.n, Some(benchEmbeddings))
     sinkBatchKeyed(documents, path, checkpoint)((batch, _) =>
       streamDeconChannels(batch, frozen, decon))
@@ -1176,8 +1180,9 @@ object StreamOps {
     * the manifest's stage-0 + channel + verdict columns equal to the
     * batch span-cut [[graft.pipeline.TrainingSet.curationManifest]] with
     * `minIdDedupWinners = true` restricted to the new ids.
-    * `spanCut.hashWindowKeys` is not read: the incremental cut always
-    * keys windows by their 8-byte hashes, like the persisted key store.
+    * `spanCut.hashWindowKeys` must stay unset: the incremental cut
+    * always keys windows by their 8-byte hashes, like the persisted key
+    * store, so the flag has nothing to switch here.
     *
     * `spanCut.normalizeFirst` is the streaming twin of the batch flag: each
     * arriving doc is CCNet-normalized
@@ -1246,6 +1251,8 @@ object StreamOps {
       cfg: graft.text.MinHashConfig = CurationPlan().corpusDedup,
       spanCut: SpanCut = SpanCut())
       : org.apache.spark.sql.streaming.StreamingQuery = {
+    require(!spanCut.hashWindowKeys,
+      "curationIngestStreamV2 always keys windows by hash — leave spanCut.hashWindowKeys unset")
     // under normalizeFirst the frozen benchmark artifacts must see the
     // same canonical form the arriving docs are folded into —
     // normalizing the corpus but not the benchmark would silently

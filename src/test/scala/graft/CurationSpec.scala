@@ -497,6 +497,23 @@ class CurationSpec extends SparkSpec {
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
     assert(viaFlag == viaPre,
       "normalizeFirst must equal the pipeline over withNormalizedText inputs")
+
+    // the driver ships the same release: curateCorpus under
+    // normalizeFirst returns the survivors (their normalized cleaned
+    // text, in training order) and the audit of curateCorpus over
+    // withNormalizedText inputs
+    def shipped(plan: CurationPlan, c: DataFrame, b: DataFrame) = {
+      val r = TrainingSet.curateCorpus(c, b, normBanded, emptyEmb, plan).result
+      (r.docs.collect().map(_.toSeq).toSeq, r.audit)
+    }
+    val (docsPre, auditPre) = shipped(CurationPlan(spanCut = Some(SpanCut())),
+      TextAnalysis.withNormalizedText(corpusV), TextAnalysis.withNormalizedText(benchV))
+    val (docsFlag, auditFlag) = shipped(
+      CurationPlan(spanCut = Some(SpanCut(normalizeFirst = true))), corpusV, benchV)
+    assert(docsFlag.nonEmpty && docsFlag == docsPre,
+      s"curateCorpus(normalizeFirst) survivors ≠ pre-normalized run: $docsFlag vs $docsPre")
+    assert(auditFlag == auditPre,
+      s"curateCorpus(normalizeFirst) audit ≠ pre-normalized run: $auditFlag vs $auditPre")
   }
 
   test("charTokens carries the spaceless-script cut into the v2 release pipeline") {
@@ -665,5 +682,16 @@ class CurationSpec extends SparkSpec {
       CurationPlan(spanCut = Some(SpanCut()))).count() == 3L)
     assert(TrainingSet.curationManifest(corpusV, benchV, normBanded, emptyEmb,
       CurationPlan(spanCut = Some(SpanCut(normalizeFirst = true)))).count() == 3L)
+    // the driver ships the folded text: every curateCorpus survivor
+    // under normalizeFirst carries its doc's normalized form, which
+    // differs from the raw capitalized one on this corpus
+    def texts(df: DataFrame) =
+      df.select("doc_id", "text").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val raw = texts(corpusV)
+    val folded = texts(TextAnalysis.withNormalizedText(corpusV))
+    val shippedText = texts(TrainingSet.curateCorpus(corpusV, benchV, normBanded, emptyEmb,
+      CurationPlan(spanCut = Some(SpanCut(normalizeFirst = true)))).result.docs)
+    assert(shippedText.nonEmpty && shippedText.forall { case (id, t) =>
+      t == folded(id) && t != raw(id) }, s"survivors must ship normalized text: $shippedText")
   }
 }

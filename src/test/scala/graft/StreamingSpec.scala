@@ -1397,6 +1397,11 @@ class StreamingSpec extends SparkSpec {
         if (r.isNullAt(3)) None else Some(r.getDouble(3)), r.getString(4))).toSeq
     assert(got == want,
       s"stream gate ≠ batch X90: first diff ${got.zip(want).find(p => p._1 != p._2)}")
+    // the gate has no span channel: a span config is refused, not ignored
+    val noSpan = intercept[IllegalArgumentException](StreamOps.decontaminationGateStream(
+      stream, bench, benchBanded, benchEmb, outDir, ckpt,
+      DeconConfig(dedup = cfg, maxSpanTokens = Some(30))))
+    assert(noSpan.getMessage.contains("maxSpanTokens"), noSpan.getMessage)
     // non-vacuous: the replay must exercise both verdicts
     assert(got.exists(_._5 == "drop") && got.exists(_._5 == "keep"),
       s"fixture must produce both verdicts: ${got.map(_._5).distinct}")
@@ -1610,6 +1615,13 @@ class StreamingSpec extends SparkSpec {
       writeChunk(tail2, srcDir, "chunk4")
       query.processAllAvailable()
     } finally query.stop()
+    // the incremental cut always keys windows by hash: the flag is
+    // refused, not ignored
+    val noHashFlag = intercept[IllegalArgumentException](StreamOps.curationIngestStreamV2(
+      StreamOps.documentsStream(spark, srcDir.toString), corpus, idxDir,
+      keysDir, bench, benchBanded, outDir, ckpt,
+      spanCut = SpanCut(hashWindowKeys = true)))
+    assert(noHashFlag.getMessage.contains("hashWindowKeys"), noHashFlag.getMessage)
     // batch twin: span-cut curationManifest over (clean seed ∪ all new) with
     // the pairwise min-id rule, decon near-dup channel from the same
     // frozen benchmark index over the UNION-cleaned text, stage-2
