@@ -478,12 +478,25 @@ object Extras {
     * X30 report as a stored artifact; the X30 declared query and X90's
     * verbatim channel share one corpus shingle pass.
     */
-  private def contaminationTable(c: Catalog, n: Int = 5): DataFrame =
-    stampedArtifact(c, "contamination", s"contamination:v1:$n") {
+  private def contaminationTable(c: Catalog): DataFrame =
+    stampedArtifact(c, "contamination", contaminationKey) {
       TextAnalysis.contaminationScores(
         c.documents.filter(col("source") =!= "src0"),
-        c.documents.filter(col("source") === "src0"), n)
+        c.documents.filter(col("source") === "src0"), X93Plan.decon.n)
     }.orderBy("doc_id")
+
+  /** The stamp keys of the three channel artifacts X93 reads, each
+    * keyed on the [[X93Plan]] config it is computed under — so a plan
+    * default change re-keys the channels together with the manifest.
+    */
+  private[graft] def contaminationKey: String = s"contamination:v1:${X93Plan.decon.n}"
+  private[graft] def crossNearDupsKey: String = pairsKey("xnd", X93Plan.decon.dedup)
+  private[graft] def vpairsKey: String =
+    s"${pairsKey("vpairs", X93Plan.corpusDedup)}:${X93Plan.corpusDedup.maxBucket}"
+
+  private def pairsKey(prefix: String, cfg: graft.text.MinHashConfig): String =
+    s"$prefix:v${MinHashDedup.SignatureVersion}:${cfg.shingleSize}:" +
+      s"${cfg.numHashes}:${cfg.bands}:${cfg.threshold}"
 
   /** Per-corpus persisted benchmark near-dup pairs — the X46 report as
     * a stored artifact: the banded candidate + exact-verify chain runs
@@ -491,17 +504,13 @@ object Extras {
     * near-dup channel read the same rows. Values are unchanged (the
     * read re-applies the (i, j) order the hash expects).
     */
-  private def crossNearDupsTable(c: Catalog): DataFrame = {
-    val cfg = graft.text.MinHashConfig(threshold = 0.5)
-    stampedArtifact(c, "xnd",
-      s"xnd:v${MinHashDedup.SignatureVersion}:${cfg.shingleSize}:" +
-        s"${cfg.numHashes}:${cfg.bands}:${cfg.threshold}") {
+  private def crossNearDupsTable(c: Catalog): DataFrame =
+    stampedArtifact(c, "xnd", crossNearDupsKey) {
       MinHashDedup.crossNearDupsFromBanded(
         c.documents.filter(col("source") =!= "src0"),
         c.documents.filter(col("source") === "src0"),
-        bandedTable(c), cfg)
+        bandedTable(c), X93Plan.decon.dedup)
     }.orderBy("i", "j")
-  }
 
   /** Per-corpus persisted VERIFIED near-dup pair table — the central
     * artifact a production dedup run publishes (banded candidates +
@@ -515,14 +524,10 @@ object Extras {
     * unchanged by persistence (the pair table is deterministic; the
     * oracles recompute it from the banded mirror and stay green).
     */
-  private def vpairsTable(c: Catalog): DataFrame = {
-    val cfg = graft.text.MinHashConfig()
-    stampedArtifact(c, "vpairs",
-      s"vpairs:v${MinHashDedup.SignatureVersion}:${cfg.shingleSize}:" +
-        s"${cfg.numHashes}:${cfg.bands}:${cfg.threshold}:${cfg.maxBucket}") {
-      MinHashDedup.verifiedPairsFromBanded(c.documents, bandedTable(c), cfg)
+  private def vpairsTable(c: Catalog): DataFrame =
+    stampedArtifact(c, "vpairs", vpairsKey) {
+      MinHashDedup.verifiedPairsFromBanded(c.documents, bandedTable(c), X93Plan.corpusDedup)
     }.orderBy("i", "j")
-  }
 
   /** Per-corpus persisted IVF index, built once (same stamp scheme as
     * [[sigTable]]) — X14 then measures the partition-pruned PROBE its

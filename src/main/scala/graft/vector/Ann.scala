@@ -1,6 +1,6 @@
 package graft.vector
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions.dot
@@ -12,18 +12,20 @@ import graft.functions.VectorFunctions.dot
   *     codegen'd dot product, top-k via TakeOrderedAndProject (per-
   *     partition heaps, k rows to the driver). The correctness baseline
   *     and fine up to ~10^8 vectors × small k.
-  *   - [[annTopK]]: sign-random-projection LSH — each vector is bucketed
-  *     by the sign pattern of `nPlanes` fixed hyperplane projections;
-  *     a query probes every bucket within Hamming distance `probeRadius`
+  *   - [[writeIndex]] + [[probeIndex]]: sign-random-projection LSH —
+  *     each vector is bucketed by the sign pattern of `nPlanes` fixed
+  *     hyperplane projections and persisted partitioned by bucket; a
+  *     query probes every bucket within Hamming distance `probeRadius`
   *     of its own (multi-probe LSH), then scores candidates exactly.
-  *     At scale the bucketed table is computed once (write-side) and the
-  *     probe is a bucket-pruned scan — candidates shrink by ~2^nPlanes /
-  *     sum_{d<=r} C(nPlanes, d) versus brute force.
+  *     Candidates shrink by ~2^nPlanes / sum_{d<=r} C(nPlanes, d)
+  *     versus brute force.
   *
   * Hyperplanes are deterministic (fixed-seed Gaussian) so bucketing is
   * reproducible across runs and engines.
   */
 object Ann {
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Deterministic Gaussian hyperplanes: nPlanes × dim float32. */
   def hyperplanes(nPlanes: Int, dim: Int, seed: Long = 42L): Array[Array[Float]] = {
@@ -40,6 +42,15 @@ object Ann {
   def dimOf(embeddings: DataFrame): Int =
     embeddings.select(size(col("embedding"))).first().getInt(0)
 
+  /** The single-probe cosine ranking every one-vector search ends in:
+    * `round(probe · embedding, 6)` descending, `vec_id` tiebreak, first
+    * `k` — (vec_id, cos) rows, reproducible across engines.
+    */
+  private[vector] def topKByCos(cands: DataFrame, probe: Column, k: Int): DataFrame =
+    cands.select(col("vec_id"), round(dot(probe, col("embedding")), 6).as("cos"))
+      .orderBy(col("cos").desc, col("vec_id"))
+      .limit(k)
+
   /** Exact top-k by cosine (dot product on unit vectors) for one probe
     * vector identified by `probeId`.
     */
@@ -47,11 +58,8 @@ object Ann {
     val probe = broadcast(
       embeddings.filter(col("vec_id") === probeId)
         .select(col("embedding").as("probe_emb")))
-    embeddings.filter(col("vec_id") =!= probeId)
-      .crossJoin(probe)
-      .select(col("vec_id"), round(dot(col("probe_emb"), col("embedding")), 6).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
+    topKByCos(embeddings.filter(col("vec_id") =!= probeId).crossJoin(probe),
+      col("probe_emb"), k)
   }
 
   /** Add an LSH `bucket` column: bit b = sign(v · plane_b). Map-side
@@ -67,77 +75,35 @@ object Ann {
     embeddings.withColumn("bucket", bucket)
   }
 
-  /** Approximate top-k: probe all buckets within `probeRadius` bit flips
-    * of the query's bucket, score candidates exactly, take top-k.
-    * probeRadius = nPlanes degenerates to exact brute force (all buckets
-    * probed) — the property the tests pin.
+  /** One side of a pair scan: (vec_id, embedding) renamed to `id`/`emb`. */
+  private def side(embeddings: DataFrame, id: String, emb: String): DataFrame =
+    embeddings.select(col("vec_id").as(id), col("embedding").as(emb))
+
+  /** The exact pair verify: (i, j, ea, eb) rows → (i, j, cos) for the
+    * pairs whose dot beats `threshold`, cos rounded to 6 dp. Unordered;
+    * every caller ends in its own `orderBy("i", "j")`.
     */
-  def annTopK(
-      embeddings: DataFrame,
-      probeId: Long,
-      k: Int,
-      nPlanes: Int = 8,
-      probeRadius: Int = 2,
-      seed: Long = 42L): DataFrame = {
-    val planes = hyperplanes(nPlanes, dimOf(embeddings), seed)
-    val bucketed = withBucket(embeddings, planes)
-    val probe = broadcast(
-      bucketed.filter(col("vec_id") === probeId)
-        .select(col("embedding").as("probe_emb"), col("bucket").as("probe_bucket")))
-    val hamming = bit_count(col("bucket").bitwiseXOR(col("probe_bucket")))
-    bucketed.filter(col("vec_id") =!= probeId)
-      .crossJoin(probe)
-      .filter(hamming <= probeRadius) // bucket pruning — the ANN step
-      .select(col("vec_id"), round(dot(col("probe_emb"), col("embedding")), 6).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
-  }
+  private def verified(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs.withColumn("dp", dot(col("ea"), col("eb")))
+      .filter(col("dp") > threshold)
+      .select(col("i"), col("j"), round(col("dp"), 6).as("cos"))
+
+  /** [[verified]] over candidate (i, j) ids: the embeddings are joined
+    * back for the candidates only.
+    */
+  private[vector] def exactRerank(
+      cand: DataFrame, embeddings: DataFrame, threshold: Double): DataFrame =
+    verified(cand.join(side(embeddings, "i", "ea"), Seq("i"))
+      .join(side(embeddings, "j", "eb"), Seq("j")), threshold)
 
   /** Exact all-pairs cosine above `threshold` — global embedding
-    * near-dup detection (no label blocking). The LSH-bucketed variant
-    * joins on `bucket` instead of the cartesian at scale.
+    * near-dup detection (no label blocking). [[bandedPairsAbove]] is
+    * the scale path.
     */
-  def allPairsAbove(embeddings: DataFrame, threshold: Double): DataFrame = {
-    val a = embeddings.select(col("vec_id").as("i"), col("embedding").as("ea"))
-    val b = embeddings.select(col("vec_id").as("j"), col("embedding").as("eb"))
-    a.crossJoin(b)
-      .filter(col("i") < col("j"))
-      .withColumn("dp", dot(col("ea"), col("eb")))
-      .filter(col("dp") > threshold)
-      .select(col("i"), col("j"), round(col("dp"), 6).as("cos"))
+  def allPairsAbove(embeddings: DataFrame, threshold: Double): DataFrame =
+    verified(side(embeddings, "i", "ea").crossJoin(side(embeddings, "j", "eb"))
+      .filter(col("i") < col("j")), threshold)
       .orderBy("i", "j")
-  }
-
-  /** LSH-bucketed near-dup candidates: pairs sharing a bucket, scored
-    * exactly — the scale path for [[allPairsAbove]]. Recall is tested
-    * against the exact pairs (property test, not oracle).
-    */
-  def bucketedPairsAbove(
-      embeddings: DataFrame,
-      threshold: Double,
-      nPlanes: Int = 6,
-      seed: Long = 42L): DataFrame = {
-    val bucketed = withBucket(embeddings, hyperplanes(nPlanes, dimOf(embeddings), seed))
-    val a = bucketed.select(col("vec_id").as("i"), col("embedding").as("ea"), col("bucket"))
-    val b = bucketed.select(col("vec_id").as("j"), col("embedding").as("eb"), col("bucket"))
-    a.join(b, Seq("bucket"))
-      .filter(col("i") < col("j"))
-      .withColumn("dp", dot(col("ea"), col("eb")))
-      .filter(col("dp") > threshold)
-      .select(col("i"), col("j"), round(col("dp"), 6).as("cos"))
-      .orderBy("i", "j")
-  }
-
-  /** Banding parameters for a target recall at the decision threshold:
-    * enough planes per band that a uniform corpus's expected bucket size
-    * stays ≤ `targetBucket` (nPlanes ≥ log2(N / targetBucket), floor 4),
-    * then enough bands that recall 1-(1-p^nPlanes)^nBands at cosine
-    * `simThreshold` (p = 1-acos(s)/π) meets `targetRecall`. This is the
-    * knob the 4×16 default silently got wrong beyond ~65k vectors: more
-    * corpus needs MORE planes (smaller buckets) and correspondingly more
-    * bands (recall), not a tighter cap.
-    */
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Bands needed for `targetRecall` at cosine `simThreshold` with
     * `nPlanes` planes per band (1-(1-p^nPlanes)^nBands ≥ target,
@@ -183,6 +149,15 @@ object Ann {
     nBands
   }
 
+  /** Banding parameters for a target recall at the decision threshold:
+    * enough planes per band that a uniform corpus's expected bucket size
+    * stays ≤ `targetBucket` (nPlanes ≥ log2(N / targetBucket), floor 4),
+    * then enough bands that recall 1-(1-p^nPlanes)^nBands at cosine
+    * `simThreshold` (p = 1-acos(s)/π) meets `targetRecall`. This is the
+    * knob the 4×16 default silently got wrong beyond ~65k vectors: more
+    * corpus needs MORE planes (smaller buckets) and correspondingly more
+    * bands (recall), not a tighter cap.
+    */
   def recommendBanding(
       corpusSize: Long,
       simThreshold: Double,
@@ -193,13 +168,6 @@ object Ann {
     (nPlanes, cappedBandsFor(nPlanes, simThreshold, targetRecall, maxBands))
   }
 
-  /** Resolve (nPlanes, nBands, maxBucket) for a banded self-join,
-    * deriving ONLY the parameters the caller left at 0 (an explicit
-    * value is always honored — a persisted index built with it depends
-    * on the exact geometry). Costs one `count()` job iff anything is
-    * derived. Shared by [[bandedPairsAbove]] and
-    * [[Quantize.bandedQuantizedPairsAbove]].
-    */
   /** Expected banded candidate rows (WITH band multiplicity) as a
     * fraction of the n²/2 cartesian, for an uncorrelated pair (collision
     * probability 1/2 per plane): nBands / 2^nPlanes. This is pure
@@ -230,6 +198,13 @@ object Ann {
       f"prune at threshold=$threshold with this recall; routing to the exact " +
       "scan (pass forceBanded=true to override)")
 
+  /** Resolve (nPlanes, nBands, maxBucket) for a banded self-join,
+    * deriving ONLY the parameters the caller left at 0 (an explicit
+    * value is always honored — a persisted index built with it depends
+    * on the exact geometry). Costs one `count()` job iff anything is
+    * derived. Shared by [[bandedPairsAbove]] and
+    * [[Quantize.bandedQuantizedPairsAbove]].
+    */
   private[vector] def resolveBanding(
       embeddings: DataFrame,
       threshold: Double,
@@ -323,12 +298,8 @@ object Ann {
     // (the dot is a cheap codegen'd kernel) but the expensive shuffle —
     // the distinct — then runs on the few pairs that beat the
     // threshold, not on the full candidate mass
-    graft.ops.BucketedPairs.cappedCandidatePairs(members, cap)
-      .join(embeddings.select(col("vec_id").as("i"), col("embedding").as("ea")), Seq("i"))
-      .join(embeddings.select(col("vec_id").as("j"), col("embedding").as("eb")), Seq("j"))
-      .withColumn("dp", dot(col("ea"), col("eb")))
-      .filter(col("dp") > threshold)
-      .select(col("i"), col("j"), round(col("dp"), 6).as("cos"))
+    exactRerank(graft.ops.BucketedPairs.cappedCandidatePairs(members, cap),
+      embeddings, threshold)
       .distinct()
       .orderBy("i", "j")
   }
@@ -385,13 +356,7 @@ object Ann {
       .withColumn("__rj", row_number().over(wJ))
       .filter(col("__ri") <= maxPairsPerVec && col("__rj") <= maxPairsPerVec)
       .select("i", "j")
-    budgeted
-      .join(embeddings.select(col("vec_id").as("i"), col("embedding").as("ea")), Seq("i"))
-      .join(embeddings.select(col("vec_id").as("j"), col("embedding").as("eb")), Seq("j"))
-      .withColumn("dp", dot(col("ea"), col("eb")))
-      .filter(col("dp") > threshold)
-      .select(col("i"), col("j"), round(col("dp"), 6).as("cos"))
-      .orderBy("i", "j")
+    exactRerank(budgeted, embeddings, threshold).orderBy("i", "j")
   }
 
   // ---- persisted index ----------------------------------------------
@@ -493,7 +458,7 @@ object Ann {
   /** Per-query top-k of a scored (qid, vec_id, cos) frame: rounded-score
     * order, vec_id tiebreak, window partitioned by the query id.
     */
-  private def topKPerQuery(scored: DataFrame, k: Int): DataFrame = {
+  private[vector] def topKPerQuery(scored: DataFrame, k: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
     scored
@@ -539,12 +504,11 @@ object Ann {
       seed: Long = 42L): DataFrame = {
     val planes = hyperplanes(nPlanes, probeVec.length, seed)
     val buckets = bucketsWithin(bucketOf(probeVec, planes), nPlanes, probeRadius)
-    Ivf.probedVectorsAt(spark, s"$path/vectors", buckets, partCol = "bucket")
-      // → PartitionFilters over the probed dirs, which are the scan's roots
-      .filter(col("bucket").isin(buckets: _*))
-      .select(col("vec_id"), round(dot(typedLit(probeVec), col("embedding")), 6).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
+    topKByCos(
+      Ivf.probedVectorsAt(spark, s"$path/vectors", buckets, partCol = "bucket")
+        // → PartitionFilters over the probed dirs, which are the scan's roots
+        .filter(col("bucket").isin(buckets: _*)),
+      typedLit(probeVec), k)
   }
 
   /** Semantic eval-contamination audit: split the embedding table with

@@ -10,11 +10,12 @@ import graft.sources.{Sinks, Store}
   * cluster-pruned alternative to the sign-LSH path in [[Ann]].
   *
   * Build: pick `nLists` centroid vectors (deterministic hash-based
-  * sample of the corpus — at 100 TB a k-means refinement pass over a
-  * sample would slot in here), assign every vector to its nearest
-  * centroid by dot product: one broadcast of the centroids + one
-  * map-side argmax, then persist partitioned by `list_id` so a probe
-  * reads only its lists.
+  * sample of the corpus, optionally refined by `kmeansIters` rounds of
+  * spherical Lloyd — [[refineCentroids]], whose `sampleFraction` trains
+  * on a sample at scale), assign every vector to its nearest centroid
+  * by dot product: one broadcast of the centroids + one map-side
+  * argmax, then persist partitioned by `list_id` so a probe reads only
+  * its lists.
   *
   * Query: score the probe against the centroids, take the `nProbe`
   * nearest lists, exact-score only vectors in those lists.
@@ -80,13 +81,18 @@ object Ivf {
       sort_array(collect_list(struct(col("centroid_id"), col("centroid")))).as("cents"))
     embeddings
       .crossJoin(broadcast(centsArr))
-      .withColumn("best",
-        org.apache.spark.sql.GraftColumnBridge.column(
-          graft.functions.BestCentroid(
-            org.apache.spark.sql.GraftColumnBridge.expression(col("embedding")),
-            org.apache.spark.sql.GraftColumnBridge.expression(col("cents")),
-            l2)))
+      .withColumn("best", bestCentroid(l2))
   }
+
+  /** The codegen'd [[graft.functions.BestCentroid]] winner of
+    * `embedding` over the candidate array column `cents`.
+    */
+  private def bestCentroid(l2: Boolean): Column =
+    org.apache.spark.sql.GraftColumnBridge.column(
+      graft.functions.BestCentroid(
+        org.apache.spark.sql.GraftColumnBridge.expression(col("embedding")),
+        org.apache.spark.sql.GraftColumnBridge.expression(col("cents")),
+        l2))
 
   /** nLists at which BUILD-side assignment switches to the two-level
     * [[assignHierarchical]] path: with the nLists ∝ N sizing contract
@@ -212,12 +218,7 @@ object Ivf {
       .withColumn("cents",
         when(size(col("cents")) > 0, col("cents"))
           .otherwise(flatten(col("groups"))))
-      .withColumn("best",
-        org.apache.spark.sql.GraftColumnBridge.column(
-          graft.functions.BestCentroid(
-            org.apache.spark.sql.GraftColumnBridge.expression(col("embedding")),
-            org.apache.spark.sql.GraftColumnBridge.expression(col("cents")),
-            l2)))
+      .withColumn("best", bestCentroid(l2))
       .select(col("vec_id"), col("embedding"), col("best.id").as("list_id"))
   }
 
@@ -242,33 +243,38 @@ object Ivf {
     withBest(embeddings, cents, l2 = true)
       .select(col("vec_id"), col("embedding"), col("best.id").as("list_id"))
 
-  /** Plain (Euclidean) k-means refinement — [[assignL2]] then the
-    * per-list elementwise mean, NOT renormalized: the mean is the
-    * L2-optimal center, so each round can only shrink the within-list
-    * squared mass, which is exactly what the residual PQ tier
-    * quantizes ([[Pq.residualGain]] < 1 by construction once a
-    * global-mean-dominated start has been refined). Lists that go
-    * empty keep their previous centroid. Same per-round cost shape as
-    * [[refineCentroids]].
+  /** The Lloyd training pool: the corpus, or a uniform `sampleFraction`
+    * sample of it (the standard 100 TB move: centroid quality needs
+    * samples, not the corpus).
     */
-  def refineCentroidsL2(
-      embeddings: DataFrame,
-      cents: DataFrame,
-      iters: Int,
-      dim: Int,
-      sampleFraction: Double = 1.0,
-      seed: Long = 42L): DataFrame = {
-    val pool =
-      if (sampleFraction >= 1.0) embeddings
-      else embeddings.sample(withReplacement = false, sampleFraction, seed)
+  private[vector] def samplePool(
+      embeddings: DataFrame, sampleFraction: Double, seed: Long): DataFrame =
+    if (sampleFraction >= 1.0) embeddings
+    else embeddings.sample(withReplacement = false, sampleFraction, seed)
+
+  /** The Lloyd loop both refinements run: `iters` rounds of `assignTo`
+    * over the [[samplePool]], then the per-list element-wise mean as a
+    * `dim`-double array, mapped by `finish` to the next float centroid.
+    * Lists that go empty keep their previous centroid.
+    *
+    * Scale shape: each round is the map-side assign plus ONE
+    * partial-aggregated shuffle of `nLists` × `dim` averages — the mean
+    * is computed as `dim` codegen'd avg(element_at) columns, never an
+    * explode.
+    */
+  private def lloyd(embeddings: DataFrame, cents: DataFrame, iters: Int, dim: Int,
+      sampleFraction: Double, seed: Long)(
+      assignTo: (DataFrame, DataFrame) => DataFrame, finish: Column => Column): DataFrame = {
+    val pool = samplePool(embeddings, sampleFraction, seed)
     var cur = cents
     for (_ <- 0 until iters) {
       val avgs = (0 until dim).map(i => avg(element_at(col("embedding"), i + 1)).as(s"m$i"))
-      val means = assignL2(pool, cur)
+      val means = assignTo(pool, cur)
         .groupBy("list_id")
         .agg(avgs.head, avgs.tail: _*)
         .select(col("list_id").as("centroid_id"),
-          array((0 until dim).map(i => col(s"m$i").cast("float")): _*).as("next"))
+          array((0 until dim).map(i => col(s"m$i")): _*).as("mean"))
+        .select(col("centroid_id"), finish(col("mean")).as("next"))
       cur = cur.select(col("centroid_id"), col("centroid").as("prev"))
         .join(means, Seq("centroid_id"), "left")
         .select(col("centroid_id"), coalesce(col("next"), col("prev")).as("centroid"))
@@ -276,17 +282,29 @@ object Ivf {
     cur
   }
 
+  /** Plain (Euclidean) k-means refinement — [[assignL2]] then the
+    * per-list element-wise mean, NOT renormalized: the mean is the
+    * L2-optimal center, so each round can only shrink the within-list
+    * squared mass, which is exactly what the residual PQ tier
+    * quantizes ([[Pq.residualGain]] < 1 by construction once a
+    * global-mean-dominated start has been refined). Same [[lloyd]]
+    * loop as [[refineCentroids]].
+    */
+  def refineCentroidsL2(
+      embeddings: DataFrame,
+      cents: DataFrame,
+      iters: Int,
+      dim: Int,
+      sampleFraction: Double = 1.0,
+      seed: Long = 42L): DataFrame =
+    lloyd(embeddings, cents, iters, dim, sampleFraction, seed)(
+      assignL2, mean => transform(mean, _.cast("float")))
+
   /** Spherical k-means (Lloyd) refinement of the hash-sampled centroids:
-    * `iters` rounds of assign → per-list element-wise mean → renormalize
-    * to the unit sphere (so the dot-product argmax stays a cosine
-    * argmax). Lists that go empty keep their previous centroid.
-    *
-    * Scale shape: each round is the map-side [[assign]] plus ONE
-    * partial-aggregated shuffle of `nLists` × `dim` averages — the mean
-    * is computed as `dim` codegen'd avg(element_at) columns, never an
-    * explode. `sampleFraction` < 1 runs Lloyd on a uniform sample (the
-    * standard 100 TB move: centroid quality needs samples, not the
-    * corpus).
+    * `iters` [[lloyd]] rounds of [[assign]] → per-list element-wise mean
+    * → renormalize to the unit sphere (so the dot-product argmax stays a
+    * cosine argmax; a zero mean stays zero). `sampleFraction` < 1 runs
+    * Lloyd on a uniform sample.
     */
   def refineCentroids(
       embeddings: DataFrame,
@@ -294,27 +312,21 @@ object Ivf {
       iters: Int,
       dim: Int,
       sampleFraction: Double = 1.0,
-      seed: Long = 42L): DataFrame = {
-    val pool =
-      if (sampleFraction >= 1.0) embeddings
-      else embeddings.sample(withReplacement = false, sampleFraction, seed)
-    var cur = cents
-    for (_ <- 0 until iters) {
-      val avgs = (0 until dim).map(i => avg(element_at(col("embedding"), i + 1)).as(s"m$i"))
-      val means = assign(pool, cur)
-        .groupBy("list_id")
-        .agg(avgs.head, avgs.tail: _*)
-        .select(col("list_id").as("centroid_id"),
-          array((0 until dim).map(i => col(s"m$i")): _*).as("mean"))
-      val norm = sqrt(aggregate(col("mean"), lit(0.0), (s, x) => s + x * x))
+      seed: Long = 42L): DataFrame =
+    lloyd(embeddings, cents, iters, dim, sampleFraction, seed)(assign, { mean =>
+      val norm = sqrt(aggregate(mean, lit(0.0), (s, x) => s + x * x))
       val safeNorm = when(norm > 0, norm).otherwise(lit(1.0))
-      val refined = means.select(col("centroid_id"),
-        transform(col("mean"), x => (x / safeNorm).cast("float")).as("next"))
-      cur = cur.select(col("centroid_id"), col("centroid").as("prev"))
-        .join(refined, Seq("centroid_id"), "left")
-        .select(col("centroid_id"), coalesce(col("next"), col("prev")).as("centroid"))
-    }
-    cur
+      transform(mean, x => (x / safeNorm).cast("float"))
+    })
+
+  /** The hash-sampled centroids, refined by `kmeansIters` spherical
+    * Lloyd rounds over the whole corpus when positive.
+    */
+  private def trainedCentroids(
+      embeddings: DataFrame, nLists: Int, kmeansIters: Int): DataFrame = {
+    val cents0 = centroids(embeddings, nLists)
+    if (kmeansIters <= 0) cents0
+    else refineCentroids(embeddings, cents0, kmeansIters, dim = Ann.dimOf(embeddings))
   }
 
   /** Top-k by cosine for `probeId`, searching only the `nProbe` lists
@@ -327,10 +339,7 @@ object Ivf {
       nLists: Int = 16,
       nProbe: Int = 4,
       kmeansIters: Int = 0): DataFrame = {
-    val cents0 = centroids(embeddings, nLists)
-    val cents =
-      if (kmeansIters <= 0) cents0
-      else refineCentroids(embeddings, cents0, kmeansIters, dim = Ann.dimOf(embeddings))
+    val cents = trainedCentroids(embeddings, nLists, kmeansIters)
     val indexed = assign(embeddings, cents)
     val probeEmb = embeddings.filter(col("vec_id") === probeId)
       .select(col("embedding").as("probe_emb"))
@@ -340,13 +349,12 @@ object Ivf {
         .orderBy(col("cscore").desc, col("centroid_id"))
         .limit(nProbe)
         .select(col("centroid_id").as("list_id")))
-    indexed
-      .join(probeLists, Seq("list_id")) // list pruning — the IVF step
-      .filter(col("vec_id") =!= probeId)
-      .crossJoin(broadcast(probeEmb))
-      .select(col("vec_id"), round(dot(col("probe_emb"), col("embedding")), 6).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
+    Ann.topKByCos(
+      indexed
+        .join(probeLists, Seq("list_id")) // list pruning — the IVF step
+        .filter(col("vec_id") =!= probeId)
+        .crossJoin(broadcast(probeEmb)),
+      col("probe_emb"), k)
   }
 
   // ---- persisted index ----------------------------------------------
@@ -355,7 +363,7 @@ object Ivf {
   // form pays the assignment pass ONCE at build time and stores the
   // corpus partitioned by list_id, so every probe reads nProbe/nLists
   // of the data plus a tiny centroids file — via DIRECT list-dir paths
-  // (probedVectors below), so even the LISTING cost is O(nProbe), not
+  // (probedVectorsAt below), so even the LISTING cost is O(nProbe), not
   // O(nLists).
 
   /** Build and persist the IVF index: `path/centroids` (nLists rows) and
@@ -366,11 +374,8 @@ object Ivf {
       path: String,
       nLists: Int = 16,
       kmeansIters: Int = 0): Unit = {
-    val cents0 = centroids(embeddings, nLists)
-    val cents =
-      if (kmeansIters <= 0) cents0
-      else refineCentroids(embeddings, cents0, kmeansIters, dim = Ann.dimOf(embeddings))
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
+    trainedCentroids(embeddings, nLists, kmeansIters)
+      .write.mode("overwrite").parquet(s"$path/centroids")
     val saved = embeddings.sparkSession.read.parquet(s"$path/centroids")
     // Sinks.parquetCompacted clusters by list_id before the partitioned
     // write (the append-path discipline): without it every write task
@@ -486,21 +491,14 @@ object Ivf {
       k: Int,
       nProbe: Int = 4): DataFrame = {
     val probe = typedLit(probeVec)
-    val lists = spark.read.parquet(s"$path/centroids")
-      .select(col("centroid_id"), dot(probe, col("centroid")).as("cs"))
-      .orderBy(col("cs").desc, col("centroid_id"))
-      .limit(nProbe)
-      .collect().map(_.getLong(0)).toSeq
+    val lists = nearestListIds(spark, path, probe, nProbe)
     val cand = Store.completedDirs(spark, s"$path/delta")
       .map(d => probedVectorsAt(spark, d, lists,
           schemaRoot = Some(s"$path/vectors"))
         .select(col("vec_id"), col("embedding")))
-      .foldLeft(probedVectors(spark, path, lists)
+      .foldLeft(probedVectorsAt(spark, s"$path/vectors", lists)
         .select(col("vec_id"), col("embedding")))(_ unionByName _)
-    Store.withoutDeleted(spark, s"$path/tombstone", cand, "vec_id")
-      .select(col("vec_id"), round(dot(probe, col("embedding")), 6).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
+    Ann.topKByCos(Store.withoutDeleted(spark, s"$path/tombstone", cand, "vec_id"), probe, k)
   }
 
   /** Fold the completed streaming deltas into the base vectors layout —
@@ -547,40 +545,31 @@ object Ivf {
       Sinks.parquetCompacted(_, _, partitionBy = Seq("list_id")),
       failpoint)
 
-  /** The probed slice of a persisted index's vectors table, read by
-    * DIRECT list-directory paths instead of a filter over the whole
-    * partitioned layout. Both plans prune to the same files, but the
-    * filter form must LIST every `list_id=` directory before pruning —
-    * with nLists ∝ N that listing grows linearly in the corpus (4 800
-    * dirs at the bench's 100× point made probe wall 0.43 → 2.81 s with
-    * CONSTANT data scanned), and on an object store each dir is a
-    * round-trip. The probe knows its nProbe list ids up front, so the
-    * read is constructed from exactly those paths (`basePath` keeps
-    * list_id as a column): listing cost is O(nProbe) — independent of
-    * nLists — which is what lets the nLists ∝ N sizing contract hold
-    * at 100 TB. Lists emptied by k-means refinement have no directory;
-    * they contribute no candidates either way, so they are skipped by
-    * an O(nProbe) existence check rather than failing the read. The
-    * check requires at least one DATA file, not mere directory
-    * existence: an interrupted rebuild can leave a list directory that
-    * exists but holds no parquet, and a read planned over only such
-    * dirs dies on schema inference instead of returning zero
-    * candidates — still O(nProbe) metadata calls (one listStatus per
-    * probed dir, which the scan would pay anyway).
-    */
-  private def probedVectors(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      lists: Seq[Long]): DataFrame =
-    probedVectorsAt(spark, s"$path/vectors", lists)
-
   /** The slice of a `key=value`-partitioned vectors layout under
-    * `vectorsRoot` whose `partCol` is one of `values`, read by direct
-    * `partCol=<v>` paths ([[probedVectors]]'s contract: listing
-    * O(|values|), lists without data skipped). One reader serves both
-    * index layouts: the IVF `list_id=` layout (the base index here and
-    * the streaming-ingest delta directories, [[probeIndexWithDeltas]])
-    * and the sign-LSH `bucket=` layout of [[Ann.probeIndex]].
+    * `vectorsRoot` whose `partCol` is one of `values`, read by DIRECT
+    * `partCol=<v>` paths instead of a filter over the whole partitioned
+    * layout. Both plans prune to the same files, but the filter form
+    * must LIST every partition directory before pruning — with nLists ∝
+    * N that listing grows linearly in the corpus (4 800 dirs at the
+    * bench's 100× point made probe wall 0.43 → 2.81 s with CONSTANT
+    * data scanned), and on an object store each dir is a round-trip.
+    * The probe knows its values up front, so the read is constructed
+    * from exactly those paths (`basePath` keeps `partCol` as a column):
+    * listing cost is O(|values|) — independent of nLists — which is
+    * what lets the nLists ∝ N sizing contract hold at 100 TB. Lists
+    * emptied by k-means refinement have no directory; they contribute
+    * no candidates either way, so they are skipped by an O(|values|)
+    * existence check rather than failing the read. The check requires
+    * at least one DATA file, not mere directory existence: an
+    * interrupted rebuild can leave a directory that exists but holds no
+    * parquet, and a read planned over only such dirs dies on schema
+    * inference instead of returning zero candidates — still one
+    * listStatus per probed dir, which the scan would pay anyway.
+    *
+    * One reader serves both index layouts: the IVF `list_id=` layout
+    * (the base index and the streaming-ingest delta directories,
+    * [[probeIndexWithDeltas]]) and the sign-LSH `bucket=` layout of
+    * [[Ann.probeIndex]].
     *
     * `schemaRoot`: where to schema-infer the EMPTY fallback frame when
     * no probed dir holds data. Delta callers pass the BASE
@@ -616,7 +605,7 @@ object Ivf {
 
   /** Top-k by cosine against a persisted index. Centroid scoring runs on
     * the (tiny) centroids file; the chosen list ids select their list
-    * directories DIRECTLY ([[probedVectors]]), so the vectors read
+    * directories DIRECTLY ([[probedVectorsAt]]), so the vectors read
     * lists and scans only the probed lists — the index is what makes
     * repeated probes cheap, and the direct-path read keeps the
     * metadata cost flat as nLists grows with the corpus.
@@ -628,18 +617,26 @@ object Ivf {
       k: Int,
       nProbe: Int = 4): DataFrame = {
     val probe = typedLit(probeVec)
-    // nProbe ids to the driver — metadata-sized, like any partition
-    // pruning value; NOT a data collect
-    val lists = spark.read.parquet(s"$path/centroids")
+    val lists = nearestListIds(spark, path, probe, nProbe)
+    Ann.topKByCos(Store.withoutDeleted(spark, s"$path/tombstone",
+      probedVectorsAt(spark, s"$path/vectors", lists), "vec_id"), probe, k)
+  }
+
+  /** The `nProbe` list ids whose centroids score highest against
+    * `probe` (centroid_id tiebreak), from the persisted centroids file —
+    * nProbe ids to the driver, metadata-sized like any partition
+    * pruning value; NOT a data collect.
+    */
+  private def nearestListIds(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      probe: Column,
+      nProbe: Int): Seq[Long] =
+    spark.read.parquet(s"$path/centroids")
       .select(col("centroid_id"), dot(probe, col("centroid")).as("cs"))
       .orderBy(col("cs").desc, col("centroid_id"))
       .limit(nProbe)
       .collect().map(_.getLong(0)).toSeq
-    Store.withoutDeleted(spark, s"$path/tombstone", probedVectors(spark, path, lists), "vec_id")
-      .select(col("vec_id"), round(dot(probe, col("embedding")), 6).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
-  }
 
   /** Batched kNN join against a persisted index — the IVF twin of
     * [[graft.vector.Ann.annKnnJoin]] for a query TABLE: every query
@@ -675,20 +672,16 @@ object Ivf {
       .localCheckpoint(true)
     // union of probed lists — metadata-sized partition-pruning values,
     // read by direct list-directory paths (listing O(|probed|), flat
-    // in nLists — see probedVectors)
+    // in nLists — see probedVectorsAt)
     val probed = qLists.select("list_id").distinct()
       .collect().map(_.getLong(0)).toSeq
     val cand = Store.withoutDeleted(spark, s"$path/tombstone",
-      probedVectors(spark, path, probed), "vec_id")
-    val kw = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-    cand
-      .join(broadcast(qLists), Seq("list_id"))
-      .filter(if (excludeSelf) col("vec_id") =!= col("qid") else lit(true))
-      .select(col("qid"), col("vec_id"),
-        round(dot(col("qv"), col("embedding")), 6).as("cos"))
-      .withColumn("rk", row_number().over(kw))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("vec_id"), col("cos"), col("rk").cast("long").as("rk"))
-      .orderBy("qid", "rk")
+      probedVectorsAt(spark, s"$path/vectors", probed), "vec_id")
+    Ann.topKPerQuery(
+      cand
+        .join(broadcast(qLists), Seq("list_id"))
+        .filter(if (excludeSelf) col("vec_id") =!= col("qid") else lit(true))
+        .select(col("qid"), col("vec_id"),
+          round(dot(col("qv"), col("embedding")), 6).as("cos")), k)
   }
 }

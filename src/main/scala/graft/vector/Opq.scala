@@ -171,9 +171,7 @@ object Opq {
       sampleFraction: Double = 1.0,
       seed: Long = 42L): DataFrame = {
     val spark = embeddings.sparkSession
-    val pool =
-      if (sampleFraction >= 1.0) embeddings
-      else embeddings.sample(withReplacement = false, sampleFraction, seed)
+    val pool = Ivf.samplePool(embeddings, sampleFraction, seed)
     var rot = identityRotation(spark, dim)
     var prev: Option[DataFrame] = None
     for (_ <- 0 until opqIters) {
@@ -195,8 +193,8 @@ object Opq {
   /** Build + persist the OPQ artifact: `$path/rotation` (i, vals —
     * part of the index identity: every stored code is a code of R·v),
     * `$path/codebook` (trained on the rotated corpus) and
-    * `$path/codes`. Same persisted-bytes discipline as
-    * [[Pq.writeIndex]]: downstream searches read the SAME
+    * `$path/codes` — [[Pq.writeIndex]] over the vectors rotated by the
+    * STORED rotation, so downstream searches read the SAME
     * rotation/codebook bytes this build wrote.
     */
   def writeIndex(
@@ -208,16 +206,10 @@ object Opq {
       dim: Int,
       opqIters: Int = 3,
       sampleFraction: Double = 1.0): Unit = {
-    val spark = embeddings.sparkSession
     trainRotation(embeddings, m, ks, dim, opqIters, iters, sampleFraction)
       .coalesce(1).write.mode("overwrite").parquet(s"$path/rotation")
-    val storedRot = spark.read.parquet(s"$path/rotation")
-    val rotated = rotateVectors(embeddings, storedRot)
-    Pq.trainCodebooks(rotated, m, ks, iters, dim)
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
-    val storedCb = spark.read.parquet(s"$path/codebook")
-    Pq.encode(rotated, storedCb, dim / m)
-      .write.mode("overwrite").parquet(s"$path/codes")
+    val storedRot = embeddings.sparkSession.read.parquet(s"$path/rotation")
+    Pq.writeIndex(rotateVectors(embeddings, storedRot), path, m, ks, iters, dim)
   }
 
   /** ADC top-k over an OPQ artifact: rotate the queries with the

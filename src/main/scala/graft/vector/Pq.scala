@@ -1,6 +1,7 @@
 package graft.vector
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions.dot
@@ -152,10 +153,8 @@ object Pq {
       .join(broadcast(cidByVec), Seq("vec_id"))
       .select(col("sub"), col("cid"), col("subvec").as("centroid"))
 
-    val pool =
-      if (sampleFraction >= 1.0) embeddings
-      else embeddings.sample(withReplacement = false, sampleFraction, seed)
-    val poolSubs = subVectors(pool, m, dsub).localCheckpoint(false)
+    val poolSubs = subVectors(Ivf.samplePool(embeddings, sampleFraction, seed), m, dsub)
+      .localCheckpoint(false)
 
     var cb = init
     for (_ <- 0 until iters) {
@@ -272,6 +271,32 @@ object Pq {
       .select(col("query_id"),
         transform(col("sd"), x => x("ds")).as("luts"))
 
+  /** The per-query nearest-`k` window every squared-L2 top-k ends in:
+    * the rounded `dist` ascending, vec_id tiebreak, partitioned by
+    * query_id → (query_id, vec_id, dist), unordered.
+    */
+  private def nearestPerQuery(scan: DataFrame, dist: String, k: Int): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(col(dist), col("vec_id"))
+    scan.withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= k)
+      .select(col("query_id"), col("vec_id"), col(dist))
+  }
+
+  /** The rounded ADC distance of a (codes, luts) row — the score every
+    * ADC scan ranks by.
+    */
+  private def adcD2: Column = round(adcFold(col("codes"), col("luts")), 6).as("adc_d2")
+
+  /** The ADC top-k tail: drop each query's own vector, score the
+    * (codes, luts) rows by [[adcD2]] and keep the per-query nearest `k`
+    * in (query_id, adc_d2, vec_id) order.
+    */
+  private def adcNearest(scan: DataFrame, k: Int): DataFrame =
+    nearestPerQuery(
+      scan.filter(col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id"), adcD2), "adc_d2", k)
+      .orderBy("query_id", "adc_d2", "vec_id")
+
   /** ADC top-k: approximate squared distance of every coded vector to
     * every query as the left-to-right fold
     * Σ_sub lut[sub][code[sub]], then the per-query (rounded-d2,
@@ -287,22 +312,12 @@ object Pq {
       queries: DataFrame,
       k: Int,
       dsub: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // single-row-group rescue (Scale.spreadForCompute): the per-code ADC
     // fold × nq broadcast LUTs is the scan's whole cost and runs on the
     // codes file's task count (one for a small artifact); per-row
     // deterministic, so bit-identical. No-op at scale.
-    val scan = graft.ops.Scale.spreadForCompute(codes, col("vec_id"))
-      .crossJoin(broadcast(lutRows(lookupTable(queries, codebook, dsub))))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(adcFold(col("codes"), col("luts")), 6).as("adc_d2"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adc_d2"), col("vec_id"))
-    scan.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("vec_id"), col("adc_d2"))
-      .orderBy("query_id", "adc_d2", "vec_id")
+    adcNearest(graft.ops.Scale.spreadForCompute(codes, col("vec_id"))
+      .crossJoin(broadcast(lutRows(lookupTable(queries, codebook, dsub)))), k)
   }
 
   /** Exact squared-L2 top-k over the FULL vectors — the ground truth
@@ -310,21 +325,18 @@ object Pq {
     * linear-scan shape as [[adcTopK]].
     */
   def exactL2TopK(
-      embeddings: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+      embeddings: DataFrame, queries: DataFrame, k: Int): DataFrame =
     // single-row-group rescue: nq exact distances per vector, map-side
     // over the scan — spread like adcTopK; bit-identical, no-op at scale
-    val scan = graft.ops.Scale.spreadForCompute(embeddings, col("vec_id"))
-      .crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(sqDist(col("qvec"), col("embedding")), 6).as("d2"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("d2"), col("vec_id"))
-    scan.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("vec_id"), col("d2"))
-  }
+    nearestPerQuery(
+      graft.ops.Scale.spreadForCompute(embeddings, col("vec_id"))
+        .crossJoin(broadcast(queries))
+        .filter(col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id"), exactD2),
+      "d2", k)
+
+  /** The rounded exact squared-L2 of a (qvec, embedding) row. */
+  private def exactD2: Column = round(sqDist(col("qvec"), col("embedding")), 6).as("d2")
 
   /** Exact re-rank of ANY per-query candidate shortlist — the second
     * stage of the production two-stage serve: a compressed/approximate
@@ -348,20 +360,21 @@ object Pq {
       shortlist: DataFrame,
       queries: DataFrame,
       embeddings: DataFrame,
-      k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val scan = embeddings
+      k: Int): DataFrame =
+    nearestPerQuery(exactRescore(shortlist, queries, embeddings), "d2", k)
+      .orderBy("query_id", "d2", "vec_id")
+
+  /** (query_id, vec_id, d2) for the distinct (query, vector) pairs of
+    * `shortlist`: ONE raw-corpus scan hash-joined against the broadcast
+    * pairs, queries broadcast for the exact rounded squared-L2.
+    */
+  private def exactRescore(
+      shortlist: DataFrame, queries: DataFrame, embeddings: DataFrame): DataFrame =
+    embeddings
       .join(broadcast(shortlist.select("query_id", "vec_id").distinct()),
         Seq("vec_id"))
       .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(sqDist(col("qvec"), col("embedding")), 6).as("d2"))
-    val w = Window.partitionBy("query_id").orderBy(col("d2"), col("vec_id"))
-    scan.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("vec_id"), col("d2"))
-      .orderBy("query_id", "d2", "vec_id")
-  }
+      .select(col("query_id"), col("vec_id"), exactD2)
 
   /** Re-rank shortlist size for a probe budget — the serve-side policy
     * that keeps the two-stage recall curve MONOTONE in nProbe. A FIXED
@@ -497,7 +510,6 @@ object Pq {
       k: Int,
       branches: Seq[(String, Int, Int)],
       dsub: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(branches.nonEmpty && branches.forall(b => b._2 > 0 && b._3 > 0),
       s"multiBudgetServe needs positive (nProbe, shortlist) branches, got $branches")
     requireDsub(codebook, dsub)
@@ -511,8 +523,7 @@ object Pq {
         residualLutRowsRanked(queries, cents, codebook, maxProbe, dsub)),
         Seq("list_id"))
       .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("__rnk"),
-        round(adcFold(col("codes"), col("luts")), 6).as("adc_d2"))
+      .select(col("query_id"), col("vec_id"), col("__rnk"), adcD2)
     // map-side fan-out: candidate of probe rank r belongs to every
     // branch with nprobe >= r — a broadcast theta join against the
     // |branches|-row table, no extra scan
@@ -529,14 +540,9 @@ object Pq {
       .select("policy", "nprobe", "shortlist", "query_id", "vec_id")
       .localCheckpoint(false)
     // ONE raw-vector pass re-scores the distinct (query, vec) pairs of
-    // every branch; d² per pair is branch-independent (same rounding
-    // as rerankExact), so attaching branches back is a broadcast join
-    val d2 = embeddings
-      .join(broadcast(shortlists.select("query_id", "vec_id").distinct()),
-        Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(sqDist(col("qvec"), col("embedding")), 6).as("d2"))
+    // every branch; d² per pair is branch-independent (rerankExact's
+    // own rescore), so attaching branches back is a broadcast join
+    val d2 = exactRescore(shortlists, queries, embeddings)
     val wK = Window.partitionBy("policy", "nprobe", "query_id")
       .orderBy(col("d2"), col("vec_id"))
     shortlists.join(broadcast(d2), Seq("query_id", "vec_id"))
@@ -566,13 +572,6 @@ object Pq {
     val hitCounts = sv
       .join(exact.select("query_id", "vec_id"), Seq("query_id", "vec_id"))
       .groupBy(keys.map(col): _*).agg(count(lit(1)).as("n_hit"))
-    val guardedExact = when(col("n_exact").isNull,
-      org.apache.spark.sql.functions.raise_error(concat(
-        lit("recallAtK: query "), col("query_id").cast("string"),
-        lit(" has an EMPTY exact ground-truth set — the exact baseline " +
-          "was mis-built (empty corpus or mismatched query ids); refusing " +
-          "to report recall over a vacuous denominator"))).cast("long"))
-      .otherwise(col("n_exact"))
     branchDf
       .crossJoin(exact.groupBy("query_id").agg(count(lit(1)).as("n_exact")))
       .join(sv.select(keys.map(col): _*).distinct(), keys, "full")
@@ -669,6 +668,20 @@ object Pq {
         chosen.getInt(1), dsub, rPerProbe, rMin))
   }
 
+  /** `n_exact`, or — for a served query whose exact ground-truth set is
+    * EMPTY (null `n_exact` after the full join) — a plan-embedded
+    * `raise_error` naming it: the fail-loud guard of [[recallAtK]] and
+    * [[multiBudgetRecall]].
+    */
+  private def guardedExact: Column =
+    when(col("n_exact").isNull,
+      org.apache.spark.sql.functions.raise_error(concat(
+        lit("recallAtK: query "), col("query_id").cast("string"),
+        lit(" has an EMPTY exact ground-truth set — the exact baseline " +
+          "was mis-built (empty corpus or mismatched query ids); refusing " +
+          "to report recall over a vacuous denominator"))).cast("long"))
+      .otherwise(col("n_exact"))
+
   /** Per-query recall of the ADC result against the exact-L2 ground
     * truth — the quality number a 100 TB operator reads before trusting
     * a compressed index tier. Both sides arrive as
@@ -697,13 +710,6 @@ object Pq {
     val hits = a
       .join(e, Seq("query_id", "vec_id"))
       .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-    val guardedExact = when(col("n_exact").isNull,
-      org.apache.spark.sql.functions.raise_error(concat(
-        lit("recallAtK: query "), col("query_id").cast("string"),
-        lit(" has an EMPTY exact ground-truth set — the exact baseline " +
-          "was mis-built (empty corpus or mismatched query ids); refusing " +
-          "to report recall over a vacuous denominator"))).cast("long"))
-      .otherwise(col("n_exact"))
     e.groupBy("query_id").agg(count(lit(1)).as("n_exact"))
       // full join against approx's DISTINCT query ids (no count — only
       // the id's presence matters): a query approx served with no
@@ -734,7 +740,6 @@ object Pq {
       k: Int,
       nProbe: Int,
       dsub: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // per-query nProbe nearest lists by centroid L2 — queries × nLists
     // rows, metadata-sized
     val probed = queries.crossJoin(broadcast(cents))
@@ -747,17 +752,9 @@ object Pq {
       .select("query_id", "list_id")
     // corpus list assignment is the map-side Ivf.assign argmax
     val listed = Ivf.assign(embeddings, cents).select("vec_id", "list_id")
-    val scan = codes.join(listed, Seq("vec_id"))
+    adcNearest(codes.join(listed, Seq("vec_id"))
       .crossJoin(broadcast(lutRows(lookupTable(queries, codebook, dsub))))
-      .join(broadcast(probed), Seq("query_id", "list_id"), "left_semi")
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(adcFold(col("codes"), col("luts")), 6).as("adc_d2"))
-    scan.withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("adc_d2"), col("vec_id"))))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("vec_id"), col("adc_d2"))
-      .orderBy("query_id", "adc_d2", "vec_id")
+      .join(broadcast(probed), Seq("query_id", "list_id"), "left_semi"), k)
   }
 
   /** Build + persist the PQ artifact: `$path/codebook` (sub, cid,
@@ -765,7 +762,10 @@ object Pq {
     * are the index identity — training float summation order is not
     * canonical across partitionings, so (like the IVF/k-means
     * artifacts) both engines and every later run read the SAME
-    * codebook rather than re-deriving it.
+    * codebook rather than re-deriving it. Every other input column
+    * rides into the codes ([[encode]]), so [[writeResidualIndex]] and
+    * [[Opq.writeIndex]] write their codebook and codes through this
+    * over the residual or rotated vectors.
     */
   def writeIndex(
       embeddings: DataFrame,
@@ -812,14 +812,20 @@ object Pq {
     * WORSE than raw) where the L2-consistent form reads < 1.
     */
   def residualVectors(embeddings: DataFrame, cents: DataFrame): DataFrame =
+    withAssignedCentroid(embeddings, cents)
+      .select(col("vec_id"), col("list_id"),
+        zip_with(col("embedding"), col("__c"),
+          (x, y) => (x - y).cast("float")).as("embedding"))
+
+  /** [[Ivf.assignL2]] plus the assigned centroid's floats as `__c` —
+    * a broadcast join of the (tiny) centroid table on `list_id`.
+    */
+  private def withAssignedCentroid(embeddings: DataFrame, cents: DataFrame): DataFrame =
     Ivf.assignL2(embeddings, cents)
       .join(
         broadcast(cents.select(
           col("centroid_id").as("list_id"), col("centroid").as("__c"))),
         Seq("list_id"))
-      .select(col("vec_id"), col("list_id"),
-        zip_with(col("embedding"), col("__c"),
-          (x, y) => (x - y).cast("float")).as("embedding"))
 
   /** Train per-subspace codebooks over the RESIDUALS of `embeddings`
     * against the coarse `cents` — same Lloyd discipline and knobs as
@@ -844,20 +850,11 @@ object Pq {
     * (elementwise exact subtraction), left-to-right accumulated like
     * every other portable sum in this file. nq × nProbe × m × ks
     * entries — metadata-sized.
-    */
-  private def residualLutRows(
-      queries: DataFrame,
-      cents: DataFrame,
-      codebook: DataFrame,
-      nProbe: Int,
-      dsub: Int): DataFrame =
-    residualLutRowsRanked(queries, cents, codebook, nProbe, dsub)
-      .drop("__rnk")
-
-  /** [[residualLutRows]] with each (query, list) row carrying the
-    * list's probe rank (`__rnk`, 1-based): rank ≤ p is exactly "list
-    * probed at budget p", which is what lets one scan at the largest
-    * budget of a calibration sweep serve every smaller budget
+    *
+    * Each row carries the list's probe rank (`__rnk`, 1-based): rank ≤
+    * p is exactly "list probed at budget p", which is what lets one
+    * scan at the largest budget of a calibration sweep serve every
+    * smaller budget
     * ([[multiBudgetServe]]). A LUT cell depends only on (query, list,
     * codebook) — never on the budget — so the ranked rows at maxProbe
     * restricted to rank ≤ p ARE the budget-p LUT rows.
@@ -868,7 +865,6 @@ object Pq {
       codebook: DataFrame,
       nProbe: Int,
       dsub: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // per-query nProbe nearest lists by the SAME float-dot expansion
     // the plain composition's coarse probe uses, carrying the residual
     // query q − c_list as exact elementwise double subtraction
@@ -919,31 +915,24 @@ object Pq {
       k: Int,
       nProbe: Int,
       dsub: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // same fail-loud guard as every other ADC entry point: a wrong dsub
     // would NULL-poison every residual LUT cell and "rank" by vec_id
     requireDsub(codebook, dsub)
     // same single-row-group rescue as adcTopK (per-row ADC fold)
-    val scan = graft.ops.Scale.spreadForCompute(codes, col("vec_id"))
-      .join(broadcast(residualLutRows(queries, cents, codebook, nProbe, dsub)),
-        Seq("list_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(adcFold(col("codes"), col("luts")), 6).as("adc_d2"))
-    scan.withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("adc_d2"), col("vec_id"))))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("vec_id"), col("adc_d2"))
-      .orderBy("query_id", "adc_d2", "vec_id")
+    adcNearest(graft.ops.Scale.spreadForCompute(codes, col("vec_id"))
+      .join(broadcast(
+        residualLutRowsRanked(queries, cents, codebook, nProbe, dsub).drop("__rnk")),
+        Seq("list_id")), k)
   }
 
   /** Build + persist the RESIDUAL PQ artifact against the given coarse
     * centroids: `$path/cents` (the coarse quantizer — part of the
     * index identity, since every stored code is a residual AGAINST
     * these exact floats), `$path/codebook` (sub, cid, centroid —
-    * trained on residuals) and `$path/codes` (vec_id, list_id, codes).
-    * Same persisted-bytes discipline as [[writeIndex]]: downstream
-    * searches read the SAME cents/codebook bytes this build wrote.
+    * trained on residuals) and `$path/codes` (vec_id, list_id, codes):
+    * [[writeIndex]] over [[residualVectors]] against the STORED cents,
+    * so downstream searches read the SAME cents/codebook bytes this
+    * build wrote.
     */
   def writeResidualIndex(
       embeddings: DataFrame,
@@ -955,11 +944,7 @@ object Pq {
       dim: Int): Unit = {
     cents.coalesce(1).write.mode("overwrite").parquet(s"$path/cents")
     val storedCents = embeddings.sparkSession.read.parquet(s"$path/cents")
-    val cb = trainResidualCodebooks(embeddings, storedCents, m, ks, iters, dim)
-    cb.coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
-    val stored = embeddings.sparkSession.read.parquet(s"$path/codebook")
-    encode(residualVectors(embeddings, storedCents), stored, dim / m)
-      .write.mode("overwrite").parquet(s"$path/codes")
+    writeIndex(residualVectors(embeddings, storedCents), path, m, ks, iters, dim)
   }
 
   // ---- streaming codes deltas ----------------------------------------
@@ -1015,11 +1000,7 @@ object Pq {
     * assign + one global aggregate.
     */
   def residualGain(embeddings: DataFrame, cents: DataFrame): DataFrame =
-    Ivf.assignL2(embeddings, cents)
-      .join(
-        broadcast(cents.select(
-          col("centroid_id").as("list_id"), col("centroid").as("__c"))),
-        Seq("list_id"))
+    withAssignedCentroid(embeddings, cents)
       .agg(
         count(lit(1)).cast("long").as("n_vectors"),
         round(avg(dot(col("embedding"), col("embedding"))), 6)

@@ -3,8 +3,6 @@ package graft.vector
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions.dot
-
 /** Symmetric int8 scalar quantization for embedding columns — the
   * storage/bandwidth lever at 100 TB: a float32 corpus shrinks 4× (one
   * byte per element + one float scale per vector), and the approximate
@@ -80,7 +78,7 @@ object Quantize {
       .filter(col("i") < col("j"))
       .filter(admit)
       .select("i", "j")
-    exactRerank(cand, embeddings, threshold)
+    Ann.exactRerank(cand, embeddings, threshold).orderBy("i", "j")
   }
 
   /** The scale form of [[quantizedPairsAbove]]: candidates meet inside
@@ -149,7 +147,7 @@ object Quantize {
       .join(qb, Seq("j"))
       .filter(admit)
       .select("i", "j")
-    exactRerank(cand, embeddings, threshold)
+    Ann.exactRerank(cand, embeddings, threshold).orderBy("i", "j")
   }
 
   /** Both sides of a quantized pair scan plus the admission predicate
@@ -191,20 +189,4 @@ object Quantize {
       (col("aa") + col("ab") + size(col("qa")).cast("double") / 2.0)
     (qa, qb, ss * qdot > lit(threshold) - bound - lit(extraMargin))
   }
-
-  /** Exact re-rank of candidate (i, j) pairs on the full-precision
-    * table: join embeddings back for the candidates only, keep pairs
-    * whose true dot beats `threshold`.
-    */
-  private def exactRerank(
-      cand: DataFrame,
-      embeddings: DataFrame,
-      threshold: Double): DataFrame =
-    cand
-      .join(embeddings.select(col("vec_id").as("i"), col("embedding").as("ea")), Seq("i"))
-      .join(embeddings.select(col("vec_id").as("j"), col("embedding").as("eb")), Seq("j"))
-      .withColumn("dp", dot(col("ea"), col("eb")))
-      .filter(col("dp") > threshold)
-      .select(col("i"), col("j"), round(col("dp"), 6).as("cos"))
-      .orderBy("i", "j")
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.core.Canonical
@@ -78,23 +79,31 @@ class ExtrasSpec extends SparkSpec {
   }
 
   test("ANN with probeRadius = nPlanes is exactly brute force; narrower probes keep top-1") {
-    val brute = Canonical.hash16(Ann.bruteForceTopK(cat.embeddings, 0, 5))
-    val full = Canonical.hash16(
-      Ann.annTopK(cat.embeddings, 0, 5, nPlanes = 8, probeRadius = 8))
-    assert(full == brute, "probe-all ANN must equal brute force")
+    val path = java.nio.file.Files.createTempDirectory("graft_ann_extras").toString
+    Ann.writeIndex(cat.embeddings, path, nPlanes = 8)
+    val probeVec = cat.embeddings.filter(col("vec_id") === 0)
+      .select("embedding").first().getSeq[Float](0).toArray
+    // the index probe includes the probe vector itself: ask for one
+    // more row and drop it to compare with brute force's top 5
+    def probed(radius: Int): Seq[Row] =
+      Ann.probeIndex(spark, path, probeVec, k = 6, nPlanes = 8, probeRadius = radius)
+        .collect().filter(_.getLong(0) != 0L).take(5).toSeq
+    val brute = Ann.bruteForceTopK(cat.embeddings, 0, 5).collect().toSeq
+    assert(probed(8) == brute, "probe-all ANN must equal brute force")
     // deterministic fixed-seed check: the true nearest neighbour of
     // probe 0 survives a radius-4 probe of 8 planes
     val bruteTop = Ann.bruteForceTopK(cat.embeddings, 0, 1).collect()(0).getLong(0)
-    val annIds = Ann.annTopK(cat.embeddings, 0, 5, nPlanes = 8, probeRadius = 4)
-      .collect().map(_.getLong(0)).toSet
-    assert(annIds.contains(bruteTop))
+    assert(probed(4).map(_.getLong(0)).contains(bruteTop))
   }
 
   test("LSH-bucketed near-dup pairs are a subset of the exact pairs") {
     val exact = Ann.allPairsAbove(cat.embeddings, 0.4)
       .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val bucketed = Ann.bucketedPairsAbove(cat.embeddings, 0.4)
+    // one 6-plane bucket table, the single-band geometry
+    val bucketed = Ann.bandedPairsAbove(cat.embeddings, 0.4, nPlanes = 6, nBands = 1,
+        forceBanded = true)
       .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(bucketed.nonEmpty, "a bucket table must keep some exact pair on this fixture")
     assert(bucketed.subsetOf(exact))
   }
 
@@ -1449,6 +1458,15 @@ class ExtrasSpec extends SparkSpec {
         plain.withColumn("variant", lit("orig")), maxHamming = 7)
       .select("i_doc", "j_doc", "hamming").collect().toSet
     assert(viaDefault == viaTag)
+  }
+
+  test("X93 channel artifacts are keyed on X93Plan, stamps unchanged from the recorded values") {
+    // the near-dup, n-gram and corpus-pair tables the X93 manifest
+    // reads: a changed plan default re-keys them with the manifest,
+    // and today's keys are the ones the stored artifacts carry
+    assert(Extras.crossNearDupsKey == "xnd:v3:3:64:16:0.5")
+    assert(Extras.contaminationKey == "contamination:v1:5")
+    assert(Extras.vpairsKey == "vpairs:v3:3:64:16:0.8:4096")
   }
 
   test("manifest stamp key derives from the builders' actual defaults, unchanged from the recorded value") {

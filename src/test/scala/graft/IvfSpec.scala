@@ -140,6 +140,75 @@ class IvfSpec extends SparkSpec {
     assert(gain < gain0, s"refinement must tighten residuals: $gain vs $gain0")
   }
 
+  test("Lloyd rounds on both metrics ≡ a driver-side reference; an emptied list keeps its centroid") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // dyadic floats: every per-list sum is exact in binary whatever the
+    // shuffle's addition order, so the means compare bit-for-bit
+    def frame(rows: Seq[(Long, Array[Float])], idCol: String, vecCol: String) =
+      spark.createDataFrame(
+        java.util.Arrays.asList(rows.map { case (id, v) => Row(id, v.toSeq) }: _*),
+        StructType(Seq(StructField(idCol, LongType),
+          StructField(vecCol, ArrayType(FloatType)))))
+        .repartition(4)
+    def dotD(a: Array[Float], b: Array[Float]): Double =
+      a.indices.foldLeft(0.0)((s, i) => s + a(i).toDouble * b(i).toDouble)
+    // the reference round: argmax score, smallest centroid_id on ties;
+    // the per-list double mean, then `finish` to the float centroid; a
+    // list with no members keeps its previous centroid
+    def reference(
+        vecs: Seq[Array[Float]], cents: Seq[(Long, Array[Float])], iters: Int,
+        score: (Array[Float], Array[Float]) => Double,
+        finish: Array[Double] => Array[Float]): Map[Long, Seq[Float]] = {
+      var cur = cents
+      for (_ <- 0 until iters) {
+        val lists = vecs.groupBy(v => cur.map { case (id, c) => (-score(v, c), id) }.min._2)
+        cur = cur.map { case (id, c) =>
+          id -> lists.get(id).fold(c) { vs =>
+            finish(c.indices.map(i => vs.map(_(i).toDouble).sum / vs.size).toArray)
+          }
+        }
+      }
+      cur.map { case (id, c) => id -> c.toSeq }.toMap
+    }
+    def run(refined: org.apache.spark.sql.DataFrame): Map[Long, Seq[Float]] =
+      refined.collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
+
+    // cosine: first-quadrant vectors split between c0 and c1; c2 points
+    // the other way and attracts nobody
+    val vecs = Seq(
+      Array(1.0f, 0.25f), Array(0.75f, 0.5f), Array(1.0f, 0.5f),
+      Array(0.25f, 1.0f), Array(0.5f, 0.75f))
+    val cents = Seq(0L -> Array(1.0f, 0.0f), 1L -> Array(0.0f, 1.0f), 2L -> Array(-1.0f, 0.0f))
+    val corpus = frame(vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }, "vec_id", "embedding")
+    val spherical = reference(vecs, cents, 2, dotD, { m =>
+      val norm = math.sqrt(m.foldLeft(0.0)((s, x) => s + x * x))
+      val safe = if (norm > 0) norm else 1.0
+      m.map(x => (x / safe).toFloat)
+    })
+    val gotCos = run(Ivf.refineCentroids(corpus, frame(cents, "centroid_id", "centroid"),
+      iters = 2, dim = 2))
+    assert(gotCos == spherical, s"spherical Lloyd $gotCos vs reference $spherical")
+    assert(gotCos(2L) == Seq(-1.0f, 0.0f), "an emptied list must keep its centroid")
+    assert(gotCos(0L) != Seq(1.0f, 0.0f) && gotCos(1L) != Seq(0.0f, 1.0f),
+      "the fixture must move the populated centroids")
+
+    // squared L2: two clusters, c2 far from both
+    val vecsL2 = Seq(
+      Array(0.5f, 1.0f), Array(1.0f, 0.5f), Array(0.0f, 0.25f),
+      Array(4.0f, 3.5f), Array(3.5f, 4.5f))
+    val centsL2 = Seq(0L -> Array(0.0f, 0.0f), 1L -> Array(4.0f, 4.0f), 2L -> Array(64.0f, 64.0f))
+    val corpusL2 = frame(vecsL2.zipWithIndex.map { case (v, i) => (i.toLong, v) },
+      "vec_id", "embedding")
+    val l2 = reference(vecsL2, centsL2, 2,
+      (v, c) => -((dotD(v, v) - 2.0 * dotD(v, c)) + dotD(c, c)), _.map(_.toFloat))
+    val gotL2 = run(Ivf.refineCentroidsL2(corpusL2,
+      frame(centsL2, "centroid_id", "centroid"), iters = 2, dim = 2))
+    assert(gotL2 == l2, s"L2 Lloyd $gotL2 vs reference $l2")
+    assert(gotL2(2L) == Seq(64.0f, 64.0f), "an emptied list must keep its centroid")
+    assert(gotL2(0L) == Seq(0.5f, (1.75 / 3).toFloat) && gotL2(1L) == Seq(3.75f, 4.0f))
+  }
+
   test("IVF assignment partitions the corpus") {
     val cents = Ivf.centroids(cat.embeddings, 16)
     assert(cents.count() == 16)
